@@ -2877,9 +2877,8 @@ def _q_ivf_kmeans(spark, sf_dir):
     # cell-partitioned IVF-PQ index (packed BIGINT codes, residual
     # codebooks) queried with static partition pruning + the Arrow ADC
     # partial-top-k (similarity._adc_topk_arrow). Rows-only; recall and
-    # arrow/sql parity are pytest-pinned (test_corpus_ops PQ block).
-    import glob
-    import os
+    # the numpy ADC replay are pytest-pinned (test_corpus_ops PQ block).
+    import atexit
     import shutil
     import tempfile
 
@@ -2888,15 +2887,12 @@ def _q_ivf_kmeans(spark, sf_dir):
         knn_ivfpq_indexed,
     )
 
-    # the fresh index dir must outlive this function (the returned
-    # DataFrame reads it lazily), so clean up PRIOR gate runs' dirs
-    # here instead — the gate is serial, so anything matching the
-    # prefix now is a leftover
-    for stale in glob.glob(
-        os.path.join(tempfile.gettempdir(), "gate_ivfpq_*")
-    ):
-        shutil.rmtree(stale, ignore_errors=True)
-    idx_dir = tempfile.mkdtemp(prefix="gate_ivfpq_") + "/index"
+    # the index dir must outlive this function (the returned DataFrame
+    # reads it lazily), so it is removed at interpreter exit — by the
+    # process that made it, never by a concurrent run's sweep
+    tmp = tempfile.mkdtemp(prefix="gate_ivfpq_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    idx_dir = tmp + "/index"
     # iter counts trimmed for gate wall: leg rows are k x Q regardless
     # of quantizer quality, and quantizer QUALITY is pinned by the
     # recall tests — the gate checks the composed plumbing

@@ -71,7 +71,9 @@ class GLiNERSpark:
         'weights'. from_pretrained(dir) re-encodes the labels under the
         loaded config and verifies the matrix matches, so an artifact
         whose config and embeddings drifted apart fails LOUDLY at load
-        instead of silently predicting differently."""
+        instead of silently predicting differently. Without a labels
+        trie, both label files are REMOVED from the directory, so a
+        re-save never leaves a previous artifact's labels behind."""
         import json
         import os
 
@@ -82,18 +84,19 @@ class GLiNERSpark:
             os.path.join(save_directory, "gliner_config.json"), "w"
         ) as f:
             json.dump(asdict(self.cfg), f, indent=1, sort_keys=True)
-        if hasattr(self, "_labels_trie"):
-            import numpy as np
+        labels_path = os.path.join(save_directory, "labels.json")
+        emb_path = os.path.join(save_directory, "label_embeddings.npy")
+        if not hasattr(self, "_labels_trie"):
+            for stale in (labels_path, emb_path):
+                if os.path.exists(stale):
+                    os.remove(stale)
+            return
+        import numpy as np
 
-            labels = self._labels_trie[3]
-            with open(
-                os.path.join(save_directory, "labels.json"), "w"
-            ) as f:
-                json.dump(labels, f)
-            np.save(
-                os.path.join(save_directory, "label_embeddings.npy"),
-                self.encode_labels(labels),
-            )
+        labels = self._labels_trie[3]
+        with open(labels_path, "w") as f:
+            json.dump(labels, f)
+        np.save(emb_path, self.encode_labels(labels))
 
     @classmethod
     def _load_directory(cls, path: str, cfg_override=None):

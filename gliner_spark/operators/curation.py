@@ -896,12 +896,12 @@ def semantic_decontaminate(
     unit-normalized benchmark matrix folds into a ONE-ROW aggregate and
     rides a broadcast cross join as a nested-array column — never an
     expression literal (a large literal inside a HOF lambda re-evaluates
-    per element access; measured 16x on pq_encode). The training side
+    per element access; measured 16x on a SQL PQ encode). The training side
     is a pure map: per row one zip_with/aggregate dot fold per
     benchmark vector and an array_max — ZERO shuffles of training data
     (plan-pinned in test_semantic_decon.py). The k x d interpreted HOF
     fold is the right shape up to ~10^4 benchmark vectors; beyond that
-    swap the scorer for an Arrow-batched GEMM (the pq_encode pattern)
+    swap the scorer for an Arrow-batched GEMM (the _pq_codes_udf pattern)
     without changing the contract.
 
     max_cos and the flag are computed from the SAME dst-ordered

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text, tokens, word_ngrams
-from .linking import _MERSENNE, _perm_coeffs
+from .linking import _MERSENNE, band_keys
 
 # --------------------------------------------------------------- exact dedup
 
@@ -154,9 +154,9 @@ def bloom_probe(
 
     Pure map: the bitmap rides as a ONE-ROW BROADCAST-joined array
     column (big constant arrays as expression literals re-evaluate per
-    element access inside HOF lambdas — measured 16x on pq_encode), and
-    the k probes are a forall over element_at word lookups. Zero
-    shuffle, zero corpus I/O."""
+    element access inside HOF lambdas — measured 16x on a SQL PQ
+    encode), and the k probes are a forall over element_at word
+    lookups. Zero shuffle, zero corpus I/O."""
     m_bits, k = bloom["m_bits"], bloom["k"]
     spark = new_docs.sparkSession
     bloom_df = spark.createDataFrame(
@@ -249,26 +249,6 @@ def minhash_sigs(
     )
 
 
-def _band_hashes(n_perms: int, n_bands: int) -> Column:
-    """array<bigint> of per-band bucket keys over a `sig` column: each
-    band's signature slice folds through xxhash64 seeded with the band
-    index, so one bigint already encodes (band, bucket) collision-safely
-    — downstream joins can key on it alone."""
-    rows_per_band = n_perms // n_bands
-    return F.array(
-        *[
-            F.xxhash64(
-                F.lit(b),
-                *[
-                    F.element_at("sig", b * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(n_bands)
-        ]
-    )
-
-
 def build_minhash_index(
     docs: DataFrame,
     table_prefix: str,
@@ -307,7 +287,8 @@ def build_minhash_index(
     sh = doc_shingles(docs, text_col, shingle_n)
     sigs = minhash_sigs(sh, "doc_id", n_perms)
     banded = sigs.select(
-        "doc_id", F.explode(_band_hashes(n_perms, n_bands)).alias("bh")
+        "doc_id",
+        F.explode(band_keys(n_bands, n_perms // n_bands)).alias("bh"),
     )
     if max_bucket_size is not None:
         w = Window.partitionBy("bh").orderBy("doc_id")
@@ -375,7 +356,7 @@ def near_dup_against_index(
     sigs = minhash_sigs(sh, "doc_id", n_perms)
     banded = sigs.select(
         F.col("doc_id").alias("new_id"),
-        F.explode(_band_hashes(n_perms, n_bands)).alias("bh"),
+        F.explode(band_keys(n_bands, n_perms // n_bands)).alias("bh"),
     )
     idx = spark.read.table(f"{table_prefix}_buckets")
     # distinct over BARE (new_id, corpus_id) pairs — the multi-band
@@ -434,7 +415,9 @@ def minhash_near_duplicates(
     sigs = minhash_sigs(sh, "doc_id", n_perms)
     banded = sigs.select(
         "doc_id",
-        F.posexplode(_band_hashes(n_perms, n_bands)).alias("band", "bh"),
+        F.posexplode(band_keys(n_bands, n_perms // n_bands)).alias(
+            "band", "bh"
+        ),
     )
     # bucketed intra-group pair expansion (see linking.lsh_bucket_pairs):
     # two exchanges, bucket cap integrated, never materializes the

@@ -3,18 +3,19 @@ components → canonical surface selection.
 
 The reference has no linking stage (SURVEY §2.3 J-row "Entity linking
 joins"); this implements the north-star spec with NATIVE DataFrame ops
-end-to-end — no Python UDFs anywhere in this module:
+end-to-end — the only Python code is the single-task union-find
+finisher (a mapInPandas over an already-tiny edge set):
 
  blocking   char-3-gram shingles of the normalized surface form →
-            MinHash signatures (64 perms) → LSH bands (16 bands × 4 rows)
-            → candidate pairs via equi-join on the band key;
+            MinHash signatures (64 perms) → LSH bands (16 bands × 4 rows,
+            band_keys) → candidate pairs via equi-join on the band key;
  verify     exact Jaccard on the shingle sets (array_intersect/union) —
             LSH is only a blocker, the verified threshold decides;
  components large-star/small-star contraction over the verified
-            similarity graph (driver-controlled O(log n) loop,
-            localCheckpoint per round — Catalyst cannot iterate, SURVEY
-            §4), with a single-task union-find finisher once the
-            contracting edge set fits one task;
+            similarity graph (driver-controlled loop, localCheckpoint per
+            round — Catalyst cannot iterate, SURVEY §4), with a
+            single-task union-find finisher once the contracting edge
+            set fits one task (`small_solve`);
  canonical  per component: the surface with the highest mention count,
             ties broken by lexicographically greatest surface via struct
             max — deterministic, unlike bare max_by.
@@ -22,22 +23,25 @@ end-to-end — no Python UDFs anywhere in this module:
 Scale notes:
  * Everything heavy runs on the DISTINCT-surface table, not mentions —
    cardinality drops by orders of magnitude at 10^12 turns.
- * MinHash = explode(shingles) → groupBy(surface) with 64 map-side-partial
-   min aggregates over (a_p·h + b_p) mod p — one shuffle of shingle rows,
-   all JVM-side. Classic a·x+b universal hashing over a Mersenne prime;
+ * MinHash is ONE map-side array expression per surface (minhash_sig_expr):
+   each shingle is base-hashed once, then per permutation
+   array_min(transform(h → (a_p·h + b_p) mod p)) — zero shuffle, all
+   JVM-side. Classic a·x+b universal hashing over a Mersenne prime;
    base hash xxhash64 folded into [0, p) so the int64 multiply cannot
    overflow under ANSI mode.
  * LSH join is an equi-join on (band_idx, band_hash) — AQE-skew-splittable.
    Identical surfaces can't collide (input is distinct), so bucket blowup
    is bounded by genuinely-similar families.
- * Label propagation converges in O(diameter) rounds; similarity
-   components are tiny cliques in practice, and `max_iter` bounds
-   pathological chains.
+ * Large-star/small-star rounds are polylogarithmic in n (O(log² n),
+   Kiveris et al. 2014) whatever the component diameter; once the
+   surviving edge multiset is ≤ `small_solve`, one union-find pass in a
+   single task replaces the remaining rounds, and `max_iter` bounds
+   pathological inputs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _MERSENNE = (1 << 31) - 1  # 2^31 - 1, prime
@@ -199,33 +203,43 @@ def lsh_bucket_pairs(
     )
 
 
+def band_keys(n_bands: int, rows_per_band: int) -> Column:
+    """array<bigint>[n_bands] of LSH band keys over a `sig` column: each
+    band's signature slice folds through xxhash64 seeded with the band
+    index, so one bigint already encodes (band, bucket) collision-safely.
+    The ONE band-key formula shared by entity linking, batch and indexed
+    MinHash dedup and the streaming near-dup buckets, so every path lands
+    a signature in the same bucket by construction."""
+    return F.array(
+        *[
+            F.xxhash64(
+                F.lit(b),
+                *[
+                    F.element_at("sig", b * rows_per_band + r + 1)
+                    for r in range(rows_per_band)
+                ],
+            )
+            for b in range(n_bands)
+        ]
+    )
+
+
 def banded_signatures(
     with_sigs: DataFrame,
     n_bands: int,
     rows_per_band: int,
     id_col: str = "surface_id",
 ) -> DataFrame:
-    """(id, sig) → (id, band, band_hash): one xxhash64 per band over its
-    signature slice, exploded to a row per band. Pure map — the shared
-    band-key construction for in-batch pairing (candidate_pairs) and the
-    persisted-state probe (linking_incremental), so the two paths are
-    bit-identical by construction."""
+    """(id, sig) → (id, band, band_hash): band_keys exploded to a row per
+    band. Pure map — the shared band-key construction for in-batch
+    pairing (candidate_pairs) and the persisted-state probe
+    (linking_incremental), so the two paths are bit-identical by
+    construction."""
     return with_sigs.select(
         id_col,
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.element_at("sig", b * rows_per_band + r + 1)
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_hash"),
+        F.posexplode(band_keys(n_bands, rows_per_band)).alias(
+            "band", "band_hash"
+        ),
     )
 
 

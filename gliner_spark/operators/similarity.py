@@ -93,7 +93,7 @@ def assign_nearest(
     (dist2, cluster) tie-break (parity-pinned in test_corpus_ops), but
     the constant tensor materializes once per batch instead of being
     re-created per row: the broadcast-tensor rule that bought 16× on
-    pq_encode buys ~1.4× here at k=64, on EVERY corpus-side assignment
+    the SQL PQ encode buys ~1.4× here at k=64, on EVERY corpus-side assignment
     (each Lloyd's iteration + the index build). Adds `cluster`/`dist2`.
 
     Literal-riding nearest_centroid stays for the per-QUERY probe
@@ -589,18 +589,6 @@ def _with_books(df: DataFrame, codebooks) -> DataFrame:
     )
 
 
-def _pq_lut_expr(m: int, sub_d: int, vec: str = "q_unit") -> Column:
-    """Per-query ADC lookup table lut[m][k]: the dot product of each
-    query sub-vector with every centroid of that subspace's codebook
-    (read from the broadcast `_bk` column)."""
-    return F.expr(
-        f"transform(sequence(0, {m - 1}), jj -> "
-        f"transform(_bk[jj], c -> "
-        f"aggregate(zip_with(slice({vec}, jj * {sub_d} + 1, {sub_d}), c, "
-        f"(a, b) -> a * b), 0D, (acc, v) -> acc + v)))"
-    )
-
-
 def _pq_argmin_sql(sub: str, books: str, j: str, k: int) -> str:
     """argmin_i ‖sub − books[j][i]‖² with index tie-break, as SQL text:
     same struct-ordered array_min metric as nearest_centroid, but the
@@ -616,110 +604,37 @@ def _pq_argmin_sql(sub: str, books: str, j: str, k: int) -> str:
     )
 
 
-def _pq_code_expr(unit_col: str, codebooks) -> Column:
-    """codes array<int>[m]: per subspace, argmin ‖sub − c‖² over that
-    subspace's codebook read from the broadcast `_bk` column — encoding
-    is a pure map built as a single SQL string."""
-    m = len(codebooks)
-    k = len(codebooks[0])
-    sub_d = len(codebooks[0][0])
-    argmin = _pq_argmin_sql(
-        f"slice({unit_col}, jj * {sub_d} + 1, {sub_d})", "_bk", "jj", k
-    )
-    return F.expr(f"transform(sequence(0, {m - 1}), jj -> {argmin})")
-
-
-def _pq_codes_np(codebooks):
-    """numpy batch encoder (n, d) → (n, m) int32 codes: argmin ‖sub−c‖²
-    per subspace, lowest-index tie-break — same metric as
-    _pq_code_expr."""
+def _pq_codes_udf(codebooks, nbits: int):
+    """Vectorized (Arrow-batched) PQ encoder: per subspace, argmin
+    ‖sub − c‖² over that subspace's codebook with lowest-index tie-break
+    (the same metric as train_pq's assignment), the m codes PACKED into
+    one BIGINT (code_j in bits [j·nbits, (j+1)·nbits)) — 8 bytes per
+    vector at m=8/nbits=4 instead of a 256-byte float vector; requires
+    m·nbits ≤ 63. ~µs/vector, where the interpreted-HOF form of the
+    same argmin costs ~2 ms/vector."""
     import numpy as np
 
     nb = np.asarray(codebooks, dtype=np.float64)  # (m, k, sub_d)
     m, _k, sub_d = nb.shape
-
-    def encode(X):
-        n = X.shape[0]
-        S = X.reshape(n, m, sub_d)
-        codes = np.empty((n, m), dtype=np.int32)
-        for j in range(m):
-            d2 = (
-                (S[:, j, None, :] - nb[j][None, :, :]) ** 2
-            ).sum(axis=-1)  # (n, k)
-            codes[:, j] = d2.argmin(axis=1)
-        return codes
-
-    return encode
-
-
-def _pq_codes_udf(codebooks, packed_nbits: int | None = None):
-    """Vectorized (Arrow-batched) PQ encoder: same codes as
-    _pq_code_expr (parity-pinned in test_corpus_ops). The interpreted
-    HOF expression costs ~2 ms/vector — fine for oracles, unusable for
-    a billion-vector corpus; this path is ~µs/vector.
-
-    packed_nbits=nbits returns the m codes PACKED into one BIGINT
-    (code_j in bits [j·nbits, (j+1)·nbits)) — 8 bytes per vector at
-    m=8/nbits=4 instead of a 256-byte float vector; requires
-    m·nbits ≤ 63."""
-    import numpy as np
-
-    encode = _pq_codes_np(codebooks)
-    m = len(codebooks)
-
-    if packed_nbits is None:
-
-        @F.pandas_udf("array<int>")
-        def enc(units: "pd.Series") -> "pd.Series":
-            if not len(units):
-                return pd.Series([], dtype=object)
-            X = np.asarray(list(units), dtype=np.float64)
-            return pd.Series(list(encode(X)))
-
-        return enc
-
-    if m * packed_nbits > 63:
-        raise ValueError(f"m·nbits = {m * packed_nbits} > 63: cannot pack")
-    shifts = packed_nbits * np.arange(m, dtype=np.int64)
+    if m * nbits > 63:
+        raise ValueError(f"m·nbits = {m * nbits} > 63: cannot pack")
+    shifts = nbits * np.arange(m, dtype=np.int64)
 
     @F.pandas_udf("long")
     def enc_packed(units: "pd.Series") -> "pd.Series":
         if not len(units):
             return pd.Series([], dtype=np.int64)
         X = np.asarray(list(units), dtype=np.float64)
-        codes = encode(X).astype(np.int64)
+        S = X.reshape(X.shape[0], m, sub_d)
+        codes = np.empty((X.shape[0], m), dtype=np.int64)
+        for j in range(m):
+            d2 = (
+                (S[:, j, None, :] - nb[j][None, :, :]) ** 2
+            ).sum(axis=-1)  # (n, k)
+            codes[:, j] = d2.argmin(axis=1)
         return pd.Series((codes << shifts[None, :]).sum(axis=1))
 
     return enc_packed
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    codebooks: list[list[list[float]]],
-    impl: str = "arrow",
-    normalize: bool = True,
-) -> DataFrame:
-    """(vec_id, codes array<int>[m]) — the compressed corpus index. Pure
-    narrow map (no join, no shuffle); at scale this is written once,
-    like build_ivf_index, and queries scan codes instead of vectors.
-
-    impl="arrow" (default) encodes in a vectorized pandas UDF;
-    impl="sql" is the pure-Catalyst twin (one SQL-string expression over
-    the broadcast codebook column) — bit-identical codes, used as the
-    engine-independent definition and by the parity test."""
-    vec = (
-        _unit()
-        if normalize
-        else F.col("embedding").cast("array<double>").alias("unit")
-    )
-    u = embeddings.select("vec_id", vec)
-    if impl == "arrow":
-        return u.select(
-            "vec_id", _pq_codes_udf(codebooks)("unit").alias("codes")
-        )
-    return _with_books(u, codebooks).select(
-        "vec_id", _pq_code_expr("unit", codebooks).alias("codes")
-    )
 
 
 # -------------------------------------------------------- Arrow ADC path
@@ -734,13 +649,7 @@ def _np_round6(s):
     product rounds down). So: vectorize the common case, then re-round
     the rare near-boundary values exactly via Python's repr (the same
     shortest-round-trip decimal as Java's Double.toString) + Decimal
-    HALF_UP. (np.round alone is banker's — wrong convention.)
-
-    Exactness caveat, documented rather than hidden: arrow and SQL
-    still SUM in different orders (pairwise numpy vs sequential fold),
-    so pre-rounding inputs can differ in the last bit; identical
-    rounding makes a cross-impl 6dp mismatch possible only when two
-    last-bit-different sums straddle a boundary (~1e-10 per score)."""
+    HALF_UP. (np.round alone is banker's — wrong convention.)"""
     import numpy as np
 
     s = np.asarray(s, dtype=np.float64)
@@ -768,11 +677,10 @@ def _collect_query_units(queries: DataFrame):
     broadcast side (knn_bruteforce broadcasts this same frame; a query
     batch that doesn't fit on the driver wouldn't fit in a broadcast
     either). Unit vectors are computed by the JVM `_unit` expression
-    before collecting so both impls normalize with identical arithmetic.
-    NULL-embedding queries are dropped (they contribute no candidates);
-    the SQL twin instead carries them through as NULL scores that rank
-    meaninglessly — for this one degenerate input the impls diverge,
-    deliberately. Returns (ids list, units (Q, d) float64)."""
+    before collecting, so queries normalize with the same arithmetic as
+    the exact-refine side. NULL-embedding queries are dropped (they
+    contribute no candidates). Returns (ids list, units (Q, d)
+    float64)."""
     import numpy as np
 
     rows = queries.select("query_id", _unit().alias("q_unit")).collect()
@@ -787,10 +695,10 @@ def _collect_query_units(queries: DataFrame):
 
 
 def _pq_luts_np(q_units, codebooks):
-    """luts[q][j][i] = <q_sub_j, codebook_j[i]> for every query at once —
-    the numpy twin of _pq_lut_expr, built ONCE on the driver and shipped
-    to workers inside the mapInArrow closure (Q · m · 2^nbits doubles —
-    a few KB; rides task serialization like a broadcast)."""
+    """luts[q][j][i] = <q_sub_j, codebook_j[i]> for every query at once,
+    built ONCE on the driver and shipped to workers inside the
+    mapInArrow closure (Q · m · 2^nbits doubles — a few KB; rides task
+    serialization like a broadcast)."""
     import numpy as np
 
     nb = np.asarray(codebooks, dtype=np.float64)  # (m, k, sub_d)
@@ -819,8 +727,8 @@ def _adc_topk_arrow(
     luts,
     kk: int,
     qid_dtype,
-    packed_nbits: int | None = None,
-    cell_probe: dict | None = None,
+    nbits: int,
+    cell_probe: dict,
 ) -> DataFrame:
     """Arrow-vectorized ADC with per-partition partial top-k: one
     mapInArrow over the code table gathers lut[q, j, codes[:, j]] for a
@@ -830,11 +738,11 @@ def _adc_topk_arrow(
     the map-side-combine shape: at 1M corpus rows the global rank window
     sees ~2k rows per query instead of 1M (VERDICT r4 item #1).
 
-    codes_df: (vec_id, codes array<int>) when packed_nbits is None, else
-    (cell, vec_id, packed bigint) with codes unpacked by shift+mask in
-    numpy. cell_probe maps cell -> (query-index array, qdotc array) for
-    the IVF-PQ residual score  <q, c_cell> + Σ_j lut[j][code_j];  None
-    scores every row against every query (flat PQ).
+    codes_df: (cell, vec_id, packed bigint), codes unpacked by shift+mask
+    in numpy. cell_probe maps cell -> (query-index array, qdotc array)
+    for the IVF-PQ residual score  <q, c_cell> + Σ_j lut[j][code_j];
+    rows of unprobed cells are skipped. Flat PQ is the one-cell case:
+    every row in cell 0, probed by every query with qdotc 0.
 
     Scores are 6dp-rounded IN the mapper (same HALF_UP convention as the
     JVM, _np_round6) so the partial selection and the final global window
@@ -850,18 +758,12 @@ def _adc_topk_arrow(
             T.StructField("score", T.DoubleType()),
         ]
     )
-    if packed_nbits is None:
-        src = codes_df.select(
-            F.col("vec_id").cast("long").alias("vec_id"), "codes"
-        )
-    else:
-        src = codes_df.select(
-            F.col("cell").cast("int").alias("cell"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            "packed",
-        )
+    src = codes_df.select(
+        F.col("cell").cast("int").alias("cell"),
+        F.col("vec_id").cast("long").alias("vec_id"),
+        "packed",
+    )
     m = luts.shape[1]
-    nbits = packed_nbits
     # the emitted arrays MUST carry the declared arrow types: pa.array
     # inference turns an IntegerType query_id (e.g. a lit() literal)
     # into int64 and the JVM's ArrowColumnVector accessor then crashes
@@ -888,53 +790,31 @@ def _adc_topk_arrow(
             if not n:
                 continue
             vid = batch.column("vec_id").to_numpy(zero_copy_only=False)
-            if nbits is None:
-                codes = (
-                    batch.column("codes")
-                    .flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                    .reshape(n, m)
-                )
-            else:
-                packed = batch.column("packed").to_numpy(
-                    zero_copy_only=False
-                )
-                shifts = nbits * np.arange(m, dtype=np.int64)
-                codes = (packed[:, None] >> shifts[None, :]) & (
-                    (1 << nbits) - 1
-                )
-            if cell_probe is None:
-                # (Q, m, n) gather, summed over subspaces -> (Q, n)
+            packed = batch.column("packed").to_numpy(zero_copy_only=False)
+            shifts = nbits * np.arange(m, dtype=np.int64)
+            codes = (packed[:, None] >> shifts[None, :]) & (
+                (1 << nbits) - 1
+            )
+            cells = batch.column("cell").to_numpy(zero_copy_only=False)
+            for c in np.unique(cells):
+                probe = cell_probe.get(int(c))
+                if probe is None:
+                    continue
+                q_idx, qdotc = probe
+                sel = cells == c
+                sub_codes = codes[sel]
+                sub_vid = vid[sel]
+                # (q, m, n) gather, summed over subspaces -> (q, n)
                 s = _np_round6(
                     np.take_along_axis(
-                        luts, codes.T[None, :, :], axis=2
+                        luts[q_idx],
+                        sub_codes.T[None, :, :],
+                        axis=2,
                     ).sum(axis=1)
+                    + qdotc[:, None]
                 )
-                for qi in range(nq):
-                    merge(qi, s[qi], vid)
-            else:
-                cells = batch.column("cell").to_numpy(
-                    zero_copy_only=False
-                )
-                for c in np.unique(cells):
-                    probe = cell_probe.get(int(c))
-                    if probe is None:
-                        continue
-                    q_idx, qdotc = probe
-                    sel = cells == c
-                    sub_codes = codes[sel]
-                    sub_vid = vid[sel]
-                    s = _np_round6(
-                        np.take_along_axis(
-                            luts[q_idx],
-                            sub_codes.T[None, :, :],
-                            axis=2,
-                        ).sum(axis=1)
-                        + qdotc[:, None]
-                    )
-                    for row, qi in enumerate(q_idx):
-                        merge(int(qi), s[row], sub_vid)
+                for row, qi in enumerate(q_idx):
+                    merge(int(qi), s[row], sub_vid)
 
         out_ids, out_vids, out_s = [], [], []
         for qi in range(nq):
@@ -1006,72 +886,88 @@ def _refine_exact(
     return _rank_topk(exact, k)
 
 
+def _adc_knn(
+    codes_df: DataFrame,
+    queries: DataFrame,
+    qids: list,
+    luts,
+    nbits: int,
+    cell_probe: dict,
+    k: int,
+    refine: int,
+    source: DataFrame | None,
+) -> DataFrame:
+    """The one ADC query path behind knn_pq and knn_ivfpq_indexed:
+    _adc_topk_arrow partial top-(refine·k or k), the global rank window,
+    then either the pure-ADC top-k or the exact re-rank against
+    `source`."""
+    kk = refine * k if refine else k
+    scored = _adc_topk_arrow(
+        codes_df,
+        qids,
+        luts,
+        kk,
+        queries.schema["query_id"].dataType,
+        nbits,
+        cell_probe,
+    )
+    ranked = _rank_topk(scored, kk)
+    if not refine:
+        return ranked.where(F.col("rank") <= k)
+    return _refine_exact(ranked, source, queries, k, refine)
+
+
 def knn_pq(
     embeddings: DataFrame,
     queries: DataFrame,
     codebooks: list[list[list[float]]],
     k: int = 5,
     refine: int = 0,
-    impl: str = "arrow",
 ) -> DataFrame:
     """ANN by asymmetric distance computation (ADC) over PQ codes:
     approx_cos(q, x) = Σ_j  <q_j , codebook_j[code_j(x)]>  — the dot
     product of the EXACT query sub-vector with the corpus sub-vector's
     centroid, which is why ADC beats symmetric code-code distance.
 
-    plan: per query the m×2^nbits LUT of sub-dot-products is computed
-    once as a native projection (codebook literals ride the plan); the
-    broadcast-joined corpus side then scores each row with ONE
-    zip_with(codes, lut) + sum — no vector arithmetic per corpus row at
-    all, just m table lookups. Top-k via the shared rank window.
+    Flat PQ is the one-cell case of IVF-PQ: the corpus is encoded to
+    packed codes (nbits = log2 of the codebook size) under a constant
+    cell 0, every query probes that cell with <q, c> = 0, and scoring
+    runs through the same _adc_topk_arrow LUT gather and per-partition
+    partial top-k as knn_ivfpq_indexed — m table lookups per corpus row,
+    no vector arithmetic.
 
     refine > 0 re-ranks the top refine·k ADC candidates by exact cosine
     (joining only those rows back to their full vectors) — the standard
     PQ recall recovery; refine=0 returns pure-ADC ranks.
     Returns (query_id, vec_id, score, rank) where score is approx cos
-    (refine=0) or exact cos (refine>0), rounded to 6dp.
+    (refine=0) or exact cos (refine>0), rounded to 6dp; vec_id is cast
+    to long."""
+    import numpy as np
 
-    impl="arrow" (default) scores through _adc_topk_arrow — the batched
-    numpy LUT gather with per-partition partial top-k (vec_id cast to
-    long). impl="sql" is the pure-Catalyst twin: full Q×n scoring via
-    one interpreted HOF per row, kept as the engine-independent
-    definition and the parity oracle (same ranks, pinned in
-    test_corpus_ops)."""
-    m = len(codebooks)
-    kk = refine * k if refine else k
-    if impl == "arrow":
-        qids, q_units = _collect_query_units(queries)
-        if not qids:
-            return _empty_ranked(
-                embeddings.sparkSession, queries.schema["query_id"]
-            )
-        luts = _pq_luts_np(q_units, codebooks)
-        corpus_codes = pq_encode(embeddings, codebooks)
-        scored = _adc_topk_arrow(
-            corpus_codes,
-            qids,
-            luts,
-            kk,
-            queries.schema["query_id"].dataType,
+    qids, q_units = _collect_query_units(queries)
+    if not qids:
+        return _empty_ranked(
+            embeddings.sparkSession, queries.schema["query_id"]
         )
-    else:
-        corpus_codes = pq_encode(embeddings, codebooks)
-        q = queries.select("query_id", _unit().alias("q_unit"))
-        sub_d = len(codebooks[0][0])
-        q_lut = _with_books(q, codebooks).select(
-            "query_id", "q_unit", _pq_lut_expr(m, sub_d).alias("lut")
-        )
-        adc = F.expr(
-            "aggregate(zip_with(codes, lut, (c, l) -> l[c]), "
-            "0D, (acc, v) -> acc + v)"
-        )
-        scored = corpus_codes.join(
-            F.broadcast(q_lut.select("query_id", "lut"))
-        ).select("query_id", "vec_id", F.round(adc, 6).alias("score"))
-    ranked = _rank_topk(scored, kk)
-    if not refine:
-        return ranked.where(F.col("rank") <= k)
-    return _refine_exact(ranked, embeddings, queries, k, refine)
+    nbits = (len(codebooks[0]) - 1).bit_length()
+    enc = _pq_codes_udf(codebooks, nbits)
+    codes = embeddings.select(
+        F.lit(0).alias("cell"),
+        "vec_id",
+        enc(unit_vector("embedding")).alias("packed"),
+    )
+    one_cell = {0: (np.arange(len(qids)), np.zeros(len(qids)))}
+    return _adc_knn(
+        codes,
+        queries,
+        qids,
+        _pq_luts_np(q_units, codebooks),
+        nbits,
+        one_cell,
+        k,
+        refine,
+        embeddings,
+    )
 
 
 # ------------------------------------------------------------------- IVF-PQ
@@ -1162,7 +1058,7 @@ def _ivfpq_write_cells(
     resid: DataFrame, books, nbits: int, path: str, mode: str
 ) -> None:
     """Shared encode→partitioned-write stage of build and append."""
-    enc = _pq_codes_udf(books, packed_nbits=nbits)
+    enc = _pq_codes_udf(books, nbits)
     resid.select(
         "cell", "vec_id", enc(F.col("embedding")).alias("packed")
     ).repartition(F.col("cell")).write.mode(mode).partitionBy(
@@ -1208,7 +1104,6 @@ def knn_ivfpq_indexed(
     n_probe: int = 4,
     refine: int = 0,
     source: DataFrame | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """ANN over a persisted IVF-PQ index: probe the n_probe nearest
     cells per query, then score every row of those partitions by
@@ -1221,13 +1116,12 @@ def knn_ivfpq_indexed(
     shift+mask. The corpus side never touches a float vector; only
     probed partitions are read.
 
-    impl="arrow" (default): cell ranking, qdotc, and the LUTs are
-    computed driver-side in numpy from the sidecar centroids/codebooks
-    plus the collected (bounded, broadcast-small) query batch; probed
-    partitions are selected with a STATIC `cell IN (...)` partition
-    filter, and scoring runs through _adc_topk_arrow (batched LUT
-    gather, per-partition partial top-k). impl="sql" is the interpreted
-    HOF twin — same probes, same scores (parity-pinned).
+    Cell ranking (by ‖q − c‖², cell-index tie-break), qdotc and the LUTs
+    are computed driver-side in numpy from the sidecar centroids and
+    codebooks plus the collected (bounded, broadcast-small) query batch;
+    probed partitions are selected with a STATIC `cell IN (...)`
+    partition filter, and scoring runs through _adc_topk_arrow (batched
+    LUT gather, per-partition partial top-k).
 
     refine > 0 re-ranks the top refine·k ADC candidates by exact cosine
     against `source` (the original embeddings table — point lookups of
@@ -1235,96 +1129,46 @@ def knn_ivfpq_indexed(
     import json
     import os
 
+    import numpy as np
+
     with open(os.path.join(index_path, "_ivfpq.json")) as f:
         meta = json.load(f)
     cents, books, nbits = meta["cents"], meta["books"], meta["nbits"]
-    m = len(books)
-    sub_d = len(books[0][0])
-    n_cells = len(cents)
-    mask = (1 << nbits) - 1
-    corpus = spark.read.parquet(index_path)
     if refine and source is None:
         raise ValueError("refine > 0 requires the source embeddings table")
-    kk = refine * k if refine else k
 
-    if impl == "arrow":
-        import numpy as np
-
-        qids, q_units = _collect_query_units(queries)
-        if not qids:
-            return _empty_ranked(spark, queries.schema["query_id"])
-        C = np.asarray(cents, dtype=np.float64)  # (n_cells, d)
-        d2 = ((q_units[:, None, :] - C[None, :, :]) ** 2).sum(axis=-1)
-        qdotc = q_units @ C.T  # (Q, n_cells)
-        cell_idx = np.arange(n_cells)
-        cell_probe: dict[int, tuple] = {}
-        for qi in range(len(qids)):
-            # same (dist2, cell) tie-break as the SQL struct sort
-            probed = np.lexsort((cell_idx, d2[qi]))[:n_probe]
-            for c in probed:
-                cell_probe.setdefault(int(c), ([], []))
-                cell_probe[int(c)][0].append(qi)
-                cell_probe[int(c)][1].append(qdotc[qi, c])
-        cell_probe = {
-            c: (np.asarray(qs, dtype=np.int64), np.asarray(ds))
-            for c, (qs, ds) in cell_probe.items()
-        }
-        luts = _pq_luts_np(q_units, books)
-        pruned = corpus.where(
-            F.col("cell").isin(sorted(cell_probe.keys()))
-        )
-        scored = _adc_topk_arrow(
-            pruned,
-            qids,
-            luts,
-            kk,
-            queries.schema["query_id"].dataType,
-            packed_nbits=nbits,
-            cell_probe=cell_probe,
-        )
-        ranked = _rank_topk(scored, kk)
-        if not refine:
-            return ranked.where(F.col("rank") <= k)
-        return _refine_exact(ranked, source, queries, k, refine)
-
-    q = queries.select("query_id", _unit().alias("q_unit"))
-    q = _with_books(q, books)
-    q = _with_const(
-        q, "_ct", [list(map(float, c)) for c in cents], "array<array<double>>"
+    qids, q_units = _collect_query_units(queries)
+    if not qids:
+        return _empty_ranked(spark, queries.schema["query_id"])
+    C = np.asarray(cents, dtype=np.float64)  # (n_cells, d)
+    d2 = ((q_units[:, None, :] - C[None, :, :]) ** 2).sum(axis=-1)
+    qdotc = q_units @ C.T  # (Q, n_cells)
+    cell_idx = np.arange(len(cents))
+    cell_probe: dict[int, tuple] = {}
+    for qi in range(len(qids)):
+        probed = np.lexsort((cell_idx, d2[qi]))[:n_probe]
+        for c in probed:
+            cell_probe.setdefault(int(c), ([], []))
+            cell_probe[int(c)][0].append(qi)
+            cell_probe[int(c)][1].append(qdotc[qi, c])
+    cell_probe = {
+        c: (np.asarray(qs, dtype=np.int64), np.asarray(ds))
+        for c, (qs, ds) in cell_probe.items()
+    }
+    pruned = spark.read.parquet(index_path).where(
+        F.col("cell").isin(sorted(cell_probe.keys()))
     )
-    # rank cells by ‖q − c‖², keep n_probe, carry <q, c> for the ADC
-    # score; one SQL expression over the broadcast centroid column
-    probe = F.expr(
-        f"slice(array_sort(zip_with(_ct, sequence(0, {n_cells - 1}), "
-        f"(c, i) -> struct("
-        f"aggregate(zip_with(q_unit, c, (a, b) -> (a - b) * (a - b)), "
-        f"0D, (acc, v) -> acc + v) AS dist2, "
-        f"i AS cell, "
-        f"aggregate(zip_with(q_unit, c, (a, b) -> a * b), "
-        f"0D, (acc, v) -> acc + v) AS qdotc))), 1, {n_probe})"
+    return _adc_knn(
+        pruned,
+        queries,
+        qids,
+        _pq_luts_np(q_units, books),
+        nbits,
+        cell_probe,
+        k,
+        refine,
+        source,
     )
-    probes = q.select(
-        "query_id",
-        _pq_lut_expr(m, sub_d).alias("lut"),
-        F.explode(probe).alias("p"),
-    ).select(
-        "query_id",
-        "lut",
-        F.col("p.cell").alias("cell"),
-        F.col("p.qdotc").alias("qdotc"),
-    )
-    adc = F.expr(
-        f"qdotc + aggregate(zip_with(lut, sequence(0, {m - 1}), "
-        f"(l, j) -> l[cast(shiftright(packed, j * {nbits}) & {mask} "
-        f"as int)]), 0D, (acc, v) -> acc + v)"
-    )
-    scored = corpus.join(F.broadcast(probes), "cell").select(
-        "query_id", "vec_id", F.round(adc, 6).alias("score")
-    )
-    ranked = _rank_topk(scored, kk)
-    if not refine:
-        return ranked.where(F.col("rank") <= k)
-    return _refine_exact(ranked, source, queries, k, refine)
 
 
 def jl_signs(out_dim: int, in_dim: int, seed: int = 7) -> list[float]:
@@ -1361,8 +1205,8 @@ def random_project(
     inner products to within the JL epsilon.
 
     Scale shape: a PURE MAP — the sign matrix rides as a one-row
-    broadcast column (never an expression literal, the pq_encode
-    lesson), each output coordinate is one zip_with/aggregate fold
+    broadcast column (never an expression literal, the SQL PQ
+    encode lesson), each output coordinate is one zip_with/aggregate fold
     over a contiguous slice, zero shuffles, zero driver data besides
     the out_dim x in_dim signs. The fold adds the same doubles in the
     same i-ascending order as DuckDB's list_sum replay, so projected
@@ -1487,7 +1331,7 @@ def pca_project(
 ) -> DataFrame:
     """Apply trained PCA → (id, proj[out_dim]): a PURE MAP — the
     components (and mean) ride as one-row broadcast columns (the
-    pq_encode lesson: never expression literals inside HOF lambdas),
+    SQL PQ encode lesson: never expression literals inside HOF lambdas),
     each output coordinate is one zip_with/aggregate fold over the
     centered vector. Zero shuffles; the corpus is never collected."""
     out_dim = len(components)

@@ -63,13 +63,11 @@ def banded_stream(
 ) -> DataFrame:
     """(doc_id, ts, text) stream → (band, band_hash, doc_id, ts) rows,
     one per band — the same signature + banding expressions as the batch
-    operator (minhash_sigs / band xxhash), pure map end-to-end (no join:
-    ts rides the projection via minhash_sigs passthrough),
+    operator (minhash_sigs / linking.band_keys), pure map end-to-end (no
+    join: ts rides the projection via minhash_sigs passthrough),
     watermarked."""
-    from ..operators.dedup import minhash_sigs
-
-    rows_per_band = n_perms // n_bands
-    from ..operators.dedup import shingle_col
+    from ..operators.dedup import minhash_sigs, shingle_col
+    from ..operators.linking import band_keys
 
     with_sh = docs.select(
         "doc_id",
@@ -80,20 +78,9 @@ def banded_stream(
     banded = with_ts.select(
         "doc_id",
         "ts",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.element_at("sig", b * rows_per_band + r + 1)
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_hash"),
+        F.posexplode(band_keys(n_bands, n_perms // n_bands)).alias(
+            "band", "band_hash"
+        ),
     )
     return banded.withWatermark("ts", watermark)
 

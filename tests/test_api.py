@@ -187,6 +187,7 @@ def test_save_pretrained_round_trip(tmp_path):
     IDENTICAL predictions and generation, and a drifted artifact
     (embeddings not matching the saved config's scorer) loads loudly."""
     import json
+    import os
 
     import numpy as np
     import pytest
@@ -231,3 +232,15 @@ def test_save_pretrained_round_trip(tmp_path):
     np.save(f"{art}/label_embeddings.npy", emb)
     with pytest.raises(ValueError, match="drifted"):
         GLiNERSpark.from_pretrained(art)
+
+    # a model WITHOUT labels saved over a labelled artifact must not
+    # inherit its labels: both label files go, and the reload has none
+    GLiNERSpark(cfg=cfg).save_pretrained(art)
+    assert not os.path.exists(f"{art}/labels.json")
+    assert not os.path.exists(f"{art}/label_embeddings.npy")
+    bare = GLiNERSpark.from_pretrained(art)
+    assert bare.cfg == cfg and not hasattr(bare, "_labels_trie")
+    # ...and labelling it again restores the full labelled artifact
+    model.save_pretrained(art)
+    again = GLiNERSpark.from_pretrained(art)
+    assert again.generate_labels(TEXTS) == model.generate_labels(TEXTS)

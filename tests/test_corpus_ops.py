@@ -1380,32 +1380,137 @@ def _pq_fixture(spark):
     return df, queries
 
 
-def test_pq_encode_matches_numpy_argmin(spark):
+def _round6(x):
+    """Spark round(x, 6): HALF_UP over the shortest decimal repr."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(
+        Decimal(repr(float(x))).quantize(
+            Decimal("0.000001"), rounding=ROUND_HALF_UP
+        )
+    )
+
+
+def _units(rows, id_col):
     import numpy as np
 
-    from gliner_spark.operators.similarity import pq_encode, train_pq
+    vecs = {r[id_col]: np.asarray(r.embedding, dtype=np.float64) for r in rows}
+    return {i: v / np.linalg.norm(v) for i, v in vecs.items()}
+
+
+def _numpy_codes(units, books):
+    """PQ codes by plain numpy argmin ‖sub − c‖² (lowest-index ties)."""
+    import numpy as np
+
+    nb = [np.asarray(b, dtype=np.float64) for b in books]
+    sub_d = nb[0].shape[1]
+    return {
+        vid: [
+            int(np.argmin(((b - u[j * sub_d : (j + 1) * sub_d]) ** 2).sum(1)))
+            for j, b in enumerate(nb)
+        ]
+        for vid, u in units.items()
+    }
+
+
+def _adc_replay(q_units, codes, cell_of, books, k, cents=None, n_probe=1):
+    """Independent ADC top-k: per query, probe the n_probe cells nearest
+    by (dist2, cell) (flat PQ: cents=None, one cell 0 with <q, c> = 0),
+    score every row of a probed cell as <q, c_cell> + Σ_j <q_j,
+    book_j[code_j]>, round to 6dp and rank by (score desc, vec_id asc).
+    → sorted [(query_id, vec_id, score, rank)]."""
+    import numpy as np
+
+    nb = [np.asarray(b, dtype=np.float64) for b in books]
+    sub_d = nb[0].shape[1]
+    out = []
+    for qid, qu in q_units.items():
+        if cents is None:
+            probe = {0: 0.0}
+        else:
+            C = np.asarray(cents, dtype=np.float64)
+            order = sorted(
+                range(len(C)),
+                key=lambda c: (float(((qu - C[c]) ** 2).sum()), c),
+            )[:n_probe]
+            probe = {c: float(qu @ C[c]) for c in order}
+        scored = []
+        for vid, cs in codes.items():
+            if cell_of[vid] not in probe:
+                continue
+            adc = sum(
+                float(qu[j * sub_d : (j + 1) * sub_d] @ nb[j][c])
+                for j, c in enumerate(cs)
+            )
+            scored.append((_round6(adc + probe[cell_of[vid]]), vid))
+        scored.sort(key=lambda t: (-t[0], t[1]))
+        out += [(qid, v, sc, i + 1) for i, (sc, v) in enumerate(scored[:k])]
+    return sorted(out)
+
+
+def _refine_replay(adc_rows, exact_cos, k, refine):
+    """Exact re-rank of each query's ADC top refine·k by brute-force cos."""
+    out = []
+    for qid in sorted({r[0] for r in adc_rows}):
+        cand = [
+            (exact_cos[(qid, v)], v)
+            for q, v, _s, rank in adc_rows
+            if q == qid and rank <= refine * k
+        ]
+        cand.sort(key=lambda t: (-t[0], t[1]))
+        out += [(qid, v, sc, i + 1) for i, (sc, v) in enumerate(cand[:k])]
+    return sorted(out)
+
+
+def _ivfpq_replay(spark, path, q_units, k, n_probe):
+    """_adc_replay over a persisted IVF-PQ index: centroids, codebooks
+    and nbits from the `_ivfpq.json` sidecar, codes unpacked from the
+    packed parquet by shift/mask."""
+    import json
+
+    with open(f"{path}/_ivfpq.json") as f:
+        meta = json.load(f)
+    nbits, m = meta["nbits"], len(meta["books"])
+    mask = (1 << nbits) - 1
+    rows = spark.read.parquet(path).collect()
+    codes = {
+        r.vec_id: [(r.packed >> (j * nbits)) & mask for j in range(m)]
+        for r in rows
+    }
+    cell_of = {r.vec_id: r.cell for r in rows}
+    return _adc_replay(
+        q_units, codes, cell_of, meta["books"], k, meta["cents"], n_probe
+    )
+
+
+def _ranked_rows(out):
+    return sorted(
+        (r.query_id, r.vec_id, r.score, r.rank) for r in out.collect()
+    )
+
+
+def test_pq_encode_matches_numpy_argmin(spark):
+    from gliner_spark.operators.dedup import unit_vector
+    from gliner_spark.operators.similarity import _pq_codes_udf, train_pq
 
     df, _q = _pq_fixture(spark)
     books = train_pq(df, m=4, nbits=3, kmeans_iter=3)
     assert len(books) == 4 and all(len(b) == 8 for b in books)
-    got = {r.vec_id: list(r.codes) for r in pq_encode(df, books).collect()}
-    # the pure-Catalyst SQL twin must produce bit-identical codes
-    got_sql = {
-        r.vec_id: list(r.codes)
-        for r in pq_encode(df, books, impl="sql").collect()
+    enc = _pq_codes_udf(books, 3)
+    packed = {
+        r.vec_id: r.packed
+        for r in df.select(
+            "vec_id", enc(unit_vector("embedding")).alias("packed")
+        ).collect()
     }
-    assert got_sql == got
-    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64)
-            for r in df.collect()}
-    nb = [np.asarray(b, dtype=np.float64) for b in books]
-    for vid, v in vecs.items():
-        u = v / np.linalg.norm(v)
-        want = []
-        for j in range(4):
-            sub = u[j * 4 : (j + 1) * 4]
-            d2 = ((nb[j] - sub) ** 2).sum(axis=1)
-            want.append(int(np.argmin(d2)))
-        assert got[vid] == want, vid
+    # unpack by shift/mask: code_j sits in bits [3j, 3j + 3)
+    got = {
+        v: [(p >> (3 * j)) & 7 for j in range(4)] for v, p in packed.items()
+    }
+    assert got == _numpy_codes(_units(df.collect(), "vec_id"), books)
+    # m·nbits beyond one BIGINT is rejected, never silently truncated
+    with pytest.raises(ValueError, match="cannot pack"):
+        _pq_codes_udf(books, 16)
 
 
 def test_pq_adc_scores_match_numpy(spark):
@@ -1481,8 +1586,8 @@ def test_ivfpq_index_recall_pruning_and_packing(spark, tmp_path_factory):
     nbits=4 codes packed by shift — 8 B vs the 128 B float vector);
     (b) full-probe ADC + exact refine recovers ≥90% of the brute-force
     top-5 with true-cosine scores; (c) a partial-probe query plan
-    carries a dynamicpruningexpression partition filter — only probed
-    cells are read."""
+    carries a static `cell IN (...)` partition filter — only probed
+    cells are read — and its rows equal the numpy ADC replay."""
     import os
 
     from gliner_spark.operators.similarity import (
@@ -1516,71 +1621,103 @@ def test_ivfpq_index_recall_pruning_and_packing(spark, tmp_path_factory):
         assert abs(exact[key] - got[key]) < 1e-9
 
     part = knn_ivfpq_indexed(spark, path, queries, k=3, n_probe=2)
-    rows = part.collect()
+    rows = _ranked_rows(part)
     assert len(rows) == 3 * queries.count()
-    # arrow (default) path prunes partitions STATICALLY: the probed
-    # cell set is known at plan time, so the scan carries a literal
-    # partition filter rather than a runtime DPP subquery
+    # partitions are pruned STATICALLY: the probed cell set is known at
+    # plan time, so the scan carries a literal partition filter
     plan = part._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [cell" in plan and " IN " in plan
-    # the SQL twin's probe side is a broadcast join -> runtime DPP
-    part_sql = knn_ivfpq_indexed(
-        spark, path, queries, k=3, n_probe=2, impl="sql"
-    )
-    plan_sql = part_sql._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruningexpression" in plan_sql
+    # and the partial probe returns exactly the numpy residual-ADC replay
+    q_units = _units(queries.collect(), "query_id")
+    assert rows == _ivfpq_replay(spark, path, q_units, k=3, n_probe=2)
 
 
-def test_pq_arrow_vs_sql_parity(spark, tmp_path_factory):
-    """The Arrow ADC fast path (batched numpy LUT gather + per-partition
-    partial top-k, similarity._adc_topk_arrow) must return EXACTLY the
-    SQL twin's (query_id, vec_id, score, rank) rows — flat PQ, flat PQ
-    with exact refine, and the persisted IVF-PQ index path. The 6dp
-    HALF-UP rounding inside the mapper (_np_round6) is what keeps the
-    partial selection ordered identically to the JVM window."""
+def test_pq_adc_matches_numpy_replay(spark, tmp_path_factory):
+    """The ADC path (batched numpy LUT gather + per-partition partial
+    top-k, similarity._adc_topk_arrow) must return EXACTLY the rows of
+    an independent numpy replay — (query_id, vec_id, score, rank) after
+    6dp HALF_UP rounding and the (score desc, vec_id asc) rank — for
+    flat PQ (the one-cell case), flat PQ with exact refine, and the
+    persisted IVF-PQ index with partial and full probes."""
     from gliner_spark.operators.similarity import (
         build_ivfpq_index,
+        knn_bruteforce,
         knn_ivfpq_indexed,
         knn_pq,
         train_pq,
     )
 
     df, queries = _pq_fixture(spark)
-    books = train_pq(df, m=8, nbits=4, kmeans_iter=3)
+    q_units = _units(queries.collect(), "query_id")
+    exact_cos = {
+        (r.query_id, r.vec_id): r.cos
+        for r in knn_bruteforce(df, queries, k=300).collect()
+    }
+    for m, nbits in ((4, 3), (8, 4)):
+        books = train_pq(df, m=m, nbits=nbits, kmeans_iter=3)
+        codes = _numpy_codes(_units(df.collect(), "vec_id"), books)
+        one_cell = dict.fromkeys(codes, 0)
+        for k in (7, 300):
+            assert _ranked_rows(knn_pq(df, queries, books, k=k)) == (
+                _adc_replay(q_units, codes, one_cell, books, k)
+            ), (m, nbits, k)
+        adc30 = _adc_replay(q_units, codes, one_cell, books, 30)
+        assert _ranked_rows(
+            knn_pq(df, queries, books, k=5, refine=6)
+        ) == _refine_replay(adc30, exact_cos, 5, 6), (m, nbits)
 
-    def rows(out):
-        return sorted(
-            (r.query_id, r.vec_id, r.score, r.rank) for r in out.collect()
-        )
-
-    assert rows(knn_pq(df, queries, books, k=7, impl="arrow")) == rows(
-        knn_pq(df, queries, books, k=7, impl="sql")
-    )
-    assert rows(
-        knn_pq(df, queries, books, k=5, refine=6, impl="arrow")
-    ) == rows(knn_pq(df, queries, books, k=5, refine=6, impl="sql"))
-
-    path = str(tmp_path_factory.mktemp("ivfpq_parity")) + "/index"
+    path = str(tmp_path_factory.mktemp("ivfpq_replay")) + "/index"
     build_ivfpq_index(df, path, n_cells=8, m=4, nbits=4, seed=5)
-    for kwargs in ({"n_probe": 3}, {"n_probe": 8, "refine": 4}):
-        src = {"source": df} if kwargs.get("refine") else {}
-        assert rows(
-            knn_ivfpq_indexed(
-                spark, path, queries, k=5, impl="arrow", **kwargs, **src
-            )
-        ) == rows(
-            knn_ivfpq_indexed(
-                spark, path, queries, k=5, impl="sql", **kwargs, **src
-            )
+    assert _ranked_rows(
+        knn_ivfpq_indexed(spark, path, queries, k=5, n_probe=3)
+    ) == _ivfpq_replay(spark, path, q_units, k=5, n_probe=3)
+    adc20 = _ivfpq_replay(spark, path, q_units, k=20, n_probe=8)
+    assert _ranked_rows(
+        knn_ivfpq_indexed(
+            spark, path, queries, k=5, n_probe=8, refine=4, source=df
         )
+    ) == _refine_replay(adc20, exact_cos, 5, 4)
+
     # empty query batch short-circuits to an empty, correctly-typed frame
     eq = queries.where("query_id < 0")
-    empty = knn_pq(df, eq, books, k=5, impl="arrow")
+    empty = knn_pq(df, eq, books, k=5)
     assert empty.count() == 0
     assert [f.name for f in empty.schema.fields] == [
         "query_id", "vec_id", "score", "rank",
     ]
-    assert knn_ivfpq_indexed(spark, path, eq, k=5, impl="arrow").count() == 0
+    assert knn_ivfpq_indexed(spark, path, eq, k=5).count() == 0
+
+
+def test_pq_exact_boundary_equals_bruteforce(spark, tmp_path_factory):
+    """Exact boundary of the compressed paths: probing every cell and
+    refining over the whole corpus (refine·k ≥ n) re-ranks every vector
+    by exact cosine, so knn_pq and knn_ivfpq_indexed must return the
+    brute-force top-k row for row."""
+    from gliner_spark.operators.similarity import (
+        build_ivfpq_index,
+        knn_bruteforce,
+        knn_ivfpq_indexed,
+        knn_pq,
+        train_pq,
+    )
+
+    df, queries = _pq_fixture(spark)
+    k, refine = 5, 60  # refine·k = 300 = corpus size
+    want = sorted(
+        (r.query_id, r.vec_id, r.cos, r.rank)
+        for r in knn_bruteforce(df, queries, k=k).collect()
+    )
+    books = train_pq(df, m=8, nbits=4, kmeans_iter=2)
+    assert _ranked_rows(
+        knn_pq(df, queries, books, k=k, refine=refine)
+    ) == want
+    path = str(tmp_path_factory.mktemp("ivfpq_exact")) + "/index"
+    build_ivfpq_index(df, path, n_cells=8, m=4, nbits=4, seed=5)
+    assert _ranked_rows(
+        knn_ivfpq_indexed(
+            spark, path, queries, k=k, n_probe=8, refine=refine, source=df
+        )
+    ) == want
 
 
 # ------------------------------------------------------------ semantic dedup
@@ -2221,8 +2358,7 @@ def test_adc_topk_arrow_mixed_cell_batches(spark):
         "cell int, vec_id long, packed long",
     ).coalesce(1)  # ONE partition -> one batch with all four cells
     out = _adc_topk_arrow(
-        df, [10, 11, 12], luts, 5, T.LongType(),
-        packed_nbits=nbits, cell_probe=cell_probe,
+        df, [10, 11, 12], luts, 5, T.LongType(), nbits, cell_probe,
     ).collect()
     got = {(r.query_id, r.vec_id): r.score for r in out}
     # brute python replay
@@ -2287,14 +2423,11 @@ def test_ivfpq_append_frozen_quantizers(spark, tmp_path_factory):
     ).collect()
     top = [r for r in out if r.rank == 1][0]
     assert top.vec_id == 250 and abs(top.score - 1.0) < 1e-6
-    # arrow/sql parity holds on the appended index
-    sq = knn_ivfpq_indexed(
-        spark, path, probe, k=3, n_probe=8, impl="sql"
-    ).collect()
-    ar = knn_ivfpq_indexed(
-        spark, path, probe, k=3, n_probe=8, impl="arrow"
-    ).collect()
-    assert sorted(map(tuple, ar)) == sorted(map(tuple, sq))
+    # ADC over old + appended rows equals the numpy replay of the index
+    q_units = _units(probe.collect(), "query_id")
+    assert _ranked_rows(
+        knn_ivfpq_indexed(spark, path, probe, k=3, n_probe=8)
+    ) == _ivfpq_replay(spark, path, q_units, k=3, n_probe=8)
 
 
 def test_np_round6_matches_spark_round_on_boundaries(spark):

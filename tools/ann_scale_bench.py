@@ -138,25 +138,14 @@ def main():
     pq_query_s = time.time() - t0
     pq_got = {(r.query_id, r.vec_id) for r in pq_rows}
 
-    # the interpreted-HOF parity twin vs the Arrow path, ADC probe only
-    # (no refine), so the scoring-engine gap is reproducible from this
-    # one script. Each impl runs twice and reports the SECOND (warm)
-    # wall: the first arrow call pays python-worker spin-up and the
-    # first sql call pays codegen — a single-shot comparison measured
-    # whichever ran first as slower (observed both ways, r5)
-    def warm_wall(impl):
-        wall = None
-        for _ in range(2):
-            t0 = time.time()
-            knn_ivfpq_indexed(
-                spark, pq_path, queries, k=10, n_probe=N_PROBE,
-                impl=impl,
-            ).collect()
-            wall = time.time() - t0
-        return wall
-
-    adc_sql_s = warm_wall("sql")
-    adc_arrow_s = warm_wall("arrow")
+    # ADC probe only (no refine), run twice and reported WARM (second
+    # call): the first call pays python-worker spin-up
+    for _ in range(2):
+        t0 = time.time()
+        knn_ivfpq_indexed(
+            spark, pq_path, queries, k=10, n_probe=N_PROBE
+        ).collect()
+        adc_arrow_s = time.time() - t0
 
     result = {
         "metric": "ann_scale_1m",
@@ -171,7 +160,6 @@ def main():
         "ivfpq_build_s": round(pq_build_s, 2),
         "ivfpq_query_s": round(pq_query_s, 2),
         "ivfpq_adc_probe_arrow_s": round(adc_arrow_s, 2),
-        "ivfpq_adc_probe_sql_s": round(adc_sql_s, 2),
         "ivfpq_recall_at_10": round(len(exact & pq_got) / len(exact), 4),
         "corpus_bytes": du(corpus_path),
         "ivfpq_bytes": du(pq_path),
