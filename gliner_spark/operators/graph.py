@@ -14,8 +14,57 @@ duplicating evidence into edges would double the write volume).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _directed_edges(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    cast: bool = True,
+    symmetric: bool = False,
+) -> DataFrame:
+    """Simple directed view (src, dst): self-loops dropped, parallel
+    edges collapsed, ids cast to long unless `cast=False`. `symmetric`
+    adds every edge's reverse first (the undirected graph as both
+    directions). Callers choose their own lineage cut."""
+    s, d = F.col(src_col), F.col(dst_col)
+    if cast:
+        s, d = s.cast("long"), d.cast("long")
+    e = edges.select(s.alias("src"), d.alias("dst"))
+    if symmetric:
+        e = e.union(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    return e.where(F.col("src") != F.col("dst")).distinct()
+
+
+def _undirected_edges(
+    edges: DataFrame, src_col: str, dst_col: str
+) -> DataFrame:
+    """Canonical undirected simple view (a, b) with a < b: one row per
+    adjacent vertex pair, self-loops dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
+            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
+        )
+        .where(F.col("a") < F.col("b"))
+        .distinct()
+    )
+
+
+def _vertex_ids(e: DataFrame) -> DataFrame:
+    """Distinct endpoint ids (id) of an (src, dst) edge frame."""
+    return (
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
 
 
 def build_nodes(
@@ -111,9 +160,9 @@ def pagerank(
     only on simple graphs (multiplicity is the point of weights).
     """
     if weight_col is None:
-        e = edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        ).where(F.col("src") != F.col("dst")).distinct().localCheckpoint()
+        e = _directed_edges(
+            edges, src_col, dst_col, cast=False
+        ).localCheckpoint()
         out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     else:
         e = (
@@ -131,9 +180,7 @@ def pagerank(
     # vertices carry their out-degree for the whole loop (deg null =
     # dangling) — one join here instead of one per iteration
     verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
+        _vertex_ids(e)
         .join(out_deg.withColumnRenamed("src", "id"), "id", "left")
         .localCheckpoint()
     )
@@ -178,13 +225,43 @@ def pagerank(
         ranks = warm.select(
             "id", "deg", (F.col("r0") / F.lit(s)).alias("rank")
         )
-    base = (1.0 - damping) / n
     contrib = (
         F.col("rank") / F.col("deg")
         if weight_col is None
         else F.col("rank") * F.col("w") / F.col("deg")
     )
+    return _power_iterate(
+        ranks,
+        e,
+        contrib,
+        F.lit((1.0 - damping) / n),
+        lambda m: F.lit(m / n),
+        dangling,
+        damping,
+        max_iter,
+        tol,
+    )
 
+
+def _power_iterate(
+    ranks: DataFrame,
+    e: DataFrame,
+    contrib: Column,
+    restart: Column,
+    dangle_share: Callable[[float], Column],
+    dangling: float,
+    damping: float,
+    max_iter: int,
+    tol: float,
+) -> DataFrame:
+    """The PageRank power-iteration loop shared by `pagerank` and
+    `personalized_pagerank`: rank' = restart + d·(inflow +
+    dangle_share(m)), where inflow sums `contrib` (over ranks ⋈ edges)
+    per dst and m is the previous round's dangling mass. `ranks` is
+    (id, deg, …, rank); every column besides rank rides along
+    unchanged. Stops after `max_iter` rounds or once the L1 delta is
+    below `tol` → (entity_id, rank)."""
+    keep = [c for c in ranks.columns if c != "rank"]
     for _ in range(max_iter):
         contribs = (
             ranks.join(e, ranks.id == e.src)
@@ -193,16 +270,18 @@ def pagerank(
             .agg(F.sum("c").alias("inflow"))
         )
         new_ranks = (
-            ranks.select("id", "deg", F.col("rank").alias("old_rank"))
+            ranks.select(*keep, F.col("rank").alias("old_rank"))
             .join(contribs, "id", "left")
             .select(
-                "id",
-                "deg",
+                *keep,
                 "old_rank",
                 (
-                    F.lit(base)
+                    restart
                     + F.lit(damping)
-                    * (F.coalesce("inflow", F.lit(0.0)) + F.lit(dangling / n))
+                    * (
+                        F.coalesce("inflow", F.lit(0.0))
+                        + dangle_share(dangling)
+                    )
                 ).alias("rank"),
             )
             # lazy: the fused aggregate below both materializes this
@@ -217,7 +296,7 @@ def pagerank(
             ).alias("m"),
         ).collect()[0]
         dangling = row["m"]
-        ranks = new_ranks.select("id", "deg", "rank")
+        ranks = new_ranks.select(*keep, "rank")
         if row["d"] < tol:
             break
     return ranks.select(F.col("id").alias("entity_id"), "rank")
@@ -339,14 +418,7 @@ def link_predict(
     A degree-1 middle cannot form a wedge, so ln(deg) >= ln 2 — no
     division-by-zero path exists.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
+    und = _undirected_edges(edges, src_col, dst_col)
     adj = und.select(F.col("a").alias("v"), F.col("b").alias("n")).unionAll(
         und.select(F.col("b").alias("v"), F.col("a").alias("n"))
     )
@@ -384,28 +456,23 @@ def personalized_pagerank(
     → (entity_id, rank): relevance of every entity GIVEN the seeds —
     the related-entity recommendation primitive over the KG.
 
-    Same driver-loop power iteration and per-iteration shuffle shape as
-    `pagerank` (one equi-join + one hash agg on int64 keys, one fused
-    delta+dangling collect per iteration, localCheckpoint lineage
-    cuts), with the uniform teleport vector replaced by
-    p(v) = 1/|seeds| on seeds, 0 elsewhere:
+    Runs pagerank's power-iteration loop with the uniform teleport
+    vector replaced by p(v) = 1/|seeds| on seeds, 0 elsewhere:
 
         rank' = (1-d)*p + d*(inflow + dangling_mass*p)
 
     so both the restart and the dangling mass return to the seeds, and
     vertices unreachable from the seed set stay at exactly 0. Seeds are
     added to the vertex set even when isolated (an isolated seed is
-    dangling), keeping total mass at 1. Kept separate from `pagerank`
-    rather than a seeds=None branch so the global variant's
-    oracle-pinned operand shapes stay untouched.
+    dangling), keeping total mass at 1.
     """
     if not seeds:
         raise ValueError("personalized_pagerank needs >= 1 seed")
     seed_ids = sorted({int(s) for s in seeds})
     spark = edges.sparkSession
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).where(F.col("src") != F.col("dst")).distinct().localCheckpoint()
+    e = _directed_edges(
+        edges, src_col, dst_col, cast=False
+    ).localCheckpoint()
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     seed_df = spark.createDataFrame(
         [(s,) for s in seed_ids], "id long"
@@ -431,50 +498,17 @@ def personalized_pagerank(
         ).alias("m")
     ).collect()[0]["m"]
     ranks = verts.withColumn("rank", F.col("p")).localCheckpoint()
-
-    for _ in range(max_iter):
-        contribs = (
-            ranks.join(e, ranks.id == e.src)
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        new_ranks = (
-            ranks.select(
-                "id", "deg", "p", F.col("rank").alias("old_rank")
-            )
-            .join(contribs, "id", "left")
-            .select(
-                "id",
-                "deg",
-                "p",
-                "old_rank",
-                (
-                    F.lit(1.0 - damping) * F.col("p")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.lit(dangling) * F.col("p")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        row = new_ranks.agg(
-            F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("d"),
-            F.coalesce(
-                F.sum(F.when(F.col("deg").isNull(), F.col("rank"))),
-                F.lit(0.0),
-            ).alias("m"),
-        ).collect()[0]
-        dangling = row["m"]
-        ranks = new_ranks.select("id", "deg", "p", "rank")
-        if row["d"] < tol:
-            break
-    return ranks.select(F.col("id").alias("entity_id"), "rank")
+    return _power_iterate(
+        ranks,
+        e,
+        F.col("rank") / F.col("deg"),
+        F.lit(1.0 - damping) * F.col("p"),
+        lambda m: F.lit(m) * F.col("p"),
+        dangling,
+        damping,
+        max_iter,
+        tol,
+    )
 
 
 def random_walks(
@@ -511,14 +545,7 @@ def random_walks(
 
     if walk_len < 0 or walks_per_vertex < 1:
         raise ValueError("walk_len >= 0 and walks_per_vertex >= 1")
-    e = (
-        edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e = _directed_edges(edges, src_col, dst_col)
     w = Window.partitionBy("src").orderBy("dst")
     iedges = e.withColumn(
         "idx", (F.row_number().over(w) - 1).cast("long")
@@ -535,11 +562,7 @@ def random_walks(
         F.col("idx").alias("eidx"),
         F.col("dst").alias("edst"),
     )
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = _vertex_ids(e)
     frontier = verts.select(
         F.col("id").alias("start_id"),
         F.explode(
@@ -643,23 +666,11 @@ def node2vec_walks(
         raise ValueError("walk_len >= 0 and walks_per_vertex >= 1")
     if p <= 0 or q <= 0:
         raise ValueError("node2vec needs p > 0 and q > 0")
-    e = (
-        edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _directed_edges(edges, src_col, dst_col).localCheckpoint()
     probe = e.select(
         F.col("src").alias("psrc"), F.col("dst").alias("pdst")
     ).withColumn("is_nbr", F.lit(1))
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = _vertex_ids(e)
     frontier = verts.select(
         F.col("id").alias("start_id"),
         F.explode(
@@ -825,15 +836,7 @@ def k_core(
     if k < 1:
         raise ValueError("k >= 1")
     spark = edges.sparkSession
-    live = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    live = _undirected_edges(edges, src_col, dst_col).localCheckpoint()
     if live.count() <= small_solve:
         pairs = [(r.a, r.b) for r in live.collect()]
         core = _local_core_numbers(pairs)
@@ -891,15 +894,7 @@ def core_numbers(
     the driver (distributed == local == sequential-oracle parity
     pinned in test_kcore.py).
     """
-    live = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    live = _undirected_edges(edges, src_col, dst_col).localCheckpoint()
     spark = edges.sparkSession
     if live.count() <= small_solve:
         core = _local_core_numbers(
@@ -1090,15 +1085,7 @@ def k_truss(
     """
     if k < 2:
         raise ValueError("k-truss needs k >= 2")
-    live = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    live = _undirected_edges(edges, src_col, dst_col).localCheckpoint()
     thresh = k - 2
     if thresh == 0:
         return live  # every edge has >= 0 support
@@ -1245,31 +1232,11 @@ def strongly_connected_components(
     shrinks by every settled SCC — at 100 TB the remaining-edge table
     is bucketed on src so the propagation probes join Exchange-free.
     """
-    import os as _os
-    import time as _time
-
-    _dbg = bool(_os.environ.get("GLINER_SCC_DEBUG"))
-
-    def _log(msg):
-        if _dbg:
-            print(f"[scc +{_time.time() - _t0:7.1f}s] {msg}", flush=True)
-
-    _t0 = _time.time()
     spark = edges.sparkSession
-    e0 = (
-        edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    remaining = _directed_edges(edges, src_col, dst_col).localCheckpoint()
     settled_parts: list[DataFrame] = []
-    remaining = e0
-    for _phase in range(max_phases):
+    for _ in range(max_phases):
         n_edges = remaining.count()
-        _log(f"phase {_phase}: {n_edges} edges remain")
         if n_edges == 0:
             break
         if n_edges <= small_solve:
@@ -1285,11 +1252,7 @@ def strongly_connected_components(
                 )
             remaining = None
             break
-        verts = (
-            remaining.select(F.col("src").alias("id"))
-            .union(remaining.select(F.col("dst").alias("id")))
-            .distinct()
-        )
+        verts = _vertex_ids(remaining)
         has_out = remaining.select(F.col("src").alias("id")).distinct()
         has_in = remaining.select(F.col("dst").alias("id")).distinct()
         core = has_out.join(has_in, "id").localCheckpoint()
@@ -1313,18 +1276,12 @@ def strongly_connected_components(
             # touched a trimmed vertex) and vanish from the remaining
             # graph — it has no edge to any unsettled vertex, so no
             # cycle: settle it as a singleton or it is never emitted
-            still = (
-                remaining.select(F.col("src").alias("id"))
-                .union(remaining.select(F.col("dst").alias("id")))
-                .distinct()
-                .localCheckpoint()
-            )
+            still = _vertex_ids(remaining).localCheckpoint()
             vanished = core.join(still, "id", "left_anti").select(
                 "id", F.col("id").alias("component")
             )
             if not vanished.isEmpty():
                 settled_parts.append(vanished.localCheckpoint())
-            _log(f"trimmed {n_trimmed}")
             # re-trim only while it is still paying its way: the trim
             # convergence TAIL settled 915/100/15 edges for ~4 s a pass
             # at 2M edges (measured r5) — below 0.5% of the remaining
@@ -1354,7 +1311,7 @@ def strongly_connected_components(
         # late rounds, which removes the probe-side shuffle (and with
         # it the one-reducer hot-key placement) exactly when the skew
         # would appear.
-        def _min_label_doubling(prop_edges, init_verts, tag):
+        def _min_label_doubling(prop_edges, init_verts):
             # Round-barrier discipline (r5, measured on a 64-cycle):
             # the pointer step is a SELF-JOIN of `stepped` with its own
             # projection, and chaining localCheckpoint() through a
@@ -1367,7 +1324,6 @@ def strongly_connected_components(
             # an explicit unpersist of the previous round, not a second
             # localCheckpoint. 24 anti-aligned rounds measured flat at
             # ~0.45 s after the fix.
-            rounds = 0
             cols = init_verts.select("id", F.col("id").alias("color"))
             prev_cache = None
             while True:
@@ -1420,8 +1376,6 @@ def strongly_connected_components(
                     prev_cache.unpersist()
                 prev_cache = doubled
                 cols = doubled.select("id", "color")
-                rounds += 1
-                _log(f"{tag} round {rounds}: changed={changed}")
                 if changed == 0:
                     break
             # the final round's cache backs the returned frame until the
@@ -1431,8 +1385,7 @@ def strongly_connected_components(
             return cols
 
         _phase_caches: list = []
-        _log("forward coloring start")
-        colors = _min_label_doubling(remaining, core, "fw")
+        colors = _min_label_doubling(remaining, core)
         # backward pass: the SAME doubled min-label on the REVERSED
         # class-restricted subgraph. Within class(r) every v→…→r path
         # stays in the class (proof in test_scc docstring), so
@@ -1459,8 +1412,7 @@ def strongly_connected_components(
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             .localCheckpoint()
         )
-        _log("backward coloring start")
-        bcolors = _min_label_doubling(ce, core, "bw")
+        bcolors = _min_label_doubling(ce, core)
         scc = (
             colors.join(
                 bcolors.select(
@@ -1476,7 +1428,6 @@ def strongly_connected_components(
         for _c in _phase_caches:
             if _c is not None:
                 _c.unpersist()
-        _log("scc extracted")
         done = scc.select("id")
         remaining = (
             remaining.join(
@@ -1488,11 +1439,7 @@ def strongly_connected_components(
         )
         # same vanish rule as the trim step: an unsettled vertex whose
         # every edge touched an extracted SCC has no remaining cycle
-        still = (
-            remaining.select(F.col("src").alias("id"))
-            .union(remaining.select(F.col("dst").alias("id")))
-            .distinct()
-        )
+        still = _vertex_ids(remaining)
         vanished = (
             core.join(done, "id", "left_anti")
             .join(still, "id", "left_anti")
@@ -1544,19 +1491,9 @@ def label_propagation(
     test_graph_communities.py; DuckDB unrolled-round oracle under the
     driver gate (`edge_agg` leg='lpa').
     """
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    ).where(F.col("src") != F.col("dst"))
-    ud = (
-        e.unionAll(
-            e.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    ud = _directed_edges(
+        edges, src_col, dst_col, symmetric=True
+    ).localCheckpoint()
     # both directions are present, so every vertex appears as src and
     # receives one message per neighbor each round
     labels = (
@@ -1613,22 +1550,9 @@ def hits(
     """
     if max_iter < 1:
         raise ValueError("hits needs max_iter >= 1")
-    e = (
-        edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _directed_edges(edges, src_col, dst_col).localCheckpoint()
     spark = edges.sparkSession
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
+    verts = _vertex_ids(e).localCheckpoint()
     if verts.isEmpty():
         return spark.createDataFrame(
             [], "entity_id long, hub double, auth double"
@@ -1676,6 +1600,93 @@ def hits(
 _FM_PHI = 0.77351  # Flajolet–Martin bias correction constant
 
 
+def _ball_rounds(
+    edges: DataFrame,
+    max_t: int,
+    method: str,
+    n_sketches: int,
+    seed: int,
+    src_col: str,
+    dst_col: str,
+    directed: bool,
+):
+    """Ball-growth rounds behind `neighborhood_function` and
+    `distance_profile` → yields (t, state, ball, chk) for t = 0..max_t.
+
+    `state` is round t's checkpointed per-vertex frame (id + reach set
+    `rs`, or id + sketch masks s0..s{K-1}); `ball` is the Column of
+    |B(v, t)| over it (exact size, or the FM estimate) and `chk` an
+    exact integer Column whose sum only grows until the fixpoint
+    (reach-set size; the popcount of the masks, which gain bits under
+    `bit_or`). Round t ≥ 1 is ONE int64 equi-join + one mergeable hash
+    agg + an eager localCheckpoint; rounds run only as the consumer
+    asks for them, so a consumer that stops early computes no more.
+    """
+    if method not in ("sketch", "exact"):
+        raise ValueError(f"unknown method {method!r}")
+    e = _directed_edges(
+        edges, src_col, dst_col, symmetric=not directed
+    ).localCheckpoint()
+    verts = _vertex_ids(e)
+    if method == "exact":
+        cols = ["rs"]
+        state = verts.select("id", F.array(F.col("id")).alias("rs"))
+        merge = [F.array_distinct(F.flatten(F.collect_list("rs"))).alias("rs")]
+        ball = F.size("rs").cast("double")
+        chk = F.size("rs")
+    else:
+        cols = [f"s{k}" for k in range(n_sketches)]
+        init = []
+        for k in range(n_sketches):
+            h = (
+                F.pmod(
+                    F.xxhash64(F.col("id"), F.lit(seed * 1009 + k)),
+                    F.lit(1 << 32),
+                )
+                + 1
+            )  # in [1, 2^32]: never zero, so h & -h is a clean power of two
+            init.append(h.bitwiseAND(-h).alias(f"s{k}"))
+        state = verts.select("id", *init)
+        merge = [F.bit_or(c).alias(c) for c in cols]
+
+        # lowest ZERO bit index of m == bit_count((~m & (m+1)) - 1):
+        # pure integer, no float log rounding hazards
+        def _b(c: str):
+            m = F.col(c)
+            return F.bit_count(F.bitwise_not(m).bitwiseAND(m + 1) - 1)
+
+        mean_b = sum((_b(c) for c in cols), F.lit(0)) / float(n_sketches)
+        fm = F.pow(F.lit(2.0), mean_b) / _FM_PHI
+        # Small-range correction (the HLL linear-counting idea, applied
+        # to FM bit-0 occupancy): P(bit0 set) = 1 - 2^-n, so while ANY
+        # sketch still has bit 0 unset, n̂ = log(1 - c0/K) / log(1/2) is
+        # nearly unbiased — raw FM reads tiny balls up to ~1.8× high.
+        # Once all K bit-0s are set (n ≳ log2 K + a few), fall back to FM.
+        c0 = sum(
+            (F.col(c).bitwiseAND(F.lit(1)) for c in cols), F.lit(0)
+        ).cast("double")
+        ball = F.when(
+            c0 < float(n_sketches),
+            F.log(1.0 - c0 / float(n_sketches)) / F.log(F.lit(0.5)),
+        ).otherwise(fm)
+        # popcount as an exact long: Σ masks as double would round a
+        # newly gained low bit away once the sum passes 2^53
+        chk = sum((F.bit_count(F.col(c)) for c in cols), F.lit(0))
+    state = state.localCheckpoint()
+    yield 0, state, ball, chk
+    for t in range(1, max_t + 1):
+        contrib = e.join(state, e.dst == state.id).select(
+            F.col("src").alias("id"), *cols
+        )
+        state = (
+            state.unionByName(contrib)
+            .groupBy("id")
+            .agg(*merge)
+            .localCheckpoint()
+        )
+        yield t, state, ball, chk
+
+
 def neighborhood_function(
     edges: DataFrame,
     max_t: int = 8,
@@ -1719,124 +1730,26 @@ def neighborhood_function(
     Both emit exactly max_t+1 rows — after the fixpoint the value
     repeats (the loop stops computing; flat rows are filled in), so
     row count never depends on convergence round. Monotone
-    convergence is detected on the exact mask/size checksum, not the
-    estimate. Driver loop, one collect per round (scalar only).
+    convergence is detected on the exact popcount/size checksum, not
+    the estimate. NF(t) is `distance_profile` summed over id: both
+    consume the same rounds, this one with one scalar collect per
+    round.
     """
-    if method not in ("sketch", "exact"):
-        raise ValueError(f"unknown method {method!r}")
-    spark = edges.sparkSession
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    )
-    if not directed:
-        e = e.union(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    e = e.where(F.col("src") != F.col("dst")).distinct().localCheckpoint()
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
     rows: list[tuple[int, float]] = []
-
-    if method == "exact":
-        reach = verts.select(
-            "id", F.array(F.col("id")).alias("rs")
-        ).localCheckpoint()
-        total = reach.agg(F.sum(F.size("rs"))).collect()[0][0] or 0
-        rows.append((0, float(total)))
-        for t in range(1, max_t + 1):
-            contrib = e.join(reach, e.dst == reach.id).select(
-                F.col("src").alias("id"), "rs"
-            )
-            reach = (
-                reach.unionByName(contrib)
-                .groupBy("id")
-                .agg(
-                    F.array_distinct(
-                        F.flatten(F.collect_list("rs"))
-                    ).alias("rs")
-                )
-                .localCheckpoint()
-            )
-            nxt = reach.agg(F.sum(F.size("rs"))).collect()[0][0] or 0
-            rows.append((t, float(nxt)))
-            if nxt == total:  # fixpoint: fill the grid without compute
-                rows.extend(
-                    (tt, float(nxt)) for tt in range(t + 1, max_t + 1)
-                )
-                break
-            total = nxt
-        return spark.createDataFrame(rows, "t int, n_pairs double")
-
-    scols = [f"s{k}" for k in range(n_sketches)]
-    init = []
-    for k in range(n_sketches):
-        h = (
-            F.pmod(
-                F.xxhash64(F.col("id"), F.lit(seed * 1009 + k)),
-                F.lit(1 << 32),
-            )
-            + 1
-        )  # in [1, 2^32]: never zero, so h & -h is a clean power of two
-        init.append(h.bitwiseAND(-h).alias(f"s{k}"))
-    sk = verts.select("id", *init).localCheckpoint()
-
-    # lowest ZERO bit index of m == bit_count((~m & (m+1)) - 1): pure
-    # integer, no float log rounding hazards
-    def _b(k: int):
-        m = F.col(f"s{k}")
-        return F.bit_count(F.bitwise_not(m).bitwiseAND(m + 1) - 1)
-
-    mean_b = sum((_b(k) for k in range(n_sketches)), F.lit(0)) / float(
-        n_sketches
-    )
-    fm = F.pow(F.lit(2.0), mean_b) / _FM_PHI
-    # Small-range correction (the HLL linear-counting idea, applied to
-    # FM bit-0 occupancy): P(bit0 set) = 1 - 2^-n, so while ANY sketch
-    # still has bit 0 unset, n̂ = log(1 - c0/K) / log(1/2) is nearly
-    # unbiased — raw FM reads tiny balls up to ~1.8× high. Once all K
-    # bit-0s are set (n ≳ log2 K + a few), fall back to FM.
-    c0 = sum(
-        (F.col(c).bitwiseAND(F.lit(1)) for c in scols), F.lit(0)
-    ).cast("double")
-    est = F.when(
-        c0 < float(n_sketches),
-        F.log(1.0 - c0 / float(n_sketches)) / F.log(F.lit(0.5)),
-    ).otherwise(fm)
-    # one collect per round: estimate + exact monotone checksum (masks
-    # only gain bits, so the sum is strictly increasing until fixpoint)
-    chk = sum(
-        (F.col(c).cast("double") for c in scols), F.lit(0.0)
-    )
-    agg0 = sk.agg(
-        F.sum(est).alias("nf"), F.sum(chk).alias("chk")
-    ).collect()[0]
-    rows.append((0, float(agg0["nf"])))
-    prev_chk = agg0["chk"]
-    for t in range(1, max_t + 1):
-        contrib = e.join(sk, e.dst == sk.id).select(
-            F.col("src").alias("id"), *scols
-        )
-        sk = (
-            sk.unionByName(contrib)
-            .groupBy("id")
-            .agg(*[F.bit_or(c).alias(c) for c in scols])
-            .localCheckpoint()
-        )
-        a = sk.agg(
-            F.sum(est).alias("nf"), F.sum(chk).alias("chk")
+    prev_chk = -1
+    for t, state, ball, chk in _ball_rounds(
+        edges, max_t, method, n_sketches, seed, src_col, dst_col, directed
+    ):
+        a = state.agg(
+            F.sum(ball).alias("nf"), F.sum(chk).alias("chk")
         ).collect()[0]
-        rows.append((t, float(a["nf"])))
-        if a["chk"] == prev_chk:
-            rows.extend(
-                (tt, float(a["nf"])) for tt in range(t + 1, max_t + 1)
-            )
+        n_pairs = float(a["nf"] or 0.0)
+        rows.append((t, n_pairs))
+        if a["chk"] == prev_chk:  # fixpoint: fill the grid, no compute
+            rows.extend((tt, n_pairs) for tt in range(t + 1, max_t + 1))
             break
         prev_chk = a["chk"]
-    return spark.createDataFrame(rows, "t int, n_pairs double")
+    return edges.sparkSession.createDataFrame(rows, "t int, n_pairs double")
 
 
 def effective_diameter(nf: DataFrame, q: float = 0.9) -> float:
@@ -1888,14 +1801,7 @@ def modularity(
     cross-engine. Vertices missing from `communities` form singleton
     communities of their own label = -1 − not silently dropped.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
+    und = _undirected_edges(edges, src_col, dst_col)
     lab = communities.select(
         F.col(id_col).alias("v"), F.col(label_col).alias("lab")
     )
@@ -1960,117 +1866,22 @@ def distance_profile(
     `neighborhood_function` (which is this summed over id), and the
     input `harmonic_centrality` folds.
 
-    Same execution shape as neighborhood_function (one int64
-    equi-join + one mergeable hash agg per round; sketch state
-    O(V · n_sketches · 8 B)); the per-round snapshots are unioned
-    lazily over already-checkpointed frames, so materializing the
-    profile adds no extra jobs. method="exact" emits exact integer
+    The per-round snapshots are unioned lazily over the
+    already-checkpointed round states, so materializing the profile
+    adds no extra jobs. method="exact" emits exact integer
     counts (the oracle twin); method="sketch" emits FM estimates with
     the linear-counting small-range correction (monotone in t within
     each estimator branch; the branch switchover is clamped by
     consumers, see harmonic_centrality).
     """
-    if method not in ("sketch", "exact"):
-        raise ValueError(f"unknown method {method!r}")
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    )
-    if not directed:
-        e = e.union(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    snaps = [
+        state.select("id", F.lit(t).alias("t"), ball.alias("ball"))
+        for t, state, ball, _ in _ball_rounds(
+            edges, max_t, method, n_sketches, seed, src_col, dst_col,
+            directed,
         )
-    e = e.where(F.col("src") != F.col("dst")).distinct().localCheckpoint()
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    snaps = []
-
-    if method == "exact":
-        reach = verts.select(
-            "id", F.array(F.col("id")).alias("rs")
-        ).localCheckpoint()
-        snaps.append(
-            reach.select(
-                "id",
-                F.lit(0).alias("t"),
-                F.size("rs").cast("double").alias("ball"),
-            )
-        )
-        for t in range(1, max_t + 1):
-            contrib = e.join(reach, e.dst == reach.id).select(
-                F.col("src").alias("id"), "rs"
-            )
-            reach = (
-                reach.unionByName(contrib)
-                .groupBy("id")
-                .agg(
-                    F.array_distinct(
-                        F.flatten(F.collect_list("rs"))
-                    ).alias("rs")
-                )
-                .localCheckpoint()
-            )
-            snaps.append(
-                reach.select(
-                    "id",
-                    F.lit(t).alias("t"),
-                    F.size("rs").cast("double").alias("ball"),
-                )
-            )
-        out = snaps[0]
-        for s in snaps[1:]:
-            out = out.unionByName(s)
-        return out
-
-    scols = [f"s{k}" for k in range(n_sketches)]
-    init = []
-    for k in range(n_sketches):
-        h = (
-            F.pmod(
-                F.xxhash64(F.col("id"), F.lit(seed * 1009 + k)),
-                F.lit(1 << 32),
-            )
-            + 1
-        )
-        init.append(h.bitwiseAND(-h).alias(f"s{k}"))
-    sk = verts.select("id", *init).localCheckpoint()
-
-    def _b(k: int):
-        m = F.col(f"s{k}")
-        return F.bit_count(F.bitwise_not(m).bitwiseAND(m + 1) - 1)
-
-    mean_b = sum((_b(k) for k in range(n_sketches)), F.lit(0)) / float(
-        n_sketches
-    )
-    fm = F.pow(F.lit(2.0), mean_b) / _FM_PHI
-    c0 = sum(
-        (F.col(c).bitwiseAND(F.lit(1)) for c in scols), F.lit(0)
-    ).cast("double")
-    est = F.when(
-        c0 < float(n_sketches),
-        F.log(1.0 - c0 / float(n_sketches)) / F.log(F.lit(0.5)),
-    ).otherwise(fm)
-    snaps.append(sk.select("id", F.lit(0).alias("t"), est.alias("ball")))
-    for t in range(1, max_t + 1):
-        contrib = e.join(sk, e.dst == sk.id).select(
-            F.col("src").alias("id"), *scols
-        )
-        sk = (
-            sk.unionByName(contrib)
-            .groupBy("id")
-            .agg(*[F.bit_or(c).alias(c) for c in scols])
-            .localCheckpoint()
-        )
-        snaps.append(
-            sk.select("id", F.lit(t).alias("t"), est.alias("ball"))
-        )
-    out = snaps[0]
-    for s in snaps[1:]:
-        out = out.unionByName(s)
-    return out
+    ]
+    return reduce(DataFrame.unionByName, snaps)
 
 
 def harmonic_centrality(
@@ -2148,15 +1959,7 @@ def shortest_path_counts(
     oracle-able); σ can grow exponentially with depth, which is one
     more reason `max_hops` is part of the contract.
     """
-    e = (
-        edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _directed_edges(edges, src_col, dst_col).localCheckpoint()
     if isinstance(sources, DataFrame):
         lm = sources.select(
             F.col(sources.columns[0]).cast("long").alias("source")
@@ -2338,21 +2141,8 @@ def katz_centrality(
     dyadic, so pinned-round values over integer β are EXACT on every
     engine — no summation-order ulps at all.
     """
-    e = (
-        edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _directed_edges(edges, src_col, dst_col).localCheckpoint()
+    verts = _vertex_ids(e).localCheckpoint()
     x = verts.select("id", F.lit(float(beta)).alias("katz"))
     for _ in range(max_iter):
         contrib = (
@@ -2409,23 +2199,16 @@ def assortativity(
     so the binary64 result is bit-stable cross-engine. Degenerate
     variance (e.g. regular graphs) yields r = NULL, not a throw.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    e = _undirected_edges(edges, src_col, dst_col)
     deg = (
-        e.select(F.col("u").alias("id"))
-        .unionByName(e.select(F.col("v").alias("id")))
+        e.select(F.col("a").alias("id"))
+        .unionByName(e.select(F.col("b").alias("id")))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
     joined = e.join(
-        deg.select(F.col("id").alias("u"), F.col("deg").alias("dj")), "u"
-    ).join(deg.select(F.col("id").alias("v"), F.col("deg").alias("dk")), "v")
+        deg.select(F.col("id").alias("a"), F.col("deg").alias("dj")), "a"
+    ).join(deg.select(F.col("id").alias("b"), F.col("deg").alias("dk")), "b")
     sums = joined.agg(
         F.count(F.lit(1)).alias("m_edges"),
         F.sum(F.col("dj") * F.col("dk")).alias("s_jk"),

@@ -42,6 +42,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .graph import _undirected_edges
+
 _TERM = re.compile(
     r"^(?P<neg>!)?\s*\((?P<src>[A-Za-z_][A-Za-z0-9_]*)?\)"
     r"(?:\s*-\s*\[(?P<edge>[A-Za-z_][A-Za-z0-9_]*)?\]\s*->\s*"
@@ -237,14 +239,7 @@ def triangle_counts(
     Self-loops are dropped by the a<b canonicalization. Two shuffles on
     vertex keys; no driver iteration.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
+    und = _undirected_edges(edges, src_col, dst_col)
     tri = (
         und.alias("ab")
         .join(
@@ -289,14 +284,7 @@ def clustering_coefficient(
     coefficient itself is exact integer arithmetic divided in
     binary64 — bit-stable cross-engine, so the op is oracle-checkable.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
+    und = _undirected_edges(edges, src_col, dst_col)
     deg = (
         und.select(F.col("a").alias("id"))
         .union(und.select(F.col("b").alias("id")))

@@ -40,22 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graph import pagerank
-
-_GEN = "_b"
-
-
-def committed_generations(spark: SparkSession, gen_base: str) -> list[int]:
-    """Batch ids with a COMMITTED rank generation (meta present),
-    ascending."""
-    gens = []
-    prefix = f"{gen_base}{_GEN}"
-    for t in spark.catalog.listTables():
-        n = t.name
-        if n.startswith(prefix) and n.endswith("_meta"):
-            mid = n[len(prefix):-len("_meta")]
-            if mid.isdigit():
-                gens.append(int(mid))
-    return sorted(gens)
+from .linking import _GEN, committed_generations
 
 
 def current_ranks(spark: SparkSession, gen_base: str) -> DataFrame | None:

@@ -33,8 +33,9 @@ _TABLES = ("surfaces", "labels", "bands", "canon", "meta")
 
 
 def committed_generations(spark: SparkSession, gen_base: str) -> list[int]:
-    """Batch ids with a COMMITTED state generation (meta table present),
-    ascending."""
+    """Batch ids with a COMMITTED generation (meta table present),
+    ascending — the lister for every marker-last generation store
+    (`{gen_base}_b{batch_id}_*`; streaming/graphrank.py shares it)."""
     gens = []
     prefix = f"{gen_base}{_GEN}"
     for t in spark.catalog.listTables():

@@ -174,21 +174,61 @@ def test_harmonic_centrality_sketch_tracks_exact(spark):
     assert len(top_e & top_s) >= 6
 
 
-def test_nf_exact_equals_summed_distance_profile(spark):
+@pytest.mark.parametrize("method", ["exact", "sketch"])
+def test_nf_exact_equals_summed_distance_profile(spark, method):
+    """NF(t) is the per-round sum of the profile's ball column: exact
+    integers agree exactly, sketch double sums up to summation order."""
     from gliner_spark.operators.graph import distance_profile
-    from pyspark.sql import functions as F
 
     pairs = [(i % 31, (i * 5 + 1) % 31) for i in range(80)]
     e = _edges(spark, pairs)
     nf = {
         r["t"]: r["n_pairs"]
-        for r in neighborhood_function(e, max_t=4, method="exact").collect()
+        for r in neighborhood_function(e, max_t=4, method=method).collect()
     }
     summed = {
-        r["t"]: float(r["s"])
-        for r in distance_profile(e, max_t=4, method="exact")
+        r["t"]: r["s"]
+        for r in distance_profile(e, max_t=4, method=method)
         .groupBy("t")
-        .agg(F.sum(F.col("ball").cast("long")).alias("s"))
+        .agg(F.sum("ball").alias("s"))
         .collect()
     }
-    assert nf == summed
+    if method == "exact":
+        assert nf == summed
+    else:
+        assert nf == pytest.approx(summed, rel=1e-12)
+
+
+def test_sketch_fixpoint_checksum_sees_low_bit_past_2_53(spark):
+    """2^16 vertices × 32 masks of 2^32 sum to 2^53 as doubles, so one
+    mask gaining bit 0 rounds away in a double checksum and the
+    fixpoint test would stop early; the popcount checksum the rounds
+    yield is an exact long and moves by one."""
+    from gliner_spark.operators.graph import _ball_rounds
+
+    _, _, _, chk = next(
+        _ball_rounds(
+            _edges(spark, [(0, 1)]), 0, "sketch", 32, 17, "src", "dst", True
+        )
+    )
+    cols = [f"s{k}" for k in range(32)]
+    masks = spark.range(1 << 16).select(
+        "id", *[F.lit(1 << 32).cast("long").alias(c) for c in cols]
+    )
+    gained = masks.withColumn(
+        "s0",
+        F.when(F.col("id") == 0, F.col("s0").bitwiseOR(F.lit(1))).otherwise(
+            F.col("s0")
+        ),
+    )
+    as_double = sum((F.col(c).cast("double") for c in cols), F.lit(0.0))
+
+    def sums(df):
+        r = df.agg(
+            F.sum(chk).alias("chk"), F.sum(as_double).alias("dbl")
+        ).collect()[0]
+        return r["chk"], r["dbl"]
+
+    (chk0, dbl0), (chk1, dbl1) = sums(masks), sums(gained)
+    assert dbl0 == dbl1 == 2.0**53
+    assert (chk0, chk1) == (2_097_152, 2_097_153)

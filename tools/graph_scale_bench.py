@@ -29,7 +29,19 @@ Measured, `local[32]`:
   * warm-start vs cold PageRank refresh after a 0.5% edge append,
     both at tol=1e-5 with max_iter headroom (the incremental-
     maintenance payoff shows in the iteration count, so tol — not
-    the cap — must terminate both runs).
+    the cap — must terminate both runs);
+  * neighborhood_function, sketch mode (ANF: 32 FM int64 masks per
+    vertex, one bit_or agg per round), max_t=5 — plus the
+    effective_diameter readout;
+  * harmonic_centrality, sketch mode, max_t=5 (the same ball rounds
+    + one window/agg);
+  * clustering_coefficient (triangle_counts + degree agg + join);
+  * modularity of the 3-round LPA partition above;
+  * shortest_path_counts from 3 sources, max_hops=3 (Brandes forward
+    σ pass), then full betweenness_centrality (backward sweeps);
+  * katz_centrality, 3 collect-free rounds.
+
+`GRAPH_E` / `GRAPH_V` override the edge and vertex counts.
 
 Prints ONE JSON line. Writes under _out/ (gitignored).
 """
@@ -60,19 +72,29 @@ OUT = os.path.join(
 
 def main():
     from gliner_spark.operators.graph import (
+        betweenness_centrality,
         bfs_distances,
         core_numbers,
+        effective_diameter,
+        harmonic_centrality,
         hits,
         k_truss,
+        katz_centrality,
         label_propagation,
         link_predict,
+        modularity,
+        neighborhood_function,
         node2vec_walks,
         pagerank,
         personalized_pagerank,
         random_walks,
+        shortest_path_counts,
         strongly_connected_components,
     )
-    from gliner_spark.operators.motif import triangle_counts
+    from gliner_spark.operators.motif import (
+        clustering_coefficient,
+        triangle_counts,
+    )
 
     spark = build_session(app_name="graph-scale", shuffle_partitions=64)
     spark.sparkContext.setLogLevel("ERROR")
@@ -176,7 +198,7 @@ def main():
     t0 = time.time()
     lpa = label_propagation(
         e, max_iter=3, src_col="subj_id", dst_col="obj_id"
-    )
+    ).localCheckpoint()
     lpa_row = lpa.agg(
         F.countDistinct("label").alias("nc"),
         F.count(F.lit(1)).alias("nv"),
@@ -237,6 +259,68 @@ def main():
     pagerank(grown, max_iter=100, tol=1e-5).agg(F.sum("rank")).collect()
     cold_s = time.time() - t0
 
+    t0 = time.time()
+    nf = neighborhood_function(
+        e, max_t=5, method="sketch", n_sketches=32,
+        src_col="subj_id", dst_col="obj_id",
+    ).localCheckpoint()
+    eff_d = effective_diameter(nf, q=0.9)
+    nf_rows = {r["t"]: r["n_pairs"] for r in nf.collect()}
+    anf_s = time.time() - t0
+
+    t0 = time.time()
+    hc = harmonic_centrality(
+        e, max_t=5, method="sketch", n_sketches=32,
+        src_col="subj_id", dst_col="obj_id",
+    )
+    hc_row = hc.agg(
+        F.count(F.lit(1)).alias("nv"), F.max("centrality").alias("mx")
+    ).collect()[0]
+    harm_s = time.time() - t0
+
+    t0 = time.time()
+    cc = clustering_coefficient(
+        e, src_col="subj_id", dst_col="obj_id"
+    )
+    cc_row = cc.agg(
+        F.count(F.lit(1)).alias("nv"),
+        F.round(F.avg("coefficient"), 6).alias("avg"),
+    ).collect()[0]
+    clust_s = time.time() - t0
+
+    t0 = time.time()
+    mq = modularity(e, lpa, src_col="subj_id", dst_col="obj_id")
+    q_total = mq.agg(F.sum("contribution")).collect()[0][0]
+    mod_s = time.time() - t0
+
+    t0 = time.time()
+    spc = shortest_path_counts(
+        e, [0, 1, 2], max_hops=3, src_col="subj_id", dst_col="obj_id"
+    )
+    spc_rows = spc.count()
+    sigma_s = time.time() - t0
+
+    t0 = time.time()
+    bc = betweenness_centrality(
+        e, [0, 1, 2], max_hops=3, src_col="subj_id", dst_col="obj_id"
+    )
+    bc_row = bc.agg(
+        F.count(F.lit(1)).alias("nv"),
+        F.round(F.max("betweenness"), 2).alias("mx"),
+    ).collect()[0]
+    btw_s = time.time() - t0
+
+    t0 = time.time()
+    kz = katz_centrality(
+        e, alpha=0.0625, max_iter=3, src_col="subj_id",
+        dst_col="obj_id",
+    )
+    kz_row = kz.agg(
+        F.count(F.lit(1)).alias("nv"),
+        F.round(F.max("katz"), 4).alias("mx"),
+    ).collect()[0]
+    katz_s = time.time() - t0
+
     print(
         json.dumps(
             {
@@ -273,6 +357,25 @@ def main():
                 "pr_tol5_cold_base_s": round(base_s, 1),
                 "pr_tol5_warm_after_append_s": round(warm_s, 1),
                 "pr_tol5_cold_after_append_s": round(cold_s, 1),
+                "anf5_sketch_s": round(anf_s, 1),
+                "anf_nf": {str(t): round(v) for t, v in nf_rows.items()},
+                "effective_diameter_q90": round(eff_d, 2),
+                "harmonic5_sketch_s": round(harm_s, 1),
+                "harmonic_verts": int(hc_row["nv"]),
+                "harmonic_max": round(float(hc_row["mx"]), 1),
+                "clustering_s": round(clust_s, 1),
+                "clustering_verts": int(cc_row["nv"]),
+                "clustering_avg": float(cc_row["avg"]),
+                "modularity_s": round(mod_s, 1),
+                "modularity_q": round(float(q_total), 6),
+                "sigma3_s": round(sigma_s, 1),
+                "sigma_rows": int(spc_rows),
+                "betweenness3_s": round(btw_s, 1),
+                "betweenness_verts": int(bc_row["nv"]),
+                "betweenness_max": float(bc_row["mx"]),
+                "katz3_s": round(katz_s, 1),
+                "katz_verts": int(kz_row["nv"]),
+                "katz_max": float(kz_row["mx"]),
             }
         )
     )
