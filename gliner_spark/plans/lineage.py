@@ -1,35 +1,47 @@
-"""Checkpoint-resume via a lineage table + per-partition metrics.
+"""Checkpoint-resume via a fingerprint marker + lineage and per-partition
+metrics tables.
 
 The reference has no resumability (SURVEY §2.10); the north rule requires
-"checkpoint-resumable with per-partition lineage and metrics tables". The
-mechanism, batch-idempotent rather than Structured-Streaming state:
+"checkpoint-resumable with per-partition lineage and metrics tables". A
+stage commits marker-last:
 
- * every pipeline stage writes its output table ATOMICALLY (parquet
-   overwrite / Iceberg replace), then appends one lineage row
-   (stage, fingerprint, n_rows, n_files, wall_s, completed_at);
- * the fingerprint hashes the stage name + config + upstream fingerprints,
-   so any input/config change invalidates exactly the downstream suffix of
-   the DAG — the same contract as Iceberg snapshot-id based incremental
-   jobs, emulated portably;
- * on rerun, a stage whose (name, fingerprint) already has a COMPLETE
-   lineage row is skipped and its persisted output is read back — an
-   anti-join of the plan against the lineage table, done driver-side
-   because the lineage table is tiny;
- * per-partition METRICS rows (stage, partition_id, n_rows) are captured
-   from the stage output with spark_partition_id() — the observability
-   hook the north rule asks for, and the skew diagnostic for free.
+ 1. its output overwrites out_dir/<stage>, deleting the old marker;
+ 2. one Spark job counts the read-back output per read partition
+    (spark_partition_id()): those rows go to `_metrics` (the skew
+    diagnostic for free) and their sum is the stage's n_rows;
+ 3. one `_lineage` row (stage, fingerprint, status, n_rows, n_partitions,
+    wall_s, completed_at) is appended;
+ 4. out_dir/<stage>/_FINGERPRINT is written with the fingerprint.
+
+Steps 2-4 write from the driver to a dot-prefixed temp file, which Spark
+never lists, then os.replace it into place: no bookkeeping row goes
+through a pickled Python RDD, and no reader sees half a file.
+
+The fingerprint hashes the stage name + config + upstream fingerprints, so
+any input/config change invalidates exactly the downstream suffix of the
+DAG. A stage resumes iff its marker holds the fingerprint: the marker is
+the commit record, and resume scans no lineage. A crash before step 4
+leaves the stage uncommitted, so the rerun recomputes it. A crash between
+steps 3 and 4 leaves one truthful `complete` lineage row for a stage that
+will then rerun and append its own.
 """
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import json
 import os
 import time
+import uuid
+from pathlib import Path
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -52,14 +64,35 @@ METRICS_SCHEMA = T.StructType(
     ]
 )
 
+_MARKER = "_FINGERPRINT"
+
 
 def fingerprint(stage: str, *parts: object) -> str:
     blob = json.dumps([stage, *[repr(p) for p in parts]], sort_keys=True)
     return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
+def _replace_into(directory: str, name: str, write) -> None:
+    """write(tmp) to a dot-prefixed temp file in directory, then rename it
+    to directory/name atomically."""
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".{uuid.uuid4().hex}.tmp")
+    write(tmp)
+    os.replace(tmp, os.path.join(directory, name))
+
+
+def _append_rows(directory: str, schema: T.StructType, rows: list[dict]) -> None:
+    """Append rows to a parquet table as one new file, from the driver."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    _replace_into(
+        directory,
+        f"part-{uuid.uuid4().hex}.parquet",
+        lambda tmp: pq.write_table(table, tmp),
+    )
+
+
 class StageRunner:
-    """Runs named stages with skip-if-complete resume semantics."""
+    """Runs named stages with skip-if-committed resume semantics."""
 
     def __init__(self, spark: SparkSession, out_dir: str):
         self.spark = spark
@@ -67,42 +100,6 @@ class StageRunner:
         self.lineage_path = os.path.join(out_dir, "_lineage")
         self.metrics_path = os.path.join(out_dir, "_metrics")
 
-    # ------------------------------------------------------------- lineage
-    def _completed(self, stage: str, fp: str) -> bool:
-        if not os.path.exists(self.lineage_path):
-            return False
-        rows = (
-            self.spark.read.schema(LINEAGE_SCHEMA)
-            .parquet(self.lineage_path)
-            .where(
-                (F.col("stage") == stage)
-                & (F.col("fingerprint") == fp)
-                & (F.col("status") == "complete")
-            )
-            .limit(1)
-            .count()
-        )
-        return rows > 0
-
-    def _append_lineage(self, row: Row) -> None:
-        self.spark.createDataFrame([row], LINEAGE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.lineage_path)
-
-    def _append_metrics(self, stage: str, fp: str, out: DataFrame) -> None:
-        per_part = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .select(
-                F.lit(stage).alias("stage"),
-                F.lit(fp).alias("fingerprint"),
-                F.col("partition_id").cast("int"),
-                F.col("n_rows").cast("long"),
-            )
-        )
-        per_part.coalesce(1).write.mode("append").parquet(self.metrics_path)
-
-    # --------------------------------------------------------------- stages
     def run_stage(
         self,
         stage: str,
@@ -110,50 +107,48 @@ class StageRunner:
         produce,
         partition_by: list[str] | None = None,
     ) -> DataFrame:
-        """produce: () -> DataFrame. Writes out_dir/<stage> unless a
-        complete lineage row for (stage, fp) already exists, in which case
-        the persisted output is read back untouched (resume)."""
-        import datetime
-
+        """produce: () -> DataFrame. Writes out_dir/<stage> unless its
+        _FINGERPRINT marker already holds fp, in which case the persisted
+        output is read back untouched (resume)."""
         path = os.path.join(self.out_dir, stage)
-        # the stage path is OVERWRITTEN per run while lineage rows are
-        # append-only, so a complete lineage row alone can point at data a
-        # LATER run with a different config wrote. The marker file pins
-        # which fingerprint the bytes on disk actually belong to; resume
-        # only when both agree (else recompute — correct, just slower).
-        marker = os.path.join(path, "_FINGERPRINT")
-        if self._completed(stage, fp) and os.path.exists(path):
-            try:
-                with open(marker) as fh:
-                    on_disk_fp = fh.read().strip()
-            except OSError:
-                on_disk_fp = None
-            if on_disk_fp == fp:
-                return self.spark.read.parquet(path)
+        try:
+            committed = Path(path, _MARKER).read_text().strip()
+        except FileNotFoundError:
+            committed = None
+        if committed == fp:
+            return self.spark.read.parquet(path)
 
         t0 = time.time()
-        df = produce()
-        w = df.write.mode("overwrite")
+        w = produce().write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
-        with open(marker, "w") as fh:
-            fh.write(fp)
         out = self.spark.read.parquet(path)
-        n_rows = out.count()
-        n_parts = out.rdd.getNumPartitions()
-        self._append_metrics(stage, fp, out)
-        self._append_lineage(
-            Row(
-                stage=stage,
-                fingerprint=fp,
-                status="complete",
-                n_rows=n_rows,
-                n_partitions=n_parts,
-                wall_s=time.time() - t0,
-                completed_at=datetime.datetime.now(),
-            )
+        counts = sorted(out.groupBy(F.spark_partition_id()).count().collect())
+        _append_rows(
+            self.metrics_path,
+            METRICS_SCHEMA,
+            [
+                {"stage": stage, "fingerprint": fp, "partition_id": pid, "n_rows": n}
+                for pid, n in counts
+            ],
         )
+        _append_rows(
+            self.lineage_path,
+            LINEAGE_SCHEMA,
+            [
+                {
+                    "stage": stage,
+                    "fingerprint": fp,
+                    "status": "complete",
+                    "n_rows": sum(n for _pid, n in counts),
+                    "n_partitions": out.rdd.getNumPartitions(),
+                    "wall_s": time.time() - t0,
+                    "completed_at": datetime.datetime.now(datetime.timezone.utc),
+                }
+            ],
+        )
+        _replace_into(path, _MARKER, lambda tmp: Path(tmp).write_text(fp))
         return out
 
     def lineage(self) -> DataFrame:

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -103,8 +104,10 @@ def fold_edge_batch(
     )
     out = f"{gen_base}{_GEN}{batch_id}"
     ranks.write.mode("overwrite").saveAsTable(f"{out}_ranks")
+    # a pandas frame takes the Arrow path (a LocalRelation); a Python
+    # list would be a pickled Python RDD, a worker job on every wave
     spark.createDataFrame(
-        [(int(i),) for i in shard_ids], "batch_id long"
+        pd.DataFrame({"batch_id": shard_ids}, dtype="int64"), "batch_id long"
     ).write.mode("overwrite").saveAsTable(f"{out}_meta")  # commit marker
     survivors = (gens + [batch_id])[-max(keep_generations, 1):]
     for g in gens:

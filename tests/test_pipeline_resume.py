@@ -1,6 +1,11 @@
 """End-to-end pipeline + checkpoint-resume semantics (north rule:
 "resumable from checkpoint with per-partition lineage + metrics")."""
 
+import datetime
+import os
+import time
+import uuid
+
 import pytest
 
 from gliner_spark.pipeline import run_pipeline
@@ -21,6 +26,16 @@ def _run(spark, df, out_dir, relations=RELATIONS):
     return run_pipeline(
         spark, df, out_dir, ENTITY_TYPES, relations, input_token="t12"
     )
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, tiny_transcripts, tmp_path_factory):
+    """A never-crashed run: the reference every crash/resume test matches."""
+    return _run(spark, tiny_transcripts, str(tmp_path_factory.mktemp("pipe_clean")))
+
+
+def _canonical(res):
+    return sorted(map(tuple, res.canonical_triples.collect()))
 
 
 def test_pipeline_end_to_end(spark, tiny_transcripts, tmp_path_factory):
@@ -67,8 +82,8 @@ def test_resume_skips_completed_stages(spark, tiny_transcripts, tmp_path_factory
     assert second.runner.lineage().count() == n_lineage1
 
 
-def test_mid_run_crash_resume(spark, tiny_transcripts, tmp_path_factory,
-                              monkeypatch):
+def test_mid_run_crash_resume(spark, tiny_transcripts, clean_run,
+                              tmp_path_factory, monkeypatch):
     """North-rule resume: kill the pipeline mid-run (crash injected at the
     canonicalization stage), rerun, and require (a) the stages completed
     before the crash are NOT recomputed and (b) the final triples equal a
@@ -101,12 +116,61 @@ def test_mid_run_crash_resume(spark, tiny_transcripts, tmp_path_factory,
     assert [r.stage for r in lineage].count("entities") == 1
     assert [r.stage for r in lineage].count("triples_re") == 1
     assert [r.stage for r in lineage].count("canon_map") == 1
+    assert _canonical(res) == _canonical(clean_run)
 
-    clean = str(tmp_path_factory.mktemp("pipe_clean"))
-    ref = _run(spark, tiny_transcripts, clean)
-    assert sorted(map(tuple, res.canonical_triples.collect())) == sorted(
-        map(tuple, ref.canonical_triples.collect())
-    )
+
+@pytest.mark.parametrize("failing_step", ["lineage", "marker"])
+def test_crash_before_marker_recomputes_stage(
+    spark, tiny_transcripts, clean_run, tmp_path_factory, monkeypatch,
+    failing_step,
+):
+    """The _FINGERPRINT marker is written LAST and is the commit record: a
+    crash after canon_map's data (and metrics) are on disk but before its
+    marker — in the lineage append, or in the marker write itself — must
+    make the rerun recompute canon_map, not resume it, and the rerun must
+    equal a never-crashed run. A crash at the marker leaves the attempt's
+    truthful `complete` lineage row behind, so canon_map ends with two."""
+    import gliner_spark.pipeline as pipeline_mod
+    from gliner_spark.plans import lineage as lineage_mod
+
+    out = str(tmp_path_factory.mktemp(f"pipe_crash_{failing_step}"))
+    real_append, real_replace = lineage_mod._append_rows, lineage_mod._replace_into
+
+    def append_rows(directory, schema, rows):
+        if schema is lineage_mod.LINEAGE_SCHEMA and rows[0]["stage"] == "canon_map":
+            raise RuntimeError("injected crash before the lineage append")
+        real_append(directory, schema, rows)
+
+    def replace_into(directory, name, write):
+        if name == lineage_mod._MARKER and os.path.basename(directory) == "canon_map":
+            raise RuntimeError("injected crash before the marker")
+        real_replace(directory, name, write)
+
+    if failing_step == "lineage":
+        monkeypatch.setattr(lineage_mod, "_append_rows", append_rows)
+    else:
+        monkeypatch.setattr(lineage_mod, "_replace_into", replace_into)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _run(spark, tiny_transcripts, out)
+    assert os.path.exists(os.path.join(out, "canon_map", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(out, "canon_map", "_FINGERPRINT"))
+
+    monkeypatch.setattr(lineage_mod, "_append_rows", real_append)
+    monkeypatch.setattr(lineage_mod, "_replace_into", real_replace)
+    calls = {"n": 0}
+    real_canon = pipeline_mod.canonicalize
+
+    def counting_canonicalize(*a, **kw):
+        calls["n"] += 1
+        return real_canon(*a, **kw)
+
+    monkeypatch.setattr(pipeline_mod, "canonicalize", counting_canonicalize)
+    res = _run(spark, tiny_transcripts, out)
+    assert calls["n"] == 1  # recomputed, not resumed
+    stages = [r.stage for r in res.runner.lineage().collect()]
+    assert stages.count("entities") == 1
+    assert stages.count("canon_map") == (2 if failing_step == "marker" else 1)
+    assert _canonical(res) == _canonical(clean_run)
 
 
 def test_config_change_invalidates_only_downstream(
@@ -155,6 +219,79 @@ def test_resume_never_returns_stale_other_fingerprint_output(
     again = runner.run_stage("s", fp_a, produce_a)
     assert again.count() == 3
     assert {r.tag for r in again.collect()} == {"A"}
+
+
+def test_stage_bookkeeping_job_counts(spark, tmp_path):
+    """Bookkeeping costs one count action per computed stage and no job
+    per resumed stage. The numbers are pinned as measured at local[4]
+    with AQE on: a bare write and a bare read-back are one job each, and
+    the groupBy(spark_partition_id()) count runs as two (AQE submits the
+    shuffle map stage as its own job)."""
+    from gliner_spark.plans.lineage import StageRunner, fingerprint
+
+    sc = spark.sparkContext
+
+    def n_jobs(fn):
+        group = f"bookkeeping-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def produce():
+        return spark.range(0, 10, 1, 2)
+
+    bare = str(tmp_path / "bare")
+    write = n_jobs(lambda: produce().write.parquet(bare))
+    read_back = n_jobs(lambda: spark.read.parquet(bare))
+    assert (write, read_back) == (1, 1)
+
+    runner = StageRunner(spark, str(tmp_path / "out"))
+    fp = fingerprint("s", "jobs")
+    assert n_jobs(lambda: runner.run_stage("s", fp, produce)) == write + read_back + 2
+    assert n_jobs(lambda: runner.run_stage("s", fp, produce)) == read_back
+
+
+def test_partitioned_stage_bookkeeping_round_trip(spark, tmp_path, monkeypatch):
+    """A partition_by stage shaped like curation shards/packed: its
+    _metrics rows sum to the lineage n_rows, the lineage files read back
+    with LINEAGE_SCHEMA's types, and completed_at falls inside the run's
+    wall-clock window. The driver runs in a non-UTC zone, so a naive
+    local time written as UTC would land hours outside it."""
+    from gliner_spark.plans.lineage import LINEAGE_SCHEMA, StageRunner, fingerprint
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        runner = StageRunner(spark, str(tmp_path))
+        fp = fingerprint("shards", 4)
+        start = datetime.datetime.now()
+        out = runner.run_stage(
+            "shards",
+            fp,
+            lambda: spark.range(0, 1000, 1, 3).selectExpr(
+                "id AS doc_id", "CAST(pmod(id * 7, 4) AS INT) AS shard"
+            ),
+            partition_by=["shard"],
+        )
+        end = datetime.datetime.now()
+        (lin,) = runner.lineage().collect()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+    assert lin.n_rows == out.count() == 1000
+    per_part = runner.metrics().collect()
+    assert sum(r.n_rows for r in per_part) == lin.n_rows
+    assert len({r.partition_id for r in per_part}) == len(per_part)
+    on_disk = spark.read.parquet(runner.lineage_path).schema
+    assert [(f.name, f.dataType) for f in on_disk] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA
+    ]
+    assert start <= lin.completed_at <= end
 
 
 def test_mixed_language_pipeline_universal_tokenizer(
