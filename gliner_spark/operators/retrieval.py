@@ -17,10 +17,19 @@ global sort shuffle). Every stage is linear in input splits.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..plans.commit import committed, write_text
+
+# marker names of the incremental parts `_stream/batch=N` and
+# `_compacted/gen=G` (plans/commit.py)
+_SEG_MARKER = "_meta_b{}.json"
+_GEN_MARKER = "_meta_g{}.json"
 
 
 def bm25_rank(
@@ -175,9 +184,6 @@ def build_bm25_index(
     doc-table join at query time. df is NOT stored: it is exactly the
     posting count of a term, recomputed from the (tiny) slice the query
     reads, which keeps appends trivially correct."""
-    import json
-    import os
-
     postings, per_doc = _postings_frame(docs, n_buckets, text_col, id_col)
     agg = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl")
@@ -190,24 +196,8 @@ def build_bm25_index(
         "total_dl": int(agg["total_dl"] or 0),
         "n_buckets": int(n_buckets),
     }
-    with open(os.path.join(path, "_bm25_meta.json"), "w") as f:
-        json.dump(meta, f)
+    write_text(path, "_bm25_meta.json", json.dumps(meta))
     return meta
-
-
-def _committed_segment_ids(path: str) -> list[int]:
-    """Batch ids with a committed segment marker on disk, ascending —
-    including stale ones below the compaction watermark that are still
-    awaiting GC (callers picking a FRESH id must clear those too)."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    out = []
-    for mp in _glob.glob(_os.path.join(path, "_stream", "_meta_b*.json")):
-        with open(mp) as f:
-            out.append(int(_json.load(f)["batch_id"]))
-    return sorted(out)
 
 
 def _fold_segment(
@@ -218,20 +208,16 @@ def _fold_segment(
     id_col: str = "doc_id",
 ) -> bool:
     """Write `docs`' postings as the committed incremental segment
-    `path/_stream/batch=<batch_id>/` — partitioned parquet first,
-    marker LAST, so a crash at any point leaves only an invisible
-    markerless directory. The shared core of the streaming fold
+    `path/_stream/batch=<batch_id>/` under plans/commit.py's
+    marker-last protocol. The shared core of the streaming fold
     (streaming/bm25.fold_index_batch) and the batch
     `append_to_bm25_index`. Returns True if folded; False if skipped —
     the id is already committed, sits at/below the latest compaction
     generation's max_batch watermark (a replay of a segment compaction
     already folded), or `docs` is empty."""
-    import json
-    import os
-
-    gen, _ = _index_live_state(path)
+    gen, segs = _index_live_state(path)
     if (
-        batch_id in _committed_segment_ids(path)
+        batch_id in segs
         or (gen is not None and batch_id <= int(gen["max_batch"]))
         or docs.isEmpty()
     ):
@@ -242,37 +228,32 @@ def _fold_segment(
     agg = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl")
     ).first()
-    seg = os.path.join(path, "_stream", f"batch={batch_id}")
+    stream_dir = os.path.join(path, "_stream")
     postings.repartition(F.col("bucket")).write.mode(
         "overwrite"
-    ).partitionBy("bucket").parquet(seg)
-    marker = os.path.join(path, "_stream", f"_meta_b{batch_id}.json")
-    with open(marker, "w") as f:
-        json.dump(
-            {
-                "batch_id": int(batch_id),
-                "n_docs": int(agg["n_docs"]),
-                "total_dl": int(agg["total_dl"] or 0),
-            },
-            f,
-        )
+    ).partitionBy("bucket").parquet(
+        os.path.join(stream_dir, f"batch={batch_id}")
+    )
+    marker = {
+        "batch_id": int(batch_id),
+        "n_docs": int(agg["n_docs"]),
+        "total_dl": int(agg["total_dl"] or 0),
+    }
+    write_text(stream_dir, _SEG_MARKER.format(batch_id), json.dumps(marker))
     return True
 
 
-def _effective_stats(path: str) -> tuple[int, int, int, dict, list]:
+def _effective_stats(path: str) -> tuple[int, int, int, dict, dict]:
     """(n_docs, total_dl, n_buckets, live gen meta or None, live
     segment metas) over base + committed incremental parts."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_bm25_meta.json")) as f:
-        meta = _json.load(f)
+    with open(os.path.join(path, "_bm25_meta.json")) as f:
+        meta = json.load(f)
     gen, segs = _index_live_state(path)
     n, t = int(meta["n_docs"]), int(meta["total_dl"])
     if gen is not None:
         n += int(gen["n_docs"])
         t += int(gen["total_dl"])
-    for m in segs:
+    for m in segs.values():
         n += int(m["n_docs"])
         t += int(m["total_dl"])
     return n, t, int(meta["n_buckets"]), gen, segs
@@ -297,11 +278,9 @@ def append_to_bm25_index(
     concurrent append is the caller's lock to take). Returns the
     effective corpus stats over base + all committed parts, which equal
     a from-scratch build's sidecar on the same corpus (parity-pinned)."""
-    gen, _ = _index_live_state(path)
-    ids = _committed_segment_ids(path)
+    gen, segs = _index_live_state(path)
     floor = int(gen["max_batch"]) if gen is not None else -1
-    next_id = max([floor] + ids) + 1
-    _fold_segment(docs, path, next_id, text_col, id_col)
+    _fold_segment(docs, path, max([floor, *segs]) + 1, text_col, id_col)
     n_docs, total_dl, n_buckets, _, _ = _effective_stats(path)
     return {
         "n_docs": n_docs,
@@ -310,36 +289,26 @@ def append_to_bm25_index(
     }
 
 
-def _index_live_state(path: str) -> tuple[dict | None, list[dict]]:
+def _index_live_state(path: str) -> tuple[dict | None, dict[int, dict]]:
     """Crash-safe view of a persisted BM25 index's incremental parts:
-    (latest COMMITTED compaction generation's meta or None, committed
-    streaming-segment metas not folded into it, batch-ascending).
+    (latest COMMITTED compaction generation's meta or None, {batch_id:
+    meta} of the committed streaming segments not folded into it,
+    batch-ascending).
 
-    A part is committed iff its marker file exists (`_compacted/
-    _meta_gG.json` / `_stream/_meta_bN.json`), and visibility hangs off
-    ONE watermark: Structured Streaming batch ids are monotone, so a
-    segment is live iff `batch_id > gen["max_batch"]`. Anything a
-    crashed compaction cleanup left behind — an older generation, an
-    already-folded segment whose directory still exists — is below the
-    watermark and therefore never read and never counted, which is what
-    makes `compact_bm25_index` safe to kill at any point."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    gens = []
-    for mp in _glob.glob(_os.path.join(path, "_compacted", "_meta_g*.json")):
-        with open(mp) as f:
-            gens.append(_json.load(f))
-    gen = max(gens, key=lambda m: int(m["gen"])) if gens else None
+    Parts commit under plans/commit.py's marker-last protocol
+    (`_compacted/_meta_gG.json`, `_stream/_meta_bN.json`), and
+    visibility hangs off ONE watermark: Structured Streaming batch ids
+    are monotone, so a segment is live iff `batch_id > gen["max_batch"]`.
+    Anything a crashed compaction cleanup left behind — an older
+    generation, an already-folded segment whose directory still exists —
+    is below the watermark and therefore never read and never counted,
+    which is what makes `compact_bm25_index` safe to kill at any
+    point."""
+    gens = committed(os.path.join(path, "_compacted"), _GEN_MARKER)
+    gen = gens[max(gens)] if gens else None
     floor = int(gen["max_batch"]) if gen else -1
-    segs = []
-    for mp in _glob.glob(_os.path.join(path, "_stream", "_meta_b*.json")):
-        with open(mp) as f:
-            m = _json.load(f)
-        if int(m["batch_id"]) > floor:
-            segs.append(m)
-    return gen, sorted(segs, key=lambda m: int(m["batch_id"]))
+    segs = committed(os.path.join(path, "_stream"), _SEG_MARKER)
+    return gen, {b: segs[b] for b in sorted(segs) if b > floor}
 
 
 def bm25_against_index(
@@ -373,13 +342,10 @@ def bm25_against_index(
     generation (`_index_live_state`) are invisible: both their rows and
     their sidecar counts are excluded, keeping a crashed half-written
     fold — or a compaction killed at ANY point — unreadable."""
-    import os
-
     if not query_terms:
         raise ValueError("bm25_against_index needs at least one term")
     tot_docs, tot_dl, n_buckets, gen, segs = _effective_stats(path)
     stream_dir = os.path.join(path, "_stream")
-    committed = [int(bm["batch_id"]) for bm in segs]
     n_docs = float(tot_docs)
     avgdl = tot_dl / tot_docs if tot_docs else 1.0
     # buckets for the literal IN filter: hash the terms with the SAME
@@ -410,11 +376,11 @@ def bm25_against_index(
             .where(F.col("term").isin(query_terms))
         )
         post = post.unionByName(gp)
-    if committed:
+    if segs:
         sp = (
             spark.read.schema(f"{cols}, bucket bigint, batch bigint")
             .parquet(stream_dir)
-            .where(F.col("batch").isin(committed))
+            .where(F.col("batch").isin(list(segs)))
             .where(F.col("bucket").isin(buckets))
             .where(F.col("term").isin(query_terms))
             .drop("batch")

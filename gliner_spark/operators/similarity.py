@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.commit import write_text
 from .dedup import _dot, unit_vector
 
 
@@ -349,7 +350,6 @@ def build_ivf_index(
     sidecar is written driver-side; on a real lakehouse the centroids
     would live in the table's metadata)."""
     import json
-    import os
 
     train = embeddings
     if train_cap:
@@ -380,8 +380,7 @@ def build_ivf_index(
     corpus.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(path)
-    with open(os.path.join(path, "_centroids.json"), "w") as f:
-        json.dump(cents, f)
+    write_text(path, "_centroids.json", json.dumps(cents))
     return cents
 
 
@@ -398,7 +397,10 @@ def append_to_ivf_index(embeddings: DataFrame, path: str) -> None:
     Periodic rebuild is still the curator's job: if the data
     distribution drifts far from the frozen centroids, recall decays —
     measure with `corpus_divergence` between the index's training
-    corpus and the appended stream, and rebuild past a threshold."""
+    corpus and the appended stream, and rebuild past a threshold.
+    The append is a plain `mode("append")`, neither atomic nor
+    idempotent: a crash leaves visible part-files and a retry
+    duplicates rows (ROADMAP direction 4)."""
     import json
     import os
 
@@ -998,7 +1000,6 @@ def build_ivfpq_index(
     plan shape as knn_ivf_indexed) and scores each row with m table
     lookups, no vector arithmetic. Returns (centroids, codebooks)."""
     import json
-    import os
 
     train = embeddings
     if train_cap:
@@ -1025,8 +1026,8 @@ def build_ivfpq_index(
         normalize=False,
     )
     _ivfpq_write_cells(resid, books, nbits, path, mode="overwrite")
-    with open(os.path.join(path, "_ivfpq.json"), "w") as f:
-        json.dump({"cents": cents, "books": books, "nbits": nbits}, f)
+    meta = {"cents": cents, "books": books, "nbits": nbits}
+    write_text(path, "_ivfpq.json", json.dumps(meta))
     return cents, books
 
 
@@ -1081,7 +1082,9 @@ def append_to_ivfpq_index(embeddings: DataFrame, path: str) -> None:
 
     As with the uncompressed index, distribution drift degrades recall
     against frozen quantizers — measure with `corpus_divergence` and
-    rebuild past a threshold."""
+    rebuild past a threshold. The append is a plain `mode("append")`,
+    neither atomic nor idempotent: a crash leaves visible part-files
+    and a retry duplicates rows (ROADMAP direction 4)."""
     import json
     import os
 

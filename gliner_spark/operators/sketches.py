@@ -18,8 +18,9 @@ width = ⌈e/ε⌉, depth = ⌈ln 1/δ⌉.
 
 Streaming: `fold_countmin_batch` is the foreachBatch body — fold the
 micro-batch's sketch into a persisted sparse state with the repo's
-marker-last commit (state is bounded by construction, so unlike exact
-streaming counts it never needs a watermark to stay finite).
+marker-last commit (plans/commit.py; state is bounded by construction,
+so unlike exact streaming counts it never needs a watermark to stay
+finite).
 """
 
 from __future__ import annotations
@@ -28,6 +29,12 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.commit import committed, drop_dead, write_text
+
+# a sketch state's generation directories and their markers
+_GEN = "_gen={}"
+_GEN_MARKER = "_gen={}.ok"
 
 
 def _bucket(key_col, d: int, width: int, seed: int):
@@ -138,10 +145,9 @@ def fold_countmin_batch(
     seed: int = 17,
 ) -> None:
     """foreachBatch body: fold one micro-batch into the persisted
-    sparse sketch at `state_path` with the repo's marker-last commit
-    (`_gen=N` directories; a generation is visible iff its marker
-    file exists, so a crash between write and marker is an invisible
-    orphan and replaying the batch is idempotent at the GENERATION
+    sparse sketch at `state_path` as a new `_gen=N` generation
+    (`_commit_generation`: a crash before the marker leaves an invisible
+    orphan, and replaying the batch is idempotent at the GENERATION
     level — the sketch itself is additive, so the fold order never
     matters). State on disk is ≤ depth·width rows per generation and
     exactly one live generation after each fold.
@@ -156,63 +162,32 @@ def fold_countmin_batch(
 
 
 def _commit_generation(df: DataFrame, state_path: str) -> None:
-    """Shared marker-last generation commit for sketch folds: write
-    `_gen=N`, create its `.ok` marker, then GC the superseded
-    generations — marker FIRST (a markerless dir is invisible), then
-    the directory itself (without the rmtree every fold leaks one
-    orphan parquet dir forever)."""
-    import shutil
-
-    gens = _live_generations(state_path)
-    nxt = (max(gens) + 1) if gens else 0
-    out = os.path.join(state_path, f"_gen={nxt}")
-    df.coalesce(1).write.mode("overwrite").parquet(out)
-    with open(os.path.join(state_path, f"_gen={nxt}.ok"), "w") as f:
-        f.write("ok")
-    for g in gens:
-        try:
-            os.remove(os.path.join(state_path, f"_gen={g}.ok"))
-        except FileNotFoundError:
-            pass
-        shutil.rmtree(
-            os.path.join(state_path, f"_gen={g}"), ignore_errors=True
-        )
-    # a crash BETWEEN marker-remove and rmtree above leaves a markerless
-    # _gen dir no future fold revisits (only marked gens are live) —
-    # sweep every unmarked dir except the one just committed; unmarked
-    # dirs are invisible by contract, so deleting them is always safe
-    for name in os.listdir(state_path):
-        if (
-            name.startswith("_gen=")
-            and not name.endswith(".ok")
-            and name != f"_gen={nxt}"
-            and not os.path.exists(
-                os.path.join(state_path, f"{name}.ok")
-            )
-        ):
-            shutil.rmtree(
-                os.path.join(state_path, name), ignore_errors=True
-            )
-
-
-def _live_generations(state_path: str) -> list[int]:
-    if not os.path.isdir(state_path):
-        return []
-    out = []
-    for name in os.listdir(state_path):
-        if name.startswith("_gen=") and name.endswith(".ok"):
-            out.append(int(name[len("_gen="):-len(".ok")]))
-    return sorted(out)
+    """Commit df as the next `_gen=N` generation of a sketch state under
+    plans/commit.py's marker-last protocol (marker `_gen=N.ok`), then GC.
+    A sketch state has a single writer, so every other generation,
+    marked or markerless, is dead."""
+    gens = committed(state_path, _GEN_MARKER)
+    nxt = max(gens, default=-1) + 1
+    df.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(state_path, _GEN.format(nxt))
+    )
+    write_text(state_path, _GEN_MARKER.format(nxt), "ok")
+    drop_dead(state_path, _GEN_MARKER, _GEN, lambda g: g != nxt)
 
 
 def current_countmin(spark, state_path: str) -> DataFrame | None:
-    """The live committed sketch, or None before the first fold."""
-    gens = _live_generations(state_path)
+    """The live committed sketch of a state folded by any
+    `fold_*_batch`, or None before the first fold."""
+    gens = committed(state_path, _GEN_MARKER)
     if not gens:
         return None
     return spark.read.parquet(
-        os.path.join(state_path, f"_gen={max(gens)}")
+        os.path.join(state_path, _GEN.format(max(gens)))
     )
+
+
+# every sketch state shares the `_gen=N` layout
+current_kmv = current_hll = current_countmin
 
 
 def build_kmv(
@@ -403,17 +378,6 @@ def fold_kmv_batch(
     _commit_generation(merged, state_path)
 
 
-def current_kmv(spark, state_path: str) -> DataFrame | None:
-    """The live committed bottom-k sketch, or None before the first
-    fold."""
-    gens = _live_generations(state_path)
-    if not gens:
-        return None
-    return spark.read.parquet(
-        os.path.join(state_path, f"_gen={max(gens)}")
-    )
-
-
 def heavy_hitters_fold(
     state: DataFrame | None,
     batch: DataFrame,
@@ -519,13 +483,3 @@ def fold_hll_batch(
         else delta
     )
     _commit_generation(merged, state_path)
-
-
-def current_hll(spark, state_path: str) -> DataFrame | None:
-    """The live committed per-group sketch table, or None."""
-    gens = _live_generations(state_path)
-    if not gens:
-        return None
-    return spark.read.parquet(
-        os.path.join(state_path, f"_gen={max(gens)}")
-    )

@@ -13,9 +13,9 @@ stage commits marker-last:
     wall_s, completed_at) is appended;
  4. out_dir/<stage>/_FINGERPRINT is written with the fingerprint.
 
-Steps 2-4 write from the driver to a dot-prefixed temp file, which Spark
-never lists, then os.replace it into place: no bookkeeping row goes
-through a pickled Python RDD, and no reader sees half a file.
+Steps 2-4 write from the driver through plans/commit.py's atomic write
+(the protocol is stated there): no bookkeeping row goes through a
+pickled Python RDD, and no reader sees half a file.
 
 The fingerprint hashes the stage name + config + upstream fingerprints, so
 any input/config change invalidates exactly the downstream suffix of the
@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+
+from .commit import write_atomic, write_text
 
 LINEAGE_SCHEMA = T.StructType(
     [
@@ -72,19 +74,10 @@ def fingerprint(stage: str, *parts: object) -> str:
     return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
-def _replace_into(directory: str, name: str, write) -> None:
-    """write(tmp) to a dot-prefixed temp file in directory, then rename it
-    to directory/name atomically."""
-    os.makedirs(directory, exist_ok=True)
-    tmp = os.path.join(directory, f".{uuid.uuid4().hex}.tmp")
-    write(tmp)
-    os.replace(tmp, os.path.join(directory, name))
-
-
 def _append_rows(directory: str, schema: T.StructType, rows: list[dict]) -> None:
     """Append rows to a parquet table as one new file, from the driver."""
     table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-    _replace_into(
+    write_atomic(
         directory,
         f"part-{uuid.uuid4().hex}.parquet",
         lambda tmp: pq.write_table(table, tmp),
@@ -148,7 +141,7 @@ class StageRunner:
                 }
             ],
         )
-        _replace_into(path, _MARKER, lambda tmp: Path(tmp).write_text(fp))
+        write_text(path, _MARKER, fp)
         return out
 
     def lineage(self) -> DataFrame:

@@ -16,6 +16,8 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
+from .commit import write_atomic
+
 
 def build_package_zip() -> str:
     """Build (or refresh) the gliner_spark zip for --py-files shipping."""
@@ -25,24 +27,22 @@ def build_package_zip() -> str:
     zip_path = os.path.join(
         tempfile.gettempdir(), f"gliner_spark-{gliner_spark.__version__}.zip"
     )
-    src_mtime = max(
-        os.path.getmtime(os.path.join(root, f))
+    py_files = [
+        os.path.join(root, f)
         for root, _d, files in os.walk(pkg_dir)
         for f in files
         if f.endswith(".py")
-    )
+    ]
+    src_mtime = max(map(os.path.getmtime, py_files))
     if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < src_mtime:
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(
-                            "gliner_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, rel)
-        os.replace(tmp, zip_path)
+
+        def write(tmp):
+            with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+                for full in py_files:
+                    rel = os.path.relpath(full, pkg_dir)
+                    zf.write(full, os.path.join("gliner_spark", rel))
+
+        write_atomic(*os.path.split(zip_path), write)
     return zip_path
 
 

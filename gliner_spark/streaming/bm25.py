@@ -11,12 +11,11 @@ posting each fold — fine for a canonical map, absurd for an index):
  * batch N's postings land under `path/_stream/batch=N/bucket=B/…`,
    written with per-batch OVERWRITE — a redelivered batch id rewrites
    the same directory with the same rows instead of duplicating them.
- * the batch's sidecar counts go to `path/_stream/_meta_bN.json`,
-   written LAST: a segment is COMMITTED iff its marker exists. A crash
-   between the parquet write and the marker leaves an uncommitted
-   directory that queries ignore entirely (rows AND counts — the
-   `batch IN (committed…)` literal filter prunes the directory), and
-   the replay simply overwrites it.
+ * the batch's sidecar counts are its marker
+   `path/_stream/_meta_bN.json` (plans/commit.py's marker-last
+   protocol). An uncommitted directory is ignored entirely (rows AND
+   counts — the `batch IN (committed…)` literal filter prunes the
+   directory), and the replay simply overwrites it.
  * `_stream` starts with an underscore, so the BASE index read
    (`spark.read.parquet(path)`) never lists it — base and segments
    only meet in `bm25_against_index`'s explicit union.
@@ -25,31 +24,33 @@ df is never stored (recomputed per query from the slice read), so
 segment counts can't go stale — the same property that makes the batch
 `append_to_bm25_index` exact. `compact_bm25_index` bounds the
 per-query segment count by folding accumulated segments into a single
-committed compaction GENERATION under the same marker-last protocol —
-the whole index lifecycle (build → stream folds → compactions →
-queries) survives a crash at any step.
+committed compaction GENERATION under the same protocol — the whole
+index lifecycle (build → stream folds → compactions → queries)
+survives a crash at any step.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.retrieval import (
-    _committed_segment_ids,
+    _GEN_MARKER,
+    _SEG_MARKER,
     _fold_segment,
     _index_live_state,
 )
+from ..plans.commit import committed, drop_dead, write_text
 
 
 def committed_stream_batches(path: str) -> list[int]:
     """Batch ids with a committed index segment (marker file present),
     ascending."""
-    return _committed_segment_ids(path)
+    return sorted(committed(os.path.join(path, "_stream"), _SEG_MARKER))
 
 
 def fold_index_batch(
@@ -96,23 +97,24 @@ def stream_index_documents(
 def compact_bm25_index(spark, path: str) -> int:
     """Fold the live streaming segments (plus the previous compaction
     generation, if any) into ONE new compaction generation — crash-safe
-    under the same marker-last commit protocol as the fold path, and
-    the base partitions are never touched. Returns the number of
+    under plans/commit.py's marker-last protocol, like the fold path,
+    and the base partitions are never touched. Returns the number of
     segments folded.
 
      * generation G lands at `path/_compacted/gen=G/bucket=B/…`
        (overwrite — a crashed rerun rewrites the same directory), its
-       marker `_compacted/_meta_gG.json` written LAST with the
-       cumulative counts and `max_batch`, the highest folded batch id.
-       Until the marker lands, queries keep reading the old
-       generation + segments.
+       marker `_compacted/_meta_gG.json` holds the cumulative counts
+       and `max_batch`, the highest folded batch id. Until the marker
+       lands, queries keep reading the old generation + segments.
      * visibility hangs off the committed marker alone
        (`retrieval._index_live_state`): batch ids are monotone, so a
        segment is live iff `batch_id > max_batch`. The post-commit
-       cleanup (drop folded segments and the previous generation) is
-       therefore pure garbage collection — killed mid-delete it leaves
-       stale directories no query reads and no count includes, and the
-       next compaction call finishes the GC.
+       cleanup is therefore pure garbage collection: segment ids
+       <= max_batch and generations older than the live one are dead,
+       marked or not — killed mid-delete it leaves stale directories no
+       query reads and no count includes, and the next compaction call
+       finishes the GC. Markerless segments above the watermark stay:
+       they may be an in-flight fold.
      * a stream REPLAY of a batch whose segment was compacted away is
        refused by the same watermark (`fold_index_batch` skips
        ids <= max_batch), so restart-after-compaction cannot
@@ -125,35 +127,14 @@ def compact_bm25_index(spark, path: str) -> int:
     never NEEDS compaction for correctness — it only bounds the
     per-query segment count.
     """
-    import shutil
-
     comp_dir = os.path.join(path, "_compacted")
     stream_dir = os.path.join(path, "_stream")
 
     def _gc(live_gen):
         floor = int(live_gen["max_batch"]) if live_gen else -1
-        keep = int(live_gen["gen"]) if live_gen else None
-        # marker BEFORE directory: a crash mid-GC must only ever leave
-        # markerless (invisible) directories, never a marker whose
-        # directory is gone
-        for mp in glob.glob(os.path.join(comp_dir, "_meta_g*.json")):
-            with open(mp) as f:
-                g = int(json.load(f)["gen"])
-            if g != keep:
-                os.remove(mp)
-                shutil.rmtree(
-                    os.path.join(comp_dir, f"gen={g}"), ignore_errors=True
-                )
-        for mp in glob.glob(os.path.join(stream_dir, "_meta_b*.json")):
-            with open(mp) as f:
-                b = int(json.load(f)["batch_id"])
-            if b <= floor:
-                os.remove(mp)
-                shutil.rmtree(
-                    os.path.join(stream_dir, f"batch={b}"),
-                    ignore_errors=True,
-                )
-        # markerless segment dirs stay: they may be an in-flight fold
+        keep = int(live_gen["gen"]) if live_gen else -1
+        drop_dead(comp_dir, _GEN_MARKER, "gen={}", lambda g: g < keep)
+        drop_dead(stream_dir, _SEG_MARKER, "batch={}", lambda b: b <= floor)
         if os.path.isdir(stream_dir) and not os.listdir(stream_dir):
             shutil.rmtree(stream_dir)
 
@@ -161,9 +142,9 @@ def compact_bm25_index(spark, path: str) -> int:
     _gc(prev)  # finish any cleanup a crashed run left behind
     if not segs:
         return 0
-    batch_ids = [int(m["batch_id"]) for m in segs]
-    n_docs = sum(int(m["n_docs"]) for m in segs)
-    total_dl = sum(int(m["total_dl"]) for m in segs)
+    batch_ids = list(segs)
+    n_docs = sum(int(m["n_docs"]) for m in segs.values())
+    total_dl = sum(int(m["total_dl"]) for m in segs.values())
     cols = "term string, doc_id long, tf double, dl double"
     parts = (
         spark.read.schema(f"{cols}, bucket bigint, batch bigint")
@@ -189,7 +170,6 @@ def compact_bm25_index(spark, path: str) -> int:
         "n_docs": n_docs,
         "total_dl": total_dl,
     }
-    with open(os.path.join(comp_dir, f"_meta_g{new_gen}.json"), "w") as f:
-        json.dump(marker, f)
+    write_text(comp_dir, _GEN_MARKER.format(new_gen), json.dumps(marker))
     _gc(marker)
     return len(segs)

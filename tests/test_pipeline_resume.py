@@ -134,7 +134,7 @@ def test_crash_before_marker_recomputes_stage(
     from gliner_spark.plans import lineage as lineage_mod
 
     out = str(tmp_path_factory.mktemp(f"pipe_crash_{failing_step}"))
-    real_append, real_replace = lineage_mod._append_rows, lineage_mod._replace_into
+    real_append, real_replace = lineage_mod._append_rows, lineage_mod.write_text
 
     def append_rows(directory, schema, rows):
         if schema is lineage_mod.LINEAGE_SCHEMA and rows[0]["stage"] == "canon_map":
@@ -149,14 +149,14 @@ def test_crash_before_marker_recomputes_stage(
     if failing_step == "lineage":
         monkeypatch.setattr(lineage_mod, "_append_rows", append_rows)
     else:
-        monkeypatch.setattr(lineage_mod, "_replace_into", replace_into)
+        monkeypatch.setattr(lineage_mod, "write_text", replace_into)
     with pytest.raises(RuntimeError, match="injected crash"):
         _run(spark, tiny_transcripts, out)
     assert os.path.exists(os.path.join(out, "canon_map", "_SUCCESS"))
     assert not os.path.exists(os.path.join(out, "canon_map", "_FINGERPRINT"))
 
     monkeypatch.setattr(lineage_mod, "_append_rows", real_append)
-    monkeypatch.setattr(lineage_mod, "_replace_into", real_replace)
+    monkeypatch.setattr(lineage_mod, "write_text", real_replace)
     calls = {"n": 0}
     real_canon = pipeline_mod.canonicalize
 
