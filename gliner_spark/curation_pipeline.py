@@ -18,11 +18,14 @@ corpus is reused from disk (same resume contract as the KG pipeline,
 `plans/lineage.py`).
 
 Scale shape: docs_clean is one (hash, count) aggregate + a broadcast
-pure-map rewrite; every tagger in decisions is an independent pass over
-the SAME cleaned corpus composed by a flag join; shards is one hash
-exchange; packed shuffles once on the shard key and holds only
-(doc_id, n_tokens) metadata per task. No stage's state grows with the
-corpus except the boilerplate drop set (min_df-bounded by construction).
+pure-map rewrite. In decisions the per-doc taggers are flag columns of
+one projection over the cleaned corpus, the relational taggers (exact
+and near dedup, perplexity, decontamination) left-join their loser ids
+onto it, and the flag frame is materialized once, before the budget
+mixer reads it. shards is one hash exchange; packed shuffles once on
+the shard key and holds only (doc_id, n_tokens) metadata per task. No
+stage's state grows with the corpus except the boilerplate drop set
+(min_df-bounded by construction).
 """
 
 from __future__ import annotations

@@ -50,10 +50,11 @@ def _bucket_arr(text_col: str, n_buckets: int):
     )
 
 
-def _margin_expr(n_buckets: int) -> str:
-    """w·x + bias as a SQL fold over a `_b` bucket array with `_w`
-    riding as the broadcast weight column (bias is _w[n_buckets])."""
-    return f"aggregate(_b, _w[{n_buckets}], (acc, b) -> acc + _w[b])"
+def _margin(buckets, n_buckets: int):
+    """w·x + bias as a fold over a bucket-id array with `_w` riding as
+    the broadcast weight column (bias is _w[n_buckets])."""
+    w = F.col("_w")
+    return F.aggregate(buckets, w[n_buckets], lambda acc, b: acc + w[b])
 
 
 def train_quality_classifier(
@@ -89,7 +90,7 @@ def train_quality_classifier(
     w = [0.0] * (n_buckets + 1)
     for _ in range(iters):
         with_w = _with_const(feats, "_w", w, "array<double>")
-        margin = F.expr(_margin_expr(n_buckets))
+        margin = _margin(F.col("_b"), n_buckets)
         resid = (F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))) - F.col("_y")
         rows = (
             with_w.select(
@@ -110,6 +111,21 @@ def train_quality_classifier(
     return w
 
 
+def weights_row(spark, weights: list[float]) -> DataFrame:
+    """The weight vector as the `_w` column of a ONE-ROW frame, for a
+    broadcast cross join onto the docs `quality_prob` scores."""
+    return spark.createDataFrame(
+        [([float(x) for x in weights],)], "_w: array<double>"
+    )
+
+
+def quality_prob(n_weights: int, text_col: str = "text"):
+    """σ(w·x) rounded 6dp, over `text_col` and the `_w` column of
+    `weights_row`."""
+    margin = _margin(_bucket_arr(text_col, n_weights - 1), n_weights - 1)
+    return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-margin)), 6)
+
+
 def score_quality(
     docs: DataFrame,
     weights: list[float],
@@ -118,15 +134,8 @@ def score_quality(
     """Pure-map scoring: docs + quality_prob = σ(w·x), rounded 6dp.
     The weight vector rides as a one-row broadcast column; no shuffle
     touches the corpus."""
-    n_buckets = len(weights) - 1
-    with_w = _with_const(
-        docs, "_w", [float(x) for x in weights], "array<double>"
-    )
-    prob = F.lit(1.0) / (
-        F.lit(1.0) + F.exp(-F.expr(_margin_expr(n_buckets)))
-    )
-    return (
-        with_w.withColumn("_b", _bucket_arr(text_col, n_buckets))
-        .withColumn("quality_prob", F.round(prob, 6))
-        .drop("_b", "_w")
+    return docs.crossJoin(
+        F.broadcast(weights_row(docs.sparkSession, weights))
+    ).select(
+        *docs.columns, quality_prob(len(weights), text_col).alias("quality_prob")
     )

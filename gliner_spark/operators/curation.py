@@ -29,6 +29,7 @@ shared verbatim with the pure-Python oracle (parity by construction).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
 
 import pyarrow as pa
 
@@ -341,6 +342,23 @@ def mixture_sample(
     )
 
 
+# reason codes in the order they appear in a decision's `reasons`
+# (over_budget, appended by the budget mixer, always comes last)
+_REASONS = (
+    "exact_dup",
+    "near_dup",
+    "low_quality",
+    "repetitive",
+    "bad_lang",
+    "low_classifier_score",
+    "high_perplexity",
+    "blocklisted",
+    "contaminated",
+    "gopher_fail",
+    "semantic_contaminated",
+)
+
+
 def curate_corpus(
     docs: DataFrame,
     text_col: str = "text",
@@ -384,90 +402,130 @@ def curate_corpus(
     quality/repetition taggers then score the text that would actually
     ship.
 
-    Tagger-parallel (not sequential-stage) semantics on purpose: at
-    100 TB each tagger is one pass over the same materialized corpus
-    (cache/checkpoint `docs` to share the scan), and taggers compose by
-    a flag join instead of re-materializing the shrinking corpus once
-    per stage the way a sequential pipeline would. The only stage whose input genuinely depends
-    on the others is the budget mixer, which is why it alone runs on
-    survivors.
+    Tagger-parallel (not sequential-stage) semantics on purpose: every
+    tagger sees the whole corpus, and the flags are combined once
+    instead of re-materializing the shrinking corpus per stage. Each
+    tagger is evaluated exactly once:
+      * the per-doc taggers (quality, repetition, language, classifier,
+        blocklist, Gopher) are flag columns of ONE projection over the
+        shared scan; the classifier weights and a >64-term blocklist
+        ride in one-row frames broadcast-cross-joined onto it once;
+      * the relational taggers contribute loser ids directly, each
+        unique by construction and left-joined without a distinct:
+        exact-dup group members, near-dup component members other than
+        the component min, docs over the perplexity bound, and
+        decontaminate's per-doc hit aggregate (no zero-fill join back
+        to every doc). Only the semantic loser set is de-duplicated,
+        since nothing keys `doc_embeddings` uniquely;
+      * the flag frame is materialized once (an eager localCheckpoint)
+        before the budget mixer, the only stage whose input depends on
+        the others. The survivor join and the final projection read
+        the stored frame, so the decisions plan reads `docs` only for
+        the mixer instead of re-inlining every tagger per consumer.
 
     Returns (decisions, report):
       decisions  (doc_id, keep, reasons array<string>) — reasons empty
-                 iff keep; a doc can carry several reasons (they are
+                 iff keep; a doc can carry several reasons, always in
+                 `_REASONS` order with over_budget last (they are
                  diagnostics, not an execution order)
       report     (reason, n_docs) attrition counts plus 'total' and
-                 'kept' rows — derived from decisions in ONE aggregate,
+                 'kept' rows — three aggregates over decisions (the
+                 exploded reasons, all rows, kept rows) in one union,
                  no per-stage count jobs
     """
-    from .dedup import exact_duplicates, near_dedup_survivors
+    from .dedup import exact_duplicates, minhash_near_duplicates
+    from .linking import connected_components
     from .textstats import (
-        blocklist_stats,
-        language_id,
-        quality_scores,
-        repetition_stats,
+        blocklist_cols,
+        blocklist_probe,
+        language_cols,
+        predicted_lang,
+        quality_cols,
+        repetition_cols,
     )
 
-    ids = docs.select("doc_id")
-    flag_cols: list[str] = []
-    flagged = ids
+    # per-doc taggers: stat columns of ONE projection over the scan,
+    # then their flags in a second level over those columns
+    stats = {"quality": quality_cols(text_col)["quality"]}
+    flags = {"low_quality": F.col("quality") < min_quality}
+    rep = repetition_cols(text_col)
+    stats["dup_line_frac"] = rep["dup_line_frac"]
+    stats["top_bigram_frac"] = rep["top_bigram_frac"]
+    flags["repetitive"] = (F.col("dup_line_frac") > max_dup_line_frac) | (
+        F.col("top_bigram_frac") > max_top_bigram_frac
+    )
+    if allowed_langs is not None:
+        stats.update(language_cols(text_col))
+        flags["bad_lang"] = ~predicted_lang().isin(*sorted(allowed_langs))
+    rows = []  # one-row constant frames, broadcast together once
+    if classifier_weights is not None:
+        from .classifier import quality_prob, weights_row
 
+        rows.append(weights_row(docs.sparkSession, classifier_weights))
+        stats["quality_prob"] = quality_prob(len(classifier_weights), text_col)
+        flags["low_classifier_score"] = (
+            F.col("quality_prob") < min_classifier_prob
+        )
+    if blocklist_terms is not None:
+        blockset, row = blocklist_probe(docs.sparkSession, blocklist_terms)
+        if row is not None:
+            rows.append(row)
+        bl = blocklist_cols(blockset, text_col)
+        stats["n_hits"] = bl["n_hits"]
+        stats["hit_frac"] = bl["hit_frac"]
+        # max_blocklist_frac=0.0 is the C4 rule: ANY banned term drops
+        flags["blocklisted"] = (F.col("n_hits") > 0) & (
+            F.col("hit_frac") > max_blocklist_frac
+        )
+    if apply_gopher_rules:
+        from .textstats import gopher_cols
+
+        stats["gopher_ok"] = gopher_cols(text_col)["gopher_ok"]
+        flags["gopher_fail"] = F.col("gopher_ok") == 0
+    src = docs
+    if rows:
+        src = docs.crossJoin(F.broadcast(reduce(DataFrame.crossJoin, rows)))
+    flagged = src.select(
+        "doc_id", *[c.alias(k) for k, c in stats.items()]
+    ).select("doc_id", *[c.alias(k) for k, c in flags.items()])
+
+    # relational taggers: loser ids, unique by construction, left-joined
     def add_flag(name: str, loser_ids: DataFrame):
         nonlocal flagged
-        flag_cols.append(name)
         flagged = flagged.join(
-            loser_ids.select("doc_id").distinct().withColumn(
-                name, F.lit(True)
-            ),
+            loser_ids.select("doc_id").withColumn(name, F.lit(True)),
             "doc_id",
             "left",
         )
 
-    ex = exact_duplicates(docs, text_col)
-    exact_losers = ex.select(
-        F.explode("doc_ids").alias("doc_id"), "keep_doc_id"
-    ).where(F.col("doc_id") != F.col("keep_doc_id"))
-    add_flag("exact_dup", exact_losers)
-
-    near_kept = near_dedup_survivors(
-        docs, text_col, jaccard_threshold=near_dup_threshold
-    ).select("doc_id")
-    add_flag("near_dup", ids.join(near_kept, "doc_id", "left_anti"))
-
-    q = quality_scores(docs, text_col)
     add_flag(
-        "low_quality",
-        q.where(F.col("quality") < min_quality),
+        "exact_dup",
+        exact_duplicates(docs, text_col)
+        .select(F.explode("doc_ids").alias("doc_id"), "keep_doc_id")
+        .where(F.col("doc_id") != F.col("keep_doc_id")),
     )
 
-    rep = repetition_stats(docs, text_col)
+    # near-dup losers: every component member but its min id
+    pairs = minhash_near_duplicates(
+        docs, text_col, jaccard_threshold=near_dup_threshold
+    )
+    comps = connected_components(
+        docs.select(F.col("doc_id").alias("id")),
+        pairs.select(
+            F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
+        ),
+    )
     add_flag(
-        "repetitive",
-        rep.where(
-            (F.col("dup_line_frac") > max_dup_line_frac)
-            | (F.col("top_bigram_frac") > max_top_bigram_frac)
+        "near_dup",
+        comps.where(F.col("component") != F.col("id")).select(
+            F.col("id").alias("doc_id")
         ),
     )
 
-    if allowed_langs is not None:
-        langs = language_id(docs, text_col)
-        add_flag(
-            "bad_lang",
-            langs.where(~F.col("pred_lang").isin(*sorted(allowed_langs))),
-        )
-
-    if classifier_weights is not None:
-        from .classifier import score_quality
-
-        scq = score_quality(docs, classifier_weights, text_col)
-        add_flag(
-            "low_classifier_score",
-            scq.where(F.col("quality_prob") < min_classifier_prob),
-        )
-
     if lm_model is not None and max_perplexity is not None:
         # CCNet-style learned filter: docs too surprising under a
-        # reference bigram LM (trained on a trusted corpus) drop
+        # reference bigram LM (trained on a trusted corpus) drop. It is
+        # relational (explode + model join + groupBy), so not fusable
         from .lm import score_perplexity
 
         pp = score_perplexity(docs, lm_model, text_col)
@@ -476,30 +534,17 @@ def curate_corpus(
             pp.where(F.col("perplexity") > max_perplexity),
         )
 
-    if blocklist_terms is not None:
-        bl = blocklist_stats(docs, blocklist_terms, text_col)
-        # max_blocklist_frac=0.0 is the C4 rule: ANY banned term drops
+    if benchmark_docs is not None:
         add_flag(
-            "blocklisted",
-            bl.where(
-                (F.col("n_hits") > 0)
-                & (F.col("hit_frac") > max_blocklist_frac)
+            "contaminated",
+            _contamination_hits(
+                docs, benchmark_docs, decontam_n, text_col, "doc_id"
             ),
         )
 
-    if benchmark_docs is not None:
-        dec = decontaminate(docs, benchmark_docs, n=decontam_n,
-                            text_col=text_col)
-        add_flag("contaminated", dec.where(F.col("contaminated") == 1))
-
-    if apply_gopher_rules:
-        from .textstats import gopher_stats
-
-        gs = gopher_stats(docs, text_col)
-        add_flag("gopher_fail", gs.where(F.col("gopher_ok") == 0))
-
     if doc_embeddings is not None and benchmark_embeddings is not None:
-        # embedding-space leakage: doc_embeddings keyed by doc_id
+        # embedding-space leakage: doc_embeddings keyed by doc_id, which
+        # nothing forces to be unique — the one loser set kept distinct
         sem = semantic_decontaminate(
             doc_embeddings,
             benchmark_embeddings,
@@ -508,19 +553,22 @@ def curate_corpus(
         )
         add_flag(
             "semantic_contaminated",
-            sem.where(F.col("contaminated") == 1),
+            sem.where(F.col("contaminated") == 1).select("doc_id").distinct(),
         )
 
     reasons = F.filter(
         F.array(
             *[
                 F.when(F.coalesce(F.col(c), F.lit(False)), F.lit(c))
-                for c in flag_cols
+                for c in _REASONS
+                if c in flagged.columns
             ]
         ),
         lambda x: x.isNotNull(),
     )
-    pre = flagged.select("doc_id", reasons.alias("reasons"))
+    # materialized once: the survivor join and the final projection
+    # below read the stored frame instead of re-inlining every tagger
+    pre = flagged.select("doc_id", reasons.alias("reasons")).localCheckpoint()
 
     if mixture_budgets is not None:
         survivors = docs.join(
@@ -607,6 +655,26 @@ def decontaminate(
     output parity (a cross-gram collision needs ~1e-16 per doc and
     only ever ADDS a hit).
     """
+    hits = _contamination_hits(
+        train_docs, benchmark_docs, n, text_col, id_col
+    )
+    zero = F.coalesce(F.col("n_hit_grams"), F.lit(0))
+    return train_docs.select(id_col).join(hits, id_col, "left").select(
+        id_col,
+        zero.alias("n_hit_grams"),
+        (zero > 0).cast("int").alias("contaminated"),
+    )
+
+
+def _contamination_hits(
+    train_docs: DataFrame,
+    benchmark_docs: DataFrame,
+    n: int,
+    text_col: str,
+    id_col: str,
+) -> DataFrame:
+    """(id, n_hit_grams) for the contaminated training docs only — one
+    row per id (the groupBy key)."""
     from ..functions.text import tokens, hashed_word_ngrams
 
     grams = F.array_distinct(
@@ -618,16 +686,10 @@ def decontaminate(
     train_grams = train_docs.select(
         id_col, F.explode(grams).alias("gram")
     )
-    hits = (
+    return (
         train_grams.join(F.broadcast(bench), "gram")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_hit_grams"))
-    )
-    zero = F.coalesce(F.col("n_hit_grams"), F.lit(0))
-    return train_docs.select(id_col).join(hits, id_col, "left").select(
-        id_col,
-        zero.alias("n_hit_grams"),
-        (zero > 0).cast("int").alias("contaminated"),
     )
 
 

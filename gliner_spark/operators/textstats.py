@@ -51,10 +51,13 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic quality score in [0,1] from length / punctuation /
-    stopword / repetition signals — the standard pre-training filter shape
-    (Gopher/C4-style rules, simplified and deterministic)."""
+def _named(cols: dict) -> list:
+    return [c.alias(name) for name, c in cols.items()]
+
+
+def quality_cols(text_col: str = "text") -> dict:
+    """`quality_scores`' columns as named expressions over `text_col`,
+    so a caller can fuse them into a wider projection."""
     toks = tokens(F.col(text_col))
     n_tok = F.size(toks)
     uniq_frac = F.when(
@@ -69,37 +72,48 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     score = F.round(
         0.3 * length_ok + 0.2 * punct_ok + 0.2 * sw_ok + 0.3 * uniq_frac, 6
     )
-    return docs.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        F.round(punct, 6).alias("punct_ratio"),
-        F.round(sw, 6).alias("stopword_ratio"),
-        F.round(uniq_frac, 6).alias("unique_ratio"),
-        score.alias("quality"),
-    )
+    return {
+        "n_tokens": n_tok,
+        "punct_ratio": F.round(punct, 6),
+        "stopword_ratio": F.round(sw, 6),
+        "unique_ratio": F.round(uniq_frac, 6),
+        "quality": score,
+    }
 
 
-def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Marker-word language scores + argmax prediction.
+def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Heuristic quality score in [0,1] from length / punctuation /
+    stopword / repetition signals — the standard pre-training filter shape
+    (Gopher/C4-style rules, simplified and deterministic)."""
+    return docs.select("doc_id", *_named(quality_cols(text_col)))
 
-    CJK detection by Unicode-range regexp; alphabetic languages by marker
-    hit counts with deterministic tie-break on language code order."""
+
+def language_cols(text_col: str = "text") -> dict:
+    """Per-language marker hit counts plus the CJK test: the map-side
+    inputs of `predicted_lang`, as named expressions over `text_col`."""
     # hash the token stream ONCE, probe each language's folded-constant
     # hash array — int64 compares beat string compares 2.6× in
     # interpreted HOFs (measured on the blocklist twin), values identical
     toks = F.transform(
         tokens(F.col(text_col)), lambda t: F.xxhash64(F.lower(t))
     )
-    marker_cols = []
+    cols = {}
     for lang, markers in sorted(_LANG_MARKERS.items()):
         m = F.array(*[F.xxhash64(F.lit(w)) for w in markers])
-        marker_cols.append(
-            F.size(F.filter(toks, lambda t: F.array_contains(m, t))).alias(
-                f"hits_{lang}"
-            )
+        cols[f"hits_{lang}"] = F.size(
+            F.filter(toks, lambda t: F.array_contains(m, t))
         )
-    scored = docs.select("doc_id", F.col(text_col).alias("_t"), *marker_cols)
-    has_cjk = F.length(F.regexp_replace("_t", r"[^一-鿿]", "")) > 0
+    cols["_cjk"] = (
+        F.length(F.regexp_replace(F.col(text_col), r"[^一-鿿]", "")) > 0
+    )
+    return cols
+
+
+def predicted_lang():
+    """argmax language over `language_cols`' columns. A separate
+    projection level: each hit count feeds the struct-max twice, and
+    the hit counts are interpreted HOFs that must not be inlined (and
+    re-evaluated) per reference."""
     pairs = F.array(
         *[
             F.struct(
@@ -113,16 +127,70 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
         ]
     )
     best = F.array_max(pairs)
-    pred = F.when(has_cjk, F.lit("zh")).otherwise(
+    return F.when(F.col("_cjk"), F.lit("zh")).otherwise(
         F.when(best.getField("hits") > 0, best.getField("lang")).otherwise(
             F.lit("und")
         )
     )
-    return scored.select(
+
+
+def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Marker-word language scores + argmax prediction.
+
+    CJK detection by Unicode-range regexp; alphabetic languages by marker
+    hit counts with deterministic tie-break on language code order."""
+    return docs.select("doc_id", *_named(language_cols(text_col))).select(
         "doc_id",
         *[F.col(f"hits_{lang}") for lang in sorted(_LANG_MARKERS)],
-        pred.alias("pred_lang"),
+        predicted_lang().alias("pred_lang"),
     )
+
+
+def blocklist_probe(spark, terms, max_literal_terms: int = 64):
+    """→ (probe, row): the lowercased blocklist as a sorted xxhash64
+    array Column. Up to `max_literal_terms` terms the probe is a
+    foldable literal and `row` is None; above that the probe is the
+    `_blockset` column of `row`, a ONE-ROW frame the caller
+    broadcast-cross-joins onto the docs (hashed inside that row, so a
+    big literal is never re-evaluated per element access)."""
+    lower_terms = sorted({t.lower() for t in terms})
+    if not lower_terms:
+        raise ValueError("blocklist_stats: empty term list")
+    if len(lower_terms) <= max_literal_terms:
+        # xxhash64 of a literal is foldable → a constant bigint array
+        return F.array(*[F.xxhash64(F.lit(t)) for t in lower_terms]), None
+    row = spark.createDataFrame(
+        [(lower_terms,)], "_bl_terms: array<string>"
+    ).select(
+        F.sort_array(
+            F.transform("_bl_terms", lambda t: F.xxhash64(t))
+        ).alias("_blockset")
+    )
+    return F.col("_blockset"), row
+
+
+def blocklist_cols(blockset, text_col: str = "text") -> dict:
+    """`blocklist_stats`' columns as named expressions over `text_col`
+    and a `blocklist_probe` probe."""
+    htoks = F.transform(
+        tokens(F.col(text_col)), lambda t: F.xxhash64(F.lower(t))
+    )
+    n_tok = F.size(htoks)
+    n_hits = F.size(
+        F.filter(htoks, lambda h: F.array_contains(blockset, h))
+    )
+    return {
+        "n_tokens": n_tok,
+        "n_hits": n_hits,
+        # array_intersect dedups its output, so this IS the distinct count
+        "n_distinct_hits": F.size(F.array_intersect(htoks, blockset)),
+        "hit_frac": F.round(
+            F.when(n_tok > 0, n_hits.cast("double") / n_tok).otherwise(
+                F.lit(0.0)
+            ),
+            6,
+        ),
+    }
 
 
 def blocklist_stats(
@@ -150,43 +218,11 @@ def blocklist_stats(
     blocklists (hundreds); a 100k-term list wants a broadcast semi-join
     on exploded tokens instead (the `curation.decontaminate` shape).
     """
-    lower_terms = sorted({t.lower() for t in terms})
-    if not lower_terms:
-        raise ValueError("blocklist_stats: empty term list")
-    htoks = F.transform(
-        tokens(F.col(text_col)), lambda t: F.xxhash64(F.lower(t))
+    blockset, row = blocklist_probe(
+        docs.sparkSession, terms, max_literal_terms
     )
-    n_tok = F.size(htoks)
-    src = docs
-    if len(lower_terms) <= max_literal_terms:
-        # xxhash64 of a literal is foldable → a constant bigint array
-        blockset = F.array(*[F.xxhash64(F.lit(t)) for t in lower_terms])
-    else:
-        one = docs.sparkSession.createDataFrame(
-            [(lower_terms,)], "_bl_terms: array<string>"
-        ).select(
-            F.sort_array(
-                F.transform("_bl_terms", lambda t: F.xxhash64(t))
-            ).alias("_blockset")
-        )
-        src = docs.crossJoin(F.broadcast(one))
-        blockset = F.col("_blockset")
-    n_hits = F.size(
-        F.filter(htoks, lambda h: F.array_contains(blockset, h))
-    )
-    return src.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        n_hits.alias("n_hits"),
-        # array_intersect dedups its output, so this IS the distinct count
-        F.size(F.array_intersect(htoks, blockset)).alias("n_distinct_hits"),
-        F.round(
-            F.when(n_tok > 0, n_hits.cast("double") / n_tok).otherwise(
-                F.lit(0.0)
-            ),
-            6,
-        ).alias("hit_frac"),
-    )
+    src = docs if row is None else docs.crossJoin(F.broadcast(row))
+    return src.select("doc_id", *_named(blocklist_cols(blockset, text_col)))
 
 
 # BPE-ish pre-tokenizer regex (GPT-2 shape, made RE2/Java-safe: the
@@ -313,27 +349,9 @@ def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Gopher-style repetition filters (Rae et al. 2021 §A1.1, simplified):
-    duplicate-line fraction, duplicate word-trigram fraction, and the
-    fraction of word-bigram occurrences claimed by the single most frequent
-    bigram — the standard signals for detecting boilerplate / templated /
-    degenerate documents in a pre-training corpus.
-
-    100% native array expressions — a pure map stage that pipelines with
-    the scan, zero shuffle at any scale. The top-bigram count is
-    array_sort + a single linear run-length fold (O(n log n) per doc) —
-    the obvious transform(distinct, d -> count(filter(all, ==d))) shape
-    is O(u·n) in INTERPRETED higher-order expressions and measured ~8×
-    slower on sf0.01 documents. Lines and n-grams are compared as
-    xxhash64 int64 keys, never as strings: the string form (concat per
-    gram + string distinct/sort/fold) was the single most expensive
-    tagger in the curation mixer — 28.9 s of a 300k-doc profile vs ≤3 s
-    for every other tagger — and the hashed zip_with form measured
-    8-9× faster on the same corpus (35-39 s -> 3.8-4.3 s, 3 paired
-    rounds), identical outputs (hashing only changes the compare key;
-    a 64-bit collision would need ~1e-16 luck per doc).
-    """
+def repetition_cols(text_col: str = "text") -> dict:
+    """`repetition_stats`' columns as named expressions over
+    `text_col`."""
     col = F.col(text_col)
     lines = F.transform(F.split(col, "\n"), lambda l: F.xxhash64(l))
     n_lines = F.size(lines)
@@ -371,19 +389,42 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         ),
         lambda acc: acc["best"],
     )
-    return docs.select(
-        "doc_id",
-        n_lines.alias("n_lines"),
-        dup_frac(lines, n_lines).alias("dup_line_frac"),
-        F.size(tg).alias("n_trigrams"),
-        dup_frac(tg, F.size(tg)).alias("dup_trigram_frac"),
-        F.round(
+    return {
+        "n_lines": n_lines,
+        "dup_line_frac": dup_frac(lines, n_lines),
+        "n_trigrams": F.size(tg),
+        "dup_trigram_frac": dup_frac(tg, F.size(tg)),
+        "top_bigram_frac": F.round(
             F.when(
                 F.size(bg) > 0, top_bigram / F.size(bg).cast("double")
             ).otherwise(F.lit(0.0)),
             6,
-        ).alias("top_bigram_frac"),
-    )
+        ),
+    }
+
+
+def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Gopher-style repetition filters (Rae et al. 2021 §A1.1, simplified):
+    duplicate-line fraction, duplicate word-trigram fraction, and the
+    fraction of word-bigram occurrences claimed by the single most frequent
+    bigram — the standard signals for detecting boilerplate / templated /
+    degenerate documents in a pre-training corpus.
+
+    100% native array expressions — a pure map stage that pipelines with
+    the scan, zero shuffle at any scale. The top-bigram count is
+    array_sort + a single linear run-length fold (O(n log n) per doc) —
+    the obvious transform(distinct, d -> count(filter(all, ==d))) shape
+    is O(u·n) in INTERPRETED higher-order expressions and measured ~8×
+    slower on sf0.01 documents. Lines and n-grams are compared as
+    xxhash64 int64 keys, never as strings: the string form (concat per
+    gram + string distinct/sort/fold) was the single most expensive
+    tagger in the curation mixer — 28.9 s of a 300k-doc profile vs ≤3 s
+    for every other tagger — and the hashed zip_with form measured
+    8-9× faster on the same corpus (35-39 s -> 3.8-4.3 s, 3 paired
+    rounds), identical outputs (hashing only changes the compare key;
+    a 64-bit collision would need ~1e-16 luck per doc).
+    """
+    return docs.select("doc_id", *_named(repetition_cols(text_col)))
 
 
 def tfidf_top_terms(
@@ -507,24 +548,8 @@ def clean_text(
     )
 
 
-def gopher_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """The remaining Gopher quality rules (Rae et al. 2021, A1.1) as
-    native expressions -> (doc_id, mean_word_len, symbol_word_ratio,
-    alpha_word_frac, bullet_line_frac, ellipsis_line_frac, gopher_ok):
-
-      * mean word length in [3, 10]
-      * symbol-to-word ratio ('#' and ellipsis occurrences / words)
-        <= 0.1
-      * >= 80% of words contain an alphabetic character
-      * <= 90% of lines start with a bullet; <= 30% end with ellipsis
-
-    `repetition_stats` carries Gopher's duplicate-fraction family and
-    `quality_scores` the C4-ish basics (doc-length rule included
-    there), so `gopher_ok` folds exactly the five rules above. All
-    ratios are exact rational n/m double divisions with identical
-    operands on both engines, so the flag cannot straddle the oracle
-    at rule boundaries. Zero shuffle: one map over the corpus.
-    """
+def gopher_cols(text_col: str = "text") -> dict:
+    """`gopher_stats`' columns as named expressions over `text_col`."""
     ell = "\u2026"
     toks = tokens(F.col(text_col))
     n_tok = F.size(toks)
@@ -567,15 +592,35 @@ def gopher_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         & (bullet_frac <= 0.9)
         & (ellipsis_frac <= 0.3)
     )
-    return docs.select(
-        "doc_id",
-        F.round(mean_wl, 6).alias("mean_word_len"),
-        F.round(sym_ratio, 6).alias("symbol_word_ratio"),
-        F.round(alpha_frac, 6).alias("alpha_word_frac"),
-        F.round(bullet_frac, 6).alias("bullet_line_frac"),
-        F.round(ellipsis_frac, 6).alias("ellipsis_line_frac"),
-        ok.cast("int").alias("gopher_ok"),
-    )
+    return {
+        "mean_word_len": F.round(mean_wl, 6),
+        "symbol_word_ratio": F.round(sym_ratio, 6),
+        "alpha_word_frac": F.round(alpha_frac, 6),
+        "bullet_line_frac": F.round(bullet_frac, 6),
+        "ellipsis_line_frac": F.round(ellipsis_frac, 6),
+        "gopher_ok": ok.cast("int"),
+    }
+
+
+def gopher_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """The remaining Gopher quality rules (Rae et al. 2021, A1.1) as
+    native expressions -> (doc_id, mean_word_len, symbol_word_ratio,
+    alpha_word_frac, bullet_line_frac, ellipsis_line_frac, gopher_ok):
+
+      * mean word length in [3, 10]
+      * symbol-to-word ratio ('#' and ellipsis occurrences / words)
+        <= 0.1
+      * >= 80% of words contain an alphabetic character
+      * <= 90% of lines start with a bullet; <= 30% end with ellipsis
+
+    `repetition_stats` carries Gopher's duplicate-fraction family and
+    `quality_scores` the C4-ish basics (doc-length rule included
+    there), so `gopher_ok` folds exactly the five rules above. All
+    ratios are exact rational n/m double divisions with identical
+    operands on both engines, so the flag cannot straddle the oracle
+    at rule boundaries. Zero shuffle: one map over the corpus.
+    """
+    return docs.select("doc_id", *_named(gopher_cols(text_col)))
 
 
 def normalize_url(col) -> "F.Column":

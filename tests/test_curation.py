@@ -389,13 +389,11 @@ def test_mixture_sample_zero_budget_and_tiny_budget(spark):
     assert len(out) == 1 and out[0].n_tokens == 5 and out[0].cum_tokens == 5
 
 
-def test_curate_corpus_reason_codes_and_report(spark):
-    """Every tagger fires on its planted doc and ONLY that doc (plus the
-    budget mixer on the survivor set); the report is consistent with the
-    decisions."""
+@pytest.fixture(scope="module")
+def planted(spark):
+    """A corpus with one planted doc per tagger, plus curate_corpus
+    keyword arguments that turn every tagger on → (docs, kwargs)."""
     from pyspark.sql import Row
-
-    from gliner_spark.operators.curation import curate_corpus
 
     good = "the quick brown fox jumps over the lazy dog and runs away home"
     rows = [
@@ -455,8 +453,7 @@ def test_curate_corpus_reason_codes_and_report(spark):
     from gliner_spark.operators.lm import train_bigram_lm
 
     lm_model = train_bigram_lm(clf_pos)
-    decisions, report = curate_corpus(
-        spark.createDataFrame(rows),
+    kwargs = dict(
         min_quality=0.5,
         allowed_langs={"en", "und"},
         benchmark_docs=spark.createDataFrame(bench),
@@ -477,6 +474,17 @@ def test_curate_corpus_reason_codes_and_report(spark):
             [Row(vec_id=100, embedding=[1.0, 0.0, 0.0, 0.0])]),
         semantic_threshold=0.95,
     )
+    return spark.createDataFrame(rows), kwargs
+
+
+def test_curate_corpus_reason_codes_and_report(planted):
+    """Every tagger fires on its planted doc and ONLY that doc (plus the
+    budget mixer on the survivor set); the report is consistent with the
+    decisions."""
+    from gliner_spark.operators.curation import curate_corpus
+
+    docs, kwargs = planted
+    decisions, report = curate_corpus(docs, **kwargs)
     got = {r.doc_id: (r.keep, set(r.reasons)) for r in decisions.collect()}
     assert got[1] == (True, set())
     assert got[2] == (True, set())
@@ -509,6 +517,128 @@ def test_curate_corpus_reason_codes_and_report(spark):
 
     c = Counter(x for _, (_, rs) in got.items() for x in rs)
     assert all(rep[k] == v for k, v in c.items())
+
+
+def test_curate_corpus_matches_per_tagger_oracle(planted):
+    """Each tagger run alone through its public function, its flags
+    composed in plain Python in the mixer's reason order, equals
+    curate_corpus's decisions exactly: keep and the ORDERED reasons."""
+    from gliner_spark.operators.classifier import score_quality
+    from gliner_spark.operators.curation import (
+        curate_corpus,
+        decontaminate,
+        mixture_sample,
+        semantic_decontaminate,
+    )
+    from gliner_spark.operators.dedup import (
+        exact_duplicates,
+        near_dedup_survivors,
+    )
+    from gliner_spark.operators.lm import score_perplexity
+    from gliner_spark.operators.textstats import (
+        blocklist_stats,
+        gopher_stats,
+        language_id,
+        quality_scores,
+        repetition_stats,
+    )
+
+    docs, kw = planted
+    ids = {r.doc_id for r in docs.select("doc_id").collect()}
+
+    def ids_where(df, pred):
+        return {r.doc_id for r in df.collect() if pred(r)}
+
+    exact = {
+        d
+        for r in exact_duplicates(docs).collect()
+        for d in r.doc_ids
+        if d != r.keep_doc_id
+    }
+    near_kept = ids_where(
+        near_dedup_survivors(
+            docs, jaccard_threshold=kw["near_dup_threshold"]
+        ),
+        lambda r: True,
+    )
+    semantic = ids_where(
+        semantic_decontaminate(
+            kw["doc_embeddings"],
+            kw["benchmark_embeddings"],
+            threshold=kw["semantic_threshold"],
+            id_col="doc_id",
+        ),
+        lambda r: r.contaminated == 1,
+    )
+    flags = [
+        ("exact_dup", exact),
+        ("near_dup", ids - near_kept),
+        ("low_quality", ids_where(
+            quality_scores(docs), lambda r: r.quality < kw["min_quality"])),
+        ("repetitive", ids_where(
+            repetition_stats(docs),
+            lambda r: r.dup_line_frac > 0.3 or r.top_bigram_frac > 0.3)),
+        ("bad_lang", ids_where(
+            language_id(docs),
+            lambda r: r.pred_lang not in kw["allowed_langs"])),
+        ("low_classifier_score", ids_where(
+            score_quality(docs, kw["classifier_weights"]),
+            lambda r: r.quality_prob < kw["min_classifier_prob"])),
+        ("high_perplexity", ids_where(
+            score_perplexity(docs, kw["lm_model"]),
+            lambda r: r.perplexity > kw["max_perplexity"])),
+        ("blocklisted", ids_where(
+            blocklist_stats(docs, kw["blocklist_terms"]),
+            lambda r: r.n_hits > 0 and r.hit_frac > 0.0)),
+        ("contaminated", ids_where(
+            decontaminate(docs, kw["benchmark_docs"], n=kw["decontam_n"]),
+            lambda r: r.contaminated == 1)),
+        ("gopher_fail", ids_where(
+            gopher_stats(docs), lambda r: r.gopher_ok == 0)),
+        ("semantic_contaminated", semantic),
+    ]
+    want = {d: [name for name, losers in flags if d in losers] for d in ids}
+    survivors = sorted(d for d, rs in want.items() if not rs)
+    in_budget = ids_where(
+        mixture_sample(
+            docs.where(F.col("doc_id").isin(survivors)),
+            "source",
+            kw["mixture_budgets"],
+            default_budget=kw["mixture_default_budget"],
+        ),
+        lambda r: True,
+    )
+    for d in survivors:
+        if d not in in_budget:
+            want[d].append("over_budget")
+
+    decisions, _ = curate_corpus(docs, **kw)
+    got = {r.doc_id: (r.keep, list(r.reasons)) for r in decisions.collect()}
+    assert got == {d: (not rs, rs) for d, rs in want.items()}
+    # non-vacuous: every reason code fires on the planted corpus
+    fired = {x for rs in want.values() for x in rs}
+    assert fired == {name for name, _ in flags} | {"over_budget"}
+
+
+def test_curate_corpus_blocklist_literal_and_broadcast_paths_agree(spark):
+    """64 terms fold to a literal probe array; one never-matching extra
+    term crosses `max_literal_terms` onto the one-row broadcast path.
+    The decisions must not change across that threshold."""
+    from gliner_spark.curation_pipeline import synth_corpus
+    from gliner_spark.operators.curation import curate_corpus
+
+    docs = synth_corpus(spark, 200)
+    terms = [f"w{i * 997 % 50000}" for i in range(64)]
+
+    def decide(blocklist):
+        decisions, _ = curate_corpus(docs, blocklist_terms=blocklist)
+        return sorted(
+            (r.doc_id, r.keep, list(r.reasons)) for r in decisions.collect()
+        )
+
+    literal = decide(terms)
+    assert any("blocklisted" in rs for _, _, rs in literal)
+    assert decide(terms + ["never-a-token-zz"]) == literal
 
 
 def test_curate_corpus_no_optional_stages(spark):

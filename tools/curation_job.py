@@ -10,7 +10,7 @@ the corpus-side twin of tools/pipeline_job.py:
 Runs (or RESUMES — rerun with the same --out and completed stages are
 read back via the lineage table) line-dedup → tagger mixer → attrition
 → shuffle shards → sequence packing. Prints one JSON line of stage row
-counts + wall.
+counts, the total wall and each stage's wall from the lineage table.
 """
 
 from __future__ import annotations
@@ -85,11 +85,13 @@ def main():
         max_len=args.max_len,
     )
     report = {r["reason"]: r["n_docs"] for r in res.report.collect()}
+    wall_s = round(time.time() - t0, 2)
+    lineage = res.runner.lineage().orderBy("completed_at").collect()
     print(
         json.dumps(
             {
                 "out": args.out,
-                "wall_s": round(time.time() - t0, 2),
+                "wall_s": wall_s,
                 "docs_in": report.get("total", 0),
                 "docs_kept": report.get("kept", 0),
                 "attrition": {
@@ -99,7 +101,12 @@ def main():
                 },
                 "shards": res.shards.count(),
                 "packed_rows": res.packed.count(),
-                "lineage_rows": res.runner.lineage().count(),
+                "lineage_rows": len(lineage),
+                # stage -> wall_s of its latest lineage row (a resumed
+                # stage keeps the wall of the run that computed it)
+                "stage_wall_s": {
+                    r["stage"]: round(r["wall_s"], 2) for r in lineage
+                },
             }
         )
     )
