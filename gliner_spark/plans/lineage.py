@@ -1,29 +1,45 @@
-"""Checkpoint-resume via a fingerprint marker + lineage and per-partition
+"""Checkpoint-resume via a fingerprint marker + lineage and per-file
 metrics tables.
 
 The reference has no resumability (SURVEY §2.10); the north rule requires
 "checkpoint-resumable with per-partition lineage and metrics tables". A
-stage commits marker-last:
+stage commits marker-last, and its bookkeeping reads only metadata that
+the write already left behind, so a computed stage runs no Spark job
+beyond its write:
 
  1. its output overwrites out_dir/<stage>, deleting the old marker;
- 2. one Spark job counts the read-back output per read partition
-    (spark_partition_id()): those rows go to `_metrics` (the skew
-    diagnostic for free) and their sum is the stage's n_rows;
- 3. one `_lineage` row (stage, fingerprint, status, n_rows, n_partitions,
-    wall_s, completed_at) is appended;
- 4. out_dir/<stage>/_FINGERPRINT is written with the fingerprint.
+ 2. the driver reads the row count from the Parquet footer of every data
+    file under the stage dir, partition subdirs included: one `_metrics`
+    row per file (partition_id = the file's ordinal in sorted path order,
+    the per-write-task skew diagnostic) whose sum is the stage's n_rows;
+ 3. one `_lineage` row (stage, fingerprint, status, n_rows, n_partitions
+    = the number of data files, wall_s, completed_at) is appended;
+ 4. out_dir/<stage>/_FINGERPRINT is written with a JSON object holding
+    the fingerprint and the schema the stage reads back with.
 
 Steps 2-4 write from the driver through plans/commit.py's atomic write
 (the protocol is stated there): no bookkeeping row goes through a
 pickled Python RDD, and no reader sees half a file.
 
+The read-back never infers a schema, because Parquet schema inference is
+a Spark job. It declares the produced frame's data columns (all nullable,
+as Parquet stores them) and lets partition discovery, which lists
+directories on the driver, append the partition columns with the types it
+infers from the directory names. Those can differ from the frame's own
+(a `bigint` shard reads back as `int`), which is why the marker stores the
+read-back schema rather than the produced one. An output with no
+partition directory (an empty partitioned stage) gets its partition
+columns with the frame's declared types.
+
 The fingerprint hashes the stage name + config + upstream fingerprints, so
 any input/config change invalidates exactly the downstream suffix of the
 DAG. A stage resumes iff its marker holds the fingerprint: the marker is
-the commit record, and resume scans no lineage. A crash before step 4
-leaves the stage uncommitted, so the rerun recomputes it. A crash between
-steps 3 and 4 leaves one truthful `complete` lineage row for a stage that
-will then rerun and append its own.
+the commit record, resume scans no lineage, and it reads the output with
+the marker's schema, so it runs no Spark job either. A marker that is not
+such a JSON object counts as uncommitted. A crash before step 4 leaves
+the stage uncommitted, so the rerun recomputes it. A crash between steps
+3 and 4 leaves one truthful `complete` lineage row for a stage that will
+then rerun and append its own.
 """
 
 from __future__ import annotations
@@ -39,7 +55,6 @@ from pathlib import Path
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -84,6 +99,38 @@ def _append_rows(directory: str, schema: T.StructType, rows: list[dict]) -> None
     )
 
 
+def _hidden(name: str) -> bool:
+    """Spark's rule for paths a file source never lists."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _data_files(path: str) -> list[str]:
+    """Every data file of a Parquet output, partition subdirs included,
+    in sorted path order."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        out += [
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not _hidden(f)
+        ]
+    return sorted(out)
+
+
+def _committed_schema(path: str, fp: str) -> T.StructType | None:
+    """The read-back schema in path's marker if the marker commits fp,
+    else None: no marker, another fingerprint, or a marker that is not a
+    {"fingerprint", "schema"} object (a torn or older-format one)."""
+    try:
+        marker = json.loads(Path(path, _MARKER).read_text())
+    except (FileNotFoundError, ValueError):
+        return None
+    if not isinstance(marker, dict) or marker.get("fingerprint") != fp:
+        return None
+    return T.StructType.fromJson(marker["schema"])
+
+
 class StageRunner:
     """Runs named stages with skip-if-committed resume semantics."""
 
@@ -104,26 +151,34 @@ class StageRunner:
         _FINGERPRINT marker already holds fp, in which case the persisted
         output is read back untouched (resume)."""
         path = os.path.join(self.out_dir, stage)
-        try:
-            committed = Path(path, _MARKER).read_text().strip()
-        except FileNotFoundError:
-            committed = None
-        if committed == fp:
-            return self.spark.read.parquet(path)
+        schema = _committed_schema(path, fp)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(path)
 
         t0 = time.time()
-        w = produce().write.mode("overwrite")
+        df = produce()
+        w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
-        out = self.spark.read.parquet(path)
-        counts = sorted(out.groupBy(F.spark_partition_id()).count().collect())
+        produced, parts = df.schema, partition_by or []
+        files = _data_files(path)
+        fields = [
+            T.StructField(f.name, f.dataType, True, f.metadata)
+            for f in produced
+            if f.name not in parts
+        ]
+        if not files:
+            # no partition directory to discover: declare the frame's types
+            fields += [T.StructField(c, produced[c].dataType) for c in parts]
+        out = self.spark.read.schema(T.StructType(fields)).parquet(path)
+        counts = [pq.read_metadata(f).num_rows for f in files]
         _append_rows(
             self.metrics_path,
             METRICS_SCHEMA,
             [
                 {"stage": stage, "fingerprint": fp, "partition_id": pid, "n_rows": n}
-                for pid, n in counts
+                for pid, n in enumerate(counts)
             ],
         )
         _append_rows(
@@ -134,14 +189,18 @@ class StageRunner:
                     "stage": stage,
                     "fingerprint": fp,
                     "status": "complete",
-                    "n_rows": sum(n for _pid, n in counts),
-                    "n_partitions": out.rdd.getNumPartitions(),
+                    "n_rows": sum(counts),
+                    "n_partitions": len(files),
                     "wall_s": time.time() - t0,
                     "completed_at": datetime.datetime.now(datetime.timezone.utc),
                 }
             ],
         )
-        write_text(path, _MARKER, fp)
+        write_text(
+            path,
+            _MARKER,
+            json.dumps({"fingerprint": fp, "schema": out.schema.jsonValue()}),
+        )
         return out
 
     def lineage(self) -> DataFrame:
