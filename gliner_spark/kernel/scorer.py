@@ -35,17 +35,6 @@ from .tokenizer import TOKEN_RE
 _EPS = 1e-8
 
 
-def stable_token_id(token: str, buckets: int) -> int:
-    """crc32-based stable hash (Python's hash() is salted per process).
-
-    Case-SENSITIVE, like the reference's DeBERTa tokenizer: distinct
-    surface casings must get distinct embeddings, otherwise bit-equal
-    label vectors create score ties whose resolution depends on BLAS
-    column blocking (batch-shape dependent) rather than on semantics.
-    """
-    return zlib.crc32(token.encode("utf-8")) % buckets
-
-
 class HashedBiEncoder:
     def __init__(self, cfg: ScorerConfig | None = None):
         self.cfg = cfg or ScorerConfig()

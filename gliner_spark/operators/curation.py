@@ -36,11 +36,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import PipelineConfig, DEFAULT
 from ..kernel.decode import score_fixed_spans
 from ..kernel.scorer import get_scorer
 from ..kernel.tokenizer import prep_tokens
+from .ner import _scored_chunks, _to_batch
 
 GOLD_CONF_SCHEMA = T.StructType(
     [
@@ -111,9 +113,9 @@ def score_gold_spans(
         grouped, on=["conv_id", "turn_idx"], how="inner"
     )
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .ner import _chunk_rows
+    gold_arrow = to_arrow_schema(GOLD_CONF_SCHEMA)
 
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         scorer = get_scorer(cfg.scorer)
         for batch in batches:
             conv = batch.column("conv_id").to_pylist()
@@ -121,50 +123,31 @@ def score_gold_spans(
             texts = batch.column("text").to_pylist()
             span_lists = batch.column("gold_spans").to_pylist()
             prepped = [prep_tokens(t, cfg.max_len, cfg.tokenizer) for t in texts]
-            lengths = [len(p[0]) for p in prepped]
-            cols: dict[str, list] = {
-                n: [] for n in GOLD_CONF_SCHEMA.fieldNames()
-            }
-            # chunked scoring (same budget policy as extract_entities_token)
-            for lo, hi in _chunk_rows(
-                lengths, 3, scorer.cfg.dim, len(entity_types)
+            out = []
+            # arrival-order chunks under the token scorer's (width 3) budget
+            for rows, ids in _scored_chunks(
+                scorer, prepped, list(range(len(texts))),
+                [len(entity_types)] * len(texts), 3,
             ):
-                ids, _ = scorer.ids_matrix(
-                    [prepped[i][0] for i in range(lo, hi)]
-                )
                 probs = scorer.token_scores(ids, label_mat)
-                for i in range(lo, hi):
+                for p, i in zip(probs, rows):
                     spans = [
                         (sp["s"], sp["e"], cls_idx[sp["l"]])
                         for sp in span_lists[i]
                         if sp["l"] in cls_idx
                     ]
-                    for st, ed, ci, sc in score_fixed_spans(
-                        probs[i - lo],
-                        spans,
-                        lengths[i],
-                        threshold,
-                        flat_ner=cfg.flat_ner,
-                        multi_label=cfg.multi_label,
-                    ):
-                        cols["conv_id"].append(conv[i])
-                        cols["turn_idx"].append(turn[i])
-                        cols["tok_start"].append(st)
-                        cols["tok_end"].append(ed)
-                        cols["label"].append(entity_types[ci])
-                        cols["confidence"].append(float(sc))
-            yield pa.RecordBatch.from_pydict(
-                cols, schema=pa.schema(
-                    [
-                        ("conv_id", pa.string()),
-                        ("turn_idx", pa.int32()),
-                        ("tok_start", pa.int32()),
-                        ("tok_end", pa.int32()),
-                        ("label", pa.string()),
-                        ("confidence", pa.float64()),
+                    out += [
+                        (conv[i], turn[i], st, ed, entity_types[ci], float(sc))
+                        for st, ed, ci, sc in score_fixed_spans(
+                            p,
+                            spans,
+                            len(prepped[i][0]),
+                            threshold,
+                            flat_ner=cfg.flat_ner,
+                            multi_label=cfg.multi_label,
+                        )
                     ]
-                )
-            )
+            yield _to_batch(out, gold_arrow)
 
     return joined.mapInArrow(run, GOLD_CONF_SCHEMA)
 

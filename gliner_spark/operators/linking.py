@@ -41,7 +41,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _MERSENNE = (1 << 31) - 1  # 2^31 - 1, prime
@@ -569,23 +569,13 @@ def canonicalize(
     )
 
 
-def rewrite_triples(
-    triples: DataFrame,
-    canon_map: DataFrame,
-    spark: SparkSession | None = None,
-    broadcast_threshold: int = 10_000_000,
-) -> DataFrame:
+def rewrite_triples(triples: DataFrame, canon_map: DataFrame) -> DataFrame:
     """Rewrite triple subj/obj surfaces through the canonical map.
 
-    The map is usually small relative to triples → broadcast both lookups
-    (two broadcast hash joins, zero shuffle of the triple stream). Callers
-    with giant maps pass broadcast_threshold=0 to fall back to sort-merge
-    joins after an explicit repartition on the join key.
+    The map is small relative to triples → broadcast both lookups (two
+    broadcast hash joins, zero shuffle of the triple stream).
     """
     m = canon_map.select("surface", "entity_id", "canonical")
-    use_broadcast = True
-    if broadcast_threshold == 0:
-        use_broadcast = False
     subj_map = m.select(
         F.col("surface").alias("subj"),
         F.col("entity_id").alias("subj_id"),
@@ -596,12 +586,8 @@ def rewrite_triples(
         F.col("entity_id").alias("obj_id"),
         F.col("canonical").alias("obj_canonical"),
     )
-    if use_broadcast:
-        subj_map, obj_map = F.broadcast(subj_map), F.broadcast(obj_map)
-    else:
-        triples = triples.repartition("subj")
-    out = triples.join(subj_map, on="subj", how="left").join(
-        obj_map, on="obj", how="left"
+    out = triples.join(F.broadcast(subj_map), on="subj", how="left").join(
+        F.broadcast(obj_map), on="obj", how="left"
     )
     # unlinked surfaces (no mention support) keep themselves as canonical
     return out.withColumn(

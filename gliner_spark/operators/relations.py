@@ -19,25 +19,30 @@ set depends only on pass 1's output for the SAME row, so the dependency is
 row-local. Fusing both passes into one mapInArrow keeps the whole triple
 producer shuffle-free — at 100 TB the alternative costs a full shuffle of
 the entities table plus a re-scan of transcripts, for zero semantic gain.
-The entities DataFrame remains available separately (operators/ner.py) for
-consumers that want mentions (co-occurrence induction, linking).
+Both passes run the one scoring stage of operators/ner.py (chunker, chunk
+loop, span projection, Arrow assembly); only the row order, the scorer and
+the decoder call are this module's. The entities DataFrame remains
+available separately (operators/ner.py) for consumers that want mentions
+(co-occurrence induction, linking).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import PipelineConfig, DEFAULT
 from ..kernel.decode import decode_batch
 from ..kernel.scorer import HashedBiEncoder, get_scorer
 from ..kernel.tokenizer import prep_tokens
-from .ner import _score_and_decode_batch, _CHUNK_BUDGET_ELEMS
+from .ner import _decode_spans, _entity_rows, _scored_chunks, _spans, _to_batch
 
 TRIPLE_SCHEMA = T.StructType(
     [
@@ -51,40 +56,6 @@ TRIPLE_SCHEMA = T.StructType(
         T.StructField("end", T.IntegerType(), False),
     ]
 )
-
-_TRIPLE_ARROW = pa.schema(
-    [
-        ("conv_id", pa.string()),
-        ("turn_idx", pa.int32()),
-        ("subj", pa.string()),
-        ("pred", pa.string()),
-        ("obj", pa.string()),
-        ("score", pa.float64()),
-        ("start", pa.int32()),
-        ("end", pa.int32()),
-    ]
-)
-
-
-def _chunk_ragged(
-    lengths: list[int], label_counts: list[int], max_width: int, dim: int
-) -> list[tuple[int, int]]:
-    """Greedy chunking bounding the padded (B, Lmax, K, dim+Cmax) tensor."""
-    chunks: list[tuple[int, int]] = []
-    i, n = 0, len(lengths)
-    while i < n:
-        lmax, cmax = 1, 1
-        j = i
-        while j < n:
-            lm = max(lmax, lengths[j])
-            cm = max(cmax, label_counts[j], 1)
-            if (j - i + 1) * lm * max_width * (dim + cm) > _CHUNK_BUDGET_ELEMS and j > i:
-                break
-            lmax, cmax = lm, cm
-            j += 1
-        chunks.append((i, j))
-        i = j
-    return chunks
 
 
 def relation_labels_for(
@@ -104,10 +75,10 @@ def _relation_pass(
     scorer: HashedBiEncoder,
     cfg: PipelineConfig,
     threshold: float,
-    text_prepped: list[tuple] | None = None,
+    text_prepped: list[tuple],
 ) -> list[list[tuple]]:
-    """Ragged-label scoring of (prefix + text) prompts → per-row accepted
-    candidate tuples (char_start, char_end, span_text, label, score).
+    """Ragged-label scoring of (prefix + text) prompts → per-row entity
+    tuples (ner._spans shape) with offsets into the PROMPT.
 
     Efficiency structure (semantics identical to tokenizing each prompt
     whole — pinned by the oracle parity test):
@@ -126,8 +97,6 @@ def _relation_pass(
     assert prefix[-1].isspace()
     p_toks, p_starts, p_ends = prep_tokens(prefix, cfg.max_len, cfg.tokenizer)
     shift = len(prefix)
-    if text_prepped is None:
-        text_prepped = [prep_tokens(t, cfg.max_len, cfg.tokenizer) for t in texts]
     prepped = []
     for t, (toks, starts, ends) in zip(texts, text_prepped):
         if toks == ["[PAD]"] and not t.strip():
@@ -148,14 +117,9 @@ def _relation_pass(
         (i for i in range(len(texts)) if counts[i] > 0),
         key=lambda i: (counts[i], lengths[i]),
     )
-    for lo, hi in _chunk_ragged(
-        [lengths[i] for i in eligible],
-        [counts[i] for i in eligible],
-        cfg.max_width,
-        scorer.cfg.dim,
+    for rows, ids in _scored_chunks(
+        scorer, prepped, eligible, counts, cfg.max_width
     ):
-        rows = eligible[lo:hi]
-        ids, _ = scorer.ids_matrix([prepped[i][0] for i in rows])
         label_mats = [scorer.encode_labels(per_row_labels[i]) for i in rows]
         probs = scorer.score_batch_ragged(ids, label_mats, cfg.max_width)
         decoded = decode_batch(
@@ -166,15 +130,10 @@ def _relation_pass(
             multi_label=cfg.multi_label,
             n_labels=np.asarray([counts[i] for i in rows], dtype=np.int64),
         )
-        for bi, i in enumerate(rows):
-            labels = per_row_labels[i]
-            tokens, tstarts, tends = prepped[i]
-            text = prefix + texts[i]
-            acc = []
-            for si, ei, ci, sci in decoded[bi]:
-                cs, ce = tstarts[si], tends[ei]
-                acc.append((cs, ce, text[cs:ce], labels[ci], float(sci)))
-            out[i] = acc
+        for i, spans in zip(rows, decoded):
+            out[i] = _spans(
+                prefix + texts[i], prepped[i], spans, per_row_labels[i]
+            )
     return out
 
 
@@ -203,6 +162,8 @@ def extract_triples(
     shift = len(prefix)
 
     ent_label_mat = get_scorer(cfg.scorer).encode_labels(entity_types)
+    ner_decode = partial(_decode_spans, cfg=cfg, threshold=ner_thr)
+    triple_arrow = to_arrow_schema(TRIPLE_SCHEMA)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         scorer = get_scorer(cfg.scorer)
@@ -210,12 +171,12 @@ def extract_triples(
             conv = batch.column("conv_id").to_pylist()
             turn = batch.column("turn_idx").to_pylist()
             texts = batch.column("text").to_pylist()
-            # pass 1: shared-label NER (same kernel as operators/ner.py);
+            # pass 1: shared-label NER (the same stage as operators/ner.py);
             # tokenization is shared with pass 2
             prepped = [prep_tokens(t, cfg.max_len, cfg.tokenizer) for t in texts]
-            ner_rows = _score_and_decode_batch(
-                texts, scorer, ent_label_mat, entity_types, cfg, ner_thr,
-                prepped=prepped,
+            ner_rows = _entity_rows(
+                scorer, ent_label_mat, entity_types, texts, prepped,
+                cfg.max_width, ner_decode,
             )
             per_row_labels = [
                 relation_labels_for([r[2] for r in rows], relations)
@@ -223,27 +184,19 @@ def extract_triples(
             ]
             # pass 2: ragged-label RE scoring
             rel_rows = _relation_pass(
-                texts, prefix, per_row_labels, scorer, cfg, rel_thr,
-                text_prepped=prepped,
+                texts, prefix, per_row_labels, scorer, cfg, rel_thr, prepped
             )
-
-            cols: dict[str, list] = {k: [] for k in _TRIPLE_ARROW.names}
-            for cid, tix, rows in zip(conv, turn, rel_rows):
-                for cs, ce, span_text, label, score in rows:
-                    # rsplit: an entity surface may itself contain '<>';
-                    # the RELATION never does (caller-supplied list), so
-                    # splitting on the LAST marker is unambiguous — and
-                    # must match kernel/oracle.py exactly (parity tests)
-                    parts = label.rsplit("<>", 1)
-                    cols["conv_id"].append(cid)
-                    cols["turn_idx"].append(tix)
-                    cols["subj"].append(parts[0].strip())
-                    cols["pred"].append(parts[1].strip())
-                    cols["obj"].append(span_text.strip())
-                    cols["score"].append(score)
-                    cols["start"].append(cs - shift)
-                    cols["end"].append(ce - shift)
-            yield pa.RecordBatch.from_pydict(cols, schema=_TRIPLE_ARROW)
+            # rsplit: an entity surface may itself contain '<>'; the
+            # RELATION never does (caller-supplied list), so splitting on
+            # the LAST marker is unambiguous — and must match
+            # kernel/oracle.py exactly (parity tests)
+            triples = [
+                (cid, tix, *(p.strip() for p in label.rsplit("<>", 1)),
+                 span_text.strip(), score, cs - shift, ce - shift)
+                for cid, tix, rows in zip(conv, turn, rel_rows)
+                for cs, ce, span_text, label, score, _ts, _te in rows
+            ]
+            yield _to_batch(triples, triple_arrow)
 
     projected = transcripts.select("conv_id", "turn_idx", "text")
     return projected.mapInArrow(run, TRIPLE_SCHEMA)

@@ -10,6 +10,7 @@ Tuned for the 100 TB design point, testable on local[N]:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -20,27 +21,39 @@ from .commit import write_atomic
 
 
 def build_package_zip() -> str:
-    """Build (or refresh) the gliner_spark zip for --py-files shipping."""
+    """Build the gliner_spark zip for --py-files shipping.
+
+    The zip is named by a sha256 over the package's sorted (relpath,
+    bytes) `.py` sources, so two checkouts sharing one temp dir never
+    ship each other's code, whatever their files' mtimes. It is built
+    only when absent, from exactly the bytes that were hashed. Other
+    zips are left alone: a concurrent run may be shipping them.
+    """
     import gliner_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(gliner_spark.__file__))
+    sources = []
+    for root, _d, files in os.walk(pkg_dir):
+        for f in files:
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    sources.append((os.path.relpath(full, pkg_dir), fh.read()))
+    sources.sort()
+    digest = hashlib.sha256()
+    for rel, data in sources:
+        digest.update(f"{rel}\0{len(data)}\0".encode())
+        digest.update(data)
     zip_path = os.path.join(
-        tempfile.gettempdir(), f"gliner_spark-{gliner_spark.__version__}.zip"
+        tempfile.gettempdir(),
+        f"gliner_spark-{gliner_spark.__version__}-{digest.hexdigest()[:16]}.zip",
     )
-    py_files = [
-        os.path.join(root, f)
-        for root, _d, files in os.walk(pkg_dir)
-        for f in files
-        if f.endswith(".py")
-    ]
-    src_mtime = max(map(os.path.getmtime, py_files))
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < src_mtime:
+    if not os.path.exists(zip_path):
 
         def write(tmp):
             with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-                for full in py_files:
-                    rel = os.path.relpath(full, pkg_dir)
-                    zf.write(full, os.path.join("gliner_spark", rel))
+                for rel, data in sources:
+                    zf.writestr(os.path.join("gliner_spark", rel), data)
 
         write_atomic(*os.path.split(zip_path), write)
     return zip_path

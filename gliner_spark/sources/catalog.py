@@ -79,12 +79,6 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def read_table(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
-    if iceberg_available(spark) and "/" not in out_dir:
-        return spark.read.table(f"{out_dir}.{name}")
-    return spark.read.parquet(os.path.join(out_dir, name))
-
-
 def zorder_key(
     df: DataFrame,
     cols: tuple[str, ...],

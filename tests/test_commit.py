@@ -180,20 +180,22 @@ def test_compaction_sweeps_markerless_dead_parts(spark, tmp_path):
     )
 
 
-def test_concurrent_package_zip_builds(monkeypatch, tmp_path):
-    """Two threads rebuilding a stale package zip at the same moment must
+def test_concurrent_package_zip_builds(monkeypatch, tmp_path, tmp_path_factory):
+    """Two threads building the package zip at the same moment must
     both return a valid zip: each writes its own temp file."""
-    import gliner_spark
     from gliner_spark.plans.session import build_package_zip
 
+    # the zip is content-keyed: learn its name from a build elsewhere,
+    # then race two builds into the empty tmp_path
+    probe = str(tmp_path_factory.mktemp("probe"))
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: probe)
+    name = os.path.basename(build_package_zip())
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    zip_path = tmp_path / f"gliner_spark-{gliner_spark.__version__}.zip"
-    zip_path.write_bytes(b"stale")
-    os.utime(zip_path, (0, 0))
+    zip_path = tmp_path / name
 
     barrier = threading.Barrier(2, timeout=60)
     waited = set()
-    real_write = zipfile.ZipFile.write
+    real_write = zipfile.ZipFile.writestr
 
     def write(self, *args, **kwargs):
         if threading.get_ident() not in waited:
@@ -201,7 +203,7 @@ def test_concurrent_package_zip_builds(monkeypatch, tmp_path):
             barrier.wait()  # both threads are now mid-write
         return real_write(self, *args, **kwargs)
 
-    monkeypatch.setattr(zipfile.ZipFile, "write", write)
+    monkeypatch.setattr(zipfile.ZipFile, "writestr", write)
     results, errors = [], []
 
     def build():
@@ -221,3 +223,40 @@ def test_concurrent_package_zip_builds(monkeypatch, tmp_path):
         assert zf.testzip() is None
         assert "gliner_spark/__init__.py" in zf.namelist()
     assert os.listdir(tmp_path) == [zip_path.name]
+
+
+def test_package_zip_holds_its_own_tree(monkeypatch, tmp_path):
+    """Two package copies sharing one temp dir each ship their own
+    bytes, even when the copy with older files builds second."""
+    import time
+
+    import gliner_spark
+    from gliner_spark.plans.session import build_package_zip
+
+    src = os.path.dirname(os.path.abspath(gliner_spark.__file__))
+    trees = {}
+    for name, mtime in (("newer", time.time()), ("older", 1e9)):
+        pkg = tmp_path / name / "gliner_spark"
+        shutil.copytree(src, pkg, ignore=shutil.ignore_patterns("__pycache__"))
+        if name == "newer":  # one worker-side line differs
+            ner = pkg / "operators" / "ner.py"
+            code = ner.read_text()
+            ner.write_text(code.replace("labels[ci]", "labels[ci] + '_x'", 1))
+            assert ner.read_text() != code
+        for root, _d, files in os.walk(pkg):
+            for f in files:
+                os.utime(os.path.join(root, f), (mtime, mtime))
+        trees[name] = pkg
+
+    shared = str(tmp_path / "tmp")
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: shared)
+    zips = {}
+    for name in ("newer", "older"):
+        monkeypatch.setattr(
+            gliner_spark, "__file__", str(trees[name] / "__init__.py")
+        )
+        zips[name] = build_package_zip()
+    for name, pkg in trees.items():
+        with zipfile.ZipFile(zips[name]) as zf:
+            for rel in ("operators/ner.py", "plans/session.py"):
+                assert zf.read(f"gliner_spark/{rel}") == (pkg / rel).read_bytes()

@@ -5,11 +5,21 @@ Also pins the per-turn text equality invariant under stable
 """
 
 import pytest
+from hypothesis import given, settings, strategies as st
+from pyspark.sql import types as T
 
 from gliner_spark.config import DEFAULT
 from gliner_spark.kernel.metrics import compute_prf_micro
 from gliner_spark.kernel.oracle import OraclePipeline
-from gliner_spark.operators.ner import extract_entities
+from gliner_spark.operators.curation import GOLD_CONF_SCHEMA, score_gold_spans
+from gliner_spark.operators.ner import (
+    _CHUNK_BUDGET_ELEMS,
+    ENTITY_SCHEMA,
+    _chunks,
+    extract_entities,
+    extract_entities_token,
+)
+from gliner_spark.operators.relations import TRIPLE_SCHEMA, extract_triples
 from gliner_spark.sources.transcripts import synth_transcripts
 
 LABELS = ["person", "organization", "location", "service", "tool"]
@@ -100,3 +110,67 @@ def test_threshold_pushdown_semantics(spark, small_transcripts):
     hi_keys = {tuple(r) for r in hi.collect()}
     assert hi_keys <= lo_keys
     assert len(hi_keys) < len(lo_keys)
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(st.integers(1, 512), st.integers(0, 80)), max_size=60
+    ),
+    max_width=st.sampled_from([3, 12]),
+    dim=st.sampled_from([64, 128, 384]),
+)
+def test_chunker_bounds_padded_working_set(rows, max_width, dim):
+    """The one chunker: chunks are contiguous and cover the order; every
+    multi-row chunk's padded B·Lmax·K·(dim+Cmax) fits the budget, and
+    adding the next row would exceed it."""
+    lengths = [n for n, _c in rows]
+    counts = [c for _n, c in rows]
+
+    def elems(lo, hi):
+        lmax = max([1, *lengths[lo:hi]])
+        cmax = max([1, *counts[lo:hi]])
+        return (hi - lo) * lmax * max_width * (dim + cmax)
+
+    chunks = _chunks(lengths, counts, max_width, dim)
+    assert all(hi > lo for lo, hi in chunks)
+    assert [i for lo, hi in chunks for i in range(lo, hi)] == list(
+        range(len(rows))
+    )
+    for lo, hi in chunks:
+        if hi - lo > 1:
+            assert elems(lo, hi) <= _CHUNK_BUDGET_ELEMS
+        if hi < len(rows):
+            assert elems(lo, hi + 1) > _CHUNK_BUDGET_ELEMS
+
+
+def test_zero_output_batches_keep_declared_schema(spark):
+    """All four span-scoring operators, given rows that all emit nothing
+    (empty / blank text, gold spans outside the token stream), return an
+    empty frame of their declared schema."""
+    keys = [
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("turn_idx", T.IntegerType(), False),
+    ]
+    transcripts = spark.createDataFrame(
+        [("c0", 0, ""), ("c0", 1, "   ")],
+        T.StructType([*keys, T.StructField("text", T.StringType(), False)]),
+    )
+    gold = spark.createDataFrame(
+        [("c0", 0, 40, 41, LABELS[0]), ("c0", 1, 50, 60, LABELS[1])],
+        T.StructType([
+            *keys,
+            T.StructField("tok_start", T.IntegerType(), False),
+            T.StructField("tok_end", T.IntegerType(), False),
+            T.StructField("label", T.StringType(), False),
+        ]),
+    )
+    frames = [
+        (extract_entities(transcripts, LABELS), ENTITY_SCHEMA),
+        (extract_entities_token(transcripts, LABELS), ENTITY_SCHEMA),
+        (extract_triples(transcripts, ["uses"], LABELS), TRIPLE_SCHEMA),
+        (score_gold_spans(transcripts, gold, LABELS), GOLD_CONF_SCHEMA),
+    ]
+    for df, schema in frames:
+        assert df.schema == schema
+        assert df.collect() == []

@@ -4,7 +4,9 @@ Runs every `queries()` entry on Spark and, where present, the matching
 `oracle_sql()` on DuckDB over the same parquet tables, comparing:
 row count, sorted column names, and an order-insensitive value hash
 (rows sorted, columns sorted by name, values stringified with float
-rounding). Exit code 1 on any mismatch.
+rounding). Exit code 1 on any mismatch. Every passing line (`OK` and
+rows-only `ok-`) prints the Spark-side value hash, so a refactor can be
+shown value-identical by diffing two runs of this tool.
 
 Usage: python tools/check_contract.py [sf_dir] [query ...]
 """
@@ -13,12 +15,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -130,6 +133,7 @@ def main():
                 pin = " pin-ok" if expected is not None else ""
                 print(
                     f"ok-   {name}: rows={len(rows)} "
+                    f"hash={value_hash(rows, cols)} "
                     f"(rows-only,{pin} {spark_s:.1f}s)"
                 )
             continue
@@ -177,7 +181,9 @@ def main():
             failures.append((name, "; ".join(problems)))
             print(f"FAIL  {name}: {'; '.join(problems)}")
         else:
-            print(f"OK    {name}: rows={len(rows)} ({spark_s:.1f}s)")
+            print(
+                f"OK    {name}: rows={len(rows)} hash={hs} ({spark_s:.1f}s)"
+            )
 
     print(f"\n{len(failures)} failures")
     spark.stop()
