@@ -20,6 +20,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .linking import SMALL_SOLVE
+
 
 def _directed_edges(
     edges: DataFrame,
@@ -810,7 +812,7 @@ def k_core(
     k: int,
     src_col: str = "src",
     dst_col: str = "dst",
-    small_solve: int = 500_000,
+    small_solve: int = SMALL_SOLVE,
 ) -> DataFrame:
     """The k-core of the UNDIRECTED view of the edge list: the maximal
     subgraph in which every vertex has degree >= k, as its canonical
@@ -865,7 +867,7 @@ def core_numbers(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    small_solve: int = 500_000,
+    small_solve: int = SMALL_SOLVE,
 ) -> DataFrame:
     """Core number of every vertex of the undirected view → (v, core):
     the largest k such that v belongs to the k-core; isolated-by-dedup
@@ -1198,7 +1200,7 @@ def strongly_connected_components(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    small_solve: int = 500_000,
+    small_solve: int = SMALL_SOLVE,
     max_phases: int = 50,
 ) -> DataFrame:
     """Strongly connected components of the DIRECTED graph →

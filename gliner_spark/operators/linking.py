@@ -2,23 +2,33 @@
 components → canonical surface selection.
 
 The reference has no linking stage (SURVEY §2.3 J-row "Entity linking
-joins"); this implements the north-star spec with NATIVE DataFrame ops
-end-to-end — the only Python code is the single-task union-find
-finisher (a mapInPandas over an already-tiny edge set):
+joins"); this implements the north-star spec. Every hash (shingles,
+MinHash signatures, band keys) is a native Spark expression on both of
+canonicalize's sides; only set logic ever runs in Python, and only in a
+single task whose input is bounded by `SMALL_SOLVE`:
 
  blocking   char-3-gram shingles of the normalized surface form →
             MinHash signatures (64 perms) → LSH bands (16 bands × 4 rows,
-            band_keys) → candidate pairs via equi-join on the band key;
- verify     exact Jaccard on the shingle sets (array_intersect/union) —
-            LSH is only a blocker, the verified threshold decides;
- components large-star/small-star contraction over the verified
-            similarity graph (driver-controlled loop, localCheckpoint per
-            round — Catalyst cannot iterate, SURVEY §4), with a
-            single-task union-find finisher once the contracting edge
-            set fits one task (`small_solve`);
+            band_keys) → candidate pairs within a (band, key) bucket;
+ verify     exact Jaccard on the shingle sets — LSH is only a blocker,
+            the verified threshold decides;
+ components connected components of the verified similarity graph,
+            union-find with min-id roots (`_union_find`);
  canonical  per component: the surface with the highest mention count,
-            ties broken by lexicographically greatest surface via struct
-            max — deterministic, unlike bare max_by.
+            ties broken by the greatest surface under Spark's struct
+            order — deterministic, unlike bare max_by.
+
+canonicalize has two sides behind one gate, and both give the same rows
+(both-sides matrix in test_linking). When the band rows (surfaces ×
+bands) fit one task it computes the per-surface values in one Spark
+projection and runs bucket grouping, verify, union-find and the
+canonical pick in ONE coalesce(1).mapInArrow task (`_one_task`). Above
+the gate the blocking is an equi-join on the band key, verify is two
+id-keyed joins plus array_intersect/union, components are
+large-star/small-star rounds (driver-controlled loop, localCheckpoint
+per round — Catalyst cannot iterate, SURVEY §4) whose tail collapses
+into the same single-task union-find once the contracting edge set fits
+(`small_solve`), and the canonical pick is a struct-max groupBy.
 
 Scale notes:
  * Everything heavy runs on the DISTINCT-surface table, not mentions —
@@ -29,9 +39,12 @@ Scale notes:
    JVM-side. Classic a·x+b universal hashing over a Mersenne prime;
    base hash xxhash64 folded into [0, p) so the int64 multiply cannot
    overflow under ANSI mode.
- * LSH join is an equi-join on (band_idx, band_hash) — AQE-skew-splittable.
-   Identical surfaces can't collide (input is distinct), so bucket blowup
-   is bounded by genuinely-similar families.
+ * Below the gate the whole chain is one task: there every distributed
+   stage is scheduler latency on a few thousand rows (canonicalize plus
+   a write over 1,138 surfaces: 22 Spark jobs distributed, 5 local).
+ * Above it the LSH join is an equi-join on (band_idx, band_hash) —
+   AQE-skew-splittable. Identical surfaces can't collide (input is
+   distinct), so bucket blowup is bounded by genuinely-similar families.
  * Large-star/small-star rounds are polylogarithmic in n (O(log² n),
    Kiveris et al. 2014) whatever the component diameter; once the
    surviving edge multiset is ≤ `small_solve`, one union-find pass in a
@@ -41,10 +54,23 @@ Scale notes:
 
 from __future__ import annotations
 
+from itertools import combinations
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _MERSENNE = (1 << 31) - 1  # 2^31 - 1, prime
+
+# The most rows a size-gated solver hands to ONE task: the edge count
+# below which connected_components, k_core, core_numbers and
+# strongly_connected_components finish locally, and the band-row count
+# (surfaces × bands) below which canonicalize runs in one task. A bound
+# of 0 forces the distributed side on any non-empty input.
+SMALL_SOLVE = 500_000
 
 
 def _perm_coeffs(n_perms: int, seed: int) -> list[tuple[int, int]]:
@@ -94,6 +120,14 @@ def surface_table(mentions: DataFrame, surface_col: str = "text") -> DataFrame:
     ).withColumn("surface_id", F.xxhash64("surface"))
 
 
+def _base_hashes(shingles_col, seed: int) -> Column:
+    """Each shingle's xxhash64 folded into [0, p): the MinHash input."""
+    return F.transform(
+        shingles_col,
+        lambda s: F.pmod(F.xxhash64(F.lit(seed), s), F.lit(_MERSENNE)),
+    )
+
+
 def minhash_array(shingles_col, n_perms: int, seed: int):
     """MinHash signature as ONE map-side array expression over a shingle
     ARRAY column: base-hash each shingle once (folded to [0, p) so the
@@ -106,10 +140,8 @@ def minhash_array(shingles_col, n_perms: int, seed: int):
     whose generated code dominated wall time at small scale; this is a
     narrow projection that pipelines with the scan at any scale."""
     coeffs = _perm_coeffs(n_perms, seed)
-    hashes = F.transform(
-        shingles_col,
-        lambda s: F.pmod(F.xxhash64(F.lit(seed), s), F.lit(_MERSENNE)),
-    )
+    hashes = _base_hashes(shingles_col, seed)
+
     def perm_min(hs, a, b):
         return F.array_min(
             F.transform(
@@ -145,10 +177,7 @@ def minhash_signatures(
     sig:array<bigint>[n_perms]). Pure map stage (see minhash_array)."""
     if "surface_id" not in surfaces.columns:
         surfaces = surfaces.withColumn("surface_id", F.xxhash64("surface"))
-    hashes = F.transform(
-        shingle_set(F.col("surface"), shingle_n),
-        lambda s: F.pmod(F.xxhash64(F.lit(seed), s), F.lit(_MERSENNE)),
-    )
+    hashes = _base_hashes(shingle_set(F.col("surface"), shingle_n), seed)
     with_h = surfaces.select("surface_id", "surface", hashes.alias("_hs"))
     return with_h.select(
         "surface_id",
@@ -314,51 +343,66 @@ def verified_pairs(
     )
 
 
-def _local_membership(edges: DataFrame, id_col: str) -> DataFrame:
-    """(u, v) edge set small enough for ONE task → (id, component) via
-    union-find with min-id roots (union always attaches the larger root
-    under the smaller, so by induction every root IS the minimum of its
-    set — identical semantics to the star-contraction membership).
+def _union_find(nodes, pairs, accept=None) -> dict:
+    """Min-id-root union-find → {node: root} over `nodes` plus every end
+    of `pairs`. Union always attaches the larger root under the smaller,
+    so by induction every root IS the minimum of its set — identical
+    semantics to the star-contraction membership. `accept(u, v)` is asked
+    only about pairs whose ends are not yet connected (connectivity is all
+    a component depends on); a rejected pair merges nothing."""
+    parent = {x: x for x in nodes}
 
-    Bounded by construction: callers gate on edge count (small_solve), so
-    the single task holds ≤ small_solve edges plus the union-find dict —
-    the same bounded-small-side pattern as the k-means centroid collect.
-    One narrow exchange (coalesce, no shuffle write). Ids keep whatever
-    orderable type the edges carry (int64 on the linking path)."""
-    dt = edges.schema["u"].dataType.simpleString()
-    schema = f"{id_col} {dt}, component {dt}"
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in pairs:
+        ru = find(parent.setdefault(u, u))
+        rv = find(parent.setdefault(v, v))
+        if ru == rv or (accept is not None and not accept(u, v)):
+            continue
+        if rv < ru:
+            ru, rv = rv, ru
+        parent[rv] = ru
+    return {x: find(x) for x in parent}
+
+
+def _one_task(df: DataFrame, solve, schema: T.StructType) -> DataFrame:
+    """All of df's rows → ONE task → solve(pa.Table) → {column: list} in
+    `schema`'s field order. One narrow exchange (coalesce, no shuffle
+    write). Bounded by construction: every caller gates on a row count
+    (`SMALL_SOLVE`), the same bounded-small-side pattern as the k-means
+    centroid collect."""
+    arrow = to_arrow_schema(schema)
 
     def run(batches):
-        import pandas as pd
+        batches = list(batches)
+        if batches:
+            table = pa.Table.from_batches(batches)
+            if table.num_rows:
+                yield pa.RecordBatch.from_pydict(solve(table), schema=arrow)
 
-        parent: dict = {}
+    return df.coalesce(1).mapInArrow(run, schema)
 
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
 
-        for pdf in batches:
-            for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
-                if u not in parent:
-                    parent[u] = u
-                if v not in parent:
-                    parent[v] = v
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    if rv < ru:
-                        ru, rv = rv, ru
-                    parent[rv] = ru
-        if parent:
-            ids = list(parent)
-            yield pd.DataFrame(
-                {id_col: ids, "component": [find(x) for x in ids]}
-            )
+def _local_membership(edges: DataFrame, id_col: str) -> DataFrame:
+    """(u, v) edge set small enough for ONE task → (id, component) via
+    `_union_find`. Ids keep whatever orderable type the edges carry
+    (int64 on the linking path)."""
+    dt = edges.schema["u"].dataType
 
-    return edges.coalesce(1).mapInPandas(run, schema)
+    def solve(t: pa.Table) -> dict:
+        roots = _union_find((), zip(t["u"].to_pylist(), t["v"].to_pylist()))
+        return {id_col: list(roots), "component": list(roots.values())}
+
+    schema = T.StructType(
+        [T.StructField(id_col, dt), T.StructField("component", dt)]
+    )
+    return _one_task(edges, solve, schema)
 
 
 def connected_components(
@@ -368,7 +412,7 @@ def connected_components(
     id_col: str = "id",
     edge_cols: tuple[str, str] = ("id_a", "id_b"),
     n_partitions: int | None = None,
-    small_solve: int = 500_000,
+    small_solve: int = SMALL_SOLVE,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -515,6 +559,106 @@ def connected_components(
     return _attach(membership)
 
 
+def _nulls_lowest(v):
+    """Sort key for a nullable string under Spark's struct order: null
+    below every string, strings by code point, which is the order of
+    their UTF-8 bytes (Spark's binary string order)."""
+    return (v is not None, v or "")
+
+
+def _canonical_local(
+    surfaces: DataFrame,
+    n_perms: int,
+    n_bands: int,
+    rows_per_band: int,
+    shingle_n: int,
+    jaccard_threshold: float,
+    seed: int,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """canonicalize's single-task side. One Spark projection computes every
+    per-surface value with the distributed side's expressions (shingle
+    set, band keys over the MinHash signature); one task then groups the
+    band rows by (band, key), drops buckets above `max_bucket_size`,
+    runs the exact Jaccard >= test on each in-bucket pair whose ends are
+    not yet connected, unions with `_union_find`, and picks per component
+    the max (n_mentions, surface) as canonical, the max (n_mentions,
+    ent_type) as type, and the mention sum. entity_id is the canonical
+    row's surface_id, which is xxhash64(canonical)."""
+    cols = ["surface_id", "surface", "n_mentions", "ent_type", "shingles"]
+    per_surface = (
+        surfaces.select(
+            "*", shingle_set(F.col("surface"), shingle_n).alias("shingles")
+        )
+        .select(*cols, _base_hashes(F.col("shingles"), seed).alias("_hs"))
+        .select(*cols, minhash_sig_expr("_hs", n_perms, seed).alias("sig"))
+        .select(*cols, band_keys(n_bands, rows_per_band).alias("keys"))
+    )
+    fields = {f.name: f.dataType for f in surfaces.schema.fields}
+    schema = T.StructType(
+        [
+            T.StructField("surface", fields["surface"]),
+            T.StructField("entity_id", fields["surface_id"]),
+            T.StructField("canonical", fields["surface"]),
+            T.StructField("ent_type", fields["ent_type"]),
+            T.StructField("n_mentions", fields["n_mentions"]),
+            T.StructField("entity_mentions", fields["n_mentions"]),
+        ]
+    )
+
+    def solve(t: pa.Table) -> dict:
+        ids = t["surface_id"].to_pylist()
+        surface = t["surface"].to_pylist()
+        n_mentions = t["n_mentions"].to_pylist()
+        ent_type = t["ent_type"].to_pylist()
+        sets = dict(zip(ids, map(frozenset, t["shingles"].to_pylist())))
+        keys = np.asarray(t["keys"].combine_chunks().flatten())
+        keys = keys.reshape(len(ids), -1)
+
+        def pairs():
+            for band in keys.T:
+                order = np.argsort(band, kind="stable")
+                run = band[order]
+                cut = np.flatnonzero(run[1:] != run[:-1]) + 1
+                starts, ends = np.r_[0, cut], np.r_[cut, len(run)]
+                ok = ends - starts >= 2
+                if max_bucket_size is not None:
+                    ok &= ends - starts <= max_bucket_size
+                for a, b in zip(starts[ok].tolist(), ends[ok].tolist()):
+                    members = [ids[i] for i in order[a:b].tolist()]
+                    yield from combinations(members, 2)
+
+        def similar(u, v) -> bool:
+            a, b = sets[u], sets[v]
+            inter = len(a & b)
+            return inter / (len(a) + len(b) - inter) >= jaccard_threshold
+
+        roots = _union_find(ids, pairs(), similar)
+        members: dict = {}
+        for i, x in enumerate(ids):
+            members.setdefault(roots[x], []).append(i)
+        canon, kind, total = {}, {}, {}
+        for r, rows in members.items():
+            canon[r] = max(
+                rows, key=lambda i: (n_mentions[i], _nulls_lowest(surface[i]))
+            )
+            kind[r] = max(
+                rows, key=lambda i: (n_mentions[i], _nulls_lowest(ent_type[i]))
+            )
+            total[r] = sum(n_mentions[i] for i in rows)
+        comp = [roots[x] for x in ids]
+        return {
+            "surface": surface,
+            "entity_id": [ids[canon[r]] for r in comp],
+            "canonical": [surface[canon[r]] for r in comp],
+            "ent_type": [ent_type[kind[r]] for r in comp],
+            "n_mentions": n_mentions,
+            "entity_mentions": [total[r] for r in comp],
+        }
+
+    return _one_task(per_surface, solve, schema)
+
+
 def canonicalize(
     mentions: DataFrame,
     surface_col: str = "text",
@@ -527,15 +671,30 @@ def canonicalize(
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """mentions → canonical-entity map:
-    (surface, entity_id, canonical, ent_type, n_mentions).
+    (surface, entity_id, canonical, ent_type, n_mentions, entity_mentions).
 
     entity_id = xxhash64 of the canonical surface — stable across runs and
-    cluster sizes."""
+    cluster sizes.
+
+    Two sides, one answer. The distinct-surface table is materialized and
+    counted; when its band rows (surfaces × n_bands) are at most
+    `SMALL_SOLVE`, the whole chain after the per-surface projection runs
+    in one task (`_canonical_local`). Otherwise the distributed chain
+    runs: candidate_pairs → verified_pairs → connected_components →
+    struct-max canonical join."""
     rows_per_band = max(n_perms // n_bands, 1)
-    # surfaces feeds four consumers (sigs, two shingle joins in verify,
-    # the stats join) — materialize once instead of recomputing the
-    # mention aggregation per branch
-    surfaces = surface_table(mentions, surface_col).localCheckpoint()
+    # surfaces feeds every later stage on both sides — materialize once
+    # (the lazy checkpoint's first action is the count the gate needs)
+    # instead of recomputing the mention aggregation per branch
+    surfaces = surface_table(mentions, surface_col).localCheckpoint(
+        eager=False
+    )
+    n_surfaces = surfaces.count()
+    if SMALL_SOLVE and n_surfaces * n_bands <= SMALL_SOLVE:
+        return _canonical_local(
+            surfaces, n_perms, n_bands, rows_per_band, shingle_n,
+            jaccard_threshold, seed, max_bucket_size,
+        )
     sigs = minhash_signatures(surfaces, n_perms, shingle_n, seed)
     pairs = candidate_pairs(sigs, n_bands, rows_per_band, max_bucket_size)
     verified = verified_pairs(pairs, surfaces, jaccard_threshold, shingle_n)

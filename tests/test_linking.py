@@ -235,3 +235,150 @@ def test_rewrite_plan_broadcasts_map(spark, mentions_df):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan, plan
+
+
+def _mentions(spark, rows):
+    """(text, label, n) triples → n mention rows each, mentions_df's shape."""
+    return spark.createDataFrame(
+        [
+            (f"c{j}", i, 0, len(text or ""), text, label, 0.9)
+            for i, (text, label, n) in enumerate(rows)
+            for j in range(n)
+        ],
+        "conv_id string, turn_idx long, start long, end long, text string,"
+        " label string, score double",
+    )
+
+
+def _variant_rows():
+    """Company-name families with spelling and suffix variants, so a low
+    threshold merges many surfaces into multi-member components."""
+    bases = ["Acme", "Globex", "Initech", "Umbrella", "Hooli", "Vandelay",
+             "Stark", "Wayne", "Wonka", "Tyrell"]
+    suffixes = ["Corp", "Corporation", "Inc", "Industries", "Ltd", "Group"]
+    rows = []
+    for i, b in enumerate(bases):
+        for j, s in enumerate(suffixes):
+            rows.append((f"{b} {s}", "organization", 1 + (i + j) % 4))
+            rows.append((f"{b.lower()}-{s.lower()}", "organization", 1))
+            rows.append((f"{b}{s}", "tool", 1 + (i * j) % 3))
+    return rows
+
+
+def _canonical_rows(mentions, **kw):
+    from collections import Counter
+
+    return Counter(map(tuple, canonicalize(mentions, **kw).collect()))
+
+
+def _both_sides(monkeypatch, mentions, **kw):
+    """canonicalize's rows with the gate forced to each side. The local
+    side must take the single-task path and the distributed side must
+    not; both must return the same row set."""
+    from gliner_spark.operators import linking
+
+    real = linking._canonical_local
+    calls = []
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(linking, "_canonical_local", spy)
+    monkeypatch.setattr(linking, "SMALL_SOLVE", 10**9)
+    local = _canonical_rows(mentions, **kw)
+    assert len(calls) == 1
+    monkeypatch.setattr(linking, "SMALL_SOLVE", 0)
+    distributed = _canonical_rows(mentions, **kw)
+    assert len(calls) == 1
+    assert local == distributed
+    return local
+
+
+def test_canonicalize_sides_agree_on_fixture(spark, mentions_df, monkeypatch):
+    for threshold in (0.6, 0.5, 0.3):
+        got = _both_sides(monkeypatch, mentions_df, jaccard_threshold=threshold)
+        assert len(got) == len(MENTIONS)
+
+
+def test_canonicalize_sides_agree_with_many_merges(spark, monkeypatch):
+    rows = _variant_rows()
+    got = _both_sides(
+        monkeypatch, _mentions(spark, rows), jaccard_threshold=0.3
+    )
+    assert len(got) == len(rows)
+    n_entities = len({r[1] for r in got})
+    assert n_entities <= len(rows) // 2, n_entities
+
+
+def test_canonicalize_sides_agree_with_bucket_cap(spark, monkeypatch):
+    """max_bucket_size=2 drops most buckets of the variant families; the
+    cap must bite (fewer merges than uncapped) identically on both
+    sides."""
+    mentions = _mentions(spark, _variant_rows())
+    capped = _both_sides(
+        monkeypatch, mentions, jaccard_threshold=0.3, max_bucket_size=2
+    )
+    uncapped = _canonical_rows(mentions, jaccard_threshold=0.3)
+    assert len({r[1] for r in capped}) > len({r[1] for r in uncapped})
+
+
+def test_canonicalize_sides_agree_on_empty_mentions(
+    spark, mentions_df, monkeypatch
+):
+    assert _both_sides(monkeypatch, mentions_df.limit(0)) == {}
+
+
+def test_canonicalize_sides_agree_with_null_surface(spark, monkeypatch):
+    got = _both_sides(
+        monkeypatch,
+        _mentions(spark, [(None, "person", 3), ("Acme Corp", "organization", 2),
+                          ("acme corp", "organization", 1)]),
+    )
+    null = [r for r in got if r[0] is None]
+    assert len(null) == 1 and null[0][2] is None
+
+
+def test_canonicalize_sides_agree_on_null_type_tie(spark, monkeypatch):
+    """One component whose two surfaces tie on n_mentions, one with a
+    null ent_type: Spark's struct order puts null lowest, so the typed
+    surface's label wins (a plain Python tuple compare would raise)."""
+    got = _both_sides(
+        monkeypatch,
+        _mentions(spark, [("Acme Corp", None, 3),
+                          ("acme-corp", "organization", 3)]),
+    )
+    assert {(r[0], r[2], r[3]) for r in got} == {
+        ("Acme Corp", "acme-corp", "organization"),
+        ("acme-corp", "acme-corp", "organization"),
+    }
+
+
+def test_canonicalize_sides_agree_on_non_ascii_tie(spark, monkeypatch):
+    """Canonical ties between non-ASCII surfaces that normalize alike
+    break by Spark's binary (UTF-8 byte) string order: ë (C3 AB) above
+    Ë (C3 8B), and "Zoë Ltd" above "Zoë  Ltd"."""
+    rows = [("Zoë  Ltd", "organization", 2), ("ZoË Ltd", "organization", 2),
+            ("Zoë Ltd", "organization", 2), ("ZOË-LTD", "organization", 2)]
+    got = _both_sides(monkeypatch, _mentions(spark, rows))
+    assert {r[2] for r in got} == {"Zoë Ltd"}
+
+
+def test_canonicalize_job_count(spark, mentions_df):
+    """canonicalize plus a noop write on a small input runs 5 Spark jobs
+    (measured at local[4], AQE on): the surface-table checkpoint with the
+    count the gate reads, then the single-task canonical pass. Before the
+    single-task side existed this call ran 25 jobs here, every stage of
+    the distributed chain (band checkpoint, bucket filter and pair join,
+    verify joins, edge checkpoint and count, union-find finisher,
+    canonical joins)."""
+    from test_pipeline_resume import _n_jobs
+
+    n = _n_jobs(
+        spark,
+        lambda: canonicalize(mentions_df)
+        .write.format("noop")
+        .mode("overwrite")
+        .save(),
+    )
+    assert n == 5
