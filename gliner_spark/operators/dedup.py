@@ -1057,6 +1057,11 @@ def common_lines_report(
     )
 
 
+# Most drop-line hashes drop_common_lines probes as one broadcast array;
+# above it (or at a bound of 0) the rewrite joins on the line hash.
+BROADCAST_DROP_MAX = 8192
+
+
 def _drop_lines_broadcast(
     docs: DataFrame, drop_hashes: DataFrame, text_col: str
 ) -> DataFrame:
@@ -1153,8 +1158,6 @@ def drop_common_lines(
     min_df: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    strategy: str = "auto",
-    auto_broadcast_max: int = 8192,
 ) -> DataFrame:
     """Cross-document line-level dedup (the RefinedWeb/FineWeb
     boilerplate filter; Penedo et al. 2023): a line whose trim-normalized
@@ -1168,51 +1171,41 @@ def drop_common_lines(
     (original, untrimmed, '\\n'-joined, order preserved) plus
     (n_lines, n_dropped) — n_lines counts non-empty-trim lines.
 
-    Plan shape (strategy='broadcast', the 100 TB default):
+    Plan shape:
       pass 1  per-doc array_distinct of trimmed lines MAP-SIDE, explode,
               then ONE map-side-combining count on xxhash64(line) —
               count(*) == count(distinct doc) because the doc already
               deduped its own lines, so no two-phase distinct aggregate
-              ships full (doc, line) multisets;
-      pass 2  the qualifying hashes fold into ONE sorted-array row
-              (no driver collect) that rides a broadcast crossJoin; the
-              rewrite is a pure map over the corpus — zero shuffle on
-              the big side. array_contains is a linear probe, so this
-              wants a drop set that fits a broadcast row (boilerplate
-              sets are tiny relative to any corpus); for a pathological
-              drop set use strategy='join'.
-    strategy='join': explode lines with position, left-join the drop
-    hashes on the int64 key, regroup ordered per doc — two shuffles of
-    the exploded corpus, but no per-line linear probe. Both strategies
-    are value-identical (parity-pinned in tests).
-
-    strategy='auto' (default) materializes the drop set (localCheckpoint
-    — it is the small output of an aggregate, paid once) and picks:
-    broadcast when it holds ≤ `auto_broadcast_max` hashes, join
-    otherwise. The pathological case is real, not hypothetical: a
-    corpus with 20k planted exact-duplicate docs put every copied line
-    at df=2 — an 81k-entry drop set whose linear probe was ~500
-    billion comparisons; auto caught it and the join path ran in
+              ships full (doc, line) multisets. The drop set is
+              materialized (localCheckpoint — the small output of an
+              aggregate, paid once) and counted;
+      pass 2  at most `BROADCAST_DROP_MAX` hashes (boilerplate sets are
+              tiny relative to any corpus): they fold into ONE
+              sorted-array row (no driver collect) that rides a
+              broadcast crossJoin, and the rewrite is a pure map over
+              the corpus — zero shuffle on the big side;
+              above it: explode lines with position, left-join the drop
+              hashes on the int64 key, regroup ordered per doc — two
+              shuffles of the exploded corpus, but no linear probe.
+              Both sides give the same rows (pinned in tests).
+    The pathological case is real, not hypothetical: a corpus with 20k
+    planted exact-duplicate docs put every copied line at df=2 — an
+    81k-entry drop set whose array_contains linear probe was ~500
+    billion comparisons; the count caught it and the join side ran in
     seconds.
 
     Hashing is only a shuffle/probe-key compaction, same stance as
     repeated_ngram_spans: an xxhash64 collision could merge two distinct
     lines, vanishingly unlikely and accepted at scale.
     """
-    drop_hashes = line_doc_frequency(docs, text_col).where(
-        F.col("_df") >= min_df
+    drop_hashes = (
+        line_doc_frequency(docs, text_col)
+        .where(F.col("_df") >= min_df)
+        .localCheckpoint()
     )
-    if strategy == "auto":
-        drop_hashes = drop_hashes.localCheckpoint()
-        strategy = (
-            "broadcast"
-            if drop_hashes.count() <= auto_broadcast_max
-            else "join"
-        )
-    if strategy == "broadcast":
+    n_drop = drop_hashes.count()
+    if 0 < BROADCAST_DROP_MAX and n_drop <= BROADCAST_DROP_MAX:
         return _drop_lines_broadcast(docs, drop_hashes, text_col)
-    if strategy != "join":
-        raise ValueError(f"unknown strategy: {strategy!r}")
     other = [c for c in docs.columns if c != text_col]
     exploded = docs.select(
         id_col, F.posexplode(F.split(F.col(text_col), "\n")).alias(
@@ -1243,8 +1236,12 @@ def drop_common_lines(
             F.when((F.col("_norm") != "") & ~F.col("_keep"), True)
         ).alias("n_dropped"),
     )
-    return docs.drop(text_col).join(stats, id_col).select(
-        *other, F.col("_text").alias(text_col), "n_lines", "n_dropped"
+    # left join + int counts: NULL-text docs and types as on broadcast
+    return docs.drop(text_col).join(stats, id_col, "left").select(
+        *other,
+        F.col("_text").alias(text_col),
+        F.col("n_lines").cast("int"),
+        F.col("n_dropped").cast("int"),
     )
 
 

@@ -17,10 +17,13 @@ from __future__ import annotations
 from functools import reduce
 from typing import Callable
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .linking import SMALL_SOLVE
+from . import linking
 
 
 def _directed_edges(
@@ -347,7 +350,8 @@ def bfs_distances(
         ).distinct()
     else:
         lm = edges.sparkSession.createDataFrame(
-            [(int(x),) for x in landmarks], "landmark long"
+            pd.DataFrame({"landmark": landmarks}, dtype="int64"),
+            "landmark long",
         )
     dist = lm.select(
         "landmark",
@@ -477,7 +481,7 @@ def personalized_pagerank(
     ).localCheckpoint()
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     seed_df = spark.createDataFrame(
-        [(s,) for s in seed_ids], "id long"
+        pd.DataFrame({"id": seed_ids}, dtype="int64"), "id long"
     )
     verts = (
         e.select(F.col("src").alias("id"))
@@ -775,10 +779,10 @@ def node2vec_walks(
     return out
 
 
-def _local_core_numbers(pairs: list[tuple[int, int]]) -> dict[int, int]:
+def _local_core_numbers(pairs) -> dict[int, int]:
     """Sequential Batagelj-Zaversnik (2003) min-degree peel via a lazy
-    heap — the small-graph finisher (same rationale as linking's
-    `_local_membership`: on a graph that fits one task, every
+    heap over (a, b) pairs — the one-task finisher (same rationale as
+    linking's `_local_membership`: on a graph that fits one task, every
     distributed peel round is pure scheduler latency)."""
     import heapq
     from collections import defaultdict
@@ -812,7 +816,6 @@ def k_core(
     k: int,
     src_col: str = "src",
     dst_col: str = "dst",
-    small_solve: int = SMALL_SOLVE,
 ) -> DataFrame:
     """The k-core of the UNDIRECTED view of the edge list: the maximal
     subgraph in which every vertex has degree >= k, as its canonical
@@ -830,22 +833,23 @@ def k_core(
     per-round work is proportional to the LIVE edge set, which only
     shrinks; one O(1) isEmpty probe per round (an empty graph yields an
     empty bad set, so the loop needs no second probe). When the edge
-    multiset fits one task (`small_solve`) the whole peel collapses
-    into one sequential pass on the driver — peel rounds on a small
-    graph are pure scheduler latency (same rationale, and parity
+    multiset fits one task (`linking.fits_one_task`) the whole peel
+    collapses into one sequential pass in a single task — peel rounds on
+    a small graph are pure scheduler latency (same rationale, and parity
     pinning, as linking's `_local_membership` CC finisher).
     """
     if k < 1:
         raise ValueError("k >= 1")
-    spark = edges.sparkSession
     live = _undirected_edges(edges, src_col, dst_col).localCheckpoint()
-    if live.count() <= small_solve:
-        pairs = [(r.a, r.b) for r in live.collect()]
-        core = _local_core_numbers(pairs)
-        keep = [
-            (a, b) for a, b in pairs if core[a] >= k and core[b] >= k
-        ]
-        return spark.createDataFrame(keep, "a long, b long")
+    if linking.fits_one_task(live.count()):
+
+        def solve(t):
+            pairs = list(zip(*t.to_pydict().values()))
+            core = _local_core_numbers(pairs)
+            keep = [min(core[u], core[v]) >= k for u, v in pairs]
+            return t.filter(pa.array(keep, pa.bool_())).to_pydict()
+
+        return linking._one_task(live, solve, live.schema)
     while True:
         deg = (
             live.select(F.col("a").alias("v"))
@@ -867,7 +871,6 @@ def core_numbers(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    small_solve: int = SMALL_SOLVE,
 ) -> DataFrame:
     """Core number of every vertex of the undirected view → (v, core):
     the largest k such that v belongs to the k-core; isolated-by-dedup
@@ -891,23 +894,21 @@ def core_numbers(
     per-vertex neighbor-value array materializes deg(v) ints in one
     aggregation buffer — fine for KG-scale hubs (a 10M-degree hub is a
     ~40 MB row); the bucketed two-phase H-index is the refinement if a
-    corpus ever exceeds that. Below `small_solve` edges the whole
-    decomposition runs as ONE sequential Batagelj-Zaversnik pass on
-    the driver (distributed == local == sequential-oracle parity
-    pinned in test_kcore.py).
+    corpus ever exceeds that. When the edge set fits one task
+    (`linking.fits_one_task`) the whole decomposition runs as ONE
+    sequential Batagelj-Zaversnik pass in a single task (both sides
+    pinned against the sequential oracle in test_kcore.py).
     """
     live = _undirected_edges(edges, src_col, dst_col).localCheckpoint()
-    spark = edges.sparkSession
-    if live.count() <= small_solve:
-        core = _local_core_numbers(
-            [(r.a, r.b) for r in live.collect()]
-        )
-        if not core:
-            return spark.createDataFrame([], "v long, core int")
-        return spark.createDataFrame(
-            [(int(v), int(c)) for v, c in sorted(core.items())],
-            "v long, core int",
-        )
+    if linking.fits_one_task(live.count()):
+
+        def solve(t):
+            core = _local_core_numbers(zip(*t.to_pydict().values()))
+            return {"v": list(core), "core": list(core.values())}
+
+        v = T.StructField("v", live.schema["a"].dataType)
+        schema = T.StructType([v, T.StructField("core", T.IntegerType())])
+        return linking._one_task(live, solve, schema)
     adj = (
         live.select(F.col("a").alias("v"), F.col("b").alias("n"))
         .unionAll(
@@ -1134,12 +1135,12 @@ def k_truss(
     raise RuntimeError(f"k_truss did not converge in {max_rounds} rounds")
 
 
-def _local_scc(pairs: list[tuple[int, int]]) -> dict[int, int]:
-    """Iterative Tarjan over an edge list → {vertex: min id of its SCC}.
-    The driver-local finisher for strongly_connected_components (same
+def _local_scc(pairs) -> dict[int, int]:
+    """Iterative Tarjan over (src, dst) pairs → {vertex: min id of its
+    SCC}. The one-task finisher of strongly_connected_components (same
     rationale as _local_core_numbers / linking's union-find finisher:
-    below small_solve the remaining graph fits one task and distributed
-    phases are pure scheduler latency)."""
+    once the remaining graph fits one task, distributed phases are pure
+    scheduler latency)."""
     adj: dict[int, list[int]] = {}
     verts: set[int] = set()
     for s, d in pairs:
@@ -1200,7 +1201,6 @@ def strongly_connected_components(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    small_solve: int = SMALL_SOLVE,
     max_phases: int = 50,
 ) -> DataFrame:
     """Strongly connected components of the DIRECTED graph →
@@ -1227,32 +1227,29 @@ def strongly_connected_components(
          r forward — color r — and is reached by r backward). Settle
          those with component = min member id, drop their edges, next
          phase.
-    Below `small_solve` remaining edges the whole residue is solved by
-    one driver-local iterative Tarjan pass (parity-pinned vs the
-    distributed path in test_scc.py). All joins are int64 equi-joins;
+    Once the remaining edges fit one task (`linking.fits_one_task`,
+    checked before every phase) the whole residue is solved by one
+    iterative Tarjan pass in a single task (both sides pinned against a
+    closure oracle in test_scc.py). All joins are int64 equi-joins;
     per-phase work is proportional to the REMAINING graph, which
     shrinks by every settled SCC — at 100 TB the remaining-edge table
     is bucketed on src so the propagation probes join Exchange-free.
     """
-    spark = edges.sparkSession
     remaining = _directed_edges(edges, src_col, dst_col).localCheckpoint()
+    as_settled = {"src": "id", "dst": "component"}
+    schema = remaining.withColumnsRenamed(as_settled).schema
+
+    def solve(t):
+        comp = _local_scc(zip(*t.to_pydict().values()))
+        return {"id": list(comp), "component": list(comp.values())}
+
     settled_parts: list[DataFrame] = []
     for _ in range(max_phases):
         n_edges = remaining.count()
-        if n_edges == 0:
+        if linking.fits_one_task(n_edges):
+            settled_parts.append(linking._one_task(remaining, solve, schema))
             break
-        if n_edges <= small_solve:
-            comp = _local_scc(
-                [(r.src, r.dst) for r in remaining.collect()]
-            )
-            if comp:
-                settled_parts.append(
-                    spark.createDataFrame(
-                        [(int(v), int(c)) for v, c in sorted(comp.items())],
-                        "id long, component long",
-                    )
-                )
-            remaining = None
+        if n_edges == 0:
             break
         verts = _vertex_ids(remaining)
         has_out = remaining.select(F.col("src").alias("id")).distinct()
@@ -1453,12 +1450,9 @@ def strongly_connected_components(
         raise RuntimeError(
             f"scc did not settle within {max_phases} phases"
         )
-    if not settled_parts:
-        return spark.createDataFrame([], "id long, component long")
-    out = settled_parts[0]
-    for p in settled_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    # no part only when the distributed side got an empty edge set
+    empty = remaining.withColumnsRenamed(as_settled)
+    return reduce(DataFrame.unionByName, settled_parts or [empty])
 
 
 def label_propagation(
@@ -1751,7 +1745,9 @@ def neighborhood_function(
             rows.extend((tt, n_pairs) for tt in range(t + 1, max_t + 1))
             break
         prev_chk = a["chk"]
-    return edges.sparkSession.createDataFrame(rows, "t int, n_pairs double")
+    nf = pd.DataFrame(rows, columns=["t", "n_pairs"])
+    nf = nf.astype({"t": "int32", "n_pairs": "float64"})
+    return edges.sparkSession.createDataFrame(nf, "t int, n_pairs double")
 
 
 def effective_diameter(nf: DataFrame, q: float = 0.9) -> float:
@@ -1968,7 +1964,7 @@ def shortest_path_counts(
         ).distinct()
     else:
         lm = edges.sparkSession.createDataFrame(
-            [(int(x),) for x in sources], "source long"
+            pd.DataFrame({"source": sources}, dtype="int64"), "source long"
         )
     done = lm.select(
         "source",

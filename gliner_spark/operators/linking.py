@@ -28,7 +28,7 @@ id-keyed joins plus array_intersect/union, components are
 large-star/small-star rounds (driver-controlled loop, localCheckpoint
 per round — Catalyst cannot iterate, SURVEY §4) whose tail collapses
 into the same single-task union-find once the contracting edge set fits
-(`small_solve`), and the canonical pick is a struct-max groupBy.
+(`fits_one_task`), and the canonical pick is a struct-max groupBy.
 
 Scale notes:
  * Everything heavy runs on the DISTINCT-surface table, not mentions —
@@ -47,9 +47,11 @@ Scale notes:
    distinct), so bucket blowup is bounded by genuinely-similar families.
  * Large-star/small-star rounds are polylogarithmic in n (O(log² n),
    Kiveris et al. 2014) whatever the component diameter; once the
-   surviving edge multiset is ≤ `small_solve`, one union-find pass in a
+   surviving edge multiset fits one task, one union-find pass in a
    single task replaces the remaining rounds, and `max_iter` bounds
    pathological inputs.
+ * One gate, `fits_one_task`, picks every size-gated side here and in
+   graph.py from a count the solver already measured; no caller does.
 """
 
 from __future__ import annotations
@@ -68,9 +70,15 @@ _MERSENNE = (1 << 31) - 1  # 2^31 - 1, prime
 # The most rows a size-gated solver hands to ONE task: the edge count
 # below which connected_components, k_core, core_numbers and
 # strongly_connected_components finish locally, and the band-row count
-# (surfaces × bands) below which canonicalize runs in one task. A bound
-# of 0 forces the distributed side on any non-empty input.
+# (surfaces × bands) below which canonicalize runs in one task.
 SMALL_SOLVE = 500_000
+
+
+def fits_one_task(n: int) -> bool:
+    """True iff a measured input of `n` rows takes the one-task side.
+    Reads `SMALL_SOLVE` when called; a bound of 0 forces the distributed
+    side on any input, including an empty one."""
+    return 0 < SMALL_SOLVE and n <= SMALL_SOLVE
 
 
 def _perm_coeffs(n_perms: int, seed: int) -> list[tuple[int, int]]:
@@ -375,8 +383,8 @@ def _one_task(df: DataFrame, solve, schema: T.StructType) -> DataFrame:
     """All of df's rows → ONE task → solve(pa.Table) → {column: list} in
     `schema`'s field order. One narrow exchange (coalesce, no shuffle
     write). Bounded by construction: every caller gates on a row count
-    (`SMALL_SOLVE`), the same bounded-small-side pattern as the k-means
-    centroid collect."""
+    (`fits_one_task`), the same bounded-small-side pattern as the k-means
+    centroid collect. An empty input yields no rows."""
     arrow = to_arrow_schema(schema)
 
     def run(batches):
@@ -411,8 +419,6 @@ def connected_components(
     max_iter: int = 25,
     id_col: str = "id",
     edge_cols: tuple[str, str] = ("id_a", "id_b"),
-    n_partitions: int | None = None,
-    small_solve: int = SMALL_SOLVE,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -433,14 +439,15 @@ def connected_components(
     iterate, SURVEY §4). Convergence = edge multiset stable, checked by a
     cheap count+hash aggregate rather than a full self-join.
 
-    small_solve: once the (contracting) edge multiset fits one task, the
-    remaining rounds collapse into a single union-find pass
+    Once the (contracting) edge multiset fits one task
+    (`fits_one_task`, checked before every round), the remaining rounds
+    collapse into a single union-find pass
     (_local_membership) — star rounds here are pure scheduler overhead
     (~0.85 s/round of driver+stage latency on a 16 k-edge graph,
     measured), and convergence DETECTION alone costs two extra rounds.
     At 10^12-turn scale the star rounds still do the O(log n) heavy
     contraction; the finisher only replaces the tail where the graph is
-    already tiny. 0 disables (pure star rounds).
+    already tiny.
     """
     ca, cb = edge_cols
     # work on (u, v) pairs ordered u < v; the "parent" relation converges
@@ -473,10 +480,9 @@ def connected_components(
             )
         )
 
-    if small_solve and n_edges <= small_solve:
+    if fits_one_task(n_edges):
         return _attach(_local_membership(e, id_col))
-    if n_partitions is None:
-        n_partitions = max(4, min(256, n_edges // 50_000 + 1))
+    n_partitions = max(4, min(256, n_edges // 50_000 + 1))
     e = e.repartition(n_partitions, "u").localCheckpoint(eager=False)
 
     def _sig(df: DataFrame) -> tuple:
@@ -546,7 +552,7 @@ def connected_components(
         if new_sig == sig:
             break
         sig = new_sig
-        if small_solve and new_sig[0] <= small_solve:
+        if fits_one_task(new_sig[0]):
             # contraction brought the graph under one task's budget —
             # the remaining O(log n) tail rounds are pure scheduler
             # latency; finish with a single union-find pass instead
@@ -598,7 +604,8 @@ def _canonical_local(
     schema = T.StructType(
         [
             T.StructField("surface", fields["surface"]),
-            T.StructField("entity_id", fields["surface_id"]),
+            # xxhash64 is never null: non-nullable, as on the other side
+            T.StructField("entity_id", fields["surface_id"], False),
             T.StructField("canonical", fields["surface"]),
             T.StructField("ent_type", fields["ent_type"]),
             T.StructField("n_mentions", fields["n_mentions"]),
@@ -677,8 +684,8 @@ def canonicalize(
     cluster sizes.
 
     Two sides, one answer. The distinct-surface table is materialized and
-    counted; when its band rows (surfaces × n_bands) are at most
-    `SMALL_SOLVE`, the whole chain after the per-surface projection runs
+    counted; when its band rows (surfaces × n_bands) fit one task, the
+    whole chain after the per-surface projection runs
     in one task (`_canonical_local`). Otherwise the distributed chain
     runs: candidate_pairs → verified_pairs → connected_components →
     struct-max canonical join."""
@@ -690,7 +697,7 @@ def canonicalize(
         eager=False
     )
     n_surfaces = surfaces.count()
-    if SMALL_SOLVE and n_surfaces * n_bands <= SMALL_SOLVE:
+    if fits_one_task(n_surfaces * n_bands):
         return _canonical_local(
             surfaces, n_perms, n_bands, rows_per_band, shingle_n,
             jaccard_threshold, seed, max_bucket_size,

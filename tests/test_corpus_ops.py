@@ -1220,7 +1220,15 @@ def _line_dedup_oracle(rows, min_df):
     return out
 
 
-def test_drop_common_lines_vs_oracle_both_strategies(spark):
+def _line_dedup_sides(side, call):
+    """drop_common_lines on both sides of its broadcast gate (the
+    `side` fixture): the broadcast array probe and the line-hash join."""
+    from gliner_spark.operators import dedup
+
+    return side(call, gate=(dedup, "BROADCAST_DROP_MAX", "_drop_lines_broadcast"))
+
+
+def test_drop_common_lines_vs_oracle_both_strategies(spark, side):
     from gliner_spark.operators.dedup import drop_common_lines
 
     boiler = "subscribe to our newsletter"
@@ -1236,27 +1244,31 @@ def test_drop_common_lines_vs_oracle_both_strategies(spark):
     ]
     want = _line_dedup_oracle(rows, min_df=2)
     docs = spark.createDataFrame(rows, "doc_id: bigint, text: string")
-    for strategy in ("broadcast", "join"):
-        got = {
-            r.doc_id: (r.text, r.n_lines, r.n_dropped)
-            for r in drop_common_lines(
-                docs, min_df=2, strategy=strategy
-            ).collect()
-        }
-        assert got == want, strategy
+    got = {
+        r.doc_id: (r.text, r.n_lines, r.n_dropped)
+        for r in _line_dedup_sides(
+            side, lambda: drop_common_lines(docs, min_df=2)
+        )
+    }
+    assert got == want
 
 
-def test_drop_common_lines_min_df_and_clean_corpus(spark):
+def test_drop_common_lines_min_df_and_clean_corpus(spark, side):
     from gliner_spark.operators.dedup import drop_common_lines
 
     rows = [(i, f"unique head {i}\nshared tail") for i in range(3)]
     docs = spark.createDataFrame(rows, "doc_id: bigint, text: string")
     # min_df above the actual df: nothing dropped, text unchanged
-    out = drop_common_lines(docs, min_df=4).collect()
+    out = _line_dedup_sides(side, lambda: drop_common_lines(docs, min_df=4))
     assert all(r.n_dropped == 0 for r in out)
     assert {r.text for r in out} == {t for _, t in rows}
     # min_df met: the shared line goes from every doc
-    out2 = {r.doc_id: r.text for r in drop_common_lines(docs, min_df=3).collect()}
+    out2 = {
+        r.doc_id: r.text
+        for r in _line_dedup_sides(
+            side, lambda: drop_common_lines(docs, min_df=3)
+        )
+    }
     assert out2 == {i: f"unique head {i}" for i in range(3)}
 
 
@@ -1350,15 +1362,18 @@ def test_line_index_probe_corpus_side_exchange_free(
         spark.sql("drop table if exists ldp_linedf")
 
 
-def test_drop_common_lines_preserves_extra_columns(spark):
+def test_drop_common_lines_preserves_extra_columns(spark, side):
     from gliner_spark.operators.dedup import drop_common_lines
 
     docs = spark.createDataFrame(
-        [(1, "x", "b\na"), (2, "y", "b\nc")],
+        [(1, "x", "b\na"), (2, "y", "b\nc"), (3, "z", None)],
         "doc_id: bigint, tag: string, text: string",
     )
-    out = {r.doc_id: (r.tag, r.text) for r in drop_common_lines(docs).collect()}
-    assert out == {1: ("x", "a"), 2: ("y", "c")}
+    out = {
+        r.doc_id: (r.tag, r.text)
+        for r in _line_dedup_sides(side, lambda: drop_common_lines(docs))
+    }
+    assert out == {1: ("x", "a"), 2: ("y", "c"), 3: ("z", None)}
 
 
 # ------------------------------------------------------ product quantization

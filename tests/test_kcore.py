@@ -1,7 +1,9 @@
 """k-core decomposition: Spark peel vs the sequential
 Batagelj-Zaversnik oracle on a deterministic random graph with a
 planted clique; k_core(k) must equal the subgraph induced by
-core >= k."""
+core >= k. Every call runs on both sides of the one-task gate (the
+`side` fixture): the one-task Batagelj-Zaversnik finisher and the
+distributed peel / h-index refinement."""
 
 import random
 
@@ -60,45 +62,18 @@ def graph_df(spark):
     return spark.createDataFrame(_test_graph(), "src long, dst long")
 
 
-def test_core_numbers_match_sequential_oracle(spark, graph_df):
-    got = {
-        r.v: r.core for r in core_numbers(graph_df).collect()
-    }
+def test_core_numbers_match_sequential_oracle(spark, graph_df, side):
+    got = {r.v: r.core for r in side(lambda: core_numbers(graph_df))}
     want = _core_numbers_py(_test_graph())
     assert got == want
     assert all(want[v] == 5 for v in (100, 101, 102, 103, 104, 105))
     assert want[202] == 1
 
 
-def test_core_numbers_distributed_equals_local(spark, graph_df):
-    """small_solve=0 forces the distributed peel; it must agree with
-    the driver-local Batagelj-Zaversnik finisher exactly."""
-    local = {
-        r.v: r.core for r in core_numbers(graph_df).collect()
-    }
-    dist = {
-        r.v: r.core
-        for r in core_numbers(graph_df, small_solve=0).collect()
-    }
-    assert dist == local
-
-
-def test_k_core_distributed_equals_local(spark, graph_df):
-    for k in (2, 5):
-        local = {
-            (r.a, r.b) for r in k_core(graph_df, k).collect()
-        }
-        dist = {
-            (r.a, r.b)
-            for r in k_core(graph_df, k, small_solve=0).collect()
-        }
-        assert dist == local, k
-
-
-def test_k_core_is_induced_subgraph_of_core_geq_k(spark, graph_df):
+def test_k_core_is_induced_subgraph_of_core_geq_k(spark, graph_df, side):
     want = _core_numbers_py(_test_graph())
     for k in (1, 2, 3, 5):
-        sub = k_core(graph_df, k).collect()
+        sub = side(lambda: k_core(graph_df, k))
         verts = {r.a for r in sub} | {r.b for r in sub}
         assert verts == {v for v, c in want.items() if c >= k}, k
         # every surviving vertex keeps degree >= k inside the core
@@ -109,13 +84,29 @@ def test_k_core_is_induced_subgraph_of_core_geq_k(spark, graph_df):
         assert all(d >= k for d in deg.values()), k
 
 
-def test_k_core_above_max_core_is_empty(spark, graph_df):
-    assert k_core(graph_df, 6).count() == 0
+def test_k_core_above_max_core_is_empty(spark, graph_df, side):
+    assert side(lambda: k_core(graph_df, 6)) == []
 
 
-def test_core_numbers_empty_graph(spark):
+def test_core_numbers_empty_graph(spark, side):
     e = spark.createDataFrame([], "src long, dst long")
-    assert core_numbers(e).count() == 0
+    assert side(lambda: core_numbers(e)) == []
+
+
+def test_core_sides_agree_on_edge_cases(spark, edge_case, side):
+    """Empty, self-loop-only and int32 edge sets: equal rows and equal
+    schemas on both sides (the one-task side used to hard-code long
+    ids), and the int32 id type is kept."""
+    cores = side(lambda: core_numbers(edge_case))
+    sub = side(lambda: k_core(edge_case, 2))
+    want = _core_numbers_py(edge_case.collect())
+    assert {r.v: r.core for r in cores} == want
+    assert {r.a for r in sub} | {r.b for r in sub} == {
+        v for v, c in want.items() if c >= 2
+    }
+    ids = edge_case.schema["src"].dataType
+    assert core_numbers(edge_case).schema["v"].dataType == ids
+    assert k_core(edge_case, 2).schema["a"].dataType == ids
 
 
 def test_k_core_rejects_nonpositive_k(spark, graph_df):

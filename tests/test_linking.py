@@ -124,7 +124,7 @@ def test_verified_pairs_match_python_jaccard(spark, mentions_df):
         assert j >= 0.3
 
 
-def test_connected_components_chain(spark):
+def test_connected_components_chain(spark, side):
     verts = spark.createDataFrame([Row(id=s) for s in "abcdef"])
     edges = spark.createDataFrame(
         [Row(id_a="a", id_b="b"),
@@ -132,30 +132,28 @@ def test_connected_components_chain(spark):
          Row(id_a="d", id_b="e")]
     )
     comp = {r.id: r.component
-            for r in connected_components(verts, edges).collect()}
+            for r in side(lambda: connected_components(verts, edges))}
     assert comp["a"] == comp["b"] == comp["c"] == "a"
     assert comp["d"] == comp["e"] == "d"
     assert comp["f"] == "f"
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, side):
     """O(log n) star convergence on a 40-node path graph (the diameter
-    case that killed plain label propagation). small_solve=0 forces the
-    distributed star rounds — the default would take the single-task
-    union-find shortcut on a graph this small."""
+    case that killed plain label propagation); `side` runs the
+    distributed star rounds as well as the one-task union-find."""
     n = 40
     verts = spark.createDataFrame([Row(id=i) for i in range(n)])
     edges = spark.createDataFrame(
         [Row(id_a=i, id_b=i + 1) for i in range(n - 1)]
     )
     comp = {r.id: r.component
-            for r in connected_components(verts, edges, small_solve=0)
-            .collect()}
+            for r in side(lambda: connected_components(verts, edges))}
     assert set(comp.values()) == {0}
 
 
-def test_connected_components_local_solver_matches_star(spark):
-    """The small_solve union-find path and the distributed star path must
+def test_connected_components_local_solver_matches_star(spark, side):
+    """The one-task union-find side and the distributed star side must
     produce identical memberships — random multi-component graphs with
     duplicate and self edges."""
     import random
@@ -170,11 +168,7 @@ def test_connected_components_local_solver_matches_star(spark):
         [Row(id_a=a, id_b=b) for a, b in edges_py]
     )
     local = {r.id: r.component
-             for r in connected_components(verts, edges).collect()}
-    star = {r.id: r.component
-            for r in connected_components(verts, edges, small_solve=0)
-            .collect()}
-    assert local == star
+             for r in side(lambda: connected_components(verts, edges))}
     # oracle: python union-find over the same edges
     parent = list(range(n))
 
@@ -190,6 +184,29 @@ def test_connected_components_local_solver_matches_star(spark):
             parent[max(ra, rb)] = min(ra, rb)
     expected = {i: find(i) for i in range(n)}
     assert local == expected
+
+
+def test_connected_components_sides_agree_on_edge_cases(spark, edge_case, side):
+    """Empty, self-loop-only and int32 edge sets plus an isolated vertex:
+    equal rows and equal schemas on both sides."""
+    from pyspark.sql import functions as F
+
+    verts = (
+        edge_case.select(F.col("src").alias("id"))
+        .union(edge_case.select("dst"))
+        .union(spark.range(99, 100).select(F.col("id").cast("int")))
+        .distinct()
+    )
+    got = side(
+        lambda: connected_components(verts, edge_case, edge_cols=("src", "dst"))
+    )
+    comp = {r.id: r.component for r in got}
+    want = {v: v for v in comp}
+    pairs = edge_case.collect()
+    for _ in comp:  # min-label propagation to its fixpoint
+        for a, b in pairs:
+            want[a] = want[b] = min(want[a], want[b])
+    assert comp == want and comp[99] == 99
 
 
 def test_canonicalize_end_to_end(spark, mentions_df):
@@ -271,67 +288,52 @@ def _canonical_rows(mentions, **kw):
     return Counter(map(tuple, canonicalize(mentions, **kw).collect()))
 
 
-def _both_sides(monkeypatch, mentions, **kw):
-    """canonicalize's rows with the gate forced to each side. The local
-    side must take the single-task path and the distributed side must
-    not; both must return the same row set."""
-    from gliner_spark.operators import linking
+def _both_sides(side, mentions, **kw):
+    """canonicalize's rows with the gate forced to each side (the `side`
+    fixture): only the first run takes the single-task path, and both
+    return the same schema and row set."""
+    from collections import Counter
 
-    real = linking._canonical_local
-    calls = []
-
-    def spy(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
-
-    monkeypatch.setattr(linking, "_canonical_local", spy)
-    monkeypatch.setattr(linking, "SMALL_SOLVE", 10**9)
-    local = _canonical_rows(mentions, **kw)
-    assert len(calls) == 1
-    monkeypatch.setattr(linking, "SMALL_SOLVE", 0)
-    distributed = _canonical_rows(mentions, **kw)
-    assert len(calls) == 1
-    assert local == distributed
-    return local
+    return Counter(map(tuple, side(lambda: canonicalize(mentions, **kw))))
 
 
-def test_canonicalize_sides_agree_on_fixture(spark, mentions_df, monkeypatch):
+def test_canonicalize_sides_agree_on_fixture(spark, mentions_df, side):
     for threshold in (0.6, 0.5, 0.3):
-        got = _both_sides(monkeypatch, mentions_df, jaccard_threshold=threshold)
+        got = _both_sides(side, mentions_df, jaccard_threshold=threshold)
         assert len(got) == len(MENTIONS)
 
 
-def test_canonicalize_sides_agree_with_many_merges(spark, monkeypatch):
+def test_canonicalize_sides_agree_with_many_merges(spark, side):
     rows = _variant_rows()
     got = _both_sides(
-        monkeypatch, _mentions(spark, rows), jaccard_threshold=0.3
+        side, _mentions(spark, rows), jaccard_threshold=0.3
     )
     assert len(got) == len(rows)
     n_entities = len({r[1] for r in got})
     assert n_entities <= len(rows) // 2, n_entities
 
 
-def test_canonicalize_sides_agree_with_bucket_cap(spark, monkeypatch):
+def test_canonicalize_sides_agree_with_bucket_cap(spark, side):
     """max_bucket_size=2 drops most buckets of the variant families; the
     cap must bite (fewer merges than uncapped) identically on both
     sides."""
     mentions = _mentions(spark, _variant_rows())
     capped = _both_sides(
-        monkeypatch, mentions, jaccard_threshold=0.3, max_bucket_size=2
+        side, mentions, jaccard_threshold=0.3, max_bucket_size=2
     )
     uncapped = _canonical_rows(mentions, jaccard_threshold=0.3)
     assert len({r[1] for r in capped}) > len({r[1] for r in uncapped})
 
 
 def test_canonicalize_sides_agree_on_empty_mentions(
-    spark, mentions_df, monkeypatch
+    spark, mentions_df, side
 ):
-    assert _both_sides(monkeypatch, mentions_df.limit(0)) == {}
+    assert _both_sides(side, mentions_df.limit(0)) == {}
 
 
-def test_canonicalize_sides_agree_with_null_surface(spark, monkeypatch):
+def test_canonicalize_sides_agree_with_null_surface(spark, side):
     got = _both_sides(
-        monkeypatch,
+        side,
         _mentions(spark, [(None, "person", 3), ("Acme Corp", "organization", 2),
                           ("acme corp", "organization", 1)]),
     )
@@ -339,12 +341,12 @@ def test_canonicalize_sides_agree_with_null_surface(spark, monkeypatch):
     assert len(null) == 1 and null[0][2] is None
 
 
-def test_canonicalize_sides_agree_on_null_type_tie(spark, monkeypatch):
+def test_canonicalize_sides_agree_on_null_type_tie(spark, side):
     """One component whose two surfaces tie on n_mentions, one with a
     null ent_type: Spark's struct order puts null lowest, so the typed
     surface's label wins (a plain Python tuple compare would raise)."""
     got = _both_sides(
-        monkeypatch,
+        side,
         _mentions(spark, [("Acme Corp", None, 3),
                           ("acme-corp", "organization", 3)]),
     )
@@ -354,13 +356,13 @@ def test_canonicalize_sides_agree_on_null_type_tie(spark, monkeypatch):
     }
 
 
-def test_canonicalize_sides_agree_on_non_ascii_tie(spark, monkeypatch):
+def test_canonicalize_sides_agree_on_non_ascii_tie(spark, side):
     """Canonical ties between non-ASCII surfaces that normalize alike
     break by Spark's binary (UTF-8 byte) string order: ë (C3 AB) above
     Ë (C3 8B), and "Zoë Ltd" above "Zoë  Ltd"."""
     rows = [("Zoë  Ltd", "organization", 2), ("ZoË Ltd", "organization", 2),
             ("Zoë Ltd", "organization", 2), ("ZOË-LTD", "organization", 2)]
-    got = _both_sides(monkeypatch, _mentions(spark, rows))
+    got = _both_sides(side, _mentions(spark, rows))
     assert {r[2] for r in got} == {"Zoë Ltd"}
 
 

@@ -1,11 +1,12 @@
 """Strongly connected components vs an independent python
 reachability-closure oracle (comp(v) = min of {u : v->*u and u->*v}),
-on both the driver-local Tarjan finisher path and the forced
-distributed trim + forward-backward path."""
+on both sides of the one-task gate: the one-task Tarjan finisher and
+the distributed trim + forward-backward path."""
 
 import pytest
 from pyspark.sql import Row
 
+from gliner_spark.operators import linking
 from gliner_spark.operators.graph import strongly_connected_components
 
 
@@ -55,45 +56,45 @@ CASES = [
 
 
 @pytest.mark.parametrize("edges", CASES)
-@pytest.mark.parametrize("small_solve", [500_000, 0])
-def test_scc_matches_closure_oracle(spark, edges, small_solve):
+@pytest.mark.parametrize("bound", [500_000, 0])
+def test_scc_matches_closure_oracle(spark, edges, bound, monkeypatch):
+    """Each side against the oracle: the gate's bound at its default
+    (one task) and at 0 (distributed)."""
+    monkeypatch.setattr(linking, "SMALL_SOLVE", bound)
     df = spark.createDataFrame([Row(src=s, dst=d) for s, d in edges])
     got = {
         r.id: r.component
-        for r in strongly_connected_components(
-            df, small_solve=small_solve
-        ).collect()
+        for r in strongly_connected_components(df).collect()
     }
     assert got == py_scc(edges)
 
 
-def test_scc_empty_and_self_loop_only(spark):
+def test_scc_empty_and_self_loop_only(spark, side):
     df = spark.createDataFrame([Row(src=1, dst=1)])
-    assert strongly_connected_components(df).count() == 0
+    assert side(lambda: strongly_connected_components(df)) == []
     assert (
-        strongly_connected_components(df.where("src = 99")).count() == 0
+        side(lambda: strongly_connected_components(df.where("src = 99")))
+        == []
     )
 
 
-def test_scc_local_equals_distributed_on_mixed_graph(spark):
+def test_scc_local_equals_distributed_on_mixed_graph(spark, side):
     edges = sorted(
         {((i * i + 3) % 23, (i * 5 + 1) % 23) for i in range(80)}
     )
     df = spark.createDataFrame([Row(src=s, dst=d) for s, d in edges])
-    local = {
-        r.id: r.component
-        for r in strongly_connected_components(df).collect()
-    }
-    dist = {
-        r.id: r.component
-        for r in strongly_connected_components(
-            df, small_solve=0
-        ).collect()
-    }
-    assert local == dist == py_scc(edges)
+    got = side(lambda: strongly_connected_components(df))
+    assert {r.id: r.component for r in got} == py_scc(edges)
 
 
-def test_scc_anti_aligned_cycle_flat_rounds(spark):
+def test_scc_sides_agree_on_edge_cases(spark, edge_case, side):
+    """Empty, self-loop-only and int32 edge sets: equal rows and equal
+    schemas on both sides."""
+    got = side(lambda: strongly_connected_components(edge_case))
+    assert {r.id: r.component for r in got} == py_scc(edge_case.collect())
+
+
+def test_scc_anti_aligned_cycle_flat_rounds(spark, monkeypatch):
     """A directed cycle whose ids DESCEND along the edges, distributed
     path forced: the worst case for the r5 pointer doubling (no pointer
     ever improves, the min walks ONE hop per round, ~2n min-label
@@ -110,11 +111,10 @@ def test_scc_anti_aligned_cycle_flat_rounds(spark):
     edges += [(1000, 1001), (1001, 1002), (1002, 1000)]  # 3-cycle
     edges += [(5, 2000), (2000, 1000)]  # acyclic bridge out of the ring
     df = spark.createDataFrame(edges, "src long, dst long")
-    from gliner_spark.operators.graph import strongly_connected_components
-
+    monkeypatch.setattr(linking, "SMALL_SOLVE", 0)
     got = {
         (r.id, r.component)
-        for r in strongly_connected_components(df, small_solve=0).collect()
+        for r in strongly_connected_components(df).collect()
     }
     want = {(i, 0) for i in range(n)}
     want |= {(v, 1000) for v in (1000, 1001, 1002)}

@@ -13,7 +13,7 @@ plus three planted boilerplate shapes that line dedup must remove —
     per-line array_contains probe at a realistic boilerplate-set size.
 
 Measured (warm, after one synth write):
-  * drop_common_lines (broadcast strategy) wall + docs/s, and a
+  * drop_common_lines (broadcast side) wall + docs/s, and a
     correctness probe (all three planted shapes gone, bodies kept);
   * shuffle_export at 1024 shards: wall + max/mean shard-size skew;
   * blocklist_stats with a 200-term list (the one-row-broadcast path):

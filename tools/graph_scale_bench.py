@@ -16,13 +16,13 @@ Measured, `local[32]`:
   * link_predict (Adamic-Adar), max_degree=64 (hubs excluded), and the
     hub-cap's work bound: wedge volume with vs without the cap;
   * random_walks, walk_len=5 (one walk per vertex = up to 3M rows);
-  * core_numbers, distributed iterated-h-index path forced
-    (small_solve=0);
+  * core_numbers, distributed iterated-h-index path forced (the
+    one-task bound `linking.SMALL_SOLVE` set to 0 around the call);
   * triangle_counts over the undirected view;
   * label_propagation, 3 synchronous rounds (collect-free);
   * hits, 3 rounds (one fused sums-collect per round);
-  * strongly_connected_components, distributed path forced
-    (small_solve=0) — trim + FW-BW phases on the 2M-edge graph;
+  * strongly_connected_components, distributed path forced the same
+    way — trim + FW-BW phases on the 2M-edge graph;
   * k_truss k=3 (edge-support peel over live wedges; k=4 empties
     this random graph in one cascade — 368 triangles over 2M edges);
   * node2vec_walks, len 5, p=2 q=0.5 (second-order weighted picks);
@@ -53,6 +53,7 @@ import os
 import shutil
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -68,6 +69,19 @@ OUT = os.path.join(
     "_out",
     "graph_scale",
 )
+
+
+@contextmanager
+def distributed_only():
+    """Force every size-gated solver onto its distributed side: the
+    one-task bound `linking.SMALL_SOLVE` is 0 inside the block."""
+    from gliner_spark.operators import linking
+
+    bound, linking.SMALL_SOLVE = linking.SMALL_SOLVE, 0
+    try:
+        yield
+    finally:
+        linking.SMALL_SOLVE = bound
 
 
 def main():
@@ -177,15 +191,14 @@ def main():
     n_walk_rows = walks.count()
     walks_s = time.time() - t0
 
-    # distributed path forced (small_solve=0): the 2M-edge graph is the
-    # scale path the driver-gate graphs never reach
+    # distributed path forced (the one-task bound set to 0): the 2M-edge
+    # graph is the scale path the driver-gate graphs never reach
     t0 = time.time()
-    cores = core_numbers(
-        e, src_col="subj_id", dst_col="obj_id", small_solve=0
-    )
-    core_row = cores.agg(
-        F.max("core").alias("k_max"), F.count(F.lit(1)).alias("nv")
-    ).collect()[0]
+    with distributed_only():
+        cores = core_numbers(e, src_col="subj_id", dst_col="obj_id")
+        core_row = cores.agg(
+            F.max("core").alias("k_max"), F.count(F.lit(1)).alias("nv")
+        ).collect()[0]
     cores_s = time.time() - t0
 
     t0 = time.time()
@@ -215,13 +228,14 @@ def main():
     assert abs(hits_row["am"] - 1.0) < 1e-6, hits_row
 
     t0 = time.time()
-    scc = strongly_connected_components(
-        e, src_col="subj_id", dst_col="obj_id", small_solve=0
-    )
-    scc_row = scc.agg(
-        F.count(F.lit(1)).alias("nv"),
-        F.countDistinct("component").alias("nc"),
-    ).collect()[0]
+    with distributed_only():
+        scc = strongly_connected_components(
+            e, src_col="subj_id", dst_col="obj_id"
+        )
+        scc_row = scc.agg(
+            F.count(F.lit(1)).alias("nv"),
+            F.countDistinct("component").alias("nc"),
+        ).collect()[0]
     scc_s = time.time() - t0
 
     t0 = time.time()
