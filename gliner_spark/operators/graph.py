@@ -1228,7 +1228,7 @@ def strongly_connected_components(
          those with component = min member id, drop their edges, next
          phase.
     Once the remaining edges fit one task (`linking.fits_one_task`,
-    checked before every phase) the whole residue is solved by one
+    checked before every phase) a non-empty residue is solved by one
     iterative Tarjan pass in a single task (both sides pinned against a
     closure oracle in test_scc.py). All joins are int64 equi-joins;
     per-phase work is proportional to the REMAINING graph, which
@@ -1246,7 +1246,7 @@ def strongly_connected_components(
     settled_parts: list[DataFrame] = []
     for _ in range(max_phases):
         n_edges = remaining.count()
-        if linking.fits_one_task(n_edges):
+        if linking.fits_one_task(n_edges) and (n_edges or not settled_parts):
             settled_parts.append(linking._one_task(remaining, solve, schema))
             break
         if n_edges == 0:
