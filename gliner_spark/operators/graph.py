@@ -18,12 +18,11 @@ from functools import reduce
 from typing import Callable
 
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import linking
+from ..plans import iterate
 
 
 def _directed_edges(
@@ -132,8 +131,8 @@ def pagerank(
     Driver-controlled power iteration (Catalyst cannot iterate — same
     pattern as connected components): contributions = rank/out_degree
     pushed along edges, rank' = (1−d)/N + d·(Σ contributions + dangling
-    mass/N), localCheckpoint per iteration to cut lineage. Converges when
-    the L1 delta drops below `tol`. Each iteration is one equi-join + one
+    mass/N), one `iterate.barrier` per iteration. Converges when the L1
+    delta drops below `tol`. Each iteration is one equi-join + one
     hash agg on int64 keys — the canonical iterative-graph shuffle shape.
 
     Exactly ONE driver job per iteration: the iteration-k aggregate
@@ -183,17 +182,15 @@ def pagerank(
         )
         out_deg = e.groupBy("src").agg(F.sum("w").alias("deg"))
     # vertices carry their out-degree for the whole loop (deg null =
-    # dangling) — one join here instead of one per iteration
-    verts = (
-        _vertex_ids(e)
-        .join(out_deg.withColumnRenamed("src", "id"), "id", "left")
-        .localCheckpoint()
-    )
-    # one pre-loop job: n and the dangling-vertex count together
-    stats = verts.agg(
+    # dangling) — one join here instead of one per iteration; one
+    # pre-loop job: n and the dangling-vertex count together
+    verts, stats = iterate.barrier(
+        _vertex_ids(e).join(
+            out_deg.withColumnRenamed("src", "id"), "id", "left"
+        ),
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("deg").isNull(), 1).otherwise(0)).alias("nd"),
-    ).collect()[0]
+    )
     n = stats["n"]
     if n == 0:
         return verts.select("id").withColumn("rank", F.lit(0.0)).select(
@@ -202,29 +199,25 @@ def pagerank(
     if init_ranks is None:
         # uniform initial ranks: Σ 1/n over dangling
         dangling = stats["nd"] / n
-        ranks = verts.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+        ranks = verts.withColumn("rank", F.lit(1.0 / n))
     else:
         ic = init_ranks.columns
         prev = init_ranks.select(
             F.col(ic[0]).cast("long").alias("id"),
             F.col(ic[1]).cast("double").alias("r0"),
         )
-        warm = (
-            verts.join(prev, "id", "left")
-            .select(
+        warm, ws = iterate.barrier(
+            verts.join(prev, "id", "left").select(
                 "id",
                 "deg",
                 F.coalesce("r0", F.lit(1.0 / n)).alias("r0"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        ws = warm.agg(
+            ),
             F.sum("r0").alias("s"),
             F.coalesce(
                 F.sum(F.when(F.col("deg").isNull(), F.col("r0"))),
                 F.lit(0.0),
             ).alias("m"),
-        ).collect()[0]
+        )
         s = ws["s"] or 1.0
         dangling = ws["m"] / s
         ranks = warm.select(
@@ -289,17 +282,17 @@ def _power_iterate(
                     )
                 ).alias("rank"),
             )
-            # lazy: the fused aggregate below both materializes this
-            # round's ranks and measures convergence in a single job
-            .localCheckpoint(eager=False)
         )
-        row = new_ranks.agg(
+        # one job: materializes this round's ranks and measures both the
+        # convergence delta and the next round's dangling mass
+        new_ranks, row = iterate.barrier(
+            new_ranks,
             F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("d"),
             F.coalesce(
                 F.sum(F.when(F.col("deg").isNull(), F.col("rank"))),
                 F.lit(0.0),
             ).alias("m"),
-        ).collect()[0]
+        )
         dangling = row["m"]
         ranks = new_ranks.select(*keep, "rank")
         if row["d"] < tol:
@@ -323,15 +316,14 @@ def bfs_distances(
     the materialized edge table, e.g. "everything within 3 hops of this
     canonical entity").
 
-    Driver-controlled frontier expansion (Catalyst cannot iterate — the
-    same pattern as pagerank/connected components): each round joins the
-    CURRENT frontier one hop along edges (int64 equi-join on src),
-    anti-joins vertices already reached (first reach = shortest hop, so
-    no min-aggregate is ever needed), and localCheckpoints the new
-    frontier to cut lineage. Rounds are bounded by `max_hops` and stop
-    early when the frontier empties, so the loop is O(max_hops) joins
-    regardless of graph size, and per-round work is proportional to the
-    FRONTIER, not the reached set. At 100 TB the edge table is bucketed
+    Driver-controlled frontier expansion (`iterate.frontier_loop`):
+    each round joins the CURRENT frontier one hop along edges (int64
+    equi-join on src) and anti-joins vertices already reached (first
+    reach = shortest hop, so no min-aggregate is ever needed). Rounds
+    are bounded by `max_hops` and stop early when the frontier
+    empties, so the loop is O(max_hops) joins regardless of graph
+    size, and per-round work is proportional to the FRONTIER, not the
+    reached set. At 100 TB the edge table is bucketed
     on src so every round's probe joins Exchange-free on the big side;
     the anti-join key (landmark, id) is the natural partitioning of the
     accumulating distance table.
@@ -353,14 +345,14 @@ def bfs_distances(
             pd.DataFrame({"landmark": landmarks}, dtype="int64"),
             "landmark long",
         )
-    dist = lm.select(
+    seed = lm.select(
         "landmark",
         F.col("landmark").alias("id"),
         F.lit(0).cast("int").alias("hop"),
-    ).localCheckpoint()
-    frontier = dist
-    for hop in range(1, max_hops + 1):
-        nxt = (
+    )
+
+    def step(hop, frontier, dist):
+        return (
             frontier.join(e, frontier.id == e.src)
             .select("landmark", F.col("dst").alias("id"))
             .distinct()
@@ -372,16 +364,9 @@ def bfs_distances(
             .select(
                 "landmark", "id", F.lit(hop).cast("int").alias("hop")
             )
-            # eager: materializes this round's frontier in one job; the
-            # isEmpty() below reads the checkpointed rows back cheaply
-            .localCheckpoint()
         )
-        if nxt.isEmpty():
-            break
-        # unions of already-checkpointed frames: lineage stays shallow
-        dist = dist.union(nxt)
-        frontier = nxt
-    return dist
+
+    return iterate.frontier_loop(seed, step, max_hops)
 
 
 def build_edges(canonical_triples: DataFrame) -> DataFrame:
@@ -483,7 +468,7 @@ def personalized_pagerank(
     seed_df = spark.createDataFrame(
         pd.DataFrame({"id": seed_ids}, dtype="int64"), "id long"
     )
-    verts = (
+    verts, stats = iterate.barrier(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .union(seed_df)
@@ -495,26 +480,49 @@ def personalized_pagerank(
                 F.col("id").isin(seed_ids),
                 F.lit(1.0 / len(seed_ids)),
             ).otherwise(F.lit(0.0)),
-        )
-        .localCheckpoint()
-    )
-    dangling = verts.agg(
+        ),
         F.coalesce(
             F.sum(F.when(F.col("deg").isNull(), F.col("p"))), F.lit(0.0)
-        ).alias("m")
-    ).collect()[0]["m"]
-    ranks = verts.withColumn("rank", F.col("p")).localCheckpoint()
+        ).alias("m"),
+    )
     return _power_iterate(
-        ranks,
+        verts.withColumn("rank", F.col("p")),
         e,
         F.col("rank") / F.col("deg"),
         F.lit(1.0 - damping) * F.col("p"),
         lambda m: F.lit(m) * F.col("p"),
-        dangling,
+        stats["m"],
         damping,
         max_iter,
         tol,
     )
+
+
+def _walk_starts(
+    e: DataFrame, walk_len: int, walks_per_vertex: int
+) -> DataFrame:
+    """Every walk's start → (start_id, rep): `walks_per_vertex` reps
+    from each vertex of the (src, dst) frame `e`. Both walkers seed
+    here."""
+    if walk_len < 0 or walks_per_vertex < 1:
+        raise ValueError("walk_len >= 0 and walks_per_vertex >= 1")
+    return _vertex_ids(e).select(
+        F.col("id").alias("start_id"),
+        F.explode(
+            F.sequence(
+                F.lit(0).cast("long"),
+                F.lit(walks_per_vertex - 1).cast("long"),
+            )
+        ).alias("rep"),
+    )
+
+
+def _md5_uniform(seed: int, *parts: Column) -> Column:
+    """The walkers' cross-engine uniform: md5("{seed}|{part}|…")'s first
+    8 hex digits as a long in [0, 2^32). Python's hashlib and DuckDB
+    reproduce it bit-exactly."""
+    key = F.concat_ws("|", F.lit(seed), *parts)
+    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
 
 
 def random_walks(
@@ -544,14 +552,18 @@ def random_walks(
     walk that touches it, not a collected neighbor list. Walks
     reaching a dangling vertex terminate (the degree join drops
     them); per-step work is proportional to the LIVE walk count.
-    Driver loop with eager localCheckpoint lineage cuts, early exit
-    when every walk has terminated.
+    Runs on `iterate.frontier_loop`: the loop ends early once every
+    walk has terminated.
     """
     from pyspark.sql import Window
 
-    if walk_len < 0 or walks_per_vertex < 1:
-        raise ValueError("walk_len >= 0 and walks_per_vertex >= 1")
     e = _directed_edges(edges, src_col, dst_col)
+    starts = _walk_starts(e, walk_len, walks_per_vertex).select(
+        "start_id",
+        "rep",
+        F.lit(0).cast("long").alias("step"),
+        F.col("start_id").alias("vertex"),
+    )
     w = Window.partitionBy("src").orderBy("dst")
     iedges = e.withColumn(
         "idx", (F.row_number().over(w) - 1).cast("long")
@@ -568,45 +580,16 @@ def random_walks(
         F.col("idx").alias("eidx"),
         F.col("dst").alias("edst"),
     )
-    verts = _vertex_ids(e)
-    frontier = verts.select(
-        F.col("id").alias("start_id"),
-        F.explode(
-            F.sequence(
-                F.lit(0).cast("long"),
-                F.lit(walks_per_vertex - 1).cast("long"),
-            )
-        ).alias("rep"),
-    ).select(
-        "start_id",
-        "rep",
-        F.lit(0).cast("long").alias("step"),
-        F.col("start_id").alias("vertex"),
-    ).localCheckpoint()
-    out = frontier
-    for t in range(walk_len):
+
+    def step(t, frontier, _):
         pick = F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.lit(seed),
-                            F.col("start_id"),
-                            F.col("rep"),
-                            F.lit(t),
-                            F.col("vertex"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long"),
+            _md5_uniform(
+                seed, F.col("start_id"), F.col("rep"), F.lit(t - 1),
+                F.col("vertex"),
+            ),
             F.col("deg"),
         )
-        nxt = (
+        return (
             frontier.join(deg, frontier.vertex == F.col("dsrc"))
             .withColumn("pick", pick)
             .join(
@@ -617,16 +600,12 @@ def random_walks(
             .select(
                 "start_id",
                 "rep",
-                F.lit(t + 1).cast("long").alias("step"),
+                F.lit(t).cast("long").alias("step"),
                 F.col("edst").alias("vertex"),
             )
-            .localCheckpoint()
         )
-        if nxt.isEmpty():
-            break
-        out = out.union(nxt)
-        frontier = nxt
-    return out
+
+    return iterate.frontier_loop(starts, step, walk_len)
 
 
 def node2vec_walks(
@@ -663,61 +642,31 @@ def node2vec_walks(
     triangle-edge predicate against the edge table, and the pick is a
     per-walk window whose partitions are deg(cur) rows — bounded by
     the max out-degree, never by graph size. Walks terminate at
-    dangling vertices; per-step work ∝ live walks. Driver loop with
-    eager localCheckpoint lineage cuts.
+    dangling vertices; per-step work ∝ live walks. Driver loop on
+    `iterate.frontier_loop`.
     """
     from pyspark.sql import Window
 
-    if walk_len < 0 or walks_per_vertex < 1:
-        raise ValueError("walk_len >= 0 and walks_per_vertex >= 1")
     if p <= 0 or q <= 0:
         raise ValueError("node2vec needs p > 0 and q > 0")
     e = _directed_edges(edges, src_col, dst_col).localCheckpoint()
+    starts = _walk_starts(e, walk_len, walks_per_vertex).select(
+        "start_id",
+        "rep",
+        F.lit(0).cast("long").alias("step"),
+        F.lit(None).cast("long").alias("prev"),
+        F.col("start_id").alias("vertex"),
+    )
     probe = e.select(
         F.col("src").alias("psrc"), F.col("dst").alias("pdst")
     ).withColumn("is_nbr", F.lit(1))
-    verts = _vertex_ids(e)
-    frontier = verts.select(
-        F.col("id").alias("start_id"),
-        F.explode(
-            F.sequence(
-                F.lit(0).cast("long"),
-                F.lit(walks_per_vertex - 1).cast("long"),
-            )
-        ).alias("rep"),
-    ).select(
-        "start_id",
-        "rep",
-        F.lit(None).cast("long").alias("prev"),
-        F.col("start_id").alias("vertex"),
-    ).localCheckpoint()
-    out = frontier.select(
-        "start_id", "rep", F.lit(0).cast("long").alias("step"), "vertex"
-    )
     win = Window.partitionBy("start_id", "rep").orderBy("w")
-    for t in range(walk_len):
-        u = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            F.lit(seed),
-                            F.lit("n2v"),
-                            F.col("start_id"),
-                            F.col("rep"),
-                            F.lit(t),
-                            F.col("vertex"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("double")
-            / F.lit(float(2**32))
-        )
+
+    def step(t, frontier, _):
+        u = _md5_uniform(
+            seed, F.lit("n2v"), F.col("start_id"), F.col("rep"),
+            F.lit(t - 1), F.col("vertex"),
+        ).cast("double") / F.lit(float(2**32))
         cand = (
             frontier.join(e, frontier.vertex == e.src)
             .select(
@@ -759,31 +708,23 @@ def node2vec_walks(
                 & (F.col("cum") - F.col("alpha") <= F.col("target"))
             )
         )
-        nxt = picked.select(
+        return picked.select(
             "start_id",
             "rep",
+            F.lit(t).cast("long").alias("step"),
             F.col("vertex").alias("prev"),
             F.col("w").alias("vertex"),
-        ).localCheckpoint()
-        if nxt.isEmpty():
-            break
-        out = out.union(
-            nxt.select(
-                "start_id",
-                "rep",
-                F.lit(t + 1).cast("long").alias("step"),
-                "vertex",
-            )
         )
-        frontier = nxt
-    return out
+
+    walks = iterate.frontier_loop(starts, step, walk_len)
+    return walks.select("start_id", "rep", "step", "vertex")
 
 
 def _local_core_numbers(pairs) -> dict[int, int]:
     """Sequential Batagelj-Zaversnik (2003) min-degree peel via a lazy
-    heap over (a, b) pairs — the one-task finisher (same rationale as
-    linking's `_local_membership`: on a graph that fits one task, every
-    distributed peel round is pure scheduler latency)."""
+    heap over (a, b) pairs — core_numbers' one-task finisher (on a graph
+    that fits one task, every distributed round is pure scheduler
+    latency)."""
     import heapq
     from collections import defaultdict
 
@@ -824,47 +765,19 @@ def k_core(
     carry no corroborating structure, while a high-k core is the
     mutually-evidenced heart of the graph (Seidman 1983).
 
-    Standard iterative peel, Spark-shaped: each round computes degrees
-    with ONE hash agg over the live edges (both endpoints unioned in)
-    and removes vertices below k with TWO int64 anti-joins, then
-    localCheckpoints the survivor edge set (lineage cut). Rounds needed
-    = peel depth, usually far below the diameter (each round strips a
-    whole onion layer, not one vertex like the sequential algorithm);
-    per-round work is proportional to the LIVE edge set, which only
-    shrinks; one O(1) isEmpty probe per round (an empty graph yields an
-    empty bad set, so the loop needs no second probe). When the edge
-    multiset fits one task (`linking.fits_one_task`) the whole peel
-    collapses into one sequential pass in a single task — peel rounds on
-    a small graph are pure scheduler latency (same rationale, and parity
-    pinning, as linking's `_local_membership` CC finisher).
+    The k-core is the subgraph INDUCED by the vertices of core number
+    >= k, so this is `core_numbers` plus two int64 semi-joins keeping
+    the edges whose both ends have core >= k: the same two sides (one
+    task, or iterated h-index rounds) behind the same gate.
     """
     if k < 1:
         raise ValueError("k >= 1")
-    live = _undirected_edges(edges, src_col, dst_col).localCheckpoint()
-    if linking.fits_one_task(live.count()):
-
-        def solve(t):
-            pairs = list(zip(*t.to_pydict().values()))
-            core = _local_core_numbers(pairs)
-            keep = [min(core[u], core[v]) >= k for u, v in pairs]
-            return t.filter(pa.array(keep, pa.bool_())).to_pydict()
-
-        return linking._one_task(live, solve, live.schema)
-    while True:
-        deg = (
-            live.select(F.col("a").alias("v"))
-            .unionAll(live.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        bad = deg.where(F.col("deg") < k).select("v").localCheckpoint()
-        if bad.isEmpty():
-            return live
-        live = (
-            live.join(bad, live["a"] == bad["v"], "left_anti")
-            .join(bad, live["b"] == bad["v"], "left_anti")
-            .localCheckpoint()
-        )
+    live = _undirected_edges(edges, src_col, dst_col)
+    live, n_live = iterate.sized(live)
+    keep = _cores(live, n_live).where(F.col("core") >= k)
+    return live.join(keep, live["a"] == keep["v"], "left_semi").join(
+        keep, live["b"] == keep["v"], "left_semi"
+    )
 
 
 def core_numbers(
@@ -886,7 +799,9 @@ def core_numbers(
     non-increasing and its fixpoint is exactly the coreness. Each
     round is one int64 equi-join (adjacency x current h) + one hash
     agg folding the neighbor values into a sorted array whose H-index
-    is a pure expression, + one O(1) delta collect; the round count is
+    is a pure expression, + one `iterate.barrier` whose Σ h collect
+    materializes the round and detects the fixpoint (monotone, so an
+    unchanged sum means every value is unchanged); the round count is
     a small graph property (12 on the 2M-edge bench graph) INDEPENDENT
     of k_max x onion depth — measured 1.75x faster than the
     level-restart peel it replaced (85.9s -> 49.2s at 2M edges), which
@@ -895,12 +810,18 @@ def core_numbers(
     aggregation buffer — fine for KG-scale hubs (a 10M-degree hub is a
     ~40 MB row); the bucketed two-phase H-index is the refinement if a
     corpus ever exceeds that. When the edge set fits one task
-    (`linking.fits_one_task`) the whole decomposition runs as ONE
+    (`iterate.fits_one_task`) the whole decomposition runs as ONE
     sequential Batagelj-Zaversnik pass in a single task (both sides
     pinned against the sequential oracle in test_kcore.py).
     """
-    live = _undirected_edges(edges, src_col, dst_col).localCheckpoint()
-    if linking.fits_one_task(live.count()):
+    live = _undirected_edges(edges, src_col, dst_col)
+    return _cores(*iterate.sized(live))
+
+
+def _cores(live: DataFrame, n_live: int) -> DataFrame:
+    """core_numbers of the materialized (a, b) edge set `live` of
+    `n_live` rows → (v, core)."""
+    if iterate.fits_one_task(n_live):
 
         def solve(t):
             core = _local_core_numbers(zip(*t.to_pydict().values()))
@@ -908,7 +829,7 @@ def core_numbers(
 
         v = T.StructField("v", live.schema["a"].dataType)
         schema = T.StructType([v, T.StructField("core", T.IntegerType())])
-        return linking._one_task(live, solve, schema)
+        return iterate.one_task(live, solve, schema)
     adj = (
         live.select(F.col("a").alias("v"), F.col("b").alias("n"))
         .unionAll(
@@ -916,10 +837,10 @@ def core_numbers(
         )
         .localCheckpoint()
     )
-    h = (
-        adj.groupBy("v")
-        .agg(F.count(F.lit(1)).cast("int").alias("core"))
-        .localCheckpoint()
+    total = F.sum("core")
+    h, row = iterate.barrier(
+        adj.groupBy("v").agg(F.count(F.lit(1)).cast("int").alias("core")),
+        total,
     )
     # H-index of the desc-sorted neighbor values: arr is sorted, so
     # h = |{i : arr[i] >= i}| (1-based) — a pure fold, no UDF
@@ -933,21 +854,16 @@ def core_numbers(
             h.select(F.col("v").alias("n"), F.col("core").alias("hn")),
             "n",
         )
-        newh = (
+        h, new = iterate.barrier(
             nh.groupBy("v")
             .agg(F.sort_array(F.collect_list("hn"), asc=False).alias("arr"))
-            .select("v", h_index.alias("core"))
-            .localCheckpoint()
+            .select("v", h_index.alias("core")),
+            total,
         )
-        delta = (
-            h.select("v", F.col("core").alias("old"))
-            .join(newh, "v")
-            .agg(F.sum(F.abs(F.col("core") - F.col("old"))).alias("d"))
-            .collect()[0]["d"]
-        ) or 0  # sum over zero rows is NULL (degenerate empty graph)
-        h = newh
-        if delta == 0:
+        # a sum over zero rows is NULL on both sides (empty graph)
+        if new[0] == row[0]:
             return h
+        row = new
 
 
 def skipgram_pairs(
@@ -1080,19 +996,19 @@ def k_truss(
     over the LIVE edges (two-hop int64 equi-join + closing semi-join,
     the same shape as motif.triangle_counts), an explode of each
     triangle into its three edges + one (a, b) hash agg for support,
-    one join dropping edges below k−2, and one O(1) count collect for
-    convergence. Work per round ∝ live wedges, which only shrinks;
-    localCheckpoint cuts the iterative lineage. Converges when a round
+    one join dropping edges below k−2, and one `iterate.barrier` whose
+    count collect materializes the round and detects convergence. Work
+    per round ∝ live wedges, which only shrinks. Converges when a round
     drops nothing (support is recomputed against the SURVIVING edges
     each round — peeling an edge can demote its triangle partners).
     """
     if k < 2:
         raise ValueError("k-truss needs k >= 2")
-    live = _undirected_edges(edges, src_col, dst_col).localCheckpoint()
+    live = _undirected_edges(edges, src_col, dst_col)
     thresh = k - 2
     if thresh == 0:
         return live  # every edge has >= 0 support
-    n_live = live.count()
+    live, n_live = iterate.sized(live)
     for _ in range(max_rounds):
         if n_live == 0:
             return live
@@ -1122,13 +1038,11 @@ def k_truss(
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("supp"))
         )
-        keep = (
+        keep, n_keep = iterate.sized(
             live.join(support, ["a", "b"], "left")
             .where(F.coalesce("supp", F.lit(0)) >= thresh)
             .select("a", "b")
-            .localCheckpoint()
         )
-        n_keep = keep.count()
         if n_keep == n_live:
             return keep
         live, n_live = keep, n_keep
@@ -1220,22 +1134,27 @@ def strongly_connected_components(
          root per phase there).
       2. FORWARD min-label to convergence: color(v) = min id over
          vertices that reach v (rounds ∝ diameter, one int64 equi-join
-         + min agg + delta collect per round, localCheckpoint cuts).
+         + min agg + pointer-doubling self-join per round; this round
+         keeps its own barrier, see `_min_label_doubling`).
       3. BACKWARD sweep from each color ROOT (color(r) = r) along
          REVERSED edges restricted to the root's color class: the
          reached set of r is exactly r's SCC (everything in it reaches
          r forward — color r — and is reached by r backward). Settle
          those with component = min member id, drop their edges, next
          phase.
-    Once the remaining edges fit one task (`linking.fits_one_task`,
-    checked before every phase) a non-empty residue is solved by one
+    Every phase materializes and sizes its frames with `iterate.sized`
+    / `iterate.barrier`. Once the remaining edges fit one task
+    (`iterate.fits_one_task`, checked before every phase) a non-empty
+    residue is solved by one
     iterative Tarjan pass in a single task (both sides pinned against a
     closure oracle in test_scc.py). All joins are int64 equi-joins;
     per-phase work is proportional to the REMAINING graph, which
     shrinks by every settled SCC — at 100 TB the remaining-edge table
     is bucketed on src so the propagation probes join Exchange-free.
     """
-    remaining = _directed_edges(edges, src_col, dst_col).localCheckpoint()
+    remaining, n_edges = iterate.sized(
+        _directed_edges(edges, src_col, dst_col, cast=False)
+    )
     as_settled = {"src": "id", "dst": "component"}
     schema = remaining.withColumnsRenamed(as_settled).schema
 
@@ -1244,24 +1163,45 @@ def strongly_connected_components(
         return {"id": list(comp), "component": list(comp.values())}
 
     settled_parts: list[DataFrame] = []
+
+    def settle_vanished(kept: DataFrame, still: DataFrame) -> None:
+        # a kept vertex can lose ALL its edges (every edge touched a
+        # settled vertex) and vanish from the remaining graph — it has
+        # no edge to any unsettled vertex, so no cycle: settle it as a
+        # singleton or it is never emitted
+        vanished, n = iterate.sized(
+            kept.join(still, "id", "left_anti").select(
+                "id", F.col("id").alias("component")
+            )
+        )
+        if n:
+            settled_parts.append(vanished)
+
     for _ in range(max_phases):
-        n_edges = remaining.count()
-        if linking.fits_one_task(n_edges) and (n_edges or not settled_parts):
-            settled_parts.append(linking._one_task(remaining, solve, schema))
+        if iterate.fits_one_task(n_edges) and (n_edges or not settled_parts):
+            settled_parts.append(iterate.one_task(remaining, solve, schema))
             break
         if n_edges == 0:
             break
         verts = _vertex_ids(remaining)
         has_out = remaining.select(F.col("src").alias("id")).distinct()
         has_in = remaining.select(F.col("dst").alias("id")).distinct()
-        core = has_out.join(has_in, "id").localCheckpoint()
-        trimmed = verts.join(core, "id", "left_anti").select(
-            "id", F.col("id").alias("component")
-        ).localCheckpoint()
-        n_trimmed = trimmed.count()
+        core, _ = iterate.barrier(has_out.join(has_in, "id"))
+        trimmed, n_trimmed = iterate.sized(
+            verts.join(core, "id", "left_anti").select(
+                "id", F.col("id").alias("component")
+            )
+        )
         if n_trimmed:
             settled_parts.append(trimmed)
-            remaining = (
+            # re-trim only while it is still paying its way: the trim
+            # convergence TAIL settled 915/100/15 edges for ~4 s a pass
+            # at 2M edges (measured r5) — below 0.5% of the remaining
+            # edge count, stop re-trimming and color; any vertex a
+            # further trim would have settled just becomes a singleton
+            # root in the coloring (trim is purely an optimization)
+            retrim = n_trimmed * 200 >= n_edges
+            remaining, n_edges = iterate.sized(
                 remaining.join(
                     core.withColumnRenamed("id", "src"), "src", "left_semi"
                 )
@@ -1269,25 +1209,10 @@ def strongly_connected_components(
                     core.withColumnRenamed("id", "dst"), "dst", "left_semi"
                 )
                 .select("src", "dst")
-                .localCheckpoint()
             )
-            # a core vertex can lose ALL its edges here (every edge
-            # touched a trimmed vertex) and vanish from the remaining
-            # graph — it has no edge to any unsettled vertex, so no
-            # cycle: settle it as a singleton or it is never emitted
-            still = _vertex_ids(remaining).localCheckpoint()
-            vanished = core.join(still, "id", "left_anti").select(
-                "id", F.col("id").alias("component")
-            )
-            if not vanished.isEmpty():
-                settled_parts.append(vanished.localCheckpoint())
-            # re-trim only while it is still paying its way: the trim
-            # convergence TAIL settled 915/100/15 edges for ~4 s a pass
-            # at 2M edges (measured r5) — below 0.5% of the remaining
-            # edge count, stop re-trimming and color; any vertex a
-            # further trim would have settled just becomes a singleton
-            # root in the coloring (trim is purely an optimization)
-            if n_trimmed * 200 >= n_edges:
+            still, _ = iterate.barrier(_vertex_ids(remaining))
+            settle_vanished(core, still)
+            if retrim:
                 continue
             core = still
         # forward min-label with POINTER DOUBLING: each round first
@@ -1311,6 +1236,7 @@ def strongly_connected_components(
         # it the one-reducer hot-key placement) exactly when the skew
         # would appear.
         def _min_label_doubling(prop_edges, init_verts):
+            # The one driver loop that does not use iterate.barrier.
             # Round-barrier discipline (r5, measured on a 64-cycle):
             # the pointer step is a SELF-JOIN of `stepped` with its own
             # projection, and chaining localCheckpoint() through a
@@ -1394,7 +1320,7 @@ def strongly_connected_components(
         # union + isEmpty job per round: 14 rounds / 19 s at 2M edges,
         # measured r5); same worst-case round count, fewer rounds in
         # practice (14 → 7 measured) and a flat per-round cost.
-        ce = (
+        ce, _ = iterate.barrier(
             remaining.join(
                 colors.select(
                     F.col("id").alias("src"), F.col("color").alias("_cs")
@@ -1409,10 +1335,10 @@ def strongly_connected_components(
             )
             .where(F.col("_cs") == F.col("_cd"))
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            .localCheckpoint()
         )
         bcolors = _min_label_doubling(ce, core)
-        scc = (
+        # eager: the phase's doubling caches are released right after
+        scc, _ = iterate.barrier(
             colors.join(
                 bcolors.select(
                     F.col("id").alias("_bid"), F.col("color").alias("_bc")
@@ -1421,31 +1347,22 @@ def strongly_connected_components(
             )
             .where(F.col("color") == F.col("_bc"))
             .select("id", F.col("color").alias("component"))
-            .localCheckpoint()
         )
         settled_parts.append(scc)
         for _c in _phase_caches:
             if _c is not None:
                 _c.unpersist()
         done = scc.select("id")
-        remaining = (
+        remaining, n_edges = iterate.sized(
             remaining.join(
                 done.withColumnRenamed("id", "src"), "src", "left_anti"
             )
             .join(done.withColumnRenamed("id", "dst"), "dst", "left_anti")
             .select("src", "dst")
-            .localCheckpoint()
         )
-        # same vanish rule as the trim step: an unsettled vertex whose
-        # every edge touched an extracted SCC has no remaining cycle
-        still = _vertex_ids(remaining)
-        vanished = (
-            core.join(done, "id", "left_anti")
-            .join(still, "id", "left_anti")
-            .select("id", F.col("id").alias("component"))
+        settle_vanished(
+            core.join(done, "id", "left_anti"), _vertex_ids(remaining)
         )
-        if not vanished.isEmpty():
-            settled_parts.append(vanished.localCheckpoint())
     else:
         raise RuntimeError(
             f"scc did not settle within {max_phases} phases"
@@ -1478,7 +1395,8 @@ def label_propagation(
     sort. Per-round shuffles key on (id, label) then (id); at 100 TB
     the adjacency is bucketed on src so the propagation join is
     Exchange-free on the big side, the same shape as bfs_distances /
-    pagerank. localCheckpoint per round cuts the iterative lineage.
+    pagerank. Each round ends in an eager `iterate.barrier` (no scalar
+    to fetch).
 
     GLiNER has no graph analytics; this serves "cluster canonical
     entities into densely co-mentioned communities" over the
@@ -1505,7 +1423,7 @@ def label_propagation(
         counts = msgs.groupBy("id", "label").agg(
             F.count(F.lit(1)).alias("cnt")
         )
-        labels = (
+        labels, _ = iterate.barrier(
             counts.groupBy("id")
             .agg(
                 F.min(
@@ -1515,7 +1433,6 @@ def label_propagation(
                 ).alias("s")
             )
             .select("id", F.col("s.label").alias("label"))
-            .localCheckpoint()
         )
     return labels
 
@@ -1547,15 +1464,12 @@ def hits(
     if max_iter < 1:
         raise ValueError("hits needs max_iter >= 1")
     e = _directed_edges(edges, src_col, dst_col).localCheckpoint()
-    spark = edges.sparkSession
-    verts = _vertex_ids(e).localCheckpoint()
-    if verts.isEmpty():
-        return spark.createDataFrame(
+    verts, n = iterate.sized(_vertex_ids(e))
+    if n == 0:
+        return edges.sparkSession.createDataFrame(
             [], "entity_id long, hub double, auth double"
         )
     ranks = verts.select("id", F.lit(1.0).alias("hub"))
-    joined = None
-    sa = sh = 1.0
     for _ in range(max_iter):
         araw = (
             e.join(ranks.select(F.col("id").alias("src"), "hub"), "src")
@@ -1567,20 +1481,17 @@ def hits(
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("araw").alias("hraw"))
         )
-        joined = (
+        joined, sums = iterate.barrier(
             verts.join(araw, "id", "left")
             .join(hraw, "id", "left")
             .select(
                 "id",
                 F.coalesce("araw", F.lit(0.0)).alias("araw"),
                 F.coalesce("hraw", F.lit(0.0)).alias("hraw"),
-            )
-            # lazy: the fused sums aggregate below materializes it
-            .localCheckpoint(eager=False)
+            ),
+            F.sum("araw").alias("sa"),
+            F.sum("hraw").alias("sh"),
         )
-        sums = joined.agg(
-            F.sum("araw").alias("sa"), F.sum("hraw").alias("sh")
-        ).collect()[0]
         sa = sums["sa"] or 1.0
         sh = sums["sh"] or 1.0
         ranks = joined.select(
@@ -1605,18 +1516,23 @@ def _ball_rounds(
     src_col: str,
     dst_col: str,
     directed: bool,
+    totals: bool = False,
 ):
     """Ball-growth rounds behind `neighborhood_function` and
-    `distance_profile` → yields (t, state, ball, chk) for t = 0..max_t.
+    `distance_profile` → yields (t, state, ball, chk, sums) for
+    t = 0..max_t.
 
     `state` is round t's checkpointed per-vertex frame (id + reach set
     `rs`, or id + sketch masks s0..s{K-1}); `ball` is the Column of
     |B(v, t)| over it (exact size, or the FM estimate) and `chk` an
     exact integer Column whose sum only grows until the fixpoint
     (reach-set size; the popcount of the masks, which gain bits under
-    `bit_or`). Round t ≥ 1 is ONE int64 equi-join + one mergeable hash
-    agg + an eager localCheckpoint; rounds run only as the consumer
-    asks for them, so a consumer that stops early computes no more.
+    `bit_or`). With `totals`, `sums` is the Row (nf = Σ ball, chk =
+    Σ chk) the round's `iterate.barrier` measures in the job that
+    materializes it; without, it is None. Round t ≥ 1 is ONE int64
+    equi-join + one mergeable hash agg + the barrier; rounds run only
+    as the consumer asks for them, so a consumer that stops early
+    computes no more.
     """
     if method not in ("sketch", "exact"):
         raise ValueError(f"unknown method {method!r}")
@@ -1668,19 +1584,17 @@ def _ball_rounds(
         # popcount as an exact long: Σ masks as double would round a
         # newly gained low bit away once the sum passes 2^53
         chk = sum((F.bit_count(F.col(c)) for c in cols), F.lit(0))
-    state = state.localCheckpoint()
-    yield 0, state, ball, chk
-    for t in range(1, max_t + 1):
-        contrib = e.join(state, e.dst == state.id).select(
-            F.col("src").alias("id"), *cols
-        )
-        state = (
-            state.unionByName(contrib)
-            .groupBy("id")
-            .agg(*merge)
-            .localCheckpoint()
-        )
-        yield t, state, ball, chk
+    scalars = (
+        (F.sum(ball).alias("nf"), F.sum(chk).alias("chk")) if totals else ()
+    )
+    for t in range(max_t + 1):
+        if t:
+            contrib = e.join(state, e.dst == state.id).select(
+                F.col("src").alias("id"), *cols
+            )
+            state = state.unionByName(contrib).groupBy("id").agg(*merge)
+        state, sums = iterate.barrier(state, *scalars)
+        yield t, state, ball, chk, sums
 
 
 def neighborhood_function(
@@ -1733,12 +1647,10 @@ def neighborhood_function(
     """
     rows: list[tuple[int, float]] = []
     prev_chk = -1
-    for t, state, ball, chk in _ball_rounds(
-        edges, max_t, method, n_sketches, seed, src_col, dst_col, directed
+    for t, _, _, _, a in _ball_rounds(
+        edges, max_t, method, n_sketches, seed, src_col, dst_col, directed,
+        totals=True,
     ):
-        a = state.agg(
-            F.sum(ball).alias("nf"), F.sum(chk).alias("chk")
-        ).collect()[0]
         n_pairs = float(a["nf"] or 0.0)
         rows.append((t, n_pairs))
         if a["chk"] == prev_chk:  # fixpoint: fill the grid, no compute
@@ -1874,7 +1786,7 @@ def distance_profile(
     """
     snaps = [
         state.select("id", F.lit(t).alias("t"), ball.alias("ball"))
-        for t, state, ball, _ in _ball_rounds(
+        for t, state, ball, _, _ in _ball_rounds(
             edges, max_t, method, n_sketches, seed, src_col, dst_col,
             directed,
         )
@@ -1949,7 +1861,8 @@ def shortest_path_counts(
     "path diversity" feature KG curation uses — σ=1 means a single
     fragile evidence chain).
 
-    Level-synchronous frontier expansion like `bfs_distances`, with
+    Level-synchronous frontier expansion (`iterate.frontier_loop`)
+    like `bfs_distances`, with
     one extra map-side-combining SUM: σ(v, d) = Σ σ(u, d−1) over
     predecessors u — the anti-join against settled vertices makes
     "first reach = shortest" hold, so the per-level aggregate is all
@@ -1966,15 +1879,15 @@ def shortest_path_counts(
         lm = edges.sparkSession.createDataFrame(
             pd.DataFrame({"source": sources}, dtype="int64"), "source long"
         )
-    done = lm.select(
+    seed = lm.select(
         "source",
         F.col("source").alias("id"),
         F.lit(0).cast("int").alias("hop"),
         F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint()
-    frontier = done
-    for d in range(1, max_hops + 1):
-        nxt = (
+    )
+
+    def step(d, frontier, done):
+        return (
             frontier.join(e, frontier.id == e.src)
             .select("source", F.col("dst").alias("id"), "sigma")
             .join(
@@ -1988,13 +1901,9 @@ def shortest_path_counts(
                 F.lit(d).cast("int").alias("hop"),
                 "sigma",
             )
-            .localCheckpoint()
         )
-        if nxt.isEmpty():
-            break
-        done = done.unionByName(nxt)
-        frontier = nxt
-    return done
+
+    return iterate.frontier_loop(seed, step, max_hops)
 
 
 def betweenness_centrality(
@@ -2017,14 +1926,17 @@ def betweenness_centrality(
     or pay diameter rounds).
 
     Backward phase: per level one 3-way equi-join (level-d vertices →
-    SP-DAG edges → level-d+1 deltas) + one (source, id) hash agg;
-    per-round work ∝ the DAG slice, localCheckpoint lineage cuts;
-    endpoints excluded per the standard definition.
+    SP-DAG edges → level-d+1 deltas) + one (source, id) hash agg + an
+    eager `iterate.barrier`; per-round work ∝ the DAG slice; endpoints
+    excluded per the standard definition.
     """
-    spc = shortest_path_counts(
-        edges, sources, max_hops=max_hops, src_col=src_col,
-        dst_col=dst_col,
-    ).localCheckpoint()
+    spc, top = iterate.barrier(
+        shortest_path_counts(
+            edges, sources, max_hops=max_hops, src_col=src_col,
+            dst_col=dst_col,
+        ),
+        F.max("hop"),
+    )
     e = (
         edges.select(
             F.col(src_col).cast("long").alias("esrc"),
@@ -2034,7 +1946,7 @@ def betweenness_centrality(
         .distinct()
         .localCheckpoint()
     )
-    max_l = spc.agg(F.max("hop")).collect()[0][0]
+    max_l = top[0]
     if max_l is None or max_l == 0:
         return spc.select("id").distinct().select(
             "id", F.lit(0.0).alias("betweenness")
@@ -2090,7 +2002,7 @@ def betweenness_centrality(
             .groupBy("source", "id")
             .agg(F.sum("c").alias("delta"))
         )
-        delta = (
+        delta, _ = iterate.barrier(
             cur.select(
                 F.col("csource").alias("source"),
                 F.col("cid").alias("id"),
@@ -2099,7 +2011,6 @@ def betweenness_centrality(
             .select(
                 "source", "id", F.coalesce("delta", F.lit(0.0)).alias("delta")
             )
-            .localCheckpoint()
         )
         levels.append(delta)
     # sources (hop 0) are endpoints of their own paths — excluded
@@ -2131,46 +2042,41 @@ def katz_centrality(
 
     Power iteration x ← α·Aᵀx + β: per round one int64 equi-join +
     one map-side-combining sum + a left join back onto the vertex set
-    (katz of in-degree-0 vertices is exactly β). tol=0 (default) runs
-    exactly `max_iter` collect-FREE rounds — deterministic and
-    oracle-able by unrolled SQL; tol>0 folds the L1 delta into one
-    scalar collect per round (the pagerank discipline). Convergence
+    (katz of in-degree-0 vertices is exactly β), then one
+    `iterate.barrier`. tol=0 (default) runs exactly `max_iter`
+    collect-FREE rounds — deterministic and oracle-able by unrolled
+    SQL; tol>0 folds the L1 delta into the barrier's one scalar
+    collect per round (the pagerank discipline). Convergence
     requires α < 1/λ_max; the default 1/16 is an exact binary64
     dyadic, so pinned-round values over integer β are EXACT on every
     engine — no summation-order ulps at all.
     """
     e = _directed_edges(edges, src_col, dst_col).localCheckpoint()
-    verts = _vertex_ids(e).localCheckpoint()
-    x = verts.select("id", F.lit(float(beta)).alias("katz"))
+    x = _vertex_ids(e).localCheckpoint().select(
+        "id", F.lit(float(beta)).alias("katz")
+    )
+    delta = F.sum(F.abs(F.col("katz") - F.col("old")))
     for _ in range(max_iter):
         contrib = (
             e.join(x.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("katz").alias("s"))
         )
-        nxt = (
-            verts.join(contrib, "id", "left")
-            .select(
+        # x covers every vertex, so it is the vertex set to join onto
+        nxt, row = iterate.barrier(
+            x.join(contrib, "id", "left").select(
                 "id",
                 (
                     float(beta)
                     + float(alpha) * F.coalesce("s", F.lit(0.0))
                 ).alias("katz"),
-            )
-            .localCheckpoint()
+                F.col("katz").alias("old"),
+            ),
+            *([delta] if tol > 0.0 else []),
         )
-        if tol > 0.0:
-            d = (
-                nxt.withColumnRenamed("katz", "new")
-                .join(x.withColumnRenamed("katz", "old"), "id")
-                .agg(F.sum(F.abs(F.col("new") - F.col("old"))))
-                .collect()[0][0]
-            )
-            x = nxt
-            if d is not None and d <= tol:
-                break
-        else:
-            x = nxt
+        x = nxt.select("id", "katz")
+        if row is not None and row[0] is not None and row[0] <= tol:
+            break
     return x
 
 

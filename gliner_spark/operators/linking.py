@@ -5,7 +5,7 @@ The reference has no linking stage (SURVEY §2.3 J-row "Entity linking
 joins"); this implements the north-star spec. Every hash (shingles,
 MinHash signatures, band keys) is a native Spark expression on both of
 canonicalize's sides; only set logic ever runs in Python, and only in a
-single task whose input is bounded by `SMALL_SOLVE`:
+single task whose input is bounded by `iterate.SMALL_SOLVE`:
 
  blocking   char-3-gram shingles of the normalized surface form →
             MinHash signatures (64 perms) → LSH bands (16 bands × 4 rows,
@@ -22,13 +22,14 @@ canonicalize has two sides behind one gate, and both give the same rows
 (both-sides matrix in test_linking). When the band rows (surfaces ×
 bands) fit one task it computes the per-surface values in one Spark
 projection and runs bucket grouping, verify, union-find and the
-canonical pick in ONE coalesce(1).mapInArrow task (`_one_task`). Above
-the gate the blocking is an equi-join on the band key, verify is two
-id-keyed joins plus array_intersect/union, components are
-large-star/small-star rounds (driver-controlled loop, localCheckpoint
-per round — Catalyst cannot iterate, SURVEY §4) whose tail collapses
-into the same single-task union-find once the contracting edge set fits
-(`fits_one_task`), and the canonical pick is a struct-max groupBy.
+canonical pick in ONE coalesce(1).mapInArrow task (`iterate.one_task`).
+Above the gate the blocking is an equi-join on the band key, verify is
+two id-keyed joins plus array_intersect/union, components are
+large-star/small-star rounds (a driver-controlled loop on
+`iterate.barrier` — Catalyst cannot iterate, SURVEY §4) whose tail
+collapses into the same single-task union-find once the contracting
+edge set fits (`iterate.fits_one_task`), and the canonical pick is a
+struct-max groupBy.
 
 Scale notes:
  * Everything heavy runs on the DISTINCT-surface table, not mentions —
@@ -50,8 +51,10 @@ Scale notes:
    surviving edge multiset fits one task, one union-find pass in a
    single task replaces the remaining rounds, and `max_iter` bounds
    pathological inputs.
- * One gate, `fits_one_task`, picks every size-gated side here and in
-   graph.py from a count the solver already measured; no caller does.
+ * One gate, `iterate.fits_one_task`, picks every size-gated side here
+   and in graph.py from a count the solver already measured; no caller
+   does. plans/iterate.py holds it, the one-task finisher and the round
+   barrier every driver loop here and in graph.py uses.
 """
 
 from __future__ import annotations
@@ -63,22 +66,10 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+
+from ..plans import iterate
 
 _MERSENNE = (1 << 31) - 1  # 2^31 - 1, prime
-
-# The most rows a size-gated solver hands to ONE task: the edge count
-# below which connected_components, k_core, core_numbers and
-# strongly_connected_components finish locally, and the band-row count
-# (surfaces × bands) below which canonicalize runs in one task.
-SMALL_SOLVE = 500_000
-
-
-def fits_one_task(n: int) -> bool:
-    """True iff a measured input of `n` rows takes the one-task side.
-    Reads `SMALL_SOLVE` when called; a bound of 0 forces the distributed
-    side on any input, including an empty one."""
-    return 0 < SMALL_SOLVE and n <= SMALL_SOLVE
 
 
 def _perm_coeffs(n_perms: int, seed: int) -> list[tuple[int, int]]:
@@ -379,24 +370,6 @@ def _union_find(nodes, pairs, accept=None) -> dict:
     return {x: find(x) for x in parent}
 
 
-def _one_task(df: DataFrame, solve, schema: T.StructType) -> DataFrame:
-    """All of df's rows → ONE task → solve(pa.Table) → {column: list} in
-    `schema`'s field order. One narrow exchange (coalesce, no shuffle
-    write). Bounded by construction: every caller gates on a row count
-    (`fits_one_task`), the same bounded-small-side pattern as the k-means
-    centroid collect. An empty input yields no rows."""
-    arrow = to_arrow_schema(schema)
-
-    def run(batches):
-        batches = list(batches)
-        if batches:
-            table = pa.Table.from_batches(batches)
-            if table.num_rows:
-                yield pa.RecordBatch.from_pydict(solve(table), schema=arrow)
-
-    return df.coalesce(1).mapInArrow(run, schema)
-
-
 def _local_membership(edges: DataFrame, id_col: str) -> DataFrame:
     """(u, v) edge set small enough for ONE task → (id, component) via
     `_union_find`. Ids keep whatever orderable type the edges carry
@@ -410,7 +383,7 @@ def _local_membership(edges: DataFrame, id_col: str) -> DataFrame:
     schema = T.StructType(
         [T.StructField(id_col, dt), T.StructField("component", dt)]
     )
-    return _one_task(edges, solve, schema)
+    return iterate.one_task(edges, solve, schema)
 
 
 def connected_components(
@@ -435,13 +408,13 @@ def connected_components(
     Each round: large-star (every node links its larger neighbors to its
     current minimum neighbor) then small-star (links smaller-or-equal
     neighbors to the minimum), expressed as groupBy-min + re-expansion;
-    localCheckpoint after each round truncates lineage (Catalyst cannot
-    iterate, SURVEY §4). Convergence = edge multiset stable, checked by a
-    cheap count+hash aggregate rather than a full self-join.
+    each round is one `iterate.barrier`, whose count+hash aggregate both
+    materializes the round and detects convergence (edge multiset
+    stable) without a full self-join.
 
     Once the (contracting) edge multiset fits one task
-    (`fits_one_task`, checked before every round), the remaining rounds
-    collapse into a single union-find pass
+    (`iterate.fits_one_task`, checked before every round), the remaining
+    rounds collapse into a single union-find pass
     (_local_membership) — star rounds here are pure scheduler overhead
     (~0.85 s/round of driver+stage latency on a 16 k-edge graph,
     measured), and convergence DETECTION alone costs two extra rounds.
@@ -459,16 +432,9 @@ def connected_components(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    # right-size the LOOP state: the iteration repeats ~log(n) rounds, so
-    # per-round fixed cost (task scheduling over empty partitions) is paid
-    # many times — shrink small edge sets below the session's global
-    # shuffle width. Checkpoint BEFORE counting: the count must not
-    # evaluate the (possibly expensive) upstream edge chain once for
-    # sizing and then again for materialization — lazy checkpoint + count
-    # materializes exactly once, and the re-partition then shuffles only
-    # the materialized (u, v) rows.
-    e = e.localCheckpoint(eager=False)
-    n_edges = e.count()
+    # materialize once and measure: the count must not evaluate the
+    # upstream edge chain a second time
+    e, n_edges = iterate.sized(e)
 
     def _attach(membership: DataFrame) -> DataFrame:
         return (
@@ -480,19 +446,20 @@ def connected_components(
             )
         )
 
-    if fits_one_task(n_edges):
+    if iterate.fits_one_task(n_edges):
         return _attach(_local_membership(e, id_col))
+    # right-size the LOOP state: the iteration repeats ~log(n) rounds, so
+    # per-round fixed cost (task scheduling over empty partitions) is paid
+    # many times — shrink small edge sets below the session's global
+    # shuffle width
     n_partitions = max(4, min(256, n_edges // 50_000 + 1))
-    e = e.repartition(n_partitions, "u").localCheckpoint(eager=False)
-
-    def _sig(df: DataFrame) -> tuple:
-        # pmod keeps each term < 2^31 so the int64 sum cannot overflow
-        # under ANSI mode for any realistic edge count (< ~4e9 rows)
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(_MERSENNE))).alias("h"),
-        ).collect()[0]
-        return (r["n"], r["h"])
+    # the edge multiset's signature: stable iff the rounds converged.
+    # pmod keeps each term < 2^31 so the int64 sum cannot overflow under
+    # ANSI mode for any realistic edge count (< ~4e9 rows)
+    sig_cols = (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(_MERSENNE))).alias("h"),
+    )
 
     def _large_star(ed: DataFrame) -> DataFrame:
         """For each node x: connect every strictly-larger neighbor to
@@ -540,19 +507,16 @@ def connected_components(
             .distinct()
         )
 
-    sig = _sig(e)
+    e, sig = iterate.barrier(e.repartition(n_partitions, "u"), *sig_cols)
     for _ in range(max_iter):
         # ONE job per round: the large-star intermediate stays lazy inside
-        # the small-star plan (two shuffles fused), and the checkpoint is
-        # LAZY — the signature aggregate both materializes it and checks
-        # convergence, instead of paying a separate materialization job
-        # (round cost here is scheduler-bound, not data-bound)
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        new_sig = _sig(e)
+        # the small-star plan (two shuffles fused), and the signature
+        # aggregate both materializes the round and checks convergence
+        e, new_sig = iterate.barrier(_small_star(_large_star(e)), *sig_cols)
         if new_sig == sig:
             break
         sig = new_sig
-        if fits_one_task(new_sig[0]):
+        if iterate.fits_one_task(new_sig["n"]):
             # contraction brought the graph under one task's budget —
             # the remaining O(log n) tail rounds are pure scheduler
             # latency; finish with a single union-find pass instead
@@ -663,7 +627,7 @@ def _canonical_local(
             "entity_mentions": [total[r] for r in comp],
         }
 
-    return _one_task(per_surface, solve, schema)
+    return iterate.one_task(per_surface, solve, schema)
 
 
 def canonicalize(
@@ -690,14 +654,11 @@ def canonicalize(
     runs: candidate_pairs → verified_pairs → connected_components →
     struct-max canonical join."""
     rows_per_band = max(n_perms // n_bands, 1)
-    # surfaces feeds every later stage on both sides — materialize once
-    # (the lazy checkpoint's first action is the count the gate needs)
-    # instead of recomputing the mention aggregation per branch
-    surfaces = surface_table(mentions, surface_col).localCheckpoint(
-        eager=False
-    )
-    n_surfaces = surfaces.count()
-    if fits_one_task(n_surfaces * n_bands):
+    # surfaces feeds every later stage on both sides — materialize once,
+    # in the job that counts it for the gate, instead of recomputing the
+    # mention aggregation per branch
+    surfaces, n_surfaces = iterate.sized(surface_table(mentions, surface_col))
+    if iterate.fits_one_task(n_surfaces * n_bands):
         return _canonical_local(
             surfaces, n_perms, n_bands, rows_per_band, shingle_n,
             jaccard_threshold, seed, max_bucket_size,

@@ -3,25 +3,26 @@ append-only shard store and refresh ranks warm-started from the
 previous generation — the live-ingest side of graph analytics over the
 continuously-growing KG edge table.
 
-Storage protocol (the repo's marker-last commit discipline, same as
-streaming/linking.py and streaming/bm25.py):
+Storage protocol (plans/commit.py's marker-last commit). The store is
+the directory `<warehouse>/<gen_base>`, so a new driver finds every
+committed generation where the last one left it:
 
- * each micro-batch writes an IMMUTABLE edge shard table
-   `{gen_base}_e{batch_id}` (overwrite mode — Structured Streaming
-   replays a batch_id with identical content, so a re-delivery rewrites
-   the same bytes instead of duplicating). Shards are the corpus: they
+ * each micro-batch writes an IMMUTABLE edge shard, the parquet dir
+   `e{batch_id}` (overwrite mode — Structured Streaming replays a
+   batch_id with identical content, so a re-delivery rewrites the
+   same bytes instead of duplicating). Shards are the corpus: they
    are NEVER pruned.
- * a rank generation `{gen_base}_b{batch_id}` is two tables:
-   `_ranks` (the converged PageRank over every edge folded so far) and
-   `_meta` (one row per folded batch id — the authoritative shard
-   list), with `_meta` written LAST: a generation is COMMITTED iff its
-   meta exists, so a crash anywhere leaves either a fully-visible old
-   state or an invisible partial one, and an orphan shard without a
-   committed meta is simply ignored by readers.
+ * a rank generation is the parquet dir `b{batch_id}` (the converged
+   PageRank over every edge folded so far) plus its marker
+   `_meta_b{batch_id}.json`, which carries the generation's shard list
+   and is written LAST: a generation is COMMITTED iff its marker
+   exists, so a crash anywhere leaves either a fully-visible old state
+   or an invisible partial one, and an orphan shard no committed
+   marker lists is simply ignored by readers.
  * on (re)delivery of a committed batch_id the fold is skipped —
-   exactly-once rank refresh; old rank generations are dropped beyond
-   `keep_generations` (pure GC: the shard list rides in every meta, so
-   pruning ranks loses nothing).
+   exactly-once rank refresh; rank generations beyond
+   `keep_generations` are GC'd with `commit.drop_dead` (pure GC: the
+   shard list rides in every marker, so pruning ranks loses nothing).
 
 The refresh itself is `graph.pagerank(init_ranks=prev)`: power
 iteration contracts at the damping factor per round, so starting from
@@ -29,19 +30,36 @@ the previous generation's ranks (||old - new||_1 small after an
 append) instead of uniform cuts rounds roughly by log(eps)/log(d).
 Invariant pinned in test_streaming_graphrank.py: the current ranks
 equal a COLD pagerank over the union of all folded shards at the same
-tolerance — streaming is an optimization, never a different answer.
+tolerance — streaming is an optimization, never a different answer —
+also when consecutive batches fold in different driver processes.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+import json
+import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graph import pagerank
-from .linking import _GEN, committed_generations
+from ..plans import commit
+
+_MARKER = "_meta_b{}.json"
+_RANKS = "b{}"
+_SHARD = "e{}"
+_EDGES = "src long, dst long"
+_RANK_SCHEMA = "entity_id long, rank double"
+
+
+def _store(spark: SparkSession, gen_base: str) -> str:
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    return os.path.join(wh, gen_base)
+
+
+def committed_generations(spark: SparkSession, gen_base: str) -> list[int]:
+    """Batch ids with a COMMITTED rank generation, ascending."""
+    return sorted(commit.committed(_store(spark, gen_base), _MARKER))
 
 
 def current_ranks(spark: SparkSession, gen_base: str) -> DataFrame | None:
@@ -50,14 +68,8 @@ def current_ranks(spark: SparkSession, gen_base: str) -> DataFrame | None:
     gens = committed_generations(spark, gen_base)
     if not gens:
         return None
-    return spark.table(f"{gen_base}{_GEN}{gens[-1]}_ranks")
-
-
-def _folded_shards(spark: SparkSession, gen_base: str, gen: int) -> list[int]:
-    return sorted(
-        r.batch_id
-        for r in spark.table(f"{gen_base}{_GEN}{gen}_meta").collect()
-    )
+    path = os.path.join(_store(spark, gen_base), _RANKS.format(gens[-1]))
+    return spark.read.schema(_RANK_SCHEMA).parquet(path)
 
 
 def fold_edge_batch(
@@ -75,23 +87,27 @@ def fold_edge_batch(
     direct testing). Returns True if the batch was folded, False if it
     was skipped as already committed or empty."""
     spark = batch_df.sparkSession
-    gens = committed_generations(spark, gen_base)
+    store = _store(spark, gen_base)
+    gens = commit.committed(store, _MARKER)
     if batch_id in gens or batch_df.isEmpty():
         return False
-    edges = batch_df.select(
+    batch_df.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
+    ).write.mode("overwrite").parquet(
+        os.path.join(store, _SHARD.format(batch_id))
     )
-    edges.write.mode("overwrite").saveAsTable(f"{gen_base}_e{batch_id}")
-    shard_ids = (
-        _folded_shards(spark, gen_base, gens[-1]) if gens else []
-    ) + [batch_id]
-    all_edges = reduce(
-        DataFrame.unionAll,
-        (spark.table(f"{gen_base}_e{i}") for i in shard_ids),
+    last = max(gens, default=None)
+    shard_ids = (gens[last]["shards"] if gens else []) + [batch_id]
+    all_edges = spark.read.schema(_EDGES).parquet(
+        *(os.path.join(store, _SHARD.format(i)) for i in shard_ids)
     )
     prev = (
-        spark.table(f"{gen_base}{_GEN}{gens[-1]}_ranks") if gens else None
+        spark.read.schema(_RANK_SCHEMA).parquet(
+            os.path.join(store, _RANKS.format(last))
+        )
+        if gens
+        else None
     )
     ranks = pagerank(
         all_edges,
@@ -102,20 +118,16 @@ def fold_edge_batch(
         dst_col="dst",
         init_ranks=prev,
     )
-    out = f"{gen_base}{_GEN}{batch_id}"
-    ranks.write.mode("overwrite").saveAsTable(f"{out}_ranks")
-    # a pandas frame takes the Arrow path (a LocalRelation); a Python
-    # list would be a pickled Python RDD, a worker job on every wave
-    spark.createDataFrame(
-        pd.DataFrame({"batch_id": shard_ids}, dtype="int64"), "batch_id long"
-    ).write.mode("overwrite").saveAsTable(f"{out}_meta")  # commit marker
-    survivors = (gens + [batch_id])[-max(keep_generations, 1):]
-    for g in gens:
-        if g not in survivors:
-            for t in ("meta", "ranks"):  # marker first: dir-less != seen
-                spark.sql(
-                    f"drop table if exists {gen_base}{_GEN}{g}_{t}"
-                )
+    ranks.write.mode("overwrite").parquet(
+        os.path.join(store, _RANKS.format(batch_id))
+    )
+    commit.write_text(
+        store, _MARKER.format(batch_id), json.dumps({"shards": shard_ids})
+    )
+    # a single writer: every generation but the newest survivors is
+    # dead, and so is any markerless rank dir a crashed fold left
+    survivors = sorted([*gens, batch_id])[-max(keep_generations, 1):]
+    commit.drop_dead(store, _MARKER, _RANKS, lambda g: g not in survivors)
     return True
 
 

@@ -20,6 +20,13 @@ foreachBatch + generation rotation keyed by the CHECKPOINTED batch_id:
 Mention-count idempotency is the point of the batch_id key: folding the
 same shard twice would double n_mentions and flip canonicals — the
 commit-marker skip makes re-delivery a no-op instead.
+
+Limit: the generations are catalog tables, and the session catalog is
+in-memory, so the commit marker holds only within one driver session. A
+new driver lists no committed generation (it folds from `init_prefix`
+again), and a replayed batch's saveAsTable meets the directory the old
+driver left (LOCATION_ALREADY_EXISTS). Resuming across driver restarts
+needs this store on plans/commit.py, as streaming/graphrank.py is.
 """
 
 from __future__ import annotations
@@ -33,9 +40,8 @@ _TABLES = ("surfaces", "labels", "bands", "canon", "meta")
 
 
 def committed_generations(spark: SparkSession, gen_base: str) -> list[int]:
-    """Batch ids with a COMMITTED generation (meta table present),
-    ascending — the lister for every marker-last generation store
-    (`{gen_base}_b{batch_id}_*`; streaming/graphrank.py shares it)."""
+    """Batch ids with a COMMITTED generation (meta table present) in
+    this session's catalog, ascending (`{gen_base}_b{batch_id}_*`)."""
     gens = []
     prefix = f"{gen_base}{_GEN}"
     for t in spark.catalog.listTables():

@@ -27,22 +27,25 @@ def side(monkeypatch):
     then at 0; only the first run may enter the small side, both runs
     must return equal schemas and equal row multisets, and the rows are
     returned. The default gate is the one-task finisher
-    (`linking.SMALL_SOLVE`, small side `linking._one_task`);
-    `gate=(module, bound_name, small_side_name)` names another."""
+    (`iterate.SMALL_SOLVE`, small side `iterate.one_task`);
+    `gate=(module, bound_name, small_side_name)` names another, and a
+    `(module, name)` pair in the last place spies a small side that
+    lives in another module than the bound."""
     from collections import Counter
 
-    from gliner_spark.operators import linking
+    from gliner_spark.plans import iterate
 
-    def run(call, gate=(linking, "SMALL_SOLVE", "_one_task")):
+    def run(call, gate=(iterate, "SMALL_SOLVE", "one_task")):
         module, bound, small = gate
-        real = getattr(module, small)
+        owner, small = small if isinstance(small, tuple) else (module, small)
+        real = getattr(owner, small)
         calls = []
 
         def spy(*a, **k):
             calls.append(1)
             return real(*a, **k)
 
-        monkeypatch.setattr(module, small, spy)
+        monkeypatch.setattr(owner, small, spy)
         out = []
         for limit in (10**9, 0):
             monkeypatch.setattr(module, bound, limit)

@@ -206,7 +206,7 @@ def test_sketch_fixpoint_checksum_sees_low_bit_past_2_53(spark):
     yield is an exact long and moves by one."""
     from gliner_spark.operators.graph import _ball_rounds
 
-    _, _, _, chk = next(
+    _, _, _, chk, _ = next(
         _ball_rounds(
             _edges(spark, [(0, 1)]), 0, "sketch", 32, 17, "src", "dst", True
         )

@@ -295,10 +295,11 @@ def _both_sides(side, mentions, **kw):
     from collections import Counter
 
     from gliner_spark.operators import linking
+    from gliner_spark.plans import iterate
 
     return Counter(map(tuple, side(
         lambda: canonicalize(mentions, **kw),
-        gate=(linking, "SMALL_SOLVE", "_canonical_local"),
+        gate=(iterate, "SMALL_SOLVE", (linking, "_canonical_local")),
     )))
 
 

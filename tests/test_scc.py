@@ -6,8 +6,8 @@ the distributed trim + forward-backward path."""
 import pytest
 from pyspark.sql import Row
 
-from gliner_spark.operators import linking
 from gliner_spark.operators.graph import strongly_connected_components
+from gliner_spark.plans import iterate
 
 
 def py_scc(edge_list):
@@ -60,7 +60,7 @@ CASES = [
 def test_scc_matches_closure_oracle(spark, edges, bound, monkeypatch):
     """Each side against the oracle: the gate's bound at its default
     (one task) and at 0 (distributed)."""
-    monkeypatch.setattr(linking, "SMALL_SOLVE", bound)
+    monkeypatch.setattr(iterate, "SMALL_SOLVE", bound)
     df = spark.createDataFrame([Row(src=s, dst=d) for s, d in edges])
     got = {
         r.id: r.component
@@ -92,6 +92,10 @@ def test_scc_sides_agree_on_edge_cases(spark, edge_case, side):
     schemas on both sides."""
     got = side(lambda: strongly_connected_components(edge_case))
     assert {r.id: r.component for r in got} == py_scc(edge_case.collect())
+    assert (
+        strongly_connected_components(edge_case).schema["id"].dataType
+        == edge_case.schema["src"].dataType
+    )
 
 
 def test_scc_anti_aligned_cycle_flat_rounds(spark, monkeypatch):
@@ -111,7 +115,7 @@ def test_scc_anti_aligned_cycle_flat_rounds(spark, monkeypatch):
     edges += [(1000, 1001), (1001, 1002), (1002, 1000)]  # 3-cycle
     edges += [(5, 2000), (2000, 1000)]  # acyclic bridge out of the ring
     df = spark.createDataFrame(edges, "src long, dst long")
-    monkeypatch.setattr(linking, "SMALL_SOLVE", 0)
+    monkeypatch.setattr(iterate, "SMALL_SOLVE", 0)
     got = {
         (r.id, r.component)
         for r in strongly_connected_components(df).collect()

@@ -1,7 +1,12 @@
 """Streaming PageRank maintenance: per-batch warm-started refreshes
-equal a cold pagerank over everything ever folded; replays, empty
-batches, and crash-orphaned partials are no-ops; rank generations prune
-without losing the shard list."""
+equal a cold pagerank over everything ever folded, also across driver
+restarts; replays, empty batches, and crash-orphaned partials are
+no-ops; rank generations prune without losing the shard list."""
+
+import json
+import os
+import subprocess
+import sys
 
 from pyspark.sql import Row
 
@@ -48,8 +53,11 @@ def _assert_close(got, want, abs_tol=1e-7):
         assert abs(got[k] - v) <= abs_tol, (k, got[k], v)
 
 
+def _warehouse(spark):
+    return spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+
+
 def _drop_all(spark, base):
-    import os
     import shutil
 
     for t in spark.catalog.listTables():
@@ -59,7 +67,7 @@ def _drop_all(spark, base):
     # entry; drop-if-exists can't see them and the next saveAsTable dies
     # with LOCATION_ALREADY_EXISTS (CLAUDE.md warehouse lesson) — sweep
     # the prefix dirs too, like tools/stream_kg_job.py does
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    wh = _warehouse(spark)
     if os.path.isdir(wh):
         for d in os.listdir(wh):
             if d.startswith(base):
@@ -79,13 +87,12 @@ def test_fold_parity_replay_crash_and_pruning(spark):
             )
         want = _cold(spark, len(BATCHES))
 
-        # pruned to keep_generations=2, shard tables all retained
+        # pruned to keep_generations=2, shards all retained
+        store = os.path.join(_warehouse(spark), base)
         assert committed_generations(spark, base) == [1, 2]
-        shard_tables = {
-            t.name for t in spark.catalog.listTables()
-            if t.name.startswith(f"{base}_e")
+        assert {d for d in os.listdir(store) if d[0] in "be"} == {
+            "b1", "b2", "e0", "e1", "e2"
         }
-        assert shard_tables == {f"{base}_e{i}" for i in range(3)}
 
         # replay of a committed batch id: no-op, ranks unchanged
         assert fold_edge_batch(
@@ -98,13 +105,13 @@ def test_fold_parity_replay_crash_and_pruning(spark):
         assert committed_generations(spark, base) == [1, 2]
         _assert_close(_rank_map(current_ranks(spark, base)), want)
 
-        # crash before the marker: an orphan shard + ranks table without
-        # meta is INVISIBLE (generation uncommitted, shard ignored)
-        _edges(spark, [(90, 91)]).write.mode("overwrite").saveAsTable(
-            f"{base}_e7"
+        # crash before the marker: an orphan shard + ranks dir without
+        # marker is INVISIBLE (generation uncommitted, shard ignored)
+        _edges(spark, [(90, 91)]).write.mode("overwrite").parquet(
+            os.path.join(store, "e7")
         )
-        current_ranks(spark, base).write.mode("overwrite").saveAsTable(
-            f"{base}_b7_ranks"
+        current_ranks(spark, base).write.mode("overwrite").parquet(
+            os.path.join(store, "b7")
         )
         assert committed_generations(spark, base) == [1, 2]
         _assert_close(_rank_map(current_ranks(spark, base)), want)
@@ -159,3 +166,44 @@ def test_stream_pagerank_end_to_end_and_restart(
         _assert_close(_rank_map(current_ranks(spark, base)), want)
     finally:
         _drop_all(spark, "sgrs")
+
+
+# one driver process: fold one batch into the store under a warehouse,
+# print the current ranks as JSON
+_FOLD_IN_NEW_DRIVER = """
+import json, sys
+from pyspark.sql import SparkSession
+from gliner_spark.streaming.graphrank import current_ranks, fold_edge_batch
+wh, base, batch_id, pairs, tol = sys.argv[1:]
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.sql.warehouse.dir", wh)
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+batch = spark.createDataFrame(json.loads(pairs), "src long, dst long")
+assert fold_edge_batch(batch, int(batch_id), base, tol=float(tol))
+ranks = current_ranks(spark, base).collect()
+print(json.dumps([[r.entity_id, r.rank] for r in ranks]))
+spark.stop()
+"""
+
+
+def test_fold_survives_driver_restart(spark, tmp_path):
+    """Batch 0 and batch 1 fold in two separate driver processes that
+    share only the warehouse directory: the second finds the first's
+    generation, so its ranks equal a cold pagerank over both batches
+    (not over batch 1 alone)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root)
+    wh = str(tmp_path / "warehouse")
+    for i in (0, 1):
+        run = subprocess.run(
+            [sys.executable, "-c", _FOLD_IN_NEW_DRIVER, wh, "sgrp", str(i),
+             json.dumps(BATCHES[i]), str(TOL)],
+            cwd=root, env=env, capture_output=True, text=True, timeout=600,
+        )
+        assert run.returncode == 0, run.stderr[-3000:]
+    got = dict(map(tuple, json.loads(run.stdout.strip().splitlines()[-1])))
+    _assert_close(got, _cold(spark, 2))

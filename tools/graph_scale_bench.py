@@ -17,7 +17,7 @@ Measured, `local[32]`:
     hub-cap's work bound: wedge volume with vs without the cap;
   * random_walks, walk_len=5 (one walk per vertex = up to 3M rows);
   * core_numbers, distributed iterated-h-index path forced (the
-    one-task bound `linking.SMALL_SOLVE` set to 0 around the call);
+    one-task bound `iterate.SMALL_SOLVE` set to 0 around the call);
   * triangle_counts over the undirected view;
   * label_propagation, 3 synchronous rounds (collect-free);
   * hits, 3 rounds (one fused sums-collect per round);
@@ -74,14 +74,14 @@ OUT = os.path.join(
 @contextmanager
 def distributed_only():
     """Force every size-gated solver onto its distributed side: the
-    one-task bound `linking.SMALL_SOLVE` is 0 inside the block."""
-    from gliner_spark.operators import linking
+    one-task bound `iterate.SMALL_SOLVE` is 0 inside the block."""
+    from gliner_spark.plans import iterate
 
-    bound, linking.SMALL_SOLVE = linking.SMALL_SOLVE, 0
+    bound, iterate.SMALL_SOLVE = iterate.SMALL_SOLVE, 0
     try:
         yield
     finally:
-        linking.SMALL_SOLVE = bound
+        iterate.SMALL_SOLVE = bound
 
 
 def main():

@@ -3,10 +3,10 @@ waves, each availableNow pass (1) extracts fused NER+RE triples and
 appends them idempotently (streaming/ingest.stream_to_kg, overwrite-by-
 batch-id), then (2) folds the NEW triples' edges into crash-safe rank
 generations with a warm-started PageRank refresh
-(streaming/graphrank.stream_pagerank — marker-last `_meta`, replay
-no-ops). WITHIN a run the waves share both checkpoints, so each pass
-only processes newly landed files; a fresh INVOCATION wipes `--out`
-and the rank tables and starts over (the crash-resume property itself
+(streaming/graphrank.stream_pagerank — marker-last `_meta_b*.json`,
+replay no-ops). WITHIN a run the waves share both checkpoints, so each
+pass only processes newly landed files; a fresh INVOCATION wipes `--out`
+and the rank store and starts over (the crash-resume property itself
 is the components' contract, pinned in test_streaming.py /
 test_streaming_graphrank.py — this tool demonstrates the composed
 flow, not cross-invocation resume).
@@ -56,12 +56,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     out = args.out
     shutil.rmtree(out, ignore_errors=True)
-    # fresh run: drop any rank tables a previous run left behind.
-    # The catalog is per-session but the WAREHOUSE DIRECTORIES persist
-    # (LOCATION_ALREADY_EXISTS on re-create), so remove both.
-    for row in spark.sql("show tables").collect():
-        if row["tableName"].startswith("stream_kg_job_ranks"):
-            spark.sql(f"drop table {row['tableName']}")
+    # fresh run: drop the rank store a previous run left behind
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     if os.path.isdir(wh):
         for d in os.listdir(wh):
@@ -101,7 +96,7 @@ def main():
         )
         q2 = stream_pagerank(
             edge_stream,
-            "stream_kg_job_ranks",  # metastore TABLE prefix, not a path
+            "stream_kg_job_ranks",  # store dir under the warehouse
             os.path.join(out, "ckpt_ranks"),
         )
         if not q2.awaitTermination(600):
