@@ -50,8 +50,3 @@ def triple_prf(pred_triples, true_triples) -> dict[str, float]:
         "false positives": fp,
         "false negatives": fn,
     }
-
-
-def triple_string(subj: str, pred: str, obj: str) -> str:
-    """Canonical triple string form (relation_extraction.py:236)."""
-    return f"{subj} <> {pred} <> {obj}"

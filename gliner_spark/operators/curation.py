@@ -994,51 +994,6 @@ def semantic_decontaminate(
     )
 
 
-def corpus_overlap(
-    corpus_a: DataFrame,
-    corpus_b: DataFrame,
-    text_col: str = "text",
-    n: int = 5,
-    k: int = 4096,
-    seed: int = 23,
-) -> dict:
-    """Cross-corpus n-gram overlap report from two KMV sketches: how
-    much of corpus B's word-n-gram set is already in corpus A (the
-    "is this crawl worth ingesting" pre-check, and the drift
-    complement of `corpus_divergence` — set overlap rather than
-    distribution distance).
-
-    Each side folds to ≤ k int64 hashes in one pass (map projection →
-    map-side-combining distinct → TakeOrderedAndProject, see
-    `sketches.build_kmv`); estimates are EXACT whenever the merged
-    distinct-gram universe fits in k. Returns
-    {union_est, intersect_est, jaccard, containment_b_in_a, sampled}
-    where containment ≈ |A∩B| / |B| — the asymmetric number the
-    ingest decision actually needs.
-    """
-    from ..functions.text import tokens, word_ngrams
-    from .sketches import build_kmv, kmv_estimate, kmv_set_ops
-
-    def _grams(df):
-        return df.select(
-            F.explode(word_ngrams(tokens(F.col(text_col)), n)).alias("gram")
-        )
-
-    ga = _grams(corpus_a)
-    gb = _grams(corpus_b)
-    # localCheckpoint pins the ≤k-row sketches: kmv_set_ops and the
-    # containment estimate below each collect sb, and without the pin
-    # the SECOND collect re-runs corpus B's full gram scan
-    sa = build_kmv(ga, "gram", k=k, seed=seed).localCheckpoint()
-    sb = build_kmv(gb, "gram", k=k, seed=seed).localCheckpoint()
-    rep = kmv_set_ops(sa, sb, k=k)
-    b_est = kmv_estimate([r["v"] for r in sb.collect()], k)
-    rep["containment_b_in_a"] = (
-        min(rep["intersect_est"] / b_est, 1.0) if b_est > 0 else 0.0
-    )
-    return rep
-
-
 def temperature_budgets(
     df: DataFrame,
     group_col: str = "source",
@@ -1050,8 +1005,8 @@ def temperature_budgets(
     Conneau et al. 2020): sample probability ∝ p_domain^alpha, where
     p_domain is the domain's token share — alpha < 1 upsamples small
     domains without drowning large ones. Returns the per-domain token
-    budget dict `mixture_sample` / `stream_budget_admit` consume, so
-    the full pipeline is measure → reweight → admit.
+    budget dict `mixture_sample` consumes, so the full pipeline is
+    measure → reweight → admit.
 
     ONE hash agg over the corpus (per-domain token sums — rows =
     #domains, the only collect); a domain's budget never exceeds its

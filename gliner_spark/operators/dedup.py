@@ -17,8 +17,7 @@ pipeline runs before anything else. All variants are shuffle-frugal:
                  self-join (explode gram → equi-join → count) — quadratic
                  only within identical-gram groups, the classic exact
                  similarity-join plan;
-  embedding      cosine near-dups: brute-force (oracle-checkable) and
-                 random-hyperplane-LSH bucketed (the scale path).
+  embedding      cosine near-dups, brute-force (oracle-checkable).
 
 The reference repo has no dedup (SURVEY §2 end-note); these follow the
 standard MinHash/SimHash constructions (Broder 1997; Charikar 2002).
@@ -208,16 +207,14 @@ def exact_dedup_against_bloom(
 # ------------------------------------------------------------- minhash/LSH
 
 
-def shingle_col(text_col: str = "text", n: int = 3):
-    """Distinct word n-grams of the lowercased text, as a COLUMN — shared
-    by the batch table builder below and the streaming banding stage
-    (which needs to keep its watermark column alongside)."""
-    return F.array_distinct(word_ngrams(tokens(F.lower(F.col(text_col))), n))
-
-
 def doc_shingles(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
     """(doc_id, shingles: distinct word n-grams of the lowercased text)."""
-    return docs.select("doc_id", shingle_col(text_col, n).alias("shingles"))
+    return docs.select(
+        "doc_id",
+        F.array_distinct(
+            word_ngrams(tokens(F.lower(F.col(text_col))), n)
+        ).alias("shingles"),
+    )
 
 
 def minhash_sigs(
@@ -228,12 +225,11 @@ def minhash_sigs(
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """(id, sig array<bigint>[, passthrough…]) as a pure map-side array
-    expression — zero shuffle (see linking.minhash_array; identical
+    expression — zero shuffle (linking.minhash_sig_expr; identical
     values to the old explode → 64-min-aggregates shape, which shuffled
     every (id, shingle) row). Docs with no shingles get an
     empty-sentinel single shingle. `passthrough` columns ride the
-    projection untouched (the streaming caller keeps its watermark ts
-    without a join)."""
+    projection untouched (kept without a join)."""
     from .linking import _MERSENNE, minhash_sig_expr
 
     padded = F.when(F.size("shingles") > 0, F.col("shingles")).otherwise(
@@ -246,145 +242,6 @@ def minhash_sigs(
     with_h = with_shingles.select(id_col, *extra, hashes.alias("_hs"))
     return with_h.select(
         id_col, *extra, minhash_sig_expr("_hs", n_perms, seed).alias("sig")
-    )
-
-
-def build_minhash_index(
-    docs: DataFrame,
-    table_prefix: str,
-    path: str | None = None,
-    text_col: str = "text",
-    shingle_n: int = 3,
-    n_perms: int = 64,
-    n_bands: int = 16,
-    n_file_buckets: int = 32,
-    max_bucket_size: int | None = 1000,
-) -> None:
-    """Persist the corpus side of near-dup detection ONCE — the dedup
-    twin of the persisted IVF index (similarity.build_ivf_index): at
-    100 TB the corpus is signed exactly once and every later shard
-    probes the index instead of re-reading the corpus. Two
-    metastore-registered tables:
-
-      {prefix}_buckets (bh, doc_id)  bucketed + sorted on bh
-      {prefix}_sigs    (doc_id, sig) bucketed + sorted on doc_id
-
-    Both probe joins (bucket match, then signature fetch) therefore run
-    WITHOUT an Exchange on the corpus side — only the new shard (the
-    small side, by construction of incremental ingest) shuffles to the
-    bucket layout. Storage is ~n_bands·8 B + n_perms·8 B per doc; the
-    shingle sets never persist, so the verify step is estimator-based
-    (see near_dup_against_index).
-
-    `max_bucket_size` caps templated-text buckets AT BUILD TIME with a
-    deterministic doc_id-order survivor rule — the same quadratic-blowup
-    guard as linking.lsh_bucket_pairs, applied once instead of per
-    probe."""
-    from pyspark.sql import Window
-
-    from ..sources.catalog import write_bucketed
-
-    sh = doc_shingles(docs, text_col, shingle_n)
-    sigs = minhash_sigs(sh, "doc_id", n_perms)
-    banded = sigs.select(
-        "doc_id",
-        F.explode(band_keys(n_bands, n_perms // n_bands)).alias("bh"),
-    )
-    if max_bucket_size is not None:
-        w = Window.partitionBy("bh").orderBy("doc_id")
-        banded = (
-            banded.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= max_bucket_size)
-            .drop("_rn")
-        )
-    write_bucketed(
-        banded.select("bh", "doc_id"),
-        f"{table_prefix}_buckets",
-        ["bh"],
-        n_file_buckets,
-        f"{path}/buckets" if path else None,
-    )
-    write_bucketed(
-        sigs,
-        f"{table_prefix}_sigs",
-        ["doc_id"],
-        n_file_buckets,
-        f"{path}/sigs" if path else None,
-    )
-    # one-row parameter record: the probe MUST sign its shard with the
-    # same (shingle_n, n_perms, n_bands) or candidates are silently
-    # wrong — so the probe reads them from here instead of trusting its
-    # caller
-    meta = docs.sparkSession.createDataFrame(
-        [(shingle_n, n_perms, n_bands)],
-        "shingle_n int, n_perms int, n_bands int",
-    )
-    writer = meta.coalesce(1).write.mode("overwrite")
-    if path:
-        writer = writer.option("path", f"{path}/meta")
-    writer.saveAsTable(f"{table_prefix}_meta")
-
-
-def near_dup_against_index(
-    spark,
-    table_prefix: str,
-    new_docs: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Probe a persisted MinHash index (build_minhash_index) with a new
-    shard → (new_id, corpus_id, est_jaccard) pairs with
-    est_jaccard ≥ threshold. The incremental-batch shape of near-dup:
-    in-batch (minhash_near_duplicates) and streaming
-    (streaming/neardedup) cover the other two arrival patterns.
-
-    shingle_n / n_perms / n_bands are read from the index's one-row
-    `{prefix}_meta` table (recorded at build), so the shard is always
-    signed with the parameters the corpus was signed with — the same
-    pure map expressions, bit-parity by shared code, mismatch
-    impossible by construction.
-
-    est_jaccard is the signature agreement fraction — the standard
-    unbiased MinHash estimator (Broder 1997), stderr ≈
-    sqrt(j(1-j)/n_perms) ≈ 0.06 at n_perms=64 — because the index
-    stores signatures, not shingle sets. Callers needing exact Jaccard
-    re-verify the (tiny) survivor pairs against raw text; the estimator
-    is what makes the index 100 TB-sized."""
-    m = spark.read.table(f"{table_prefix}_meta").head()
-    shingle_n, n_perms, n_bands = m.shingle_n, m.n_perms, m.n_bands
-    sh = doc_shingles(new_docs, text_col, shingle_n)
-    sigs = minhash_sigs(sh, "doc_id", n_perms)
-    banded = sigs.select(
-        F.col("doc_id").alias("new_id"),
-        F.explode(band_keys(n_bands, n_perms // n_bands)).alias("bh"),
-    )
-    idx = spark.read.table(f"{table_prefix}_buckets")
-    # distinct over BARE (new_id, corpus_id) pairs — the multi-band
-    # collision multiset dedups while moving 16 B rows, the signatures
-    # re-join afterwards (corpus side from the doc_id-bucketed table,
-    # new side by recomputing the map-only signature projection)
-    cands = (
-        banded.join(idx, "bh")
-        .select("new_id", F.col("doc_id").alias("corpus_id"))
-        .distinct()
-    )
-    corpus_sigs = spark.read.table(f"{table_prefix}_sigs").select(
-        F.col("doc_id").alias("corpus_id"), F.col("sig").alias("corpus_sig")
-    )
-    new_sigs = sigs.select(
-        F.col("doc_id").alias("new_id"), F.col("sig").alias("new_sig")
-    )
-    est = F.expr(
-        "aggregate(zip_with(new_sig, corpus_sig,"
-        " (a, b) -> case when a = b then 1 else 0 end),"
-        f" 0, (acc, x) -> acc + x) / cast({n_perms} as double)"
-    )
-    return (
-        cands.join(corpus_sigs, "corpus_id")
-        .join(new_sigs, "new_id")
-        .withColumn("est_jaccard", est)
-        .where(F.col("est_jaccard") >= threshold)
-        .select("new_id", "corpus_id", "est_jaccard")
     )
 
 
@@ -442,41 +299,6 @@ def minhash_near_duplicates(
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-
-
-def near_dedup_survivors(
-    docs: DataFrame,
-    text_col: str = "text",
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.8,
-    **minhash_kwargs,
-) -> DataFrame:
-    """Full near-dedup: MinHash-LSH pairs → connected components over the
-    near-dup graph → keep the MIN doc_id per component (transitive
-    closure matters: A~B, B~C ⇒ one survivor even when A≁C directly —
-    pairwise-only dedup would keep two of the three).
-
-    Reuses the linking module's large-star/small-star components on int64
-    doc ids. Returns the surviving subset of `docs`.
-    """
-    from .linking import connected_components
-
-    pairs = minhash_near_duplicates(
-        docs, text_col, shingle_n, jaccard_threshold=jaccard_threshold,
-        **minhash_kwargs,
-    )
-    comps = connected_components(
-        docs.select(F.col("doc_id").alias("id")),
-        pairs.select(
-            F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
-        ),
-    )
-    keep = (
-        comps.groupBy("component")
-        .agg(F.min("id").alias("doc_id"))
-        .select("doc_id")
-    )
-    return docs.join(keep, "doc_id", "inner")
 
 
 # ------------------------------------------------------------------ simhash
@@ -730,14 +552,6 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(_dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def as_double(col) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
@@ -747,7 +561,7 @@ def unit_vector(col) -> Column:
     arithmetic so all products/sums run in double — bit-parity with engines
     (DuckDB) that compute list similarity in double."""
     d = as_double(col)
-    return F.transform(d, lambda x: x / _norm(d))
+    return F.transform(d, lambda x: x / F.sqrt(_dot(d, d)))
 
 
 def embedding_near_duplicates_bruteforce(
@@ -766,64 +580,6 @@ def embedding_near_duplicates_bruteforce(
             _dot(F.col("l.unit"), F.col("r.unit")).alias("cos"),
         )
         .where(F.col("cos") >= threshold)
-    )
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    return rng.standard_normal((n_planes, dim)).astype(float).tolist()
-
-
-def embedding_near_duplicates_lsh(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    dim: int = 64,
-    n_planes: int = 16,
-    n_tables: int = 8,
-    seed: int = 11,
-) -> DataFrame:
-    """Scale path: random-hyperplane LSH (n_tables independent sign
-    sketches of n_planes bits) → equi-join per table → exact cosine verify.
-    Collision prob per table = (1 − θ/π)^n_planes; 8 tables at 16 bits
-    gives >99% recall at cos ≥ 0.95. All native expressions."""
-    planes = _hyperplanes(dim, n_planes * n_tables, seed)
-    e = embeddings.select("vec_id", unit_vector("embedding").alias("unit"))
-    sketches = []
-    for t in range(n_tables):
-        bits = [
-            F.when(
-                _dot(
-                    F.col("unit"),
-                    F.array(*[F.lit(v) for v in planes[t * n_planes + p]]),
-                )
-                > 0,
-                "1",
-            ).otherwise("0")
-            for p in range(n_planes)
-        ]
-        sketches.append(F.xxhash64(F.lit(t), F.concat(*bits)))
-    from .linking import lsh_bucket_pairs
-
-    e = e.localCheckpoint()  # pair source + two unit-vector joins
-    banded = e.select(
-        "vec_id", F.posexplode(F.array(*sketches)).alias("table", "sk")
-    )
-    cand = lsh_bucket_pairs(banded, "vec_id", ("table", "sk"), None).select(
-        F.col("id_a").alias("vec_a"), F.col("id_b").alias("vec_b")
-    )
-    cand = cand.join(
-        e.select(F.col("vec_id").alias("vec_a"), F.col("unit").alias("ua")),
-        "vec_a",
-    ).join(
-        e.select(F.col("vec_id").alias("vec_b"), F.col("unit").alias("ub")),
-        "vec_b",
-    )
-    return (
-        cand.withColumn("cos", _dot("ua", "ub"))
-        .where(F.col("cos") >= threshold)
-        .select("vec_a", "vec_b", "cos")
     )
 
 
@@ -1015,6 +771,11 @@ def repeated_ngram_spans(
 # ------------------------------------------------- cross-doc line dedup
 
 
+# Most drop-line hashes drop_common_lines probes as one broadcast array;
+# above it (or at a bound of 0) the rewrite joins on the line hash.
+BROADCAST_DROP_MAX = 8192
+
+
 def line_doc_frequency(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(_h, _df): document frequency of every trim-normalized non-empty
     line, keyed by xxhash64. The per-doc `array_distinct` happens
@@ -1055,11 +816,6 @@ def common_lines_report(
         .limit(top_k)
         .select("line", "df", F.length("line").alias("n_chars"))
     )
-
-
-# Most drop-line hashes drop_common_lines probes as one broadcast array;
-# above it (or at a bound of 0) the rewrite joins on the line hash.
-BROADCAST_DROP_MAX = 8192
 
 
 def _drop_lines_broadcast(
@@ -1104,10 +860,9 @@ def build_line_index(
     text_col: str = "text",
     n_file_buckets: int = 32,
 ) -> None:
-    """Persist the corpus's line document-frequency table ONCE — the
-    line-dedup twin of `build_minhash_index`: at 100 TB the corpus is
-    line-counted exactly once and every later ingest shard probes the
-    table instead of re-reading the corpus.
+    """Persist the corpus's line document-frequency table ONCE: at
+    100 TB the corpus is line-counted exactly once and every later
+    ingest shard probes the table instead of re-reading the corpus.
 
       {prefix}_linedf (_h, _df)  bucketed + sorted on _h
 
@@ -1304,54 +1059,6 @@ def semantic_duplicates(
     )
 
 
-def semantic_dedup_survivors(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    n_clusters: int = 16,
-    kmeans_iter: int = 4,
-    seed: int = 5,
-    max_cluster_size: int | None = 10_000,
-) -> DataFrame:
-    """SemDeDup keep-set: connected components over the semantic-dup
-    graph; per component KEEP the vector FARTHEST from its cluster
-    centroid (the paper's diversity-preserving choice — the most
-    central duplicates are the most redundant), vec_id tie-break.
-    Returns the surviving subset of `embeddings`."""
-    from .linking import connected_components
-    from .similarity import kmeans
-
-    assigned, _cents, _ = kmeans(
-        embeddings, k=n_clusters, max_iter=kmeans_iter, seed=seed
-    )
-    pairs = semantic_duplicates(
-        embeddings,
-        threshold=threshold,
-        n_clusters=n_clusters,
-        kmeans_iter=kmeans_iter,
-        seed=seed,
-        max_cluster_size=max_cluster_size,
-    )
-    comps = connected_components(
-        embeddings.select(F.col("vec_id").alias("id")),
-        pairs.select(
-            F.col("vec_a").alias("id_a"), F.col("vec_b").alias("id_b")
-        ),
-    )
-    keep = (
-        comps.join(
-            assigned.select(F.col("vec_id").alias("id"), "dist2"), "id"
-        )
-        .groupBy("component")
-        .agg(
-            F.max(
-                F.struct(F.col("dist2"), (-F.col("id")).alias("nid"))
-            ).alias("best")
-        )
-        .select((-F.col("best.nid")).alias("vec_id"))
-    )
-    return embeddings.join(keep, "vec_id")
-
-
 def winnow_fingerprints(
     docs: DataFrame,
     text_col: str = "text",
@@ -1366,7 +1073,7 @@ def winnow_fingerprints(
     (position, hash) set. Guarantee (Schleimer/Wilkerson/Aiken 2003):
     any shared token run of ≥ window+k−1 tokens between two documents
     yields at least one shared fingerprint — the partial-overlap
-    detector sitting between whole-doc hashing (`fingerprints`) and
+    detector sitting between whole-doc hashing (`exact_duplicates`) and
     full ExactSubstr spans (`repeated_ngram_spans`), at a stored cost
     of ~2/(window+1) fingerprints per token.
 

@@ -5,10 +5,9 @@ Closes the graph → random walks → skip-gram pairs chain with actual
 vectors, the closed-form counterpart of word2vec: SGNS implicitly
 factorizes the shifted PPMI matrix (Levy & Goldberg, "Neural Word
 Embedding as Implicit Matrix Factorization", NeurIPS 2014; NetMF,
-Qiu et al. WSDM 2018 for the DeepWalk equivalence). Like
-`similarity.pca_components` this is deterministic linear algebra —
-a data transform, not gradient training (SURVEY §2.11's scope cut
-covers SGD loops, not factorization).
+Qiu et al. WSDM 2018 for the DeepWalk equivalence). This is
+deterministic linear algebra — a data transform, not gradient training
+(SURVEY §2.11's scope cut covers SGD loops, not factorization).
 
 ppmi       (center, context, n) counts → sparse (i, j, w) with
            w = max(ln(n·N / (n_i·n_j)) − ln(shift), 0), zeros dropped.

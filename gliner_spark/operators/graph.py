@@ -752,34 +752,6 @@ def _local_core_numbers(pairs) -> dict[int, int]:
     return core
 
 
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """The k-core of the UNDIRECTED view of the edge list: the maximal
-    subgraph in which every vertex has degree >= k, as its canonical
-    edge set (a, b) with a < b. The dense-region extractor for KG
-    cleanup — vertices outside even the 2-core are leaves/chains that
-    carry no corroborating structure, while a high-k core is the
-    mutually-evidenced heart of the graph (Seidman 1983).
-
-    The k-core is the subgraph INDUCED by the vertices of core number
-    >= k, so this is `core_numbers` plus two int64 semi-joins keeping
-    the edges whose both ends have core >= k: the same two sides (one
-    task, or iterated h-index rounds) behind the same gate.
-    """
-    if k < 1:
-        raise ValueError("k >= 1")
-    live = _undirected_edges(edges, src_col, dst_col)
-    live, n_live = iterate.sized(live)
-    keep = _cores(live, n_live).where(F.col("core") >= k)
-    return live.join(keep, live["a"] == keep["v"], "left_semi").join(
-        keep, live["b"] == keep["v"], "left_semi"
-    )
-
-
 def core_numbers(
     edges: DataFrame,
     src_col: str = "src",
@@ -814,13 +786,7 @@ def core_numbers(
     sequential Batagelj-Zaversnik pass in a single task (both sides
     pinned against the sequential oracle in test_kcore.py).
     """
-    live = _undirected_edges(edges, src_col, dst_col)
-    return _cores(*iterate.sized(live))
-
-
-def _cores(live: DataFrame, n_live: int) -> DataFrame:
-    """core_numbers of the materialized (a, b) edge set `live` of
-    `n_live` rows → (v, core)."""
+    live, n_live = iterate.sized(_undirected_edges(edges, src_col, dst_col))
     if iterate.fits_one_task(n_live):
 
         def solve(t):
@@ -987,10 +953,11 @@ def k_truss(
 ) -> DataFrame:
     """Edges of the k-truss → canonical undirected (a, b), a < b: the
     maximal subgraph in which every edge participates in at least k−2
-    triangles OF THAT SUBGRAPH. The edge-support analog of k_core —
-    strictly stronger cohesion (a k-truss is a (k−1)-core but not vice
-    versa), the standard dense-community extractor over the KG edge
-    table where k_core is too hub-lenient.
+    triangles OF THAT SUBGRAPH. The edge-support analog of the k-core
+    (`core_numbers`) — strictly stronger cohesion (a k-truss is a
+    (k−1)-core but not vice versa), the standard dense-community
+    extractor over the KG edge table where the k-core is too
+    hub-lenient.
 
     Iterative peel, per round: one node-iterator triangle enumeration
     over the LIVE edges (two-hop int64 equi-join + closing semi-join,

@@ -4,8 +4,9 @@ After extraction + linking materialize a canonical triple table
 (``operators/graph.py::build_edges`` input shape: subj_id, pred,
 obj_id, score, conv_id, …), a production KG pipeline needs a
 refinement pass: which predicates behave like functions, which
-subjects violate declared functional constraints, and what is the
-combined confidence of a triple asserted by many noisy evidence rows.
+subjects violate declared functional constraints, what is the
+combined confidence of a triple asserted by many noisy evidence rows,
+and what changed between two snapshots.
 The reference stops at emission (GLiNER predicts spans/relations per
 text — /root/reference/gliner/model.py:218 ``predict_entities``);
 these are the corpus-level consolidation ops a KG built FROM those

@@ -127,36 +127,15 @@ def _base_hashes(shingles_col, seed: int) -> Column:
     )
 
 
-def minhash_array(shingles_col, n_perms: int, seed: int):
-    """MinHash signature as ONE map-side array expression over a shingle
-    ARRAY column: base-hash each shingle once (folded to [0, p) so the
-    ANSI int64 multiply cannot overflow), then per permutation
-    array_min(transform(h → (a·h + b) mod p)).
-
-    Identical values to the explode → 64-min-aggregates formulation, but
-    ZERO shuffle and no 64-buffer aggregate: the r01 shape moved every
-    (id, shingle) row through an exchange and paid a 64-column aggregate
-    whose generated code dominated wall time at small scale; this is a
-    narrow projection that pipelines with the scan at any scale."""
-    coeffs = _perm_coeffs(n_perms, seed)
-    hashes = _base_hashes(shingles_col, seed)
-
-    def perm_min(hs, a, b):
-        return F.array_min(
-            F.transform(
-                hs, lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE))
-            )
-        )
-    return hashes, coeffs, perm_min
-
-
 def minhash_sig_expr(hs_col: str, n_perms: int, seed: int):
     """The n_perms-wide signature array as ONE parsed SQL expression over
-    a pre-hashed shingle column `hs_col`: values identical to composing
-    minhash_array's perm_min Columns (parity-pinned in test_linking), but
-    built with a single JVM round-trip. Composing the per-perm Columns
-    through py4j cost ~2 s of DRIVER wall per query at n_perms=64 —
-    pure expression-construction overhead, paid before any task ran."""
+    a pre-hashed shingle column `hs_col` (`_base_hashes`: each shingle
+    folded to [0, p) so the ANSI int64 multiply cannot overflow): per
+    permutation array_min(transform(h → (a·h + b) mod p)). A narrow
+    projection with zero shuffle, built with a single JVM round-trip:
+    composing per-permutation Columns through py4j cost ~2 s of DRIVER
+    wall per query at n_perms=64 — pure expression-construction
+    overhead, paid before any task ran."""
     coeffs = _perm_coeffs(n_perms, seed)
     body = ",".join(
         f"array_min(transform({hs_col}, h -> "
@@ -173,7 +152,7 @@ def minhash_signatures(
     seed: int = 42,
 ) -> DataFrame:
     """surfaces(surface[, surface_id], …) → (surface_id, surface,
-    sig:array<bigint>[n_perms]). Pure map stage (see minhash_array)."""
+    sig:array<bigint>[n_perms]). Pure map stage (see minhash_sig_expr)."""
     if "surface_id" not in surfaces.columns:
         surfaces = surfaces.withColumn("surface_id", F.xxhash64("surface"))
     hashes = _base_hashes(shingle_set(F.col("surface"), shingle_n), seed)

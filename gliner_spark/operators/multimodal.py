@@ -1145,26 +1145,6 @@ def image_phash_bits(
     )
 
 
-def image_near_duplicates(
-    assets: DataFrame,
-    decoder: str = "bmp",
-    max_hamming: int = 6,
-    hash_size: int = 8,
-    n_bands: int | None = None,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Image near-dup pairs (doc_a, doc_b, hamming ≤ max_hamming):
-    aHash bits → dedup.simhash_candidates banded hamming join — the
-    multimodal twin of text SimHash dedup (recall guarantee and
-    bucket-cap semantics documented there)."""
-    from .dedup import simhash_candidates
-
-    bits = image_phash_bits(assets, decoder, hash_size)
-    return simhash_candidates(
-        bits, max_hamming, hash_size * hash_size, n_bands, max_bucket_size
-    )
-
-
 def audio_fingerprint_bits(
     assets: DataFrame,
     decoder: str = "wav",
@@ -1182,8 +1162,7 @@ def audio_fingerprint_bits(
     (the published band-energy derivative sign). (n_frames−1)·
     (n_bands−1) bits — the defaults give 64, the same (doc_id, bits)
     contract as simhash_bits/image_phash_bits, so
-    `audio_near_duplicates` reuses dedup.simhash_candidates' banded
-    hamming join unchanged.
+    dedup.simhash_candidates' banded hamming join takes it unchanged.
 
     AMPLITUDE-SCALE-INVARIANT by construction: scaling the waveform by
     c scales every band energy by c², so every difference keeps its
@@ -1240,30 +1219,6 @@ def audio_fingerprint_bits(
     )
 
 
-def audio_near_duplicates(
-    assets: DataFrame,
-    decoder: str = "wav",
-    max_hamming: int = 6,
-    n_frames: int = 17,
-    n_bands: int = 5,
-    band_count: int | None = None,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Audio near-dup pairs (doc_a, doc_b, hamming ≤ max_hamming):
-    HK fingerprint bits → dedup.simhash_candidates banded hamming join
-    (recall guarantee / bucket-cap semantics documented there)."""
-    from .dedup import simhash_candidates
-
-    bits = audio_fingerprint_bits(assets, decoder, n_frames, n_bands)
-    return simhash_candidates(
-        bits,
-        max_hamming,
-        (n_frames - 1) * (n_bands - 1),
-        band_count,
-        max_bucket_size,
-    )
-
-
 def video_phash_bits(
     assets: DataFrame, decoder: str = "avi", hash_size: int = 8
 ) -> DataFrame:
@@ -1272,8 +1227,7 @@ def video_phash_bits(
     hash_size² bit vector per video. Majority folding makes the
     signature robust to frame drops/reordering and inherits the
     per-frame brightness invariance; the (doc_id, bits) contract again
-    feeds dedup.simhash_candidates unchanged
-    (`video_near_duplicates`). Pure map, zero shuffle.
+    feeds dedup.simhash_candidates unchanged. Pure map, zero shuffle.
     decoder="real" is the PyAV integration point."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1308,22 +1262,4 @@ def video_phash_bits(
 
     return assets.select("asset_id", "kind", "data").mapInPandas(
         run, PHASH_SCHEMA
-    )
-
-
-def video_near_duplicates(
-    assets: DataFrame,
-    decoder: str = "avi",
-    max_hamming: int = 6,
-    hash_size: int = 8,
-    n_bands: int | None = None,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Video near-dup pairs via the majority-folded per-frame aHash →
-    banded hamming join (same machinery as text/image/audio)."""
-    from .dedup import simhash_candidates
-
-    bits = video_phash_bits(assets, decoder, hash_size)
-    return simhash_candidates(
-        bits, max_hamming, hash_size * hash_size, n_bands, max_bucket_size
     )

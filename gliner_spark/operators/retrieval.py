@@ -24,12 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from ..plans.commit import committed, write_text
-
-# marker names of the incremental parts `_stream/batch=N` and
-# `_compacted/gen=G` (plans/commit.py)
-_SEG_MARKER = "_meta_b{}.json"
-_GEN_MARKER = "_meta_g{}.json"
+from ..plans.commit import write_text
 
 
 def bm25_rank(
@@ -133,34 +128,6 @@ def _doc_postings(toks) -> "F.Column":
     )
 
 
-def _postings_frame(
-    docs: DataFrame, n_buckets: int, text_col: str, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """(postings, per_doc) for an index build/append: postings =
-    (term, doc_id, tf, dl, bucket), per_doc = (doc_id, dl) for the
-    sidecar stats aggregate. Shared by the batch build, the batch
-    append, and the streaming per-micro-batch fold so all three write
-    bit-identical layouts."""
-    toks = tokens(F.lower(F.col(text_col)))
-    per_doc = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        toks.alias("ts"),
-        F.size(toks).alias("dl"),
-    )
-    postings = per_doc.select(
-        "doc_id",
-        F.col("dl").cast("double").alias("dl"),
-        F.explode(_doc_postings(F.col("ts"))).alias("p"),
-    ).select(
-        F.col("p.term").alias("term"),
-        "doc_id",
-        F.col("p.tf").alias("tf"),
-        "dl",
-        F.pmod(F.xxhash64("p.term"), F.lit(n_buckets)).alias("bucket"),
-    )
-    return postings, per_doc
-
-
 def build_bm25_index(
     docs: DataFrame,
     path: str,
@@ -183,8 +150,24 @@ def build_bm25_index(
     denormalized on every posting — BM25's length norm then needs no
     doc-table join at query time. df is NOT stored: it is exactly the
     posting count of a term, recomputed from the (tiny) slice the query
-    reads, which keeps appends trivially correct."""
-    postings, per_doc = _postings_frame(docs, n_buckets, text_col, id_col)
+    reads."""
+    toks = tokens(F.lower(F.col(text_col)))
+    per_doc = docs.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        toks.alias("ts"),
+        F.size(toks).alias("dl"),
+    )
+    postings = per_doc.select(
+        "doc_id",
+        F.col("dl").cast("double").alias("dl"),
+        F.explode(_doc_postings(F.col("ts"))).alias("p"),
+    ).select(
+        F.col("p.term").alias("term"),
+        "doc_id",
+        F.col("p.tf").alias("tf"),
+        "dl",
+        F.pmod(F.xxhash64("p.term"), F.lit(n_buckets)).alias("bucket"),
+    )
     agg = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl")
     ).first()
@@ -198,117 +181,6 @@ def build_bm25_index(
     }
     write_text(path, "_bm25_meta.json", json.dumps(meta))
     return meta
-
-
-def _fold_segment(
-    docs: DataFrame,
-    path: str,
-    batch_id: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> bool:
-    """Write `docs`' postings as the committed incremental segment
-    `path/_stream/batch=<batch_id>/` under plans/commit.py's
-    marker-last protocol. The shared core of the streaming fold
-    (streaming/bm25.fold_index_batch) and the batch
-    `append_to_bm25_index`. Returns True if folded; False if skipped —
-    the id is already committed, sits at/below the latest compaction
-    generation's max_batch watermark (a replay of a segment compaction
-    already folded), or `docs` is empty."""
-    gen, segs = _index_live_state(path)
-    if (
-        batch_id in segs
-        or (gen is not None and batch_id <= int(gen["max_batch"]))
-        or docs.isEmpty()
-    ):
-        return False
-    with open(os.path.join(path, "_bm25_meta.json")) as f:
-        n_buckets = int(json.load(f)["n_buckets"])
-    postings, per_doc = _postings_frame(docs, n_buckets, text_col, id_col)
-    agg = per_doc.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl")
-    ).first()
-    stream_dir = os.path.join(path, "_stream")
-    postings.repartition(F.col("bucket")).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(
-        os.path.join(stream_dir, f"batch={batch_id}")
-    )
-    marker = {
-        "batch_id": int(batch_id),
-        "n_docs": int(agg["n_docs"]),
-        "total_dl": int(agg["total_dl"] or 0),
-    }
-    write_text(stream_dir, _SEG_MARKER.format(batch_id), json.dumps(marker))
-    return True
-
-
-def _effective_stats(path: str) -> tuple[int, int, int, dict, dict]:
-    """(n_docs, total_dl, n_buckets, live gen meta or None, live
-    segment metas) over base + committed incremental parts."""
-    with open(os.path.join(path, "_bm25_meta.json")) as f:
-        meta = json.load(f)
-    gen, segs = _index_live_state(path)
-    n, t = int(meta["n_docs"]), int(meta["total_dl"])
-    if gen is not None:
-        n += int(gen["n_docs"])
-        t += int(gen["total_dl"])
-    for m in segs.values():
-        n += int(m["n_docs"])
-        t += int(m["total_dl"])
-    return n, t, int(meta["n_buckets"]), gen, segs
-
-
-def append_to_bm25_index(
-    docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> dict:
-    """Incrementally index new documents — crash-safe: the postings
-    land as a committed segment (`_fold_segment`, marker-last, batch
-    id = current watermark + 1), so a killed append leaves an invisible
-    markerless directory instead of base rows whose sidecar counts
-    never landed. The base partitions are never rewritten;
-    `compact_bm25_index` later folds accumulated appends exactly like
-    stream segments. Exact, not approximate — sidecars store total_dl
-    (not avgdl) so the merged average is the true corpus average, and
-    df is always recomputed from postings at query time so it can't go
-    stale. Single writer at a time (an id race with a live stream or a
-    concurrent append is the caller's lock to take). Returns the
-    effective corpus stats over base + all committed parts, which equal
-    a from-scratch build's sidecar on the same corpus (parity-pinned)."""
-    gen, segs = _index_live_state(path)
-    floor = int(gen["max_batch"]) if gen is not None else -1
-    _fold_segment(docs, path, max([floor, *segs]) + 1, text_col, id_col)
-    n_docs, total_dl, n_buckets, _, _ = _effective_stats(path)
-    return {
-        "n_docs": n_docs,
-        "total_dl": total_dl,
-        "n_buckets": n_buckets,
-    }
-
-
-def _index_live_state(path: str) -> tuple[dict | None, dict[int, dict]]:
-    """Crash-safe view of a persisted BM25 index's incremental parts:
-    (latest COMMITTED compaction generation's meta or None, {batch_id:
-    meta} of the committed streaming segments not folded into it,
-    batch-ascending).
-
-    Parts commit under plans/commit.py's marker-last protocol
-    (`_compacted/_meta_gG.json`, `_stream/_meta_bN.json`), and
-    visibility hangs off ONE watermark: Structured Streaming batch ids
-    are monotone, so a segment is live iff `batch_id > gen["max_batch"]`.
-    Anything a crashed compaction cleanup left behind — an older
-    generation, an already-folded segment whose directory still exists —
-    is below the watermark and therefore never read and never counted,
-    which is what makes `compact_bm25_index` safe to kill at any
-    point."""
-    gens = committed(os.path.join(path, "_compacted"), _GEN_MARKER)
-    gen = gens[max(gens)] if gens else None
-    floor = int(gen["max_batch"]) if gen else -1
-    segs = committed(os.path.join(path, "_stream"), _SEG_MARKER)
-    return gen, {b: segs[b] for b in sorted(segs) if b > floor}
 
 
 def bm25_against_index(
@@ -330,22 +202,13 @@ def bm25_against_index(
     as `bm25_rank`, so on matching docs the two rankings agree exactly
     (parity-pinned). Difference inherent to any inverted index: only
     docs containing ≥1 query term are candidates — bm25_rank ranks
-    score-0 docs too when fewer than top_k docs match.
-
-    If the index has COMMITTED incremental parts (streaming/bm25.py:
-    `path/_stream/batch=N/` segments and at most one live
-    `path/_compacted/gen=G/` compaction generation, each committed iff
-    its marker file exists), they are unioned in with the same
-    bucket/term pruning — the batch=/gen=/bucket= partition filters are
-    all literal, so the scan still reads only the query's slice.
-    Uncommitted (markerless) parts and parts subsumed by the live
-    generation (`_index_live_state`) are invisible: both their rows and
-    their sidecar counts are excluded, keeping a crashed half-written
-    fold — or a compaction killed at ANY point — unreadable."""
+    score-0 docs too when fewer than top_k docs match."""
     if not query_terms:
         raise ValueError("bm25_against_index needs at least one term")
-    tot_docs, tot_dl, n_buckets, gen, segs = _effective_stats(path)
-    stream_dir = os.path.join(path, "_stream")
+    with open(os.path.join(path, "_bm25_meta.json")) as f:
+        meta = json.load(f)
+    tot_docs, tot_dl = int(meta["n_docs"]), int(meta["total_dl"])
+    n_buckets = int(meta["n_buckets"])
     n_docs = float(tot_docs)
     avgdl = tot_dl / tot_docs if tot_docs else 1.0
     # buckets for the literal IN filter: hash the terms with the SAME
@@ -357,35 +220,16 @@ def bm25_against_index(
     )
     buckets = sorted({r["bucket"] for r in bdf.collect()})
     # explicit schema: skips footer-sampling inference AND keeps an
-    # empty base (index built before any docs, stream-only ingest)
-    # readable — an all-partition-pruned dir has no file to infer from
-    cols = "term string, doc_id long, tf double, dl double"
+    # empty index (built over no docs) readable — an all-partition-pruned
+    # dir has no file to infer from
     post = (
-        spark.read.schema(f"{cols}, bucket bigint")
+        spark.read.schema(
+            "term string, doc_id long, tf double, dl double, bucket bigint"
+        )
         .parquet(path)
         .where(F.col("bucket").isin(buckets))
         .where(F.col("term").isin(query_terms))
     )
-    if gen is not None:
-        gp = (
-            spark.read.schema(f"{cols}, bucket bigint")
-            .parquet(
-                os.path.join(path, "_compacted", f"gen={int(gen['gen'])}")
-            )
-            .where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(query_terms))
-        )
-        post = post.unionByName(gp)
-    if segs:
-        sp = (
-            spark.read.schema(f"{cols}, bucket bigint, batch bigint")
-            .parquet(stream_dir)
-            .where(F.col("batch").isin(list(segs)))
-            .where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(query_terms))
-            .drop("batch")
-        )
-        post = post.unionByName(sp)
     df_tbl = post.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
     )
@@ -570,12 +414,12 @@ def assemble_context(
     order and keep documents until the token budget fills → input
     columns + `cum_tokens` (the running total INCLUDING the row).
 
-    Admission rule is the repo's budget rule (mixture_sample /
-    stream_budget_admit): a doc is kept iff the total BEFORE it is
-    under budget — the crossing doc ships, so the best-ranked chunk
-    always makes it even when it alone exceeds the budget. One window
-    cumsum per query (the partition is a candidate list, k-sized by
-    construction — the ranker already did the corpus-scale work).
+    Admission rule is the repo's budget rule (mixture_sample): a doc
+    is kept iff the total BEFORE it is under budget — the crossing doc
+    ships, so the best-ranked chunk always makes it even when it alone
+    exceeds the budget. One window cumsum per query (the partition is a
+    candidate list, k-sized by construction — the ranker already did
+    the corpus-scale work).
 
     The cumsum window tie-breaks equal ranks on `doc_id` when the
     input carries one (rank() rankers emit ties; a tie-order-dependent

@@ -59,46 +59,20 @@ def knn_bruteforce(
     )
 
 
-def nearest_centroid(vec_col: Column, cent_lists: list[list[float]]) -> Column:
-    """argmin over ‖x − c_i‖² as ONE native expression: the k centroids
-    ride the plan as literals (broadcast by construction — no join, no
-    shuffle for assignment), the min is a struct-ordered array_min with
-    deterministic index tie-break. Shared by kmeans assignment and the IVF
-    cell routing so both always use the identical metric."""
-    choices = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        vec_col,
-                        F.array(*[F.lit(v) for v in c]),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("dist2"),
-                F.lit(i).alias("cluster"),
-            )
-            for i, c in enumerate(cent_lists)
-        ]
-    )
-    return F.array_min(choices)
-
-
 def assign_nearest(
     df: DataFrame, cent_lists: list[list[float]], vec_col: str
 ) -> DataFrame:
-    """nearest_centroid over a whole DataFrame with the k×d centroid
-    matrix riding as a ONE-ROW broadcast-joined column (`_with_const`)
-    instead of k×d expression literals — identical argmin arithmetic and
-    (dist2, cluster) tie-break (parity-pinned in test_corpus_ops), but
-    the constant tensor materializes once per batch instead of being
-    re-created per row: the broadcast-tensor rule that bought 16× on
-    the SQL PQ encode buys ~1.4× here at k=64, on EVERY corpus-side assignment
-    (each Lloyd's iteration + the index build). Adds `cluster`/`dist2`.
+    """argmin over ‖x − c_i‖² for every row, with a deterministic
+    (dist2, cluster) index tie-break. The k×d centroid matrix rides as a
+    ONE-ROW broadcast-joined column (`_with_const`) instead of k×d
+    expression literals, so the constant tensor materializes once per
+    batch instead of being re-created per row: the broadcast-tensor rule
+    that bought 16× on the SQL PQ encode buys ~1.4× here at k=64, on
+    EVERY corpus-side assignment (each Lloyd's iteration + the index
+    build). Adds `cluster`/`dist2`.
 
-    Literal-riding nearest_centroid stays for the per-QUERY probe
-    selection, where rows are few and a crossJoin would cost more than
+    The per-QUERY probe selection (`_probe_and_rank`) keeps literal
+    centroids, where rows are few and a crossJoin would cost more than
     it saves."""
     d = _with_const(
         df, "_ct", [list(map(float, c)) for c in cent_lists],
@@ -251,7 +225,7 @@ def knn_ivf(
     train   Lloyd's k-means (few iterations partition well enough) gives
             the n_cells centroids;
     assign  every corpus vector routes to its argmin-‖x−c‖² cell — the
-            SAME `nearest_centroid` expression k-means assignment uses,
+            SAME `assign_nearest` expression k-means assignment uses,
             so cell contents really are the Voronoi regions the probe
             step assumes (the r01 version hash-assigned cells at random,
             making probing ≈ uniform sampling — not ANN);
@@ -384,38 +358,6 @@ def build_ivf_index(
     return cents
 
 
-def append_to_ivf_index(embeddings: DataFrame, path: str) -> None:
-    """Incremental ingest into a persisted IVF index: assign the NEW
-    vectors to the EXISTING centroids (read from the sidecar — the
-    quantizer is immutable after build, the FAISS add() contract) and
-    append them under their cell partitions. No shuffle beyond the
-    co-locating repartition of the new shard; existing cells are never
-    rewritten or re-read. Probes see old + new rows transparently
-    (partition append is how a lakehouse ingests — the Iceberg
-    equivalent is an append snapshot on the bucketed table).
-
-    Periodic rebuild is still the curator's job: if the data
-    distribution drifts far from the frozen centroids, recall decays —
-    measure with `corpus_divergence` between the index's training
-    corpus and the appended stream, and rebuild past a threshold.
-    The append is a plain `mode("append")`, neither atomic nor
-    idempotent: a crash leaves visible part-files and a retry
-    duplicates rows (ROADMAP direction 4)."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_centroids.json")) as f:
-        cents = json.load(f)
-    new = (
-        assign_nearest(embeddings.select("vec_id", _unit()), cents, "unit")
-        .withColumnRenamed("cluster", "cell")
-        .drop("dist2")
-    )
-    new.repartition(F.col("cell")).write.mode("append").partitionBy(
-        "cell"
-    ).parquet(path)
-
-
 def knn_ivf_indexed(
     spark,
     index_path: str,
@@ -542,10 +484,10 @@ def train_pq(
     # the row's own subspace codebook is picked by indexing the broadcast
     # codebook tensor with the row's `j` — ONE parsed SQL expression over
     # a one-row broadcast column (the per-subspace when-chain of composed
-    # nearest_centroid Columns cost seconds of driver wall per iteration
-    # in py4j expression construction alone, and an expression-literal
-    # tensor is re-evaluated per element inside HOF lambdas — see
-    # _with_books)
+    # per-centroid distance Columns cost seconds of driver wall per
+    # iteration in py4j expression construction alone, and an
+    # expression-literal tensor is re-evaluated per element inside HOF
+    # lambdas — see _with_books)
     assign = F.expr(_pq_argmin_sql("sub", "_bk", "j", k))
 
     for _ in range(kmeans_iter):
@@ -593,7 +535,7 @@ def _with_books(df: DataFrame, codebooks) -> DataFrame:
 
 def _pq_argmin_sql(sub: str, books: str, j: str, k: int) -> str:
     """argmin_i ‖sub − books[j][i]‖² with index tie-break, as SQL text:
-    same struct-ordered array_min metric as nearest_centroid, but the
+    same struct-ordered array_min metric as assign_nearest, but the
     k-way unroll is a zip_with over the codebook column instead of k
     composed Column objects (the py4j-free formulation — building the
     composed version for m·k=128 centroids cost ~10 s of pure driver
@@ -1015,33 +957,13 @@ def build_ivfpq_index(
     _assigned, cents, _inertia = kmeans(
         train, k=n_cells, max_iter=kmeans_iter, seed=seed
     )
-    resid = _ivfpq_residuals(embeddings, cents)
-    books = train_pq(
-        resid,
-        m=m,
-        nbits=nbits,
-        kmeans_iter=pq_iter,
-        seed=seed,
-        sample_cap=sample_cap,
-        normalize=False,
-    )
-    _ivfpq_write_cells(resid, books, nbits, path, mode="overwrite")
-    meta = {"cents": cents, "books": books, "nbits": nbits}
-    write_text(path, "_ivfpq.json", json.dumps(meta))
-    return cents, books
-
-
-def _ivfpq_residuals(embeddings: DataFrame, cents) -> DataFrame:
-    """(cell, vec_id, embedding=residual x − c_cell): the shared
-    assign→residual stage of build AND append — one definition so the
-    two paths can never encode differently against the same frozen
-    coarse quantizer."""
     corpus = (
         assign_nearest(embeddings.select("vec_id", _unit()), cents, "unit")
         .withColumnRenamed("cluster", "cell")
         .drop("dist2")
     )
-    return _with_const(
+    # the quantizer sees the RESIDUAL x − c_cell
+    resid = _with_const(
         corpus,
         "_ct",
         [list(map(float, c)) for c in cents],
@@ -1053,50 +975,24 @@ def _ivfpq_residuals(embeddings: DataFrame, cents) -> DataFrame:
             "embedding"
         ),
     )
-
-
-def _ivfpq_write_cells(
-    resid: DataFrame, books, nbits: int, path: str, mode: str
-) -> None:
-    """Shared encode→partitioned-write stage of build and append."""
+    books = train_pq(
+        resid,
+        m=m,
+        nbits=nbits,
+        kmeans_iter=pq_iter,
+        seed=seed,
+        sample_cap=sample_cap,
+        normalize=False,
+    )
     enc = _pq_codes_udf(books, nbits)
     resid.select(
         "cell", "vec_id", enc(F.col("embedding")).alias("packed")
-    ).repartition(F.col("cell")).write.mode(mode).partitionBy(
+    ).repartition(F.col("cell")).write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(path)
-
-
-def append_to_ivfpq_index(embeddings: DataFrame, path: str) -> None:
-    """Incremental ingest into a persisted IVF-PQ index — the
-    append_to_ivf_index contract with the compression kept: BOTH
-    quantizers are immutable after build (the FAISS add() rule), so new
-    vectors are routed to their existing coarse cell, their residual
-    x − c_cell is encoded against the existing codebooks (the Arrow
-    batch encoder), and the packed BIGINT rows append under their cell
-    partitions. No shuffle beyond the co-locating repartition of the
-    new shard; existing cells are never rewritten or re-read, and
-    queries see old + new rows transparently (ADC scores of appended
-    rows are identical to build-time encoding of the same vectors —
-    parity-pinned in test_corpus_ops).
-
-    As with the uncompressed index, distribution drift degrades recall
-    against frozen quantizers — measure with `corpus_divergence` and
-    rebuild past a threshold. The append is a plain `mode("append")`,
-    neither atomic nor idempotent: a crash leaves visible part-files
-    and a retry duplicates rows (ROADMAP direction 4)."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_ivfpq.json")) as f:
-        meta = json.load(f)
-    _ivfpq_write_cells(
-        _ivfpq_residuals(embeddings, meta["cents"]),
-        meta["books"],
-        meta["nbits"],
-        path,
-        mode="append",
-    )
+    meta = {"cents": cents, "books": books, "nbits": nbits}
+    write_text(path, "_ivfpq.json", json.dumps(meta))
+    return cents, books
 
 
 def knn_ivfpq_indexed(

@@ -1,8 +1,8 @@
 """Marker-last commit protocol shared by every file-backed store.
 
-A store keeps its state as parts: a directory of data files (`batch=N`,
-`gen=G`, `_gen=N`, a stage output) plus a small marker file (`_meta_bN.json`,
-`_meta_gG.json`, `_gen=N.ok`, `_FINGERPRINT`). The protocol:
+A store keeps its state as parts: a directory of data files (a rank
+generation `bN`, a stage output) plus a small marker file (`_meta_bN.json`,
+`_FINGERPRINT`). The protocol:
 
  * a part is visible iff its marker exists;
  * the marker is written LAST and atomically (`write_atomic`): a reader

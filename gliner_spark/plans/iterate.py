@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 # The most rows a size-gated solver hands to ONE task: the edge count
-# below which connected_components, core_numbers (so k_core) and
+# below which connected_components, core_numbers and
 # strongly_connected_components finish locally, and the band-row count
 # (surfaces × bands) below which canonicalize runs in one task.
 SMALL_SOLVE = 500_000

@@ -9,8 +9,6 @@ shape for this engine, so the streaming path is first-class:
    (operators/ner.py mapInArrow) is a NARROW streaming transformation, so
    the same code serves batch and stream — only watermarks and sinks
    differ. `ts` rides through extraction via the passthrough gather.
- * `windowed_entity_counts` — tumbling-window counts with a watermark for
-   late turns: the standard late-data-tolerant aggregation.
  * `stream_to_kg` — foreachBatch bridge: each micro-batch runs the batch
    triple extractor and APPENDS to the triples table; per-batch lineage
    rows come from the checkpointed batch_id, making replays idempotent
@@ -24,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig, DEFAULT
-from ..operators.ner import extract_entities
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -39,38 +36,6 @@ def read_transcript_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load()
-
-
-def stream_entities(
-    stream: DataFrame,
-    labels: list[str],
-    cfg: PipelineConfig | None = None,
-) -> DataFrame:
-    """Streaming NER: identical operator to batch, with ts passed through
-    for downstream event-time windows."""
-    return extract_entities(
-        stream, labels, cfg, passthrough=("conv_id", "turn_idx", "ts")
-    )
-
-
-def windowed_entity_counts(
-    entities_with_ts: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Tumbling-window per-label mention counts, late data bounded by the
-    watermark (events later than it are dropped, state is GC'd)."""
-    return (
-        entities_with_ts.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), F.col("label"))
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "label",
-            "n_mentions",
-        )
-    )
 
 
 def stream_to_kg(
@@ -105,158 +70,3 @@ def stream_to_kg(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def stream_sessionize(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of operators/sessions.sessionize + session_stats:
-    native `session_window` gap sessionization. State is BOUNDED by the
-    watermark — a session closes (and its state is evicted) once the
-    watermark passes last_event + gap, which is the only formulation
-    that survives an unbounded feed; the batch operator's running-sum
-    window would need the full history per key.
-
-    Boundary note: `session_window` merges events strictly closer than
-    the gap (an event at exactly prev + gap starts a NEW session), while
-    the batch operator keeps `gap == gap_seconds` in the SAME session
-    (`gap_us > gap_seconds`). Identical on real timestamps; differs only
-    on exact-gap ties (parity-tested with tie-free data).
-
-    → (key, n_events, session_start, session_end, duration_us), the
-    batch `session_stats` shape minus the running session_idx (a global
-    per-key ordinal is not computable incrementally without unbounded
-    state; the (key, session_start) pair is the streaming session id).
-    """
-    ts = F.col(ts_col).cast("timestamp")
-    return (
-        stream.withColumn(ts_col, ts)
-        .withWatermark(ts_col, watermark)
-        .groupBy(
-            F.session_window(F.col(ts_col), f"{gap_seconds} seconds"),
-            F.col(key_col),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
-        )
-        .select(
-            key_col,
-            "n_events",
-            "session_start",
-            "session_end",
-            (
-                F.unix_micros(F.col("session_end"))
-                - F.unix_micros(F.col("session_start"))
-            ).alias("duration_us"),
-        )
-    )
-
-
-def stream_dedup(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup: content-hash
-    `dropDuplicatesWithinWatermark` — the state-BOUNDED formulation. An
-    unbounded streaming dedup state is impossible at 10^12 turns; the
-    watermark is the contract: duplicates arriving within the window are
-    dropped, and hashes older than it age out of the state store (a
-    re-arrival after that is the batch dedup pass's job). Same content
-    hash as the batch operator (dedup.exact_duplicates), so batch and
-    stream agree on identity."""
-    from ..functions.text import normalized_text
-
-    return (
-        stream.withColumn(
-            "content_hash", F.md5(normalized_text(F.col(text_col)))
-        )
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["content_hash"])
-    )
-
-
-def stream_url_dedup(
-    stream: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming URL-keyed dedup: the C4 fetch-variant collapse
-    (textstats.normalize_url) as a state-bounded
-    `dropDuplicatesWithinWatermark` on the CANONICAL url — a crawl
-    frontier re-fetching the same page under tracking-param/port/
-    fragment variants within the window emits it once. Same canonical
-    form as the batch operator (textstats.url_duplicates), so batch
-    and stream agree on page identity; re-arrivals past the watermark
-    are the batch pass's job, exactly like `stream_dedup`."""
-    from ..operators.textstats import normalize_url
-
-    return (
-        stream.withColumn("canonical_url", normalize_url(F.col(url_col)))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["canonical_url"])
-    )
-
-
-def stream_interval_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_ts: str = "ts",
-    start_col: str = "start",
-    end_col: str = "end",
-    key_cols: tuple[str, ...] = ("user_id",),
-    max_span_seconds: int = 3600,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming twin of `temporal.interval_join`: a watermarked
-    stream-stream INNER join matching each arriving point to the
-    interval rows that contain it (start ≤ ts ≤ end, equality on
-    `key_cols`) — the live enrichment shape (events against open
-    maintenance windows, turns against active experiment windows).
-
-    State boundedness is the whole design: both sides carry an
-    event-time watermark and the join condition pins
-    end ≤ start + `max_span_seconds`, so Spark can derive that a
-    buffered interval is joinable only while
-    start ≥ watermark − max_span and evict everything older — without
-    the span bound the interval side would be unbounded state. The
-    bound is a CONTRACT (longer intervals are dropped by the filter,
-    loudly part of the semantics, the same stance as the batch
-    operator's skew note).
-
-    One availableNow pass over static-in-a-dir data equals the batch
-    operator filtered to the same max-span (parity-pinned in tests).
-    """
-    p = points.withWatermark(point_ts, watermark_delay)
-    i = intervals.where(
-        (F.col(end_col) >= F.col(start_col))
-        & (
-            F.col(end_col).cast("long")
-            <= F.col(start_col).cast("long") + F.lit(int(max_span_seconds))
-        )
-    ).withWatermark(start_col, watermark_delay)
-    pa = p.alias("p")
-    ia = i.alias("i")
-    cond = (
-        (F.col(f"p.{point_ts}") >= F.col(f"i.{start_col}"))
-        & (F.col(f"p.{point_ts}") <= F.col(f"i.{end_col}"))
-        # implied by end <= start + span, but stated IN the join
-        # condition so the streaming planner can derive the state
-        # eviction bound between the two watermarked columns
-        & (
-            F.col(f"p.{point_ts}")
-            <= F.col(f"i.{start_col}")
-            + F.expr(f"INTERVAL {int(max_span_seconds)} SECONDS")
-        )
-    )
-    for kc in key_cols:
-        cond = cond & (F.col(f"p.{kc}") == F.col(f"i.{kc}"))
-    return pa.join(ia, cond, "inner")

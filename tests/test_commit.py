@@ -1,9 +1,11 @@
-"""Marker-last commit protocol (plans/commit.py) across the file-backed
-stores: a crash while a marker's content is written leaves the previous
-committed state readable, compaction GC sweeps markerless dead parts,
-and concurrent package-zip builds never share a temp file."""
+"""Marker-last commit protocol (plans/commit.py): a crash while a
+marker's content is written leaves the previous committed state
+readable, GC removes a marker before its part and sweeps markerless
+dead parts, and concurrent package-zip builds never share a temp
+file."""
 
 import builtins
+import json
 import os
 import shutil
 import tempfile
@@ -11,46 +13,16 @@ import threading
 import zipfile
 
 import pytest
+from pyspark.sql import Row
 
-from gliner_spark.operators.retrieval import (
-    bm25_against_index,
-    build_bm25_index,
-)
-from gliner_spark.operators.sketches import (
-    build_countmin,
-    current_countmin,
-    fold_countmin_batch,
-)
-from gliner_spark.streaming.bm25 import compact_bm25_index, fold_index_batch
+from gliner_spark.operators.graph import pagerank
+from gliner_spark.plans import commit
+from gliner_spark.streaming.graphrank import current_ranks, fold_edge_batch
 
-BASE = [
-    (0, "spark shuffle join spark spark"),
-    (1, "window scan filter table"),
-    (2, "spark window window table row"),
-]
-B0 = [(10, "spark table spark"), (11, "join window join")]
-B1 = [(12, "window spark window"), (13, "")]
-B2 = [(20, "spark window spark window")]
-WORDS = [f"w{i % 37}" for i in range(300)] + ["hot"] * 100
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def _rank(spark, path):
-    return [
-        (r.doc_id, r.score, r.rk)
-        for r in bm25_against_index(
-            spark, path, ["spark", "window"], top_k=10
-        ).collect()
-    ]
-
-
-def _rebuilt_rank(spark, tmp_path, rows):
-    full = str(tmp_path / "full")
-    build_bm25_index(_docs(spark, rows), full, n_buckets=8)
-    return _rank(spark, full)
+# irregular degrees, so the ranks are not trivially uniform
+EDGES = sorted({((i * i + i) % 13, (i * 7 + 2) % 17) for i in range(40)})
+MORE = [(0, 16), (16, 2), (5, 16)]
+TOL = 1e-10
 
 
 def _tear_writes(monkeypatch, torn):
@@ -83,101 +55,83 @@ def _tear_writes(monkeypatch, torn):
     monkeypatch.setattr(builtins, "open", fake_open)
 
 
-def _bm25_segment(spark, tmp_path):
-    path = str(tmp_path / "idx")
-    build_bm25_index(_docs(spark, BASE), path, n_buckets=8)
-    fold_index_batch(_docs(spark, B0), 0, path)
+def _rank_generation(spark, tmp_path):
+    """streaming/graphrank's store: a fold commits rank generation
+    `b1` with the JSON marker `_meta_b1.json`."""
+    base = f"commit_gr_{tmp_path.name}"
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    store = os.path.join(wh, base)
+    shutil.rmtree(store, ignore_errors=True)
+
+    def edges(pairs):
+        return spark.createDataFrame([Row(src=s, dst=d) for s, d in pairs])
+
+    def ranks(df):
+        return {r.entity_id: r.rank for r in df.collect()}
+
+    fold_edge_batch(edges(EDGES), 0, base, tol=TOL)
     return (
-        lambda: fold_index_batch(_docs(spark, B1), 1, path),
-        lambda: _rank(spark, path),
-        lambda: _rebuilt_rank(spark, tmp_path, BASE + B0 + B1),
-        os.path.join(path, "_stream", "_meta_b1.json"),
-        lambda data: '"batch_id"' in data,
+        lambda: fold_edge_batch(edges(MORE), 1, base, tol=TOL),
+        lambda: ranks(current_ranks(spark, base)),
+        lambda: ranks(
+            pagerank(
+                edges(EDGES + MORE), max_iter=100, tol=TOL,
+                src_col="src", dst_col="dst",
+            )
+        ),
+        os.path.join(store, "_meta_b1.json"),
+        lambda data: '"shards"' in data,
+        lambda: shutil.rmtree(store, ignore_errors=True),
     )
 
 
-def _bm25_compaction(spark, tmp_path):
-    path = str(tmp_path / "idx")
-    build_bm25_index(_docs(spark, BASE), path, n_buckets=8)
-    fold_index_batch(_docs(spark, B0), 0, path)
-    compact_bm25_index(spark, path)
-    fold_index_batch(_docs(spark, B1), 1, path)
-    return (
-        lambda: compact_bm25_index(spark, path),
-        lambda: _rank(spark, path),
-        lambda: _rebuilt_rank(spark, tmp_path, BASE + B0 + B1),
-        os.path.join(path, "_compacted", "_meta_g1.json"),
-        lambda data: '"max_batch"' in data,
-    )
-
-
-def _sketch_generation(spark, tmp_path):
-    state = str(tmp_path / "cms")
-
-    def words(ws):
-        return spark.createDataFrame([(w,) for w in ws], "word string")
-
-    def counters(df):
-        return sorted((r["d"], r["bucket"], r["n"]) for r in df.collect())
-
-    a, b = WORDS[:150], WORDS[150:]
-    fold_countmin_batch(words(a), state, "word", width=64)
-    return (
-        lambda: fold_countmin_batch(words(b), state, "word", width=64),
-        lambda: counters(current_countmin(spark, state)),
-        lambda: counters(build_countmin(words(a + b), "word", width=64)),
-        os.path.join(state, "_gen=1.ok"),
-        lambda data: data == "ok",
-    )
-
-
-@pytest.mark.parametrize(
-    "store", [_bm25_segment, _bm25_compaction, _sketch_generation]
-)
+@pytest.mark.parametrize("store", [_rank_generation])
 def test_torn_marker_write_keeps_previous_state(
     spark, tmp_path, monkeypatch, store
 ):
-    fold, read, want, marker, torn = store(spark, tmp_path)
-    before = read()
-    _tear_writes(monkeypatch, torn)
-    with pytest.raises(OSError, match="injected crash"):
+    fold, read, want, marker, torn, cleanup = store(spark, tmp_path)
+    try:
+        before = read()
+        _tear_writes(monkeypatch, torn)
+        with pytest.raises(OSError, match="injected crash"):
+            fold()
+        monkeypatch.undo()
+        assert read() == before
+        assert not os.path.exists(marker)
         fold()
+        assert os.path.exists(marker)
+        assert read() == pytest.approx(want(), abs=1e-7)
+    finally:
+        cleanup()
+
+
+def test_compaction_sweeps_markerless_dead_parts(tmp_path, monkeypatch):
+    """drop_dead, the GC step after a compaction, removes dead ids with
+    or without a marker, and removes a marker before its part: a GC
+    killed between the two leaves only a markerless part, invisible to
+    `committed`, that the next GC sweeps. Live ids keep their parts,
+    markerless or not."""
+    d = str(tmp_path)
+    marker, part = "_meta_b{}.json", "b{}"
+    for i in range(5):
+        os.makedirs(os.path.join(d, part.format(i)))
+        if i < 3:  # parts 3 and 4 are markerless
+            commit.write_text(d, marker.format(i), json.dumps({"id": i}))
+    assert commit.committed(d, marker) == {i: {"id": i} for i in range(3)}
+
+    def crash(path, ignore_errors=False):
+        raise OSError("injected crash between marker and part removal")
+
+    monkeypatch.setattr(commit.shutil, "rmtree", crash)
+    with pytest.raises(OSError, match="injected crash"):
+        commit.drop_dead(d, marker, part, lambda i: i == 0)
     monkeypatch.undo()
-    assert read() == before
-    assert not os.path.exists(marker)
-    fold()
-    assert os.path.exists(marker)
-    assert read() == want()
+    assert commit.committed(d, marker) == {i: {"id": i} for i in (1, 2)}
+    assert os.path.isdir(os.path.join(d, part.format(0)))
 
-
-def test_compaction_sweeps_markerless_dead_parts(spark, tmp_path):
-    """A GC killed between a marker's removal and its directory's rmtree
-    leaves a markerless folded segment or superseded generation: the
-    next compaction must delete it. A markerless segment above the
-    watermark may be an in-flight fold and must survive."""
-    path = str(tmp_path / "idx")
-    comp_dir = os.path.join(path, "_compacted")
-    stream_dir = os.path.join(path, "_stream")
-    build_bm25_index(_docs(spark, BASE), path, n_buckets=8)
-    fold_index_batch(_docs(spark, B0), 0, path)
-    fold_index_batch(_docs(spark, B1), 1, path)
-    assert compact_bm25_index(spark, path) == 2
-    saved = str(tmp_path / "saved_gen0")
-    shutil.copytree(os.path.join(comp_dir, "gen=0"), saved)
-    fold_index_batch(_docs(spark, B2), 2, path)
-    assert compact_bm25_index(spark, path) == 1
-    shutil.copytree(saved, os.path.join(comp_dir, "gen=0"))
-    shutil.copytree(saved, os.path.join(stream_dir, "batch=0"))
-    fold_index_batch(_docs(spark, [(99, "spark spark spark")]), 99, path)
-    os.remove(os.path.join(stream_dir, "_meta_b99.json"))
-
-    assert compact_bm25_index(spark, path) == 0
-    assert not os.path.exists(os.path.join(comp_dir, "gen=0"))
-    assert not os.path.exists(os.path.join(stream_dir, "batch=0"))
-    assert os.path.isdir(os.path.join(stream_dir, "batch=99"))
-    assert _rank(spark, path) == _rebuilt_rank(
-        spark, tmp_path, BASE + B0 + B1 + B2
-    )
+    commit.drop_dead(d, marker, part, lambda i: i in (0, 1, 3))
+    assert commit.committed(d, marker) == {2: {"id": 2}}
+    assert sorted(os.listdir(d)) == ["_meta_b2.json", "b2", "b4"]
 
 
 def test_concurrent_package_zip_builds(monkeypatch, tmp_path, tmp_path_factory):

@@ -197,38 +197,6 @@ def test_embedding_near_dup_bruteforce_vs_duckdb(spark, embeddings, ddb):
         assert abs(got[k] - exp[k]) < 1e-6
 
 
-def test_embedding_lsh_is_subset_with_high_recall(spark, embeddings):
-    """PLANTED near-duplicates: the driver testdata has zero pairs at
-    cosine ≥ 0.8 at every SF, which made the original form of this test
-    vacuous (empty exact set → recall check skipped). Each base vector
-    gets a noisy twin at cosine ≈ 0.997; LSH must be a subset of exact
-    and recover ≥ 90% of it."""
-    import numpy as np
-
-    from gliner_spark.operators.dedup import (
-        embedding_near_duplicates_bruteforce,
-        embedding_near_duplicates_lsh,
-    )
-
-    rng = np.random.RandomState(5)
-    base = rng.standard_normal((40, 64))
-    rows = []
-    for i, v in enumerate(base):
-        rows.append((i, [float(x) for x in v]))
-        w = v + rng.normal(0, 0.05, 64)
-        rows.append((1000 + i, [float(x) for x in w]))
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    exact = {(r.vec_a, r.vec_b)
-             for r in embedding_near_duplicates_bruteforce(
-                 df, threshold=0.95).collect()}
-    approx = {(r.vec_a, r.vec_b)
-              for r in embedding_near_duplicates_lsh(
-                  df, threshold=0.95, dim=64).collect()}
-    assert len(exact) >= 40  # every planted twin is a true pair
-    assert approx <= exact
-    assert len(approx) / len(exact) >= 0.9
-
-
 # -------------------------------------------------------------- similarity
 
 
@@ -367,6 +335,9 @@ def test_language_id_accuracy(spark, docs):
     assert pred.count() == n
 
 
+# -------------------------------------------------------------- multimodal
+
+
 def test_fingerprints_vs_duckdb(spark, docs, ddb):
     from gliner_spark.operators.textstats import fingerprints
 
@@ -394,9 +365,6 @@ def test_rolling_hash_shift_invariance(spark):
     fp = {r.doc_id: r.rolling_hash for r in fingerprints(d).collect()}
     assert fp[1] == fp[2]
     assert fp[1] != fp[3]
-
-
-# -------------------------------------------------------------- multimodal
 
 
 def test_multimodal_fake_features_deterministic(spark):
@@ -1769,162 +1737,14 @@ def test_semantic_duplicates_planted_twins(spark):
         assert abs(got[key] - exact[key]) < 1e-9
 
 
-def test_semantic_dedup_survivors_keep_rule(spark):
-    """Survivors = one per connected component (python union-find
-    oracle over the operator's own pairs), and the kept vector is the
-    component member FARTHEST from its cluster centroid (the paper's
-    diversity rule), vec_id tie-break."""
-    import numpy as np
-
-    from gliner_spark.operators.dedup import (
-        semantic_dedup_survivors,
-        semantic_duplicates,
-    )
-    from gliner_spark.operators.similarity import kmeans
-
-    rng = np.random.RandomState(9)
-    base = rng.standard_normal((30, 16)) * 3.0
-    rows = []
-    for i, v in enumerate(base):
-        rows.append((i, [float(x) for x in v]))
-        rows.append((1000 + i, [float(x) for x in (v + rng.normal(0, 0.03, 16))]))
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    pairs = semantic_duplicates(df, threshold=0.95, n_clusters=4, seed=5)
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in pairs.collect():
-        ra, rb = find(r.vec_a), find(r.vec_b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    all_ids = [r.vec_id for r in df.select("vec_id").collect()]
-    n_components = len({find(i) for i in all_ids})
-
-    surv = semantic_dedup_survivors(df, threshold=0.95, n_clusters=4, seed=5)
-    kept = {r.vec_id for r in surv.collect()}
-    assert len(kept) == n_components
-
-    # keep rule: farthest-from-centroid member of each component
-    assigned, _c, _ = kmeans(df, k=4, seed=5)
-    dist = {r.vec_id: r.dist2 for r in assigned.collect()}
-    groups = {}
-    for i in all_ids:
-        groups.setdefault(find(i), []).append(i)
-    for members in groups.values():
-        want = max(members, key=lambda i: (dist[i], -i))
-        assert want in kept
-
-
-def test_minhash_index_probe_finds_planted_dups(spark, docs, tmp_path_factory):
-    """build_minhash_index + near_dup_against_index: a new shard holding
-    exact copies of corpus docs (shifted ids) plus novel docs. Copies
-    must surface with est_jaccard == 1.0; novel docs must not pair at a
-    high threshold; and the probe's value set must equal recomputing the
-    same bands in-batch (shared-expression bit parity)."""
-    from gliner_spark.operators.dedup import (
-        build_minhash_index,
-        near_dup_against_index,
-    )
-
-    base = str(tmp_path_factory.mktemp("mh_idx"))
-    corpus = docs.limit(40)
-    try:
-        build_minhash_index(corpus, "mhx", path=base)
-        copies = corpus.limit(12).withColumn(
-            "doc_id", F.col("doc_id") + 50_000
-        )
-        novel = spark.createDataFrame(
-            [(90_000 + i, f"zq{i} xv{i} wk{i} jj{i} qq{i} vv{i}")
-             for i in range(8)],
-            "doc_id long, text string",
-        )
-        probe = copies.unionByName(novel, allowMissingColumns=True)
-        got = {
-            (r.new_id, r.corpus_id): r.est_jaccard
-            for r in near_dup_against_index(
-                spark, "mhx", probe, threshold=0.9
-            ).collect()
-        }
-        for i in [r.doc_id for r in corpus.limit(12).collect()]:
-            assert got.get((i + 50_000, i)) == 1.0
-        assert not any(n >= 90_000 for n, _ in got)
-    finally:
-        spark.sql("drop table if exists mhx_buckets")
-        spark.sql("drop table if exists mhx_sigs")
-        spark.sql("drop table if exists mhx_meta")
-
-
-def test_minhash_index_probe_corpus_side_exchange_free(
-    spark, docs, tmp_path_factory
-):
-    """The point of the persisted index: neither probe join reshuffles
-    the corpus tables — every Exchange in the plan hangs off the new
-    shard or the candidate pairs, never a bucketed-table scan."""
-    from gliner_spark.operators.dedup import (
-        build_minhash_index,
-        near_dup_against_index,
-    )
-
-    base = str(tmp_path_factory.mktemp("mh_idx2"))
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast so the test sees the at-scale SMJ shape —
-        # with it on, tiny test inputs broadcast and mask bucketing
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        build_minhash_index(docs.limit(40), "mhp", path=base)
-        out = near_dup_against_index(spark, "mhp", docs.limit(5))
-        plan = out._sc._jvm.PythonSQLUtils.explainString(
-            out._jdf.queryExecution(), "formatted"
-        )
-        tree = plan.split("\n\n")[0].split("\n")
-
-        def connector_pos(ln):
-            a, b = ln.find("+-"), ln.find(":-")
-            return min(x for x in (a, b) if x >= 0) if max(a, b) >= 0 else -1
-
-        def ancestors_to_join(scan_substr):
-            (i,) = [n for n, ln in enumerate(tree) if scan_substr in ln]
-            depth = connector_pos(tree[i])
-            chain = []
-            for ln in reversed(tree[:i]):
-                pos = connector_pos(ln)
-                if 0 <= pos < depth:
-                    chain.append(ln)
-                    depth = pos
-                    if "Join" in ln:
-                        return chain
-            raise AssertionError("\n".join(tree))
-
-        for t in ("mhp_buckets", "mhp_sigs"):
-            chain = ancestors_to_join(t)
-            assert not any("Exchange" in ln for ln in chain), (t, chain)
-        # ...while the plan as a whole DOES shuffle (the probe side)
-        assert any("Exchange" in ln for ln in tree)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("drop table if exists mhp_buckets")
-        spark.sql("drop table if exists mhp_sigs")
-        spark.sql("drop table if exists mhp_meta")
-
-
 def test_assign_nearest_matches_literal_nearest_centroid(spark, embeddings):
-    """The broadcast-tensor assignment (assign_nearest) must reproduce
-    the literal-riding nearest_centroid argmin bit-for-bit — same
-    distance arithmetic, same (dist2, cluster) tie-break — since kmeans
-    and every index build now route through it."""
+    """The broadcast-tensor assignment (assign_nearest) must reproduce a
+    literal plain-Python nearest-centroid argmin bit-for-bit — the same left-to-right double sum
+    of squared differences, the same (dist2, cluster) tie-break — since
+    kmeans and every index build route through it."""
     from gliner_spark.operators.similarity import (
         assign_nearest,
         centroid_table,
-        nearest_centroid,
         unit_vector,
     )
 
@@ -1933,12 +1753,17 @@ def test_assign_nearest_matches_literal_nearest_centroid(spark, embeddings):
         for r in centroid_table(embeddings, n_cells=13).collect()
     ]
     e = embeddings.select("vec_id", unit_vector("embedding").alias("x"))
-    lit = {
-        r.vec_id: (r.best.cluster, r.best.dist2)
-        for r in e.select(
-            "vec_id", nearest_centroid(F.col("x"), cents).alias("best")
-        ).collect()
-    }
+
+    def dist2(x, c):
+        acc = 0.0
+        for a, b in zip(x, c):
+            acc = acc + (a - b) * (a - b)
+        return acc
+
+    lit = {}
+    for r in e.collect():
+        d, i = min((dist2(r.x, c), i) for i, c in enumerate(cents))
+        lit[r.vec_id] = (i, d)
     bc = {
         r.vec_id: (r.cluster, r.dist2)
         for r in assign_nearest(e, cents, "x").collect()
@@ -2017,55 +1842,6 @@ def test_multimodal_avi_real_decode_e2e(spark):
     m1 = int(np.abs(fr[1:].astype(int) - fr[:-1].astype(int)).sum())
     m2 = int(np.abs(swapped[1:].astype(int) - swapped[:-1].astype(int)).sum())
     assert m1 != m2
-
-
-def test_ivf_index_append_matches_bruteforce(
-    spark, embeddings, tmp_path_factory
-):
-    """append_to_ivf_index: new vectors assigned to the FROZEN centroids
-    land under their cell partitions; a full-probe query over the
-    appended index equals brute force over corpus ∪ shard (full probe
-    makes IVF exact regardless of assignment), and a planted
-    new-vector query finds its exact self at n_probe=1 (it really lives
-    in its nearest cell)."""
-    from gliner_spark.operators.similarity import (
-        append_to_ivf_index,
-        build_ivf_index,
-        knn_bruteforce,
-        knn_ivf_indexed,
-    )
-
-    path = str(tmp_path_factory.mktemp("ivf_app")) + "/index"
-    corpus = embeddings.where("vec_id < 80").select("vec_id", "embedding")
-    shard = embeddings.where("vec_id >= 80").select(
-        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
-    )
-    build_ivf_index(corpus, path, n_cells=8, seed=5)
-    append_to_ivf_index(shard, path)
-
-    q = embeddings.where("vec_id in (1, 85)").select(
-        F.when(F.col("vec_id") >= 80, F.col("vec_id") + 10_000)
-        .otherwise(F.col("vec_id"))
-        .alias("query_id"),
-        "embedding",
-    )
-    got = sorted(
-        (r.query_id, r.vec_id, r.rank)
-        for r in knn_ivf_indexed(spark, path, q, k=5, n_probe=8).collect()
-    )
-    want = sorted(
-        (r.query_id, r.vec_id, r.rank)
-        for r in knn_bruteforce(
-            corpus.unionByName(shard), q, k=5
-        ).collect()
-    )
-    assert got == want and len(got) == 10
-    # the appended vector's own cell holds it: top-1 at n_probe=1
-    self_hit = [
-        (r.query_id, r.vec_id)
-        for r in knn_ivf_indexed(spark, path, q, k=1, n_probe=1).collect()
-    ]
-    assert (10085, 10085) in self_hit
 
 
 def test_resize_video_real_pixels(spark):
@@ -2178,8 +1954,9 @@ def test_image_near_duplicates_finds_planted_pair(spark):
     from gliner_spark.operators.multimodal import (
         ASSET_SCHEMA,
         encode_bmp,
-        image_near_duplicates,
+        image_phash_bits,
     )
+    from gliner_spark.operators.dedup import simhash_candidates
 
     y, x = np.mgrid[0:24, 0:32]
 
@@ -2202,7 +1979,9 @@ def test_image_near_duplicates_finds_planted_pair(spark):
     assets = spark.createDataFrame(pdf, ASSET_SCHEMA)
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in image_near_duplicates(assets, max_hamming=6).collect()
+        for r in simhash_candidates(
+            image_phash_bits(assets), max_hamming=6, bits=64
+        ).collect()
     }
     assert (100, 101) in pairs and pairs[(100, 101)] == 0
     # far from all-pairs (231): only genuinely close patterns pair up
@@ -2257,9 +2036,10 @@ def test_audio_near_duplicates_finds_planted_scaled_copy(spark):
 
     from gliner_spark.operators.multimodal import (
         ASSET_SCHEMA,
-        audio_near_duplicates,
+        audio_fingerprint_bits,
         encode_wav,
     )
+    from gliner_spark.operators.dedup import simhash_candidates
 
     rng_i = np.arange(512, dtype=np.int64)
     rows = []
@@ -2281,7 +2061,9 @@ def test_audio_near_duplicates_finds_planted_scaled_copy(spark):
     assets = spark.createDataFrame(pdf, ASSET_SCHEMA)
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in audio_near_duplicates(assets, max_hamming=4).collect()
+        for r in simhash_candidates(
+            audio_fingerprint_bits(assets), max_hamming=4, bits=64
+        ).collect()
     }
     assert (100, 101) in pairs and pairs[(100, 101)] == 0
     assert len(pairs) < 20
@@ -2297,9 +2079,9 @@ def test_video_phash_majority_and_planted_pair(spark):
     from gliner_spark.operators.multimodal import (
         ASSET_SCHEMA,
         encode_avi,
-        video_near_duplicates,
         video_phash_bits,
     )
+    from gliner_spark.operators.dedup import simhash_candidates
 
     y, x = np.mgrid[0:12, 0:16]
 
@@ -2331,7 +2113,9 @@ def test_video_phash_majority_and_planted_pair(spark):
     assert len(bits[100]) == 64
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in video_near_duplicates(assets, max_hamming=6).collect()
+        for r in simhash_candidates(
+            video_phash_bits(assets), max_hamming=6, bits=64
+        ).collect()
     }
     assert (100, 101) in pairs and pairs[(100, 101)] == 0
     assert len(pairs) < 15
@@ -2391,58 +2175,6 @@ def test_adc_topk_arrow_mixed_cell_batches(spark):
         for s, v in scored[:5]:
             want[(qid, v)] = s
     assert got == want
-
-
-def test_ivfpq_append_frozen_quantizers(spark, tmp_path_factory):
-    """append_to_ivfpq_index: new vectors are encoded against the
-    FROZEN coarse centroids + codebooks and appended under their cell
-    partitions — appended rows carry exactly the packed codes build-
-    time encoding would give them, queries see old + new rows
-    transparently, and an appended member's own query returns it."""
-    from gliner_spark.operators.similarity import (
-        append_to_ivfpq_index,
-        build_ivfpq_index,
-        knn_ivfpq_indexed,
-    )
-
-    df, queries = _pq_fixture(spark)
-    base = df.where("vec_id < 200")
-    extra = df.where("vec_id >= 200")
-    path = str(tmp_path_factory.mktemp("ivfpq_app")) + "/index"
-    build_ivfpq_index(base, path, n_cells=8, m=4, nbits=4, seed=5)
-    before = spark.read.parquet(path).count()
-    append_to_ivfpq_index(extra, path)
-    idx = spark.read.parquet(path)
-    assert idx.count() == before + extra.count()
-
-    # appended codes == codes from an index built over the SAME frozen
-    # quantizers covering everything: build a reference by appending
-    # the whole corpus to an empty copy is overkill — instead re-run
-    # the append on a second copy and compare packed values row-by-row
-    path2 = str(tmp_path_factory.mktemp("ivfpq_app2")) + "/index"
-    build_ivfpq_index(base, path2, n_cells=8, m=4, nbits=4, seed=5)
-    append_to_ivfpq_index(extra, path2)
-    a = {(r.vec_id): (r.cell, r.packed)
-         for r in spark.read.parquet(path).collect()}
-    b = {(r.vec_id): (r.cell, r.packed)
-         for r in spark.read.parquet(path2).collect()}
-    assert a == b  # deterministic encode + routing
-
-    # an appended member queried against the index finds itself top-1
-    # after exact refine (full probe so pruning can't hide it)
-    probe = extra.where("vec_id = 250").select(
-        F.lit(9999).alias("query_id"), "embedding"
-    )
-    out = knn_ivfpq_indexed(
-        spark, path, probe, k=3, n_probe=8, refine=8, source=df
-    ).collect()
-    top = [r for r in out if r.rank == 1][0]
-    assert top.vec_id == 250 and abs(top.score - 1.0) < 1e-6
-    # ADC over old + appended rows equals the numpy replay of the index
-    q_units = _units(probe.collect(), "query_id")
-    assert _ranked_rows(
-        knn_ivfpq_indexed(spark, path, probe, k=3, n_probe=8)
-    ) == _ivfpq_replay(spark, path, q_units, k=3, n_probe=8)
 
 
 def test_np_round6_matches_spark_round_on_boundaries(spark):

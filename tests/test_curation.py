@@ -532,7 +532,7 @@ def test_curate_corpus_matches_per_tagger_oracle(planted):
     )
     from gliner_spark.operators.dedup import (
         exact_duplicates,
-        near_dedup_survivors,
+        minhash_near_duplicates,
     )
     from gliner_spark.operators.lm import score_perplexity
     from gliner_spark.operators.textstats import (
@@ -555,12 +555,21 @@ def test_curate_corpus_matches_per_tagger_oracle(planted):
         for d in r.doc_ids
         if d != r.keep_doc_id
     }
-    near_kept = ids_where(
-        near_dedup_survivors(
-            docs, jaccard_threshold=kw["near_dup_threshold"]
-        ),
-        lambda r: True,
-    )
+    # near-dup survivors: the min doc_id of each connected component
+    # of the verified pair graph (python union-find)
+    parent = {d: d for d in ids}
+
+    def find(d):
+        while parent[d] != d:
+            d = parent[d]
+        return d
+
+    for r in minhash_near_duplicates(
+        docs, jaccard_threshold=kw["near_dup_threshold"]
+    ).collect():
+        a, b = find(r.doc_a), find(r.doc_b)
+        parent[max(a, b)] = min(a, b)
+    near_kept = {d for d in ids if find(d) == d}
     semantic = ids_where(
         semantic_decontaminate(
             kw["doc_embeddings"],
@@ -859,44 +868,6 @@ def test_leakage_safe_split_balanced_and_deterministic(spark):
     assert b == c
     with _pytest.raises(ValueError):
         leakage_safe_split(docs, edges, k=1)
-
-
-def test_corpus_overlap_exact_when_small(spark):
-    from gliner_spark.operators.curation import corpus_overlap
-
-    mk = lambda texts: spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    # 3-gram sets: a has grams of "w0..w9" (8 grams), b shares the
-    # tail half plus fresh material
-    a = mk([" ".join(f"w{i}" for i in range(10))])
-    b = mk([" ".join(f"w{i}" for i in range(5, 15))])
-    rep = corpus_overlap(a, b, n=3, k=1024)
-    # grams a: (w0..w7 starts) = 8; b: starts w5..w12 = 8; shared
-    # starts w5..w7 = 3; union 13
-    assert rep["union_est"] == 13.0
-    assert rep["intersect_est"] == 3.0
-    assert abs(rep["jaccard"] - 3 / 13) < 1e-12
-    assert abs(rep["containment_b_in_a"] - 3 / 8) < 1e-12
-
-
-def test_corpus_overlap_estimates_at_scale(spark):
-    from gliner_spark.operators.curation import corpus_overlap
-
-    def corpus(lo, hi):
-        rows = []
-        for d in range(lo, hi):
-            words = " ".join(f"t{d}_{j}" for j in range(12))
-            rows.append((d, words))
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    # each doc contributes 10 unique 3-grams; overlap = docs 300..499
-    a = corpus(0, 500)
-    b = corpus(300, 800)
-    rep = corpus_overlap(a, b, n=3, k=512)
-    assert rep["sampled"] == 512
-    assert abs(rep["union_est"] - 8000) / 8000 < 0.2
-    assert abs(rep["containment_b_in_a"] - 2000 / 5000) < 0.12
 
 
 def test_temperature_budgets_waterfill_and_caps(spark):

@@ -1,15 +1,14 @@
-"""k-core decomposition: Spark peel vs the sequential
+"""k-core decomposition: core_numbers vs the sequential
 Batagelj-Zaversnik oracle on a deterministic random graph with a
-planted clique; k_core(k) must equal the subgraph induced by
-core >= k. Every call runs on both sides of the one-task gate (the
+planted clique. Every call runs on both sides of the one-task gate (the
 `side` fixture): the one-task Batagelj-Zaversnik finisher and the
-distributed peel / h-index refinement."""
+distributed h-index refinement."""
 
 import random
 
 import pytest
 
-from gliner_spark.operators.graph import core_numbers, k_core
+from gliner_spark.operators.graph import core_numbers
 
 
 def _core_numbers_py(edges):
@@ -70,24 +69,6 @@ def test_core_numbers_match_sequential_oracle(spark, graph_df, side):
     assert want[202] == 1
 
 
-def test_k_core_is_induced_subgraph_of_core_geq_k(spark, graph_df, side):
-    want = _core_numbers_py(_test_graph())
-    for k in (1, 2, 3, 5):
-        sub = side(lambda: k_core(graph_df, k))
-        verts = {r.a for r in sub} | {r.b for r in sub}
-        assert verts == {v for v, c in want.items() if c >= k}, k
-        # every surviving vertex keeps degree >= k inside the core
-        deg = {}
-        for r in sub:
-            deg[r.a] = deg.get(r.a, 0) + 1
-            deg[r.b] = deg.get(r.b, 0) + 1
-        assert all(d >= k for d in deg.values()), k
-
-
-def test_k_core_above_max_core_is_empty(spark, graph_df, side):
-    assert side(lambda: k_core(graph_df, 6)) == []
-
-
 def test_core_numbers_empty_graph(spark, side):
     e = spark.createDataFrame([], "src long, dst long")
     assert side(lambda: core_numbers(e)) == []
@@ -98,17 +79,7 @@ def test_core_sides_agree_on_edge_cases(spark, edge_case, side):
     schemas on both sides (the one-task side used to hard-code long
     ids), and the int32 id type is kept."""
     cores = side(lambda: core_numbers(edge_case))
-    sub = side(lambda: k_core(edge_case, 2))
     want = _core_numbers_py(edge_case.collect())
     assert {r.v: r.core for r in cores} == want
-    assert {r.a for r in sub} | {r.b for r in sub} == {
-        v for v, c in want.items() if c >= 2
-    }
     ids = edge_case.schema["src"].dataType
     assert core_numbers(edge_case).schema["v"].dataType == ids
-    assert k_core(edge_case, 2).schema["a"].dataType == ids
-
-
-def test_k_core_rejects_nonpositive_k(spark, graph_df):
-    with pytest.raises(ValueError):
-        k_core(graph_df, 0)

@@ -22,7 +22,7 @@ from gliner_spark.kernel.decode import (
     greedy_select,
     threshold_candidates,
 )
-from gliner_spark.kernel.metrics import compute_prf_micro, triple_prf, triple_string
+from gliner_spark.kernel.metrics import compute_prf_micro, triple_prf
 from gliner_spark.kernel.oracle import OraclePipeline
 from gliner_spark.kernel.scorer import HashedBiEncoder
 from gliner_spark.kernel.tokenizer import TOKEN_RE, tokenize_with_offsets
@@ -137,8 +137,8 @@ class TestMetrics:
         assert r["precision"] == 0.5 and r["recall"] == 0.5
 
     def test_triple_prf(self):
-        t = [triple_string("a", "r", "b"), triple_string("c", "r", "d")]
-        p = [triple_string("a", "r", "b"), triple_string("x", "r", "y")]
+        t = ["a <> r <> b", "c <> r <> d"]
+        p = ["a <> r <> b", "x <> r <> y"]
         r = triple_prf(p, t)
         assert r["precision"] == 0.5 and r["recall"] == 0.5
         assert r["true positives"] == 1

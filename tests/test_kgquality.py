@@ -1,9 +1,9 @@
 """KG quality ops: PARIS functionality profile, functional-constraint
-violations, noisy-OR evidence merge (operators/kgquality.py)."""
+violations, noisy-OR evidence merge and conflict resolution, snapshot
+diff (operators/kgquality.py)."""
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from gliner_spark.operators.kgquality import (
     functional_violations,

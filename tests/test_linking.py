@@ -73,24 +73,35 @@ def test_minhash_identical_normalized_surfaces_have_equal_sigs(spark, mentions_d
 
 def test_sig_expr_matches_column_composition(spark, mentions_df):
     """minhash_sig_expr (one parsed SQL expression) must produce values
-    identical to composing minhash_array's perm_min Columns — the SQL
-    form exists only to kill ~2 s of py4j expression-construction driver
-    overhead per query, never to change a single signature value."""
+    identical to composing one array_min Column per permutation — the
+    SQL form exists only to kill ~2 s of py4j expression-construction
+    driver overhead per query, never to change a single signature
+    value."""
     from pyspark.sql import functions as F
 
-    from gliner_spark.operators.linking import minhash_array, shingle_set
+    from gliner_spark.operators.linking import (
+        _MERSENNE,
+        _base_hashes,
+        _perm_coeffs,
+        shingle_set,
+    )
+
+    def perm_min(hs, a, b):
+        return F.array_min(
+            F.transform(
+                hs, lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE))
+            )
+        )
 
     surfaces = surface_table(mentions_df)
-    hashes, coeffs, perm_min = minhash_array(
-        shingle_set(F.col("surface"), 3), 64, 42
-    )
+    hashes = _base_hashes(shingle_set(F.col("surface"), 3), 42)
     with_h = surfaces.select("surface_id", hashes.alias("_hs"))
     old = {
         r.surface_id: r.sig
         for r in with_h.select(
             "surface_id",
             F.array(
-                *[perm_min(F.col("_hs"), a, b) for a, b in coeffs]
+                *[perm_min(F.col("_hs"), a, b) for a, b in _perm_coeffs(64, 42)]
             ).alias("sig"),
         ).collect()
     }

@@ -1,4 +1,4 @@
-"""Physical-plan quality audits: pushdown, pruning, broadcast, salting.
+"""Physical-plan quality audits: pushdown, pruning, broadcast, bucketing.
 
 These pin the properties that matter at 100 TB — a regression here means
 a full-table scan or an unsplittable shuffle at scale, not a wrong answer.
@@ -77,35 +77,6 @@ def test_knn_broadcasts_queries(spark):
     # the corpus side must NOT be exchanged before the join
     join_pos = plan.find("Broadcast")
     assert join_pos >= 0
-
-
-def test_salted_aggregate_correctness(spark):
-    from gliner_spark.plans.skew import salted_aggregate
-    from gliner_spark.sources.transcripts import synth_transcripts
-
-    t = synth_transcripts(spark, 30).withColumn(
-        "n_tok", F.size(F.split("text", " "))
-    )
-    plain = {
-        (r.conv_id): (r.n, r.s)
-        for r in t.groupBy("conv_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_tok").alias("s"))
-        .collect()
-    }
-    salted = {
-        (r.conv_id): (r.n, r.s)
-        for r in salted_aggregate(
-            t,
-            ["conv_id"],
-            "turn_idx",
-            partial_aggs=[
-                F.count(F.lit(1)).alias("n"),
-                F.sum("n_tok").alias("s"),
-            ],
-            merge_aggs=[F.sum("n").alias("n"), F.sum("s").alias("s")],
-        ).collect()
-    }
-    assert salted == plain
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):

@@ -144,6 +144,25 @@ def test_bm25_index_returns_only_matching_docs(spark, tmp_path):
     assert all(r.score > 0 for r in got)
 
 
+def test_bm25_index_over_no_docs_is_readable(spark, tmp_path):
+    """An index built over no documents has no data file to infer a
+    schema from: queries read it with the explicit schema and return no
+    rows instead of failing."""
+    from gliner_spark.operators.retrieval import (
+        bm25_against_index,
+        build_bm25_index,
+    )
+
+    path = str(tmp_path / "idx")
+    meta = build_bm25_index(
+        spark.createDataFrame([], "doc_id long, text string"),
+        path,
+        n_buckets=8,
+    )
+    assert meta == {"n_docs": 0, "total_dl": 0, "n_buckets": 8}
+    assert bm25_against_index(spark, path, ["spark"], top_k=3).count() == 0
+
+
 def test_bm25_index_prunes_bucket_partitions(spark, tmp_path):
     """The 100 TB contract: a query's scan carries a LITERAL bucket IN
     partition filter (directory pruning — only the query terms' buckets
@@ -164,88 +183,6 @@ def test_bm25_index_prunes_bucket_partitions(spark, tmp_path):
     assert m, plan
     assert len(m.group(1).split(",")) <= 2  # <= one bucket per term
     assert "PushedFilters: [In(term" in plan, plan
-
-
-def test_bm25_index_append_is_exact(spark, tmp_path):
-    """append_to_bm25_index(B) after build(A) must be indistinguishable
-    from build(A ∪ B): identical sidecar stats and identical query
-    results (df recomputed from postings can't go stale)."""
-    from gliner_spark.operators.retrieval import (
-        append_to_bm25_index,
-        bm25_against_index,
-        build_bm25_index,
-    )
-
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    a = df.where("doc_id < 3")
-    b = df.where("doc_id >= 3")
-    p_inc = str(tmp_path / "inc")
-    p_full = str(tmp_path / "full")
-    build_bm25_index(a, p_inc, n_buckets=8)
-    meta_inc = append_to_bm25_index(b, p_inc)
-    meta_full = build_bm25_index(df, p_full, n_buckets=8)
-    assert meta_inc == meta_full
-    for query in (["spark", "window"], ["join"]):
-        got = [
-            (r.doc_id, r.score, r.rk)
-            for r in bm25_against_index(
-                spark, p_inc, query, top_k=5
-            ).collect()
-        ]
-        want = [
-            (r.doc_id, r.score, r.rk)
-            for r in bm25_against_index(
-                spark, p_full, query, top_k=5
-            ).collect()
-        ]
-        assert got == want, query
-
-
-def test_bm25_index_append_is_segment_and_compactable(spark, tmp_path):
-    """The batch append rides the committed-segment protocol: it never
-    rewrites base partitions (crash-safe by marker-last), and a later
-    compaction folds it without changing any query result."""
-    import os
-
-    from gliner_spark.operators.retrieval import (
-        append_to_bm25_index,
-        bm25_against_index,
-        build_bm25_index,
-    )
-    from gliner_spark.streaming.bm25 import compact_bm25_index
-
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    p = str(tmp_path / "idx")
-    build_bm25_index(df.where("doc_id < 3"), p, n_buckets=8)
-    base_files = sorted(
-        os.path.join(d, f)
-        for d, _, fs in os.walk(p)
-        for f in fs
-        if "_stream" not in d and "_compacted" not in d
-    )
-    append_to_bm25_index(df.where("doc_id >= 3"), p)
-    after_files = sorted(
-        os.path.join(d, f)
-        for d, _, fs in os.walk(p)
-        for f in fs
-        if "_stream" not in d and "_compacted" not in d
-    )
-    assert after_files == base_files  # base partitions untouched
-    assert os.path.isdir(os.path.join(p, "_stream"))
-    want = [
-        (r.doc_id, r.score, r.rk)
-        for r in bm25_against_index(
-            spark, p, ["spark", "window"], top_k=5
-        ).collect()
-    ]
-    assert compact_bm25_index(spark, p) == 1
-    got = [
-        (r.doc_id, r.score, r.rk)
-        for r in bm25_against_index(
-            spark, p, ["spark", "window"], top_k=5
-        ).collect()
-    ]
-    assert got == want
 
 
 def _rrf_oracle(legs, k0=60.0, top_k=10):
@@ -407,6 +344,9 @@ def test_decontaminate_broadcasts_benchmark_grams(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
+# ------------------------------------------------------ assemble_context
+
+
 def test_ranking_metrics_matches_python(spark):
     import math
 
@@ -486,9 +426,6 @@ def test_ranking_metrics_on_real_bm25_output(spark):
     assert row["n_rel"] == 2
     assert row["recall_at_k"] == 1.0  # both relevant docs retrieved
     assert row["mrr"] == 1.0          # a relevant doc ranks first
-
-
-# ------------------------------------------------------ assemble_context
 
 
 def test_assemble_context_budget_rule(spark):

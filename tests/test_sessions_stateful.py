@@ -1,11 +1,10 @@
-"""Sessionization vs brute-force oracle; stateful streaming accumulation
-across restarts."""
+"""Sessionization, funnel, cohort retention and event transitions vs
+brute-force oracles."""
 
 import datetime
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from gliner_spark.operators.sessions import session_stats, sessionize
 
@@ -69,86 +68,6 @@ def test_sessionize_on_events_table(spark):
                             order_cols=("event_id",)).collect()
     )
     assert a == b
-
-
-def test_stateful_running_stats_accumulates_across_restarts(
-    spark, tmp_path_factory
-):
-    from gliner_spark.sources.transcripts import synth_transcripts
-    from gliner_spark.streaming.ingest import read_transcript_stream
-    from gliner_spark.streaming.stateful import running_entity_stats
-
-    landing = str(tmp_path_factory.mktemp("stateful_landing"))
-    ckpt = str(tmp_path_factory.mktemp("stateful_ckpt"))
-    t = synth_transcripts(spark, n_convs=6).cache()
-    first = t.where("turn_idx < 2")
-    second = t.where("turn_idx >= 2")
-    first.write.mode("append").parquet(landing)
-
-    out_dir = str(tmp_path_factory.mktemp("stateful_out"))
-
-    def run_once(run_id):
-        stream = read_transcript_stream(spark, landing)
-        # stream of raw turns stands in for the entity stream (same shape:
-        # conv_id + text); state semantics are what's under test
-        stats = running_entity_stats(stream.select("conv_id", "text"))
-
-        def sink(batch_df, batch_id):
-            batch_df.withColumn("run_id", F.lit(run_id)).write.mode(
-                "append"
-            ).parquet(out_dir)
-
-        q = (
-            stats.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination(300)
-        rows = (
-            spark.read.parquet(out_dir)
-            .where(F.col("run_id") == run_id)
-            .collect()
-        )
-        return {
-            r.conv_id: (r.n_mentions, r.n_distinct_surfaces) for r in rows
-        }
-
-    s1 = run_once(1)
-    assert all(n == 2 for n, _d in s1.values())
-
-    # new data arrives; a RESTARTED query must resume state from the
-    # checkpoint and accumulate
-    second.write.mode("append").parquet(landing)
-    s2 = run_once(2)
-    expected_total = {
-        r.conv_id: r.n for r in t.groupBy("conv_id").agg(
-            F.count(F.lit(1)).alias("n")).collect()
-    }
-    for conv, (n, _d) in s2.items():
-        assert n == expected_total[conv], conv
-
-
-def test_near_dedup_survivors_transitive(spark):
-    from gliner_spark.operators.dedup import near_dedup_survivors
-
-    base = "alpha beta gamma delta epsilon zeta eta theta"
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=1, text=base),
-            Row(doc_id=2, text=base + " iota"),       # ~ 1
-            Row(doc_id=3, text=base + " iota kappa"),  # ~ 2 (maybe not ~1)
-            Row(doc_id=4, text="completely different words entirely here"),
-        ]
-    )
-    surv = sorted(
-        r.doc_id
-        for r in near_dedup_survivors(
-            docs, shingle_n=2, jaccard_threshold=0.5
-        ).collect()
-    )
-    assert surv == [1, 4]
 
 
 # --------------------------------------------------------------- funnel
@@ -266,89 +185,6 @@ def test_funnel_strictly_after_ties_do_not_chain(spark):
         for r in funnel(_fev(spark, rows), ("a", "b")).collect()
     }
     assert got == {1: 1, 2: 2}
-
-
-def _funnel_stream_run(spark, tmpdir, landing, ckpt, run_id, out_dir):
-    import pyspark.sql.functions as SF
-
-    schema = "user_id long, event_type string, ts timestamp"
-    stream = spark.readStream.schema(schema).parquet(landing)
-    from gliner_spark.streaming.stateful import stream_funnel
-
-    snap = stream_funnel(stream, ("signup", "click", "purchase"))
-
-    def sink(batch_df, batch_id):
-        batch_df.withColumn("run_id", SF.lit(run_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    q = (
-        snap.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination(300)
-    return (
-        spark.read.parquet(out_dir)
-        .where(F.col("run_id") == run_id)
-        .collect()
-    )
-
-
-def test_stream_funnel_one_batch_parity_with_batch_op(
-    spark, tmp_path_factory
-):
-    from gliner_spark.operators.sessions import funnel
-
-    rows = [
-        (i % 23, ["signup", "click", "purchase", "view"][(i * 7) % 4],
-         (i * 13) % 500)
-        for i in range(700)
-    ]
-    ev = _fev(spark, sorted(set(rows)))
-    landing = str(tmp_path_factory.mktemp("funnel_landing"))
-    ckpt = str(tmp_path_factory.mktemp("funnel_ckpt"))
-    out = str(tmp_path_factory.mktemp("funnel_out"))
-    ev.write.mode("append").parquet(landing)
-
-    got = {
-        r["key"]: (r["stage"], r["ts_first_us"], r["ts_last_us"])
-        for r in _funnel_stream_run(spark, None, landing, ckpt, 0, out)
-    }
-    expect = {
-        r["user_id"]: (r["stage"], r["ts_first_us"], r["ts_last_us"])
-        for r in funnel(ev, ("signup", "click", "purchase")).collect()
-    }
-    assert got == expect
-
-
-def test_stream_funnel_accumulates_across_batches(
-    spark, tmp_path_factory
-):
-    landing = str(tmp_path_factory.mktemp("funnel_landing2"))
-    ckpt = str(tmp_path_factory.mktemp("funnel_ckpt2"))
-    out = str(tmp_path_factory.mktemp("funnel_out2"))
-
-    _fev(spark, [(1, "signup", 0), (2, "signup", 5)]).write.mode(
-        "append"
-    ).parquet(landing)
-    r1 = {
-        r["key"]: r["stage"]
-        for r in _funnel_stream_run(spark, None, landing, ckpt, 1, out)
-    }
-    assert r1 == {1: 1, 2: 1}
-
-    _fev(spark, [(1, "click", 10), (1, "purchase", 20)]).write.mode(
-        "append"
-    ).parquet(landing)
-    r2 = {
-        r["key"]: r["stage"]
-        for r in _funnel_stream_run(spark, None, landing, ckpt, 2, out)
-    }
-    # only user 1 changed -> only user 1 re-emitted, fully advanced
-    assert r2 == {1: 3}
 
 
 # ------------------------------------------------------ cohort_retention

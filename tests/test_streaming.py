@@ -1,16 +1,10 @@
-"""Structured-Streaming path: stream == batch results, windowed counts,
-idempotent foreachBatch KG bridge."""
+"""Structured-Streaming path: stream == batch results, idempotent
+foreachBatch KG bridge."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from gliner_spark.sources.transcripts import synth_transcripts
-from gliner_spark.streaming.ingest import (
-    read_transcript_stream,
-    stream_entities,
-    stream_to_kg,
-    windowed_entity_counts,
-)
+from gliner_spark.streaming.ingest import read_transcript_stream, stream_to_kg
 
 LABELS = ["person", "organization", "tool"]
 
@@ -27,7 +21,10 @@ def test_stream_matches_batch(spark, landing_dir, tmp_path_factory):
 
     stream = read_transcript_stream(spark, landing_dir)
     assert stream.isStreaming
-    ents = stream_entities(stream, LABELS)
+    # the batch operator, unchanged, on a stream; ts rides through
+    ents = extract_entities(
+        stream, LABELS, passthrough=("conv_id", "turn_idx", "ts")
+    )
     sink = "stream_ents"
     q = (
         ents.writeStream.format("memory")
@@ -52,33 +49,6 @@ def test_stream_matches_batch(spark, landing_dir, tmp_path_factory):
     assert got == exp and len(got) > 0
 
 
-def test_windowed_counts_with_watermark(spark, landing_dir, tmp_path_factory):
-    stream = read_transcript_stream(spark, landing_dir)
-    counts = windowed_entity_counts(
-        stream_entities(stream, LABELS), window="1 hour", watermark="2 hours"
-    )
-    # complete mode: append-mode windows only flush when a LATER batch
-    # advances the watermark past window end; a single availableNow batch
-    # never does, so the memory-sink check uses complete output
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", str(tmp_path_factory.mktemp("ckpt_win"))
-        )
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("select * from win_counts").collect()
-    assert len(rows) > 0
-    assert all(r.n_mentions > 0 for r in rows)
-    assert {c for c in spark.table("win_counts").columns} == {
-        "window_start", "window_end", "label", "n_mentions",
-    }
-
-
 def test_stream_to_kg_idempotent(spark, landing_dir, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("kg_out"))
     ckpt = str(tmp_path_factory.mktemp("kg_ckpt"))
@@ -94,425 +64,3 @@ def test_stream_to_kg_idempotent(spark, landing_dir, tmp_path_factory):
     )
     q2.awaitTermination(600)
     assert spark.read.parquet(f"{out}/triples_stream").count() == n1
-
-
-def test_stream_dedup_within_watermark(spark, tmp_path_factory):
-    """Duplicates across micro-batches inside the watermark are dropped;
-    distinct contents all survive; state stays bounded by the watermark."""
-    import datetime
-
-    from gliner_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from gliner_spark.streaming.ingest import read_transcript_stream, stream_dedup
-
-    land = str(tmp_path_factory.mktemp("dedup_land"))
-    ckpt = str(tmp_path_factory.mktemp("dedup_ckpt"))
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-
-    def rows(batch, texts):
-        return [
-            (f"c{batch}-{i}", 0, "user", t, None,
-             t0 + datetime.timedelta(seconds=batch * 60 + i))
-            for i, t in enumerate(texts)
-        ]
-
-    # batch 1 and batch 2 overlap on two texts (and batch 2 repeats one
-    # of its own); each lands as a separate file = separate micro-batch
-    spark.createDataFrame(
-        rows(1, ["alpha doc", "beta doc", "gamma doc"]), TRANSCRIPT_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(land)
-    spark.createDataFrame(
-        rows(2, ["beta doc", "delta doc", "gamma doc", "delta doc"]),
-        TRANSCRIPT_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(land)
-
-    deduped = stream_dedup(
-        read_transcript_stream(spark, land, max_files_per_trigger=1)
-    )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = [r.text for r in spark.sql("select text from dedup_sink").collect()]
-    assert sorted(got) == ["alpha doc", "beta doc", "delta doc", "gamma doc"]
-
-
-def test_stream_near_dup_candidates_across_batches(spark, tmp_path_factory):
-    """LSH band buckets as grouped state: a doc arriving in micro-batch 2
-    must pair with its near-duplicate from micro-batch 1 (bucket history
-    lives in the state store), intra-batch pairs are found too, and the
-    candidate set equals the BATCH banding's bucket-cohabitation pairs
-    over the same corpus (same signature expressions ⇒ same buckets)."""
-    import datetime
-
-    from gliner_spark.operators.dedup import doc_shingles, minhash_sigs
-    from gliner_spark.streaming.neardedup import stream_near_dup_candidates
-
-    land = str(tmp_path_factory.mktemp("nd_land"))
-    ckpt = str(tmp_path_factory.mktemp("nd_ckpt"))
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-    base = ("the payment service retried the cache query after the "
-            "cluster restart and logged a slow shuffle join")
-    texts = {
-        1: base,
-        2: "completely different words about kafka broker metrics",
-        # near-dup of doc 1, lands in a LATER micro-batch
-        3: base + " again",
-        4: base.replace("slow", "fast"),
-    }
-
-    def write_batch(ids):
-        rows = [
-            (i, t0 + datetime.timedelta(seconds=i), texts[i]) for i in ids
-        ]
-        spark.createDataFrame(
-            rows, "doc_id long, ts timestamp, text string"
-        ).coalesce(1).write.mode("append").parquet(land)
-
-    write_batch([1, 2])
-    write_batch([3, 4])
-
-    stream = spark.readStream.schema(
-        "doc_id long, ts timestamp, text string"
-    ).option("maxFilesPerTrigger", 1).parquet(land)
-    cands = stream_near_dup_candidates(stream, n_bands=16, n_perms=64)
-    q = (
-        cands.writeStream.format("memory")
-        .queryName("nd_sink")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in spark.sql("select * from nd_sink").collect()
-    }
-
-    # batch oracle: pairs sharing ≥1 band bucket
-    docs = spark.createDataFrame(
-        [(i, texts[i]) for i in texts], "doc_id long, text string"
-    )
-    sigs = minhash_sigs(doc_shingles(docs, "text", 3), "doc_id", 64)
-    sig_map = {r.doc_id: r.sig for r in sigs.collect()}
-    import itertools
-
-    def bucket_pairs():
-        out = set()
-        for a, b in itertools.combinations(sorted(sig_map), 2):
-            for band in range(16):
-                lo, hi = band * 4, band * 4 + 4
-                if sig_map[a][lo:hi] == sig_map[b][lo:hi]:
-                    out.add((a, b))
-                    break
-        return out
-
-    expected = bucket_pairs()
-    assert (1, 3) in expected, "test corpus must make 1~3 a candidate"
-    assert got == expected, (got, expected)
-
-
-def test_stream_sessionize_matches_batch(spark, tmp_path_factory):
-    """session_window gap sessionization == batch sessionize/session_stats
-    on the same events (tie-free gaps). A far-future sentinel event in the
-    last micro-batch drives the watermark past every real session's end so
-    append mode flushes them all; the sentinel's own session stays in
-    state and must NOT be emitted."""
-    import datetime
-    import glob
-    import os
-    import time
-
-    from gliner_spark.operators.sessions import session_stats, sessionize
-    from gliner_spark.streaming.ingest import stream_sessionize
-
-    land = str(tmp_path_factory.mktemp("sess_land"))
-    ckpt = str(tmp_path_factory.mktemp("sess_ckpt"))
-    t0 = datetime.datetime(2024, 3, 1, 0, 0, 0)
-    gap = 600  # 10 min; offsets below never hit the gap exactly
-
-    rows = []
-    eid = 0
-    for user in (1, 2, 3):
-        # three bursts per user separated by > gap, events inside < gap
-        for burst in range(3):
-            base = t0 + datetime.timedelta(
-                seconds=burst * 3600 + user * 17
-            )
-            for j in range(2 + (user + burst) % 3):
-                rows.append(
-                    (eid, base + datetime.timedelta(seconds=j * 95 + 1),
-                     user, "click", 1.0, None)
-                )
-                eid += 1
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    half = len(rows) // 2
-    spark.createDataFrame(rows[:half], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(land)
-    spark.createDataFrame(rows[half:], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(land)
-    time.sleep(1.1)  # sentinel file must sort last by mtime
-    sentinel_ts = t0 + datetime.timedelta(days=30)
-    spark.createDataFrame(
-        [(999999, sentinel_ts, -1, "flush", 0.0, None)], schema
-    ).coalesce(1).write.mode("append").parquet(land)
-    # pin mtime ordering: data files strictly before the sentinel file
-    files = sorted(glob.glob(os.path.join(land, "*.parquet")),
-                   key=os.path.getmtime)
-    for i, f in enumerate(files):
-        os.utime(f, (1700000000 + i * 10, 1700000000 + i * 10))
-
-    stream = (
-        spark.readStream.schema(schema).format("parquet")
-        .option("path", land).option("maxFilesPerTrigger", "1").load()
-    )
-    q = (
-        stream_sessionize(stream, gap_seconds=gap, watermark="0 seconds")
-        .writeStream.format("memory").queryName("sess_sink")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.user_id, r.n_events, r.session_start, r.session_end, r.duration_us)
-        for r in spark.sql("select * from sess_sink").collect()
-    }
-    batch = spark.createDataFrame(rows, schema)  # sentinel excluded
-    exp = {
-        (r.user_id, r.n_events, r.session_start, r.session_end, r.duration_us)
-        for r in session_stats(
-            sessionize(batch, gap_seconds=gap, order_cols=("event_id",))
-        ).select(
-            "user_id", "n_events", "session_start", "session_end",
-            "duration_us",
-        ).collect()
-    }
-    assert got == exp and len(got) == 9  # 3 users x 3 bursts
-
-
-def test_stream_budget_admit_single_batch_matches_mixture_sample(
-    spark, tmp_path_factory
-):
-    """One availableNow batch over the whole corpus == the batch
-    mixture_sample survivor set (same md5-uniform walk, same crossing
-    rule), bit-for-bit including cum_tokens."""
-    from gliner_spark.operators.curation import mixture_sample
-    from gliner_spark.streaming.stateful import stream_budget_admit
-
-    land = str(tmp_path_factory.mktemp("ba_land"))
-    ckpt = str(tmp_path_factory.mktemp("ba_ckpt"))
-    rows = [
-        (i, "web" if i % 3 else "code",
-         " ".join(f"t{i}x{j}" for j in range((i * 5) % 17 + 1)))
-        for i in range(60)
-    ]
-    budgets = {"web": 120, "code": 40}
-    docs = spark.createDataFrame(
-        rows, "doc_id long, source string, text string"
-    )
-    docs.coalesce(1).write.mode("overwrite").parquet(land)
-
-    want = {
-        (r["doc_id"], r["source"], r.n_tokens, r.cum_tokens)
-        for r in mixture_sample(
-            docs, "source", budgets, default_budget=0
-        ).collect()
-    }
-
-    stream = spark.readStream.schema(
-        "doc_id long, source string, text string"
-    ).parquet(land)
-    q = (
-        stream_budget_admit(stream, budgets)
-        .writeStream.format("memory")
-        .queryName("ba_sink")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.doc_id, r.group, r.n_tokens, r.cum_tokens)
-        for r in spark.sql("select * from ba_sink").collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_stream_budget_admit_carries_state_across_batches(
-    spark, tmp_path_factory
-):
-    """The admitted-token total survives micro-batch boundaries: batch 2
-    only admits up to the remaining budget (crossing doc ships), then
-    nothing more ever admits."""
-    from gliner_spark.streaming.stateful import stream_budget_admit
-
-    land = str(tmp_path_factory.mktemp("bc_land"))
-    ckpt = str(tmp_path_factory.mktemp("bc_ckpt"))
-    five = "a b c d e"
-
-    def write_batch(ids):
-        spark.createDataFrame(
-            [(i, "web", five) for i in ids],
-            "doc_id long, source string, text string",
-        ).coalesce(1).write.mode("append").parquet(land)
-
-    write_batch([1, 2])   # 10 tokens
-    write_batch([3, 4])   # crossing doc ships -> one of these admits
-    write_batch([5, 6])   # budget long crossed -> nothing
-
-    stream = spark.readStream.schema(
-        "doc_id long, source string, text string"
-    ).option("maxFilesPerTrigger", 1).parquet(land)
-    q = (
-        stream_budget_admit(stream, {"web": 12})
-        .writeStream.format("memory")
-        .queryName("bc_sink")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r.doc_id, r.cum_tokens)
-        for r in spark.sql("select * from bc_sink").collect()
-    )
-    # batch 1 admits both (cum 5, 10); batch 2 admits exactly ONE doc
-    # (10 < 12 -> crossing doc ships, cum 15); batch 3 admits none
-    assert len(got) == 3
-    assert {c for _, c in got} == {5, 10, 15}
-    assert {d for d, _ in got} <= {1, 2, 3, 4}
-
-
-def test_stream_url_dedup_collapses_fetch_variants(spark, tmp_path_factory):
-    """URL variants of the same page arriving across micro-batches
-    within the watermark collapse to one row; distinct pages survive;
-    batch and stream agree on the canonical key."""
-    import datetime
-
-    from gliner_spark.streaming.ingest import stream_url_dedup
-
-    land = str(tmp_path_factory.mktemp("url_land"))
-    ckpt = str(tmp_path_factory.mktemp("url_ckpt"))
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-    schema = "fetch_id long, url string, ts timestamp"
-
-    def rows(batch, urls):
-        return [
-            (batch * 100 + i, u,
-             t0 + datetime.timedelta(seconds=batch * 60 + i))
-            for i, u in enumerate(urls)
-        ]
-
-    spark.createDataFrame(
-        rows(1, [
-            "https://site.com/page?utm_source=feed",
-            "https://other.com/x",
-        ]),
-        schema,
-    ).coalesce(1).write.mode("append").parquet(land)
-    spark.createDataFrame(
-        rows(2, [
-            "HTTPS://SITE.COM:443/page#top",   # same page as batch 1
-            "https://site.com/page/",          # and again
-            "https://third.com/y",
-        ]),
-        schema,
-    ).coalesce(1).write.mode("append").parquet(land)
-
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(land)
-    )
-    q = (
-        stream_url_dedup(src)
-        .writeStream.format("memory")
-        .queryName("url_dedup_sink")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql(
-        "select canonical_url from url_dedup_sink"
-    ).collect()
-    canon = sorted(r["canonical_url"] for r in out)
-    assert canon == [
-        "https://other.com/x",
-        "https://site.com/page",
-        "https://third.com/y",
-    ]
-
-
-def test_stream_interval_join_parity_with_batch(spark, tmp_path_factory):
-    import datetime as dt
-
-    from gliner_spark.operators.temporal import interval_join
-    from gliner_spark.streaming.ingest import stream_interval_join
-
-    base = dt.datetime(2024, 1, 1)
-    pts = [
-        (j, j % 5, base + dt.timedelta(seconds=(j * 37) % 4000))
-        for j in range(200)
-    ]
-    ivs = []
-    for j in range(60):
-        s = (j * 61) % 4000
-        ln = [0, 30, 300, 2000, 7200][j % 5]  # 7200 exceeds max_span
-        ivs.append(
-            (j, j % 5, base + dt.timedelta(seconds=s),
-             base + dt.timedelta(seconds=s + ln))
-        )
-    pdir = str(tmp_path_factory.mktemp("sij_points"))
-    idir = str(tmp_path_factory.mktemp("sij_ivs"))
-    ckpt = str(tmp_path_factory.mktemp("sij_ckpt"))
-    out = str(tmp_path_factory.mktemp("sij_out"))
-    p_schema = "pid long, user_id long, ts timestamp"
-    i_schema = "iid long, user_id long, start timestamp, end timestamp"
-    spark.createDataFrame(pts, p_schema).write.mode("append").parquet(pdir)
-    spark.createDataFrame(ivs, i_schema).write.mode("append").parquet(idir)
-
-    joined = stream_interval_join(
-        spark.readStream.schema(p_schema).parquet(pdir),
-        spark.readStream.schema(i_schema).parquet(idir),
-        max_span_seconds=3600,
-    ).select(F.col("pid"), F.col("iid"))
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = sorted(
-        (r["pid"], r["iid"]) for r in spark.read.parquet(out).collect()
-    )
-
-    # batch reference: same span contract applied up front
-    ivdf = spark.createDataFrame(ivs, i_schema).where(
-        F.col("end").cast("long") <= F.col("start").cast("long") + 3600
-    )
-    expect = sorted(
-        (r["pid"], r["iid"])
-        for r in interval_join(
-            spark.createDataFrame(pts, p_schema),
-            ivdf,
-            "ts",
-            "start",
-            "end",
-            key_cols=("user_id",),
-            value_cols=("iid",),
-        ).collect()
-    )
-    assert got == expect and len(got) > 0
