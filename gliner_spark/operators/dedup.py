@@ -222,26 +222,20 @@ def minhash_sigs(
     id_col: str = "doc_id",
     n_perms: int = 64,
     seed: int = 7,
-    passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, sig array<bigint>[, passthrough…]) as a pure map-side array
-    expression — zero shuffle (linking.minhash_sig_expr; identical
-    values to the old explode → 64-min-aggregates shape, which shuffled
-    every (id, shingle) row). Docs with no shingles get an
-    empty-sentinel single shingle. `passthrough` columns ride the
-    projection untouched (kept without a join)."""
-    from .linking import _MERSENNE, minhash_sig_expr
+    """(id, sig array<bigint>) as a pure map-side array expression —
+    zero shuffle (linking._base_hashes + linking.minhash_sig_expr;
+    identical values to the old explode → 64-min-aggregates shape, which
+    shuffled every (id, shingle) row). Docs with no shingles get an
+    empty-sentinel single shingle."""
+    from .linking import _base_hashes, minhash_sig_expr
 
     padded = F.when(F.size("shingles") > 0, F.col("shingles")).otherwise(
         F.array(F.lit("\x00empty"))
     )
-    hashes = F.transform(
-        padded, lambda s: F.pmod(F.xxhash64(F.lit(seed), s), F.lit(_MERSENNE))
-    )
-    extra = list(passthrough)
-    with_h = with_shingles.select(id_col, *extra, hashes.alias("_hs"))
+    with_h = with_shingles.select(id_col, _base_hashes(padded, seed).alias("_hs"))
     return with_h.select(
-        id_col, *extra, minhash_sig_expr("_hs", n_perms, seed).alias("sig")
+        id_col, minhash_sig_expr("_hs", n_perms, seed).alias("sig")
     )
 
 

@@ -40,6 +40,16 @@ such a JSON object counts as uncommitted. A crash before step 4 leaves
 the stage uncommitted, so the rerun recomputes it. A crash between steps
 3 and 4 leaves one truthful `complete` lineage row for a stage that will
 then rerun and append its own.
+
+Stages may run at once. `StageRunner.submit` starts a stage on its own
+driver thread as soon as the stages it reads have committed, so the
+stage DAG's width, not a knob, sets how many stages overlap. Each thread
+inherits the submitting thread's Spark local properties (job group,
+description, scheduler pool), and its body is `run_stage`, the one
+commit path. Every stage writes its own directory and appends its own
+uniquely named lineage and metrics files, so concurrent stages share no
+file. Lineage rows therefore land in completion order, not declaration
+order; `completed_at` orders them.
 """
 
 from __future__ import annotations
@@ -48,12 +58,15 @@ import datetime
 import hashlib
 import json
 import os
+import threading
 import time
 import uuid
+from concurrent.futures import Future
 from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -139,6 +152,7 @@ class StageRunner:
         self.out_dir = out_dir
         self.lineage_path = os.path.join(out_dir, "_lineage")
         self.metrics_path = os.path.join(out_dir, "_metrics")
+        self._threads: list[threading.Thread] = []
 
     def run_stage(
         self,
@@ -202,6 +216,41 @@ class StageRunner:
             json.dumps({"fingerprint": fp, "schema": out.schema.jsonValue()}),
         )
         return out
+
+    def submit(self, stage: str, fp: str, produce, *inputs: Future) -> Future:
+        """Start `stage` on its own driver thread → a Future of its frame.
+        The thread waits for every input future, then runs `run_stage`
+        with produce(*input frames). A failed input fails the stage with
+        the input's error, before anything of the stage runs. `join`
+        waits for every submitted stage."""
+        done: Future = Future()
+
+        def body():
+            try:
+                frames = [f.result() for f in inputs]
+                done.set_result(
+                    self.run_stage(stage, fp, lambda: produce(*frames))
+                )
+            except BaseException as exc:
+                done.set_exception(exc)
+
+        thread = threading.Thread(
+            target=inheritable_thread_target(self.spark)(body),
+            name=f"stage:{stage}",
+        )
+        self._threads.append(thread)
+        thread.start()
+        return done
+
+    def join(self, stages: list[Future]) -> list[DataFrame]:
+        """Wait until every submitted stage has settled and its thread has
+        ended → the frames of `stages`. Raises the error of the first
+        failed one in `stages`' order; a stage that failed because an
+        input did carries that input's error."""
+        for thread in self._threads:
+            thread.join()
+        self._threads.clear()
+        return [f.result() for f in stages]
 
     def lineage(self) -> DataFrame:
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_path)

@@ -112,6 +112,42 @@ def test_sig_expr_matches_column_composition(spark, mentions_df):
     assert new == old
 
 
+def test_numpy_sig_matches_sig_expr(spark):
+    """canonicalize's one-task signature (`_minhash_sig_np`, numpy over
+    the Arrow list offsets) equals minhash_sig_expr over the same base
+    hashes, on one-shingle, non-ASCII and NULL surfaces, and on a sliced
+    list array whose offsets do not start at 0."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from gliner_spark.operators.linking import (
+        _base_hashes,
+        _minhash_sig_np,
+        minhash_sig_expr,
+        shingle_set,
+    )
+
+    surfaces = spark.createDataFrame(
+        [(s,) for s in ["x", "", "Zoë  Ltd", "東京タワー", None, "Acme Corp"]],
+        "surface string",
+    )
+    rows = (
+        surfaces.select(
+            "surface",
+            _base_hashes(shingle_set(F.col("surface"), 3), 42).alias("_hs"),
+        )
+        .select("surface", "_hs", minhash_sig_expr("_hs", 64, 42).alias("sig"))
+        .collect()
+    )
+    by_surface = {r.surface: r for r in rows}
+    assert len(by_surface["x"]._hs) == len(by_surface[None]._hs) == 1
+    hs = pa.array([r._hs for r in rows], pa.list_(pa.int64()))
+    want = np.array([r.sig for r in rows], dtype=np.int64)
+    assert np.array_equal(_minhash_sig_np(hs, 64, 42), want)
+    assert np.array_equal(_minhash_sig_np(hs.slice(2), 64, 42), want[2:])
+
+
 def test_lsh_finds_identical_normalized_pairs(spark, mentions_df):
     sigs = minhash_signatures(surface_table(mentions_df))
     ids = {r.surface: r.surface_id for r in sigs.collect()}

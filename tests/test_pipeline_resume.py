@@ -3,6 +3,7 @@
 
 import datetime
 import os
+import threading
 import time
 import uuid
 from collections import Counter
@@ -118,6 +119,114 @@ def test_mid_run_crash_resume(spark, tiny_transcripts, clean_run,
     assert [r.stage for r in lineage].count("triples_re") == 1
     assert [r.stage for r in lineage].count("canon_map") == 1
     assert _canonical(res) == _canonical(clean_run)
+
+
+def _rows(df):
+    """df's rows as a sorted list, order-insensitive and None-safe."""
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_independent_stages_overlap(spark, tiny_transcripts, tmp_path,
+                                    monkeypatch):
+    """triples_re reads the transcripts, not the persisted entities, so it
+    runs beside entity extraction: each stage's producer waits (bounded)
+    for the other's to have started. Run one after the other, the first
+    producer times out alone."""
+    import gliner_spark.pipeline as pipeline_mod
+
+    meet = threading.Barrier(2, timeout=60)
+    real_ents, real_triples = pipeline_mod.extract_entities, pipeline_mod.extract_triples
+
+    def meeting(real):
+        def produce(*a, **kw):
+            meet.wait()
+            return real(*a, **kw)
+
+        return produce
+
+    monkeypatch.setattr(pipeline_mod, "extract_entities", meeting(real_ents))
+    monkeypatch.setattr(pipeline_mod, "extract_triples", meeting(real_triples))
+    res = _run(spark, tiny_transcripts, str(tmp_path))
+    assert res.triples.count() > 0 and res.entities.count() > 0
+
+
+def test_stage_jobs_inherit_job_group(spark, tiny_transcripts, tmp_path):
+    """Stage threads inherit the caller's local properties: every job a
+    run_pipeline under sc.setJobGroup starts is in that group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"pipeline-{uuid.uuid4().hex}"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "run_pipeline under a job group")
+    try:
+        _run(spark, tiny_transcripts, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_failed_stage_raises_after_independent_stages_commit(
+    spark, tiny_transcripts, tmp_path, monkeypatch
+):
+    """A raising canonicalize fails canon_map and every stage that reads
+    it, but run_pipeline raises only once the stages that do not read it
+    (triples_re, triples_cooccur) have committed, and no stage thread
+    outlives the call."""
+    import gliner_spark.pipeline as pipeline_mod
+    from gliner_spark.plans.lineage import StageRunner
+
+    def exploding_canonicalize(*a, **kw):
+        raise RuntimeError("injected canon_map failure")
+
+    monkeypatch.setattr(pipeline_mod, "canonicalize", exploding_canonicalize)
+    with pytest.raises(RuntimeError, match="injected canon_map failure"):
+        _run(spark, tiny_transcripts, str(tmp_path))
+    assert not [t for t in threading.enumerate() if t.name.startswith("stage:")]
+    done = {r.stage for r in StageRunner(spark, str(tmp_path)).lineage().collect()}
+    assert done == {"entities", "triples_re", "triples_cooccur"}
+    for stage in done:
+        assert (tmp_path / stage / "_FINGERPRINT").exists()
+
+
+def test_stages_equal_composed_operators(spark, tiny_transcripts, clean_run):
+    """Every stage output of the DAG run equals the operators composed
+    directly, one after another, as sorted rows."""
+    from pyspark.sql import functions as F
+
+    from gliner_spark.config import DEFAULT as cfg
+    from gliner_spark.operators.cooccur import induce_cooccurrence
+    from gliner_spark.operators.graph import build_edges, build_nodes
+    from gliner_spark.operators.linking import canonicalize, rewrite_triples
+    from gliner_spark.operators.ner import extract_entities
+    from gliner_spark.operators.relations import extract_triples
+
+    tr = tiny_transcripts
+    ents = extract_entities(tr, ENTITY_TYPES, cfg)
+    triples = extract_triples(tr, RELATIONS, ENTITY_TYPES, cfg)
+    canon = canonicalize(
+        ents.where(F.col("tok_end") - F.col("tok_start") < cfg.link_max_tokens),
+        n_perms=cfg.minhash_perms,
+        n_bands=cfg.lsh_bands,
+        shingle_n=cfg.shingle_size,
+        jaccard_threshold=cfg.jaccard_threshold,
+    )
+    ct = rewrite_triples(triples, canon)
+    want = {
+        "entities": ents,
+        "triples": triples,
+        "cooccur": induce_cooccurrence(ents, cfg.turn_window),
+        "canon_map": canon,
+        "canonical_triples": ct,
+        "nodes": build_nodes(canon, ct),
+        "edges": build_edges(ct),
+    }
+    for field_name, df in want.items():
+        got = getattr(clean_run, field_name)
+        assert got.columns == df.columns, field_name
+        assert _rows(got) == _rows(df), field_name
 
 
 @pytest.mark.parametrize("failing_step", ["lineage", "marker"])

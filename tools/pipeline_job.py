@@ -13,7 +13,12 @@ for the shuffle stages; spark-submit's 1g default OOMs beyond ~50k turns)
 Runs (or RESUMES — rerun with the same --out and it skips completed
 stages via the lineage table) the full dataflow: extraction → fused RE
 triples → co-occurrence → linking/canonicalization → nodes/edges +
-lineage/metrics. Prints one JSON line of stage row counts.
+lineage/metrics. Prints one JSON line of stage row counts plus, under
+"stages", each stage's start, end and wall_s from its latest lineage row
+(start = completed_at − wall_s; start and end in seconds since
+run_pipeline was called, negative for a stage resumed from an earlier
+run). Independent stages run at once, so overlapping [start, end]
+windows and the critical path read straight off the line.
 """
 
 from __future__ import annotations
@@ -86,11 +91,22 @@ def main():
         cfg=PipelineConfig(tokenizer=args.tokenizer),
         input_token=token,
     )
+    wall_s = time.time() - t0
+    lineage = sorted(res.runner.lineage().collect(), key=lambda r: r.completed_at)
+    latest = {r.stage: r for r in lineage}
+    stages = {
+        st: {
+            "start": round(r.completed_at.timestamp() - r.wall_s - t0, 2),
+            "end": round(r.completed_at.timestamp() - t0, 2),
+            "wall_s": round(r.wall_s, 2),
+        }
+        for st, r in latest.items()
+    }
     print(
         json.dumps(
             {
                 "out": args.out,
-                "wall_s": round(time.time() - t0, 2),
+                "wall_s": round(wall_s, 2),
                 "entities": res.entities.count(),
                 "triples_re": res.triples.count(),
                 "triples_cooccur": res.cooccur.count(),
@@ -98,6 +114,7 @@ def main():
                 "nodes": res.nodes.count(),
                 "edges": res.edges.count(),
                 "lineage_rows": res.runner.lineage().count(),
+                "stages": stages,
             }
         )
     )
