@@ -116,18 +116,3 @@ def induce_cooccurrence(
         "turn_b",
         (F.col("turn_b") - F.col("turn_a")).alias("dist"),
     )
-
-
-def cooccurrence_edges(
-    entities: DataFrame, turn_window: int = 2
-) -> DataFrame:
-    """Aggregated co-occurrence edges: one row per (subj, obj) surface pair
-    with evidence count and max pair score. Partial aggregation happens
-    map-side (hash agg); the groupBy shuffle is on the pair key, which is
-    far lower-cardinality than mentions."""
-    mention_pairs = induce_cooccurrence(entities, turn_window)
-    return mention_pairs.groupBy("subj", "pred", "obj").agg(
-        F.count(F.lit(1)).alias("n_evidence"),
-        F.max("score").alias("score"),
-        F.countDistinct("conv_id").alias("n_convs"),
-    )

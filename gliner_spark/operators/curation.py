@@ -992,75 +992,3 @@ def semantic_decontaminate(
         .cast("int")
         .alias("contaminated"),
     )
-
-
-def temperature_budgets(
-    df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    total_tokens: int = 1_000_000,
-    alpha: float = 0.3,
-) -> dict[str, int]:
-    """Temperature-scaled domain budgets (the mT5/XLM-R sampling rule,
-    Conneau et al. 2020): sample probability ∝ p_domain^alpha, where
-    p_domain is the domain's token share — alpha < 1 upsamples small
-    domains without drowning large ones. Returns the per-domain token
-    budget dict `mixture_sample` consumes, so the full pipeline is
-    measure → reweight → admit.
-
-    ONE hash agg over the corpus (per-domain token sums — rows =
-    #domains, the only collect); a domain's budget never exceeds its
-    actual token count (you cannot sample what is not there), and the
-    clipped surplus is redistributed over unclipped domains by one
-    driver-side waterfill loop (≤ #domains rounds).
-    """
-    if alpha <= 0:
-        raise ValueError("alpha > 0 required")
-    from ..functions.text import token_count
-
-    rows = (
-        df.groupBy(F.col(group_col).cast("string").alias("g"))
-        .agg(F.sum(token_count(F.col(text_col))).alias("n"))
-        .collect()
-    )
-    # drop NULL groups: cast('string') preserves NULL, and a None key in
-    # the returned dict would silently miss every string-keyed consumer
-    # (mixture_sample domain filters never match NULL)
-    sizes = {
-        r["g"]: int(r["n"])
-        for r in rows
-        if r["g"] is not None and r["n"]
-    }
-    if not sizes:
-        return {}
-    tot = float(sum(sizes.values()))
-    weights = {g: (n / tot) ** alpha for g, n in sizes.items()}
-    budget = {g: 0 for g in sizes}
-    remaining = int(total_tokens)
-    live = set(sizes)
-    while remaining > 0 and live:
-        wsum = sum(weights[g] for g in live)
-        alloc = {
-            g: int(remaining * weights[g] / wsum) for g in live
-        }
-        # integer floor can stall at tiny remainders: hand the tail to
-        # the largest-weight live domain
-        tail = remaining - sum(alloc.values())
-        if tail:
-            top = max(live, key=lambda g: (weights[g], g))
-            alloc[top] += tail
-        progressed = False
-        next_live = set()
-        for g in live:
-            room = sizes[g] - budget[g]
-            take = min(alloc[g], room)
-            budget[g] += take
-            remaining -= take
-            if take:
-                progressed = True
-            if budget[g] < sizes[g]:
-                next_live.add(g)
-        live = next_live
-        if not progressed:
-            break
-    return budget

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text, tokens, word_ngrams
-from .linking import _MERSENNE, band_keys
+from .linking import band_keys
 
 # --------------------------------------------------------------- exact dedup
 
@@ -770,48 +770,6 @@ def repeated_ngram_spans(
 BROADCAST_DROP_MAX = 8192
 
 
-def line_doc_frequency(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(_h, _df): document frequency of every trim-normalized non-empty
-    line, keyed by xxhash64. The per-doc `array_distinct` happens
-    MAP-SIDE before the explode, so a plain count(*) equals
-    count(distinct doc) without a two-phase distinct aggregate — one
-    map-side-combining shuffle of (hash, count) pairs."""
-    parts = F.split(F.col(text_col), "\n")
-    norm_lines = F.filter(
-        F.transform(parts, lambda l: F.trim(l)), lambda t: t != F.lit("")
-    )
-    return (
-        docs.select(F.explode(F.array_distinct(norm_lines)).alias("_norm"))
-        .groupBy(F.xxhash64("_norm").alias("_h"))
-        .agg(F.count(F.lit(1)).alias("_df"))
-    )
-
-
-def common_lines_report(
-    docs: DataFrame, top_k: int = 100, text_col: str = "text"
-) -> DataFrame:
-    """The min_df picker for `drop_common_lines`: the corpus's most
-    document-frequent lines WITH their text (`line_doc_frequency` keeps
-    only hashes). → (line, df, n_chars), df-desc, top_k rows.
-
-    Same map-side array_distinct + one combining aggregate; grouping is
-    on the line hash with min(line) as the representative (exact modulo
-    an xxhash64 collision, the usual stance), and the top-k lands as
-    TakeOrderedAndProject — no global sort."""
-    parts = F.split(F.col(text_col), "\n")
-    norm_lines = F.filter(
-        F.transform(parts, lambda l: F.trim(l)), lambda t: t != F.lit("")
-    )
-    return (
-        docs.select(F.explode(F.array_distinct(norm_lines)).alias("_norm"))
-        .groupBy(F.xxhash64("_norm").alias("_h"))
-        .agg(F.count(F.lit(1)).alias("df"), F.min("_norm").alias("line"))
-        .orderBy(F.desc("df"), "line")
-        .limit(top_k)
-        .select("line", "df", F.length("line").alias("n_chars"))
-    )
-
-
 def _drop_lines_broadcast(
     docs: DataFrame, drop_hashes: DataFrame, text_col: str
 ) -> DataFrame:
@@ -845,61 +803,6 @@ def _drop_lines_broadcast(
             - F.size(F.filter(kept, lambda l: F.trim(l) != F.lit("")))
         ).alias("n_dropped"),
     )
-
-
-def build_line_index(
-    docs: DataFrame,
-    table_prefix: str,
-    path: str | None = None,
-    text_col: str = "text",
-    n_file_buckets: int = 32,
-) -> None:
-    """Persist the corpus's line document-frequency table ONCE: at
-    100 TB the corpus is line-counted exactly once and every later
-    ingest shard probes the table instead of re-reading the corpus.
-
-      {prefix}_linedf (_h, _df)  bucketed + sorted on _h
-
-    The probe join therefore runs WITHOUT an Exchange on the corpus
-    side — only the new shard (small by construction of incremental
-    ingest) shuffles to the bucket layout. To fold a cleaned shard into
-    the index later, union its `line_doc_frequency` with the table and
-    re-aggregate (the df column is additive across disjoint doc sets).
-    """
-    from ..sources.catalog import write_bucketed
-
-    write_bucketed(
-        line_doc_frequency(docs, text_col),
-        f"{table_prefix}_linedf",
-        ["_h"],
-        n_file_buckets,
-        path=path,
-    )
-
-
-def drop_common_lines_against_index(
-    spark,
-    shard: DataFrame,
-    table_prefix: str,
-    min_df: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
-    """Clean a NEW ingest shard against a persisted corpus line-df table:
-    total df = corpus df + the shard's own df (additive over disjoint
-    doc sets), so the result equals batch `drop_common_lines` over
-    corpus ∪ shard restricted to shard docs — parity-pinned in tests.
-
-    Plan: the shard's (hash, count) aggregate joins the bucketed table
-    (corpus side scans in bucket layout, no Exchange), qualifying hashes
-    fold to one broadcast row, and the shard rewrite is a pure map."""
-    corpus_df = spark.table(f"{table_prefix}_linedf").select(
-        "_h", F.col("_df").alias("_corpus_df")
-    )
-    shard_df = line_doc_frequency(shard, text_col)
-    total = shard_df.join(corpus_df, "_h", "left").where(
-        F.col("_df") + F.coalesce(F.col("_corpus_df"), F.lit(0)) >= min_df
-    )
-    return _drop_lines_broadcast(shard, total, text_col)
 
 
 def drop_common_lines(
@@ -947,8 +850,14 @@ def drop_common_lines(
     repeated_ngram_spans: an xxhash64 collision could merge two distinct
     lines, vanishingly unlikely and accepted at scale.
     """
+    parts = F.split(F.col(text_col), "\n")
+    norm_lines = F.filter(
+        F.transform(parts, lambda l: F.trim(l)), lambda t: t != F.lit("")
+    )
     drop_hashes = (
-        line_doc_frequency(docs, text_col)
+        docs.select(F.explode(F.array_distinct(norm_lines)).alias("_norm"))
+        .groupBy(F.xxhash64("_norm").alias("_h"))
+        .agg(F.count(F.lit(1)).alias("_df"))
         .where(F.col("_df") >= min_df)
         .localCheckpoint()
     )
@@ -957,9 +866,7 @@ def drop_common_lines(
         return _drop_lines_broadcast(docs, drop_hashes, text_col)
     other = [c for c in docs.columns if c != text_col]
     exploded = docs.select(
-        id_col, F.posexplode(F.split(F.col(text_col), "\n")).alias(
-            "_pos", "_line"
-        )
+        id_col, F.posexplode(parts).alias("_pos", "_line")
     ).withColumn("_norm", F.trim("_line"))
     flagged = exploded.join(
         drop_hashes.select(F.col("_h"), F.lit(True).alias("_d")),
@@ -1117,54 +1024,3 @@ def winnow_fingerprints(
             F.col("_s.fp").alias("fp"),
         )
     )
-
-
-def winnow_near_duplicates(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = 5,
-    window: int = 4,
-    min_shared: int = 3,
-    max_fp_df: int = 1000,
-    portable: bool = False,
-) -> DataFrame:
-    """Partial-overlap candidates from winnowing fingerprints →
-    (doc_a, doc_b, n_shared): doc pairs sharing ≥ `min_shared`
-    distinct fingerprints — the consumer of `winnow_fingerprints`
-    that catches long copied PASSAGES inside otherwise-different
-    documents (MinHash's whole-doc Jaccard under-scores exactly that
-    shape; the guarantee says every shared ≥window+k−1-token run
-    leaves at least one shared fingerprint).
-
-    Same scale discipline as every LSH family here: fingerprints with
-    document frequency > `max_fp_df` are dropped BEFORE the self-join
-    (boilerplate grams otherwise explode the join quadratically —
-    the minhash band-cap / line-dedup df-cap rule), then one int64
-    equi-join on fp + one (a, b) map-side-combining pair count.
-    """
-    fps = (
-        winnow_fingerprints(
-            docs, text_col=text_col, k=k, window=window, portable=portable
-        )
-        .select("doc_id", "fp")
-        .distinct()
-    )
-    rare = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= max_fp_df)
-        .select("fp")
-    )
-    fps = fps.join(rare, "fp")
-    pairs = (
-        fps.alias("l")
-        .join(fps.alias("r"), "fp")
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .groupBy(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
-    )
-    return pairs

@@ -144,14 +144,15 @@ def pagerank(
     `init_ranks` warm-starts the iteration from a previous result
     (any (id, rank)-shaped frame, e.g. a persisted rank table from
     before an edge append): known vertices take their old rank, new
-    vertices 1/n, and the vector is renormalized to sum 1. Power
-    iteration contracts at factor `damping` per round toward the NEW
-    graph's fixpoint, so starting ||old − new|| ≈ ε away (a small edge
-    delta) instead of ||uniform − new|| cuts the rounds to reach `tol`
-    roughly by log(ε)/log(d) — the incremental-refresh path after
-    appends, same converged values as a cold run (parity-pinned in
-    test_graph_communities.py). Costs one extra pre-loop job (the
-    normalization sum + warm dangling mass together).
+    vertices 1/n, and the vector is renormalized to sum 1. It converges
+    to the same values as a cold run (parity-pinned in
+    test_graph_communities.py), but fewer rounds are NOT guaranteed:
+    the round-to-round delta contracts by `damping` from either start,
+    and the old ranks can carry more weight than uniform on the new
+    graph's slowly decaying modes (appending a 3-edge cycle to a
+    5-vertex graph needs 120 warm rounds against 25 cold at tol=1e-9).
+    Costs one extra pre-loop job (the normalization sum + warm
+    dangling mass together).
 
     `weight_col` makes the walk WEIGHTED: contributions become
     rank·w/Σ_out w instead of rank/out_degree — the KG edge table's
@@ -874,74 +875,6 @@ def skipgram_pairs(
         .groupBy("center", "context")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-def aggregate_messages(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    send_to_dst=None,
-    send_to_src=None,
-    agg=None,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    id_col: str = "id",
-) -> DataFrame:
-    """GraphFrames `aggregateMessages` as a plain DataFrame combinator:
-    build the TRIPLET view (every edge joined with its endpoint
-    attributes), evaluate `send_to_dst` / `send_to_src` message
-    expressions over it, and fold the messages per receiving vertex
-    with `agg` → (id, agg-columns). The one GraphFrames primitive the
-    graph module didn't already cover (find/motifs, shortestPaths,
-    labelPropagation, pageRank, triangleCount, CC/SCC all have
-    dedicated operators) — this is the extension surface for writing
-    NEW per-vertex passes without touching operator internals; the
-    dedicated operators stay hand-tuned (e.g. LPA's min(struct) pick).
-
-    Message expressions are pyspark Columns over the triplet schema:
-    edge columns keep their names; vertex attributes appear twice,
-    prefixed `src_` and `dst_` (e.g. `F.col("src_rank") /
-    F.col("src_deg")` is pagerank's contribution). `agg` is one
-    aggregate Column or a list of them. `vertices` may be omitted when
-    messages only need edge columns (degree counting). Plan shape: at
-    most two int64 equi-joins (vertex attrs onto edges — bucketed
-    edges make them Exchange-free at scale) + one hash agg on the
-    receiver id; messages to src and dst union BEFORE the aggregate,
-    so one shuffle folds both directions.
-    """
-    if send_to_dst is None and send_to_src is None:
-        raise ValueError("need send_to_dst and/or send_to_src")
-    if agg is None:
-        raise ValueError("need an aggregate expression")
-    aggs = agg if isinstance(agg, (list, tuple)) else [agg]
-    triplets = edges
-    if vertices is not None:
-        attrs = [c for c in vertices.columns if c != id_col]
-        src_v = vertices.select(
-            F.col(id_col).alias(src_col),
-            *[F.col(c).alias(f"src_{c}") for c in attrs],
-        )
-        dst_v = vertices.select(
-            F.col(id_col).alias(dst_col),
-            *[F.col(c).alias(f"dst_{c}") for c in attrs],
-        )
-        triplets = triplets.join(src_v, src_col).join(dst_v, dst_col)
-    msgs = []
-    if send_to_dst is not None:
-        msgs.append(
-            triplets.select(
-                F.col(dst_col).alias("id"), send_to_dst.alias("_msg")
-            )
-        )
-    if send_to_src is not None:
-        msgs.append(
-            triplets.select(
-                F.col(src_col).alias("id"), send_to_src.alias("_msg")
-            )
-        )
-    out = msgs[0]
-    for m in msgs[1:]:
-        out = out.unionByName(m)
-    return out.groupBy("id").agg(*aggs)
 
 
 def k_truss(

@@ -4,9 +4,8 @@ After extraction + linking materialize a canonical triple table
 (``operators/graph.py::build_edges`` input shape: subj_id, pred,
 obj_id, score, conv_id, …), a production KG pipeline needs a
 refinement pass: which predicates behave like functions, which
-subjects violate declared functional constraints, what is the
-combined confidence of a triple asserted by many noisy evidence rows,
-and what changed between two snapshots.
+subjects violate declared functional constraints, and what changed
+between two snapshots.
 The reference stops at emission (GLiNER predicts spans/relations per
 text — /root/reference/gliner/model.py:218 ``predict_entities``);
 these are the corpus-level consolidation ops a KG built FROM those
@@ -20,7 +19,7 @@ iteration, no Python rows.
 """
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -91,123 +90,6 @@ def functional_violations(
             F.count(F.lit(1)).alias("n_evidence"),
         )
         .where(F.col("n_obj") >= 2)
-    )
-
-
-def merge_evidence(
-    triples: DataFrame,
-    group_cols: Iterable[str] = ("subj_id", "pred", "obj_id"),
-    score_col: str = "score",
-    cap: float = 0.999999,
-) -> DataFrame:
-    """Noisy-OR evidence combination → one row per triple with
-    (n_evidence, max_score, combined_score).
-
-    Independent noisy assertions of the same triple combine as
-    1 − ∏(1 − s_i): two weak mentions beat one, and the result is
-    monotone in every input — the standard KG-fusion rule. Computed
-    as 1 − exp(Σ ln(1 − min(s, cap))) so it is ONE map-side-combining
-    aggregation (a product has no partial-agg form; a sum of logs
-    does). ``cap`` keeps ln() finite when a scorer emits exactly 1.0.
-
-    Floating caveat (why this op is pytest- not oracle-gated): the
-    log-sum order differs between engines/partitionings, so the last
-    ulp of combined_score is not cross-engine stable; parity is
-    asserted against a Python restatement at 1e-9 tolerance instead.
-    """
-    keys = [F.col(c) for c in group_cols]
-    s = F.least(F.col(score_col).cast("double"), F.lit(float(cap)))
-    return triples.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n_evidence"),
-        F.max(F.col(score_col)).alias("max_score"),
-        (1.0 - F.exp(F.sum(F.log(1.0 - s)))).alias("combined_score"),
-    )
-
-
-def resolve_conflicts(
-    triples: DataFrame,
-    functional_preds: Sequence[str],
-    pred_col: str = "pred",
-    subj_col: str = "subj_id",
-    obj_col: str = "obj_id",
-    score_col: str = "score",
-) -> DataFrame:
-    """Resolve functional-constraint conflicts → the triple table with
-    exactly ONE object per (functional pred, subject), plus
-    bookkeeping: (pred, subj_id, obj_id, combined_score, n_evidence,
-    n_rivals, won_by).
-
-    Evidence for each candidate object first folds by noisy-OR
-    (`merge_evidence` semantics inline — more independent assertions
-    beat one), then the winner per (pred, subj) is the max combined
-    score with ties broken by MIN object id (deterministic, engine-
-    independent). Non-functional predicates pass through unchanged
-    with n_rivals=0. The whole op is two hash aggregations (evidence
-    fold, then a min(struct(-score, obj)) argmax — an aggregate, not
-    a window sort, the repo's LPA tie-pick shape) — no windows over
-    the full table, no driver work.
-
-    won_by = combined score margin over the runner-up (0.0 when
-    unopposed) — the review-queue priority signal: tiny margins are
-    the rows a human checks first.
-    """
-    if not functional_preds:
-        raise ValueError("declare at least one functional predicate")
-    merged = merge_evidence(
-        triples,
-        group_cols=(subj_col, pred_col, obj_col),
-        score_col=score_col,
-    ).select(
-        F.col(pred_col).alias("pred"),
-        F.col(subj_col).alias("subj_id"),
-        F.col(obj_col).alias("obj_id"),
-        "combined_score",
-        "n_evidence",
-    )
-    fn = merged.where(F.col("pred").isin(list(functional_preds)))
-    rest = merged.where(~F.col("pred").isin(list(functional_preds)))
-    # argmax by (score desc, obj asc) as ONE aggregate over structs;
-    # second-best score rides along for the margin
-    pick = fn.groupBy("pred", "subj_id").agg(
-        F.min(
-            F.struct(
-                (-F.col("combined_score")).alias("ns"),
-                F.col("obj_id").alias("obj_id"),
-                F.col("n_evidence").alias("n_evidence"),
-            )
-        ).alias("w"),
-        F.count(F.lit(1)).alias("n_cand"),
-        F.max("combined_score").alias("best"),
-        # runner-up = max over non-winning rows; computed from the two
-        # largest scores: sort desc, element 2
-        F.sort_array(
-            F.collect_list("combined_score"), asc=False
-        ).alias("scores"),
-    )
-    resolved = pick.select(
-        "pred",
-        "subj_id",
-        F.col("w.obj_id").alias("obj_id"),
-        (-F.col("w.ns")).alias("combined_score"),
-        F.col("w.n_evidence").alias("n_evidence"),
-        (F.col("n_cand") - 1).alias("n_rivals"),
-        F.when(
-            F.col("n_cand") > 1,
-            F.col("best") - F.element_at("scores", 2),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("won_by"),
-    )
-    return resolved.unionByName(
-        rest.select(
-            "pred",
-            "subj_id",
-            "obj_id",
-            "combined_score",
-            "n_evidence",
-            F.lit(0).cast("long").alias("n_rivals"),
-            F.lit(0.0).alias("won_by"),
-        )
     )
 
 

@@ -305,104 +305,6 @@ def rrf_fuse(
     return ranked.withColumn("rk", F.row_number().over(w))
 
 
-def hybrid_rank(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    query_terms: list[str],
-    query_vec: list[float],
-    k_each: int = 20,
-    top_k: int = 10,
-    k0: float = 60.0,
-    id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-) -> DataFrame:
-    """BM25 + dense-cosine hybrid search over an aligned corpus
-    (documents and their embeddings share an id space) → the rrf_fuse
-    output shape. Convenience composition: each leg is the existing
-    corpus-scale ranker (bm25_rank's map-side tf, knn_bruteforce's
-    broadcast-query scan), fusion touches only 2·k_each rows."""
-    from .similarity import knn_bruteforce
-
-    lexical = bm25_rank(docs, query_terms, top_k=k_each, id_col=id_col)
-    q = docs.sparkSession.createDataFrame(
-        [(0, [float(x) for x in query_vec])],
-        "query_id long, embedding array<double>",
-    )
-    dense = knn_bruteforce(embeddings, q, k=k_each).select(
-        F.col(vec_id_col).alias(id_col), "rank"
-    )
-    return rrf_fuse(
-        [
-            lexical.select(id_col, "rk"),
-            dense.withColumnRenamed("rank", "rk"),
-        ],
-        k0=k0,
-        top_k=top_k,
-        id_col=id_col,
-    )
-
-
-def ranking_metrics(
-    ranked: DataFrame,
-    qrels: DataFrame,
-    k: int = 10,
-    query_col: str = "query_id",
-    doc_col: str = "doc_id",
-    rank_col: str = "rk",
-) -> DataFrame:
-    """Ranking evaluation → one row per query: (query_id, n_rel,
-    n_hits_at_k, recall_at_k, mrr, ndcg_at_k) — the metrics half of
-    the retrieval suite (bm25_rank / hybrid_rank / rrf_fuse produce
-    the (query, doc, rank) shape this consumes; `qrels` is the
-    binary-relevance gold set (query_id, doc_id)).
-
-    All metrics are per-query aggregations over ≤k joined rows:
-    recall@k = hits/|rel|, MRR = 1/first-hit-rank (0 when no hit),
-    NDCG@k = Σ_hit 1/log2(rank+1) normalized by the ideal prefix
-    Σ_{i≤min(|rel|,k)} 1/log2(i+1). One equi-join on (query, doc) +
-    one hash agg on query + a broadcast-sized join back to per-query
-    rel counts; macro-average by `.agg(F.avg(...))` downstream.
-    Pytest- not oracle-gated: the log2 discount sums are float
-    accumulations whose cross-engine summation order differs (the
-    merge_evidence caveat); parity is pinned vs a Python restatement.
-    """
-    q, d, r = F.col(query_col), F.col(doc_col), F.col(rank_col)
-    ranked_k = ranked.select(
-        q.alias("qid"), d.alias("did"), r.cast("long").alias("rk")
-    ).where(F.col("rk") <= k)
-    rel = qrels.select(
-        F.col(query_col).alias("qid"), F.col(doc_col).alias("did")
-    ).distinct()
-    nrel = rel.groupBy("qid").agg(F.count(F.lit(1)).alias("n_rel"))
-    hits = ranked_k.join(rel, ["qid", "did"])
-    per_q = hits.groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hits_at_k"),
-        F.min("rk").alias("first_hit"),
-        F.sum(1.0 / F.log2(F.col("rk") + 1.0)).alias("dcg"),
-    )
-    ideal = F.aggregate(
-        F.sequence(F.lit(1), F.least(F.col("n_rel"), F.lit(k))),
-        F.lit(0.0),
-        lambda acc, i: acc + 1.0 / F.log2(i.cast("double") + 1.0),
-    )
-    return (
-        nrel.join(per_q, "qid", "left")
-        .select(
-            F.col("qid").alias(query_col),
-            "n_rel",
-            F.coalesce("n_hits_at_k", F.lit(0)).alias("n_hits_at_k"),
-            (
-                F.coalesce("n_hits_at_k", F.lit(0))
-                / F.col("n_rel").cast("double")
-            ).alias("recall_at_k"),
-            F.coalesce(1.0 / F.col("first_hit"), F.lit(0.0)).alias(
-                "mrr"
-            ),
-            (F.coalesce("dcg", F.lit(0.0)) / ideal).alias("ndcg_at_k"),
-        )
-    )
-
-
 def assemble_context(
     ranked: DataFrame,
     budget_tokens: int,

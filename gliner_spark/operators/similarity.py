@@ -1139,120 +1139,3 @@ def random_project(
         * F.lit(scale),
     )
     return with_s.select(id_col, proj.alias("proj"))
-
-
-# ----------------------------------------------------------------------- PCA
-
-
-def pca_components(
-    embeddings: DataFrame,
-    out_dim: int,
-    vec_col: str = "embedding",
-    center: bool = True,
-) -> tuple[list[list[float]], list[float], list[float]]:
-    """Distributed PCA training → (components[out_dim][d], mean[d],
-    explained_variance[out_dim]): one corpus pass computes per-partition
-    covariance PARTIALS (n, Σx, XᵀX — each a d / d² payload, Arrow-
-    vectorized numpy GEMM per batch), the driver combines them and
-    eigendecomposes the d×d covariance (d is embedding width, so the
-    driver work is microseconds). The data-dependent complement of
-    random_project: PCA needs a training pass but packs variance into
-    the fewest dimensions — the SemDeDup-style front end where JL's
-    obliviousness wastes dimensions.
-
-    Components carry a DETERMINISTIC sign convention (largest-|·|
-    coordinate positive) so training is reproducible across partition
-    orders up to eigenvalue ties; partials are exact sums, and
-    numpy's eigh on the combined d×d matrix is partition-order
-    independent because the partial SUM is combined in one driver
-    reduction over sorted partition ids.
-    """
-    import numpy as np
-
-    d_row = embeddings.select(F.size(vec_col).alias("d")).first()
-    if d_row is None:
-        raise ValueError("cannot train PCA on an empty frame")
-    d = d_row["d"]
-    if not 1 <= out_dim <= d:
-        raise ValueError(f"out_dim must be in [1, {d}]")
-
-    def partials(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-            )
-            yield pd.DataFrame(
-                {
-                    "n": [len(x)],
-                    "s": [x.sum(axis=0).tolist()],
-                    "xtx": [(x.T @ x).ravel().tolist()],
-                }
-            )
-
-    rows = (
-        embeddings.select(F.col(vec_col).cast("array<double>").alias("_v"))
-        .mapInPandas(
-            partials, "n long, s array<double>, xtx array<double>"
-        )
-        .collect()
-    )
-    n = sum(r["n"] for r in rows)
-    s = np.zeros(d)
-    xtx = np.zeros((d, d))
-    for r in rows:
-        s += np.asarray(r["s"])
-        xtx += np.asarray(r["xtx"]).reshape(d, d)
-    mean = s / n if center else np.zeros(d)
-    cov = xtx / n - np.outer(mean, mean)
-    vals, vecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(vals)[::-1][:out_dim]
-    comps = vecs[:, order].T
-    # deterministic sign: the largest-|coordinate| entry is positive
-    for c in comps:
-        j = int(np.argmax(np.abs(c)))
-        if c[j] < 0:
-            c *= -1
-    return (
-        [c.tolist() for c in comps],
-        mean.tolist(),
-        [float(vals[i]) for i in order],
-    )
-
-
-def pca_project(
-    embeddings: DataFrame,
-    components: list[list[float]],
-    mean: list[float] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Apply trained PCA → (id, proj[out_dim]): a PURE MAP — the
-    components (and mean) ride as one-row broadcast columns (the
-    SQL PQ encode lesson: never expression literals inside HOF lambdas),
-    each output coordinate is one zip_with/aggregate fold over the
-    centered vector. Zero shuffles; the corpus is never collected."""
-    out_dim = len(components)
-    d = len(components[0])
-    mu = mean if mean is not None else [0.0] * d
-    base = embeddings.select(
-        id_col, F.col(vec_col).cast("array<double>").alias("_x")
-    )
-    base = _with_const(
-        base, "_w", [list(map(float, c)) for c in components],
-        "array<array<double>>",
-    )
-    base = _with_const(base, "_mu", [float(v) for v in mu], "array<double>")
-    centered = F.zip_with(F.col("_x"), F.col("_mu"), lambda x, m: x - m)
-    proj = F.transform(
-        F.sequence(F.lit(0), F.lit(out_dim - 1)),
-        lambda j: F.aggregate(
-            F.zip_with(
-                centered, F.col("_w")[j], lambda x, w: x * w
-            ),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ),
-    )
-    return base.select(id_col, proj.alias("proj"))

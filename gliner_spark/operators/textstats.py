@@ -1,7 +1,7 @@
 """Text analysis over a document corpus: token stats, quality scoring,
-language ID, fingerprinting. 100% native expressions (whole-stage codegen;
-zero Python in the hot path) — these run as pure map stages with no
-shuffle, so they pipeline with the parquet scan at any scale.
+language ID. 100% native expressions (whole-stage codegen; zero Python
+in the hot path) — these run as pure map stages with no shuffle, so
+they pipeline with the parquet scan at any scale.
 """
 
 from __future__ import annotations
@@ -12,10 +12,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import (
-    normalized_text,
     punct_ratio,
     stopword_ratio,
-    token_count,
     tokens,
 )
 
@@ -324,28 +322,6 @@ def corpus_summary(
         F.element_at("p50_p90_p99", 2).alias("p90_tokens"),
         F.element_at("p50_p90_p99", 3).alias("p99_tokens"),
         "avg_tokens",
-    )
-
-
-def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Content fingerprints: md5 of normalized text (exact identity) + a
-    64-bit polynomial rolling hash over tokens (shift-resistant identity),
-    computed as a native aggregate fold. ANSI-safe: the fold keeps the
-    accumulator inside [0, 2^31−1) via pmod so the ×31 step cannot
-    overflow int64."""
-    p = (1 << 31) - 1
-    toks = tokens(normalized_text(F.col(text_col)))
-    rolling = F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: F.pmod(
-            acc * F.lit(31) + F.pmod(F.xxhash64(t), F.lit(p)), F.lit(p)
-        ),
-    )
-    return docs.select(
-        "doc_id",
-        F.md5(normalized_text(F.col(text_col))).alias("content_md5"),
-        rolling.alias("rolling_hash"),
     )
 
 

@@ -6,7 +6,7 @@ import itertools
 import pytest
 from pyspark.sql import Row
 
-from gliner_spark.operators.cooccur import cooccurrence_edges, induce_cooccurrence
+from gliner_spark.operators.cooccur import induce_cooccurrence
 
 MENTIONS = [
     # conv_id, turn_idx, start, end, text, label, score
@@ -68,11 +68,3 @@ def test_plan_uses_equi_join_not_nested_loop(spark, mentions_df):
     )
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-
-
-def test_edges_aggregation(spark, mentions_df):
-    edges = {(r.subj, r.obj): (r.n_evidence, r.n_convs)
-             for r in cooccurrence_edges(mentions_df, 5).collect()}
-    # Bob co-occurs with Redis and Kafka in c2 (and Alice-Bob distance 4 in c1)
-    assert edges[("Bob", "Redis")] == (1, 1)
-    assert ("Alice", "Bob") in edges

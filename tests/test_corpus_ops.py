@@ -338,35 +338,6 @@ def test_language_id_accuracy(spark, docs):
 # -------------------------------------------------------------- multimodal
 
 
-def test_fingerprints_vs_duckdb(spark, docs, ddb):
-    from gliner_spark.operators.textstats import fingerprints
-
-    got = {r.doc_id: r.content_md5 for r in fingerprints(docs).collect()}
-    exp = dict(
-        ddb.execute(
-            r"""
-            select doc_id,
-                   md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
-            from documents
-            """
-        ).fetchall()
-    )
-    assert got == exp
-
-
-def test_rolling_hash_shift_invariance(spark):
-    from gliner_spark.operators.textstats import fingerprints
-
-    d = spark.createDataFrame(
-        [Row(doc_id=1, text="Hello   World Foo"),
-         Row(doc_id=2, text="hello world foo"),   # same normalized tokens
-         Row(doc_id=3, text="hello world bar")]
-    )
-    fp = {r.doc_id: r.rolling_hash for r in fingerprints(d).collect()}
-    assert fp[1] == fp[2]
-    assert fp[1] != fp[3]
-
-
 def test_multimodal_fake_features_deterministic(spark):
     from gliner_spark.operators.multimodal import extract_features, synth_assets
 
@@ -1240,96 +1211,6 @@ def test_drop_common_lines_min_df_and_clean_corpus(spark, side):
     assert out2 == {i: f"unique head {i}" for i in range(3)}
 
 
-def test_line_index_probe_matches_batch(spark, tmp_path_factory):
-    """Incremental invariant: cleaning a new shard against the persisted
-    corpus line-df table == batch drop_common_lines over corpus ∪ shard,
-    restricted to shard docs — including the cross-set case where a line
-    is rare in the corpus AND rare in the shard but common combined."""
-    from gliner_spark.operators.dedup import (
-        build_line_index,
-        drop_common_lines,
-        drop_common_lines_against_index,
-    )
-
-    base = str(tmp_path_factory.mktemp("line_idx"))
-    corpus_rows = [
-        (1, "boiler\nalpha one"),
-        (2, "boiler\nbeta two"),
-        (3, "rare line\ngamma three"),   # df=1 in corpus
-    ]
-    shard_rows = [
-        (10, "boiler\ndelta ten"),            # corpus-common line
-        (11, "rare line\nepsilon eleven"),    # common only combined (1+1)
-        (12, "shardline\nzeta twelve"),
-        (13, "shardline\neta thirteen"),      # shard-internal df=2
-        (14, "unique fourteen"),
-    ]
-    corpus = spark.createDataFrame(corpus_rows, "doc_id: bigint, text: string")
-    shard = spark.createDataFrame(shard_rows, "doc_id: bigint, text: string")
-    try:
-        build_line_index(corpus, "ldx", path=base)
-        got = {
-            r.doc_id: (r.text, r.n_lines, r.n_dropped)
-            for r in drop_common_lines_against_index(
-                spark, shard, "ldx", min_df=2
-            ).collect()
-        }
-        batch = {
-            r.doc_id: (r.text, r.n_lines, r.n_dropped)
-            for r in drop_common_lines(
-                corpus.unionByName(shard), min_df=2
-            ).collect()
-            if r.doc_id >= 10
-        }
-        assert got == batch
-        assert got[11][0] == "epsilon eleven"   # combined-df drop fired
-        assert got[13][0] == "eta thirteen"     # shard-internal drop fired
-    finally:
-        spark.sql("drop table if exists ldx_linedf")
-
-
-def test_line_index_probe_corpus_side_exchange_free(
-    spark, docs, tmp_path_factory
-):
-    """The probe's df join reads the bucketed corpus table without an
-    Exchange; the only shuffles hang off the shard side."""
-    from gliner_spark.operators.dedup import (
-        build_line_index,
-        drop_common_lines_against_index,
-    )
-
-    base = str(tmp_path_factory.mktemp("line_idx2"))
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast so the test sees the at-scale SMJ shape
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        build_line_index(docs.limit(40), "ldp", path=base)
-        out = drop_common_lines_against_index(spark, docs.limit(5), "ldp")
-        plan = out._sc._jvm.PythonSQLUtils.explainString(
-            out._jdf.queryExecution(), "formatted"
-        )
-        tree = plan.split("\n\n")[0].split("\n")
-
-        def connector_pos(ln):
-            a, b = ln.find("+-"), ln.find(":-")
-            return min(x for x in (a, b) if x >= 0) if max(a, b) >= 0 else -1
-
-        (i,) = [n for n, ln in enumerate(tree) if "ldp_linedf" in ln]
-        depth = connector_pos(tree[i])
-        for ln in reversed(tree[:i]):
-            pos = connector_pos(ln)
-            if 0 <= pos < depth:
-                assert "Exchange" not in ln, (ln, tree)
-                depth = pos
-                if "Join" in ln:
-                    break
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("drop table if exists ldp_linedf")
-
-
 def test_drop_common_lines_preserves_extra_columns(spark, side):
     from gliner_spark.operators.dedup import drop_common_lines
 
@@ -1769,21 +1650,6 @@ def test_assign_nearest_matches_literal_nearest_centroid(spark, embeddings):
         for r in assign_nearest(e, cents, "x").collect()
     }
     assert lit == bc
-
-
-def test_common_lines_report(spark):
-    from gliner_spark.operators.dedup import common_lines_report
-
-    rows = [(i, "boiler\n" + (f"foot\n" if i % 2 == 0 else "") + f"body {i}")
-            for i in range(10)]
-    docs = spark.createDataFrame(rows, "doc_id: bigint, text: string")
-    got = [(r.line, r.df) for r in common_lines_report(docs, top_k=2).collect()]
-    assert got == [("boiler", 10), ("foot", 5)]
-    full = common_lines_report(docs, top_k=100).collect()
-    assert {r.line for r in full} == {"boiler", "foot"} | {
-        f"body {i}" for i in range(10)
-    }
-    assert all(r.n_chars == len(r.line) for r in full)
 
 
 def test_avi_codec_roundtrip():

@@ -868,73 +868,3 @@ def test_leakage_safe_split_balanced_and_deterministic(spark):
     assert b == c
     with _pytest.raises(ValueError):
         leakage_safe_split(docs, edges, k=1)
-
-
-def test_temperature_budgets_waterfill_and_caps(spark):
-    from gliner_spark.operators.curation import temperature_budgets
-
-    rows = []
-    for d, (src, ndocs, nw) in enumerate(
-        [("big", 80, 20), ("mid", 20, 10), ("tiny", 4, 5)]
-    ):
-        for i in range(ndocs):
-            rows.append(
-                (d * 1000 + i, src, " ".join(["w"] * nw))
-            )
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    sizes = {"big": 1600, "mid": 200, "tiny": 20}
-
-    # alpha=1 ==> proportional allocation
-    b1 = temperature_budgets(df, total_tokens=910, alpha=1.0)
-    assert sum(b1.values()) == 910
-    assert abs(b1["big"] - 800) <= 2 and abs(b1["mid"] - 100) <= 2
-
-    # alpha -> 0 flattens: tiny domain caps at its real size and the
-    # surplus waterfills into the others
-    b2 = temperature_budgets(df, total_tokens=900, alpha=0.01)
-    assert b2["tiny"] == sizes["tiny"]
-    assert sum(b2.values()) == 900
-    assert b2["big"] >= 400 and b2["mid"] == sizes["mid"]
-
-    # budget above the whole corpus -> everything, fully capped
-    b3 = temperature_budgets(df, total_tokens=10_000, alpha=0.3)
-    assert b3 == sizes
-
-
-def test_temperature_budgets_feed_mixture_sample(spark):
-    from gliner_spark.operators.curation import (
-        mixture_sample,
-        temperature_budgets,
-    )
-
-    rows = [
-        (i, "a" if i < 40 else "b", " ".join(["w"] * 10))
-        for i in range(50)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    budgets = temperature_budgets(
-        df, total_tokens=200, alpha=0.5
-    )
-    out = mixture_sample(df, "source", budgets)
-    kept = out.groupBy("source").count().collect()
-    by = {r["source"]: r["count"] for r in kept}
-    # alpha=0.5 upsamples b relative to proportional (40 vs 100 tokens)
-    assert by["b"] >= 6  # b fully... budget_b = 200*sqrt(.2)/(sqrt(.8)+sqrt(.2)) ≈ 67 -> 6 docs admitted at 10 tok each
-    assert sum(by.values()) >= 18
-
-
-def test_temperature_budgets_drop_null_groups(spark):
-    """ADVICE r4: NULL domains survive cast('string') and would put a
-    None key into the budget dict that string-keyed consumers never
-    match — they are dropped before allocation."""
-    from gliner_spark.operators.curation import temperature_budgets
-
-    df = spark.createDataFrame(
-        [("a", "x y z"), (None, "p q r s t u v w"), ("b", "k l")],
-        "domain string, text string",
-    )
-    budget = temperature_budgets(
-        df, group_col="domain", total_tokens=5, alpha=0.5
-    )
-    assert set(budget) == {"a", "b"}
-    assert None not in budget and sum(budget.values()) == 5

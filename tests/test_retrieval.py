@@ -233,58 +233,6 @@ def test_rrf_rejects_empty(spark):
         rrf_fuse([])
 
 
-def test_hybrid_rank_fuses_lexical_and_dense(spark):
-    """doc 1 wins the lexical leg, doc 2 wins the dense leg, doc 0 is
-    mid-pack on both — RRF must put the consistently-ranked doc 0 above
-    whichever single-leg loser trails it, and the whole output must
-    equal the python composition of the two leg oracles."""
-    from gliner_spark.operators.retrieval import (
-        bm25_rank,
-        hybrid_rank,
-        rrf_fuse,
-    )
-    from gliner_spark.operators.similarity import knn_bruteforce
-
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 1.0, 0.0]),
-            (1, [0.0, 1.0, 0.0]),
-            (2, [1.0, 0.0, 0.0]),
-            (3, [0.0, 0.0, 1.0]),
-            (4, [-1.0, 0.0, 0.0]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    qvec = [1.0, 0.1, 0.0]
-    got = [
-        (r.doc_id, r.rrf, r.n_legs, r.rk)
-        for r in hybrid_rank(
-            docs, emb, ["spark"], qvec, k_each=3, top_k=5
-        ).collect()
-    ]
-    lex = [
-        (r.doc_id, r.rk)
-        for r in bm25_rank(docs, ["spark"], top_k=3).collect()
-    ]
-    q = spark.createDataFrame(
-        [(0, qvec)], "query_id long, embedding array<double>"
-    )
-    dense = [
-        (r.vec_id, r.rank) for r in knn_bruteforce(emb, q, k=3).collect()
-    ]
-    assert got == _rrf_oracle([lex, dense], top_k=5)
-    # and the composition equals calling rrf_fuse directly
-    direct = rrf_fuse(
-        [
-            spark.createDataFrame(lex, "doc_id long, rk long"),
-            spark.createDataFrame(dense, "doc_id long, rk long"),
-        ],
-        top_k=5,
-    ).collect()
-    assert got == [(r.doc_id, r.rrf, r.n_legs, r.rk) for r in direct]
-
-
 def test_decontaminate_planted_overlap(spark):
     bench = spark.createDataFrame(
         [(100, "alpha beta gamma delta")], "doc_id long, text string"
@@ -345,87 +293,6 @@ def test_decontaminate_broadcasts_benchmark_grams(spark):
 
 
 # ------------------------------------------------------ assemble_context
-
-
-def test_ranking_metrics_matches_python(spark):
-    import math
-
-    from gliner_spark.operators.retrieval import ranking_metrics
-
-    ranked_rows = [
-        # q1: rel docs at ranks 1 and 3 (of rel set {10, 30, 99})
-        (1, 10, 1), (1, 20, 2), (1, 30, 3), (1, 40, 4),
-        # q2: no hits in top-k
-        (2, 50, 1), (2, 60, 2),
-        # q3: single rel doc at rank 2
-        (3, 70, 1), (3, 80, 2),
-    ]
-    qrel_rows = [
-        (1, 10), (1, 30), (1, 99),
-        (2, 99),
-        (3, 80),
-    ]
-    ranked = spark.createDataFrame(
-        ranked_rows, "query_id long, doc_id long, rk long"
-    )
-    qrels = spark.createDataFrame(qrel_rows, "query_id long, doc_id long")
-    got = {
-        r["query_id"]: r.asDict()
-        for r in ranking_metrics(ranked, qrels, k=4).collect()
-    }
-
-    def dcg(ranks):
-        return sum(1.0 / math.log2(r + 1) for r in ranks)
-
-    g1 = got[1]
-    assert (g1["n_rel"], g1["n_hits_at_k"]) == (3, 2)
-    assert g1["recall_at_k"] == 2 / 3
-    assert g1["mrr"] == 1.0
-    assert g1["ndcg_at_k"] == pytest.approx(
-        dcg([1, 3]) / dcg([1, 2, 3]), abs=1e-12
-    )
-    g2 = got[2]
-    assert (g2["n_hits_at_k"], g2["recall_at_k"], g2["mrr"]) == (0, 0.0, 0.0)
-    assert g2["ndcg_at_k"] == 0.0
-    g3 = got[3]
-    assert g3["mrr"] == 0.5
-    assert g3["ndcg_at_k"] == pytest.approx(
-        dcg([2]) / dcg([1]), abs=1e-12
-    )
-    # macro averages compose downstream
-    import pyspark.sql.functions as F
-    macro = (
-        ranking_metrics(ranked, qrels, k=4)
-        .agg(F.avg("ndcg_at_k"), F.avg("mrr"))
-        .collect()[0]
-    )
-    assert macro[1] == pytest.approx((1.0 + 0.0 + 0.5) / 3)
-
-
-def test_ranking_metrics_on_real_bm25_output(spark):
-    from pyspark.sql import functions as F
-
-    from gliner_spark.operators.retrieval import bm25_rank, ranking_metrics
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spark shuffles data between executors"),
-            (2, "pandas runs on a single machine"),
-            (3, "spark broadcast joins avoid shuffles"),
-            (4, "cats and dogs"),
-        ],
-        "doc_id long, text string",
-    )
-    ranked = bm25_rank(docs, ["spark", "shuffles"], top_k=3).select(
-        F.lit(100).alias("query_id"), "doc_id", "rk"
-    )
-    qrels = spark.createDataFrame(
-        [(100, 1), (100, 3)], "query_id long, doc_id long"
-    )
-    row = ranking_metrics(ranked, qrels, k=3).collect()[0]
-    assert row["n_rel"] == 2
-    assert row["recall_at_k"] == 1.0  # both relevant docs retrieved
-    assert row["mrr"] == 1.0          # a relevant doc ranks first
 
 
 def test_assemble_context_budget_rule(spark):

@@ -25,6 +25,12 @@ BATCHES = [
     [(16, 7), (3, 11), (11, 3)],
 ]
 TOL = 1e-10
+# appending a 3-edge cycle: the warm start needs more rounds than a cold
+# run (134 against 27 at TOL), so a fixed round cap stops it short
+SLOW_WARM = [
+    [(0, 1), (1, 2), (2, 0), (2, 3), (3, 1), (4, 2)],
+    [(3, 4), (4, 5), (5, 0)],
+]
 
 
 def _edges(spark, pairs):
@@ -37,8 +43,8 @@ def _rank_map(df):
     return {r.entity_id: r.rank for r in df.collect()}
 
 
-def _cold(spark, upto):
-    pairs = [p for b in BATCHES[:upto] for p in b]
+def _cold(spark, upto, batches=BATCHES):
+    pairs = [p for b in batches[:upto] for p in b]
     return _rank_map(
         pagerank(
             _edges(spark, pairs), max_iter=100, tol=TOL,
@@ -60,13 +66,8 @@ def _warehouse(spark):
 def _drop_all(spark, base):
     import shutil
 
-    for t in spark.catalog.listTables():
-        if t.name.startswith(base):
-            spark.sql(f"drop table if exists {t.name}")
-    # a KILLED previous run leaves warehouse DIRECTORIES with no catalog
-    # entry; drop-if-exists can't see them and the next saveAsTable dies
-    # with LOCATION_ALREADY_EXISTS (CLAUDE.md warehouse lesson) — sweep
-    # the prefix dirs too, like tools/stream_kg_job.py does
+    # the store is plain parquet dirs under the warehouse: sweep every
+    # dir with the prefix, including a killed previous run's leftovers
     wh = _warehouse(spark)
     if os.path.isdir(wh):
         for d in os.listdir(wh):
@@ -130,6 +131,20 @@ def test_fold_parity_replay_crash_and_pruning(spark):
         )
     finally:
         _drop_all(spark, "sgr")
+
+
+def test_warm_fold_stops_on_tol_not_a_round_cap(spark):
+    base = "sgrw"
+    _drop_all(spark, base)
+    try:
+        for i, b in enumerate(SLOW_WARM):
+            assert fold_edge_batch(_edges(spark, b), i, base, tol=TOL)
+            _assert_close(
+                _rank_map(current_ranks(spark, base)),
+                _cold(spark, i + 1, SLOW_WARM),
+            )
+    finally:
+        _drop_all(spark, base)
 
 
 def test_stream_pagerank_end_to_end_and_restart(

@@ -1,11 +1,11 @@
-"""Public-surface reach guard (static, no Spark).
+"""Surface reach guard (static, no Spark).
 
-Every public top-level def in `gliner_spark/` must be reached from a
-product root — the pipelines, `tools/`, `bench.py`, `perfbench/`, the
-gate's `__spark_entry__.py` — or from module-level code, directly or
-through other package code. The only exceptions are the defs in `KEEP`,
-each with its reason. A def reached only from `tests/` is either given a
-product caller or deleted with its tests.
+Every top-level def in `gliner_spark/`, public or private, must be
+reached from a product root — the pipelines, `tools/`, `bench.py`,
+`perfbench/`, the gate's `__spark_entry__.py` — or from module-level
+code, directly or through other package code. The only exceptions
+are the defs in `KEEP`, each with its reason. A def reached only from
+`tests/` is either given a product caller or deleted with its tests.
 
 Reach is by NAME: a def counts as reached when its name appears (as a
 name, an attribute, an imported name, or a string in module-level code
@@ -28,11 +28,6 @@ PRODUCT_ROOTS = [
     *sorted((ROOT / "tools").glob("*.py")),
     *sorted((ROOT / "perfbench").glob("*.py")),
 ]
-
-# test-only leaf operators whose deletion, with their tests, is left to
-# a later change so that no one change drops too many tier-1 tests
-# (ROADMAP direction 5)
-_DEFERRED = "test-only; deletion deferred (ROADMAP direction 5)"
 
 # (module, def) -> why it stays without a product caller
 KEEP = {
@@ -75,27 +70,6 @@ KEEP = {
     ("operators/multimodal.py", "synth_wav_sample"): (
         "test data for the live multimodal operators"
     ),
-    **{
-        (mod, name): _DEFERRED
-        for mod, name in [
-            ("operators/cooccur.py", "cooccurrence_edges"),
-            ("operators/curation.py", "temperature_budgets"),
-            ("operators/dedup.py", "build_line_index"),
-            ("operators/dedup.py", "common_lines_report"),
-            ("operators/dedup.py", "drop_common_lines_against_index"),
-            ("operators/dedup.py", "winnow_near_duplicates"),
-            ("operators/graph.py", "aggregate_messages"),
-            ("operators/kgquality.py", "merge_evidence"),
-            ("operators/kgquality.py", "resolve_conflicts"),
-            ("operators/retrieval.py", "hybrid_rank"),
-            ("operators/retrieval.py", "ranking_metrics"),
-            ("operators/similarity.py", "pca_components"),
-            ("operators/similarity.py", "pca_project"),
-            ("operators/textstats.py", "fingerprints"),
-            ("sources/catalog.py", "zorder_key"),
-            ("sources/catalog.py", "zorder_write"),
-        ]
-    },
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -149,7 +123,7 @@ def _reached(defs, roots):
     return seen
 
 
-def test_every_public_def_has_a_product_caller():
+def test_every_top_level_def_has_a_product_caller():
     defs, used = _package()
     roots = set(used)
     for path in PRODUCT_ROOTS:
@@ -162,11 +136,11 @@ def test_every_public_def_has_a_product_caller():
     unreached = sorted(
         f"{mod}::{name}"
         for name, where in defs.items()
-        if not name.startswith("_") and name not in seen
+        if name not in seen
         for mod, _node in where
     )
     assert unreached == [], (
-        "public defs no product root reaches (give each a caller, delete "
+        "top-level defs no product root reaches (give each a caller, delete "
         "it with its tests, or add it to KEEP with a reason): "
         + ", ".join(unreached)
     )

@@ -79,41 +79,3 @@ def test_bad_params(spark):
     df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     with pytest.raises(ValueError):
         winnow_fingerprints(df, window=0)
-
-
-def test_near_duplicates_planted_passage(spark):
-    from gliner_spark.operators.dedup import winnow_near_duplicates
-
-    passage = " ".join(f"tok{i}" for i in range(40))
-    rows = [
-        (1, "intro words here " + passage + " closing remarks"),
-        (2, passage + " totally different ending material now"),
-        (3, " ".join(f"other{i}" for i in range(50))),
-        (4, " ".join(f"more{i}" for i in range(50))),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r["doc_a"], r["doc_b"]): r["n_shared"]
-        for r in winnow_near_duplicates(df, min_shared=3).collect()
-    }
-    assert set(got) == {(1, 2)}
-    assert got[(1, 2)] >= 3
-
-
-def test_near_duplicates_df_cap_drops_boilerplate(spark):
-    from gliner_spark.operators.dedup import winnow_near_duplicates
-
-    # six identical docs: every selected fingerprint has df=6, so a
-    # cap below 6 suppresses the whole quadratic pair fan-out (the cap
-    # applies to SELECTED-fingerprint document frequency)
-    text = " ".join(f"b{i}" for i in range(30))
-    df = spark.createDataFrame(
-        [(i, text) for i in range(6)], "doc_id long, text string"
-    )
-    assert (
-        winnow_near_duplicates(df, min_shared=1, max_fp_df=3).count() == 0
-    )
-    assert (
-        winnow_near_duplicates(df, min_shared=1, max_fp_df=1000).count()
-        == 15
-    )
