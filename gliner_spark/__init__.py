@@ -7,7 +7,7 @@ Layout:
     kernel/     pure numpy/python reference-semantics oracle (no Spark)
     functions/  column-level helpers built on pyspark.sql.functions
     operators/  DataFrame→DataFrame operators (NER, relations, linking, dedup…)
-    sources/    synthetic transcripts source, catalog (parquet w/ Iceberg probe)
+    sources/    synthetic transcripts source and its schema
     plans/      session builder + staged, lineage-tracked pipeline driver
     streaming/  Structured Streaming variants of the extraction stage
 """

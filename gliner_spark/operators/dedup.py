@@ -185,10 +185,8 @@ def exact_dedup_against_bloom(
     EXACT (identical to a plain anti-join on the content hash — parity
     pinned in tests); the bloom only shrinks the join input.
 
-    `corpus_hashes` is a (content_hash) DataFrame — at scale a
-    persisted table bucketed on content_hash (sources.catalog.
-    write_bucketed) so the corpus side joins Exchange-free; only the
-    maybe_dup sliver of the shard shuffles into it. The maybe_dup=false
+    `corpus_hashes` is a (content_hash) DataFrame; only the maybe_dup
+    sliver of the shard is joined against it. The maybe_dup=false
     majority of a mostly-novel shard never touches the corpus at all —
     that asymmetry is the entire point of the bloom pre-filter."""
     probed = bloom_probe(new_docs, bloom, text_col)

@@ -5,28 +5,29 @@ The reference has no linking stage at all (SURVEY §2.3 J-row); batch
 canonicalize implements the north-star spec. At 10^12 turns, though, a
 KG is never built once: transcripts arrive in shards, and re-clustering
 every surface ever seen per ingest is O(corpus) work for an O(shard)
-change. This module persists the linking state ONCE and folds each new
-shard in with work proportional to the shard plus the components it
-touches:
+change. This module persists the linking state and folds each new shard
+in with work proportional to the shard plus the components it touches.
 
- state      four bucketed tables (build_linking_state):
-              {p}_surfaces (surface_id, surface, component, n_mentions,
-                            ent_type)            bucketed on component
-              {p}_labels   (component, surface, label, n)
-                                                 bucketed on component
-              {p}_bands    (band, band_hash, surface_id)
-                                                 bucketed on band,band_hash
-              {p}_canon    (component, canonical, entity_id,
-                            entity_mentions, entity_type)
-                                                 bucketed on component
-            plus a one-row {p}_meta parameter record the increment READS
-            instead of trusting its caller (mismatched n_perms/shingle_n
-            would silently produce wrong candidates).
+ store      the directory `<warehouse>/<store>` under plans/commit.py's
+            marker-last protocol, so a new driver finds every committed
+            generation where the last one left it. Generation `g{id}/`
+            holds three parquet parts:
+              surfaces (surface_id, surface, component, n_mentions,
+                        canonical, entity_id, entity_type,
+                        entity_mentions)  — the entity columns of the
+                        surface's component on every row
+              labels   (component, surface, label, n)
+              bands    (band, band_hash, surface_id)
+            and its marker `_meta_g{id}.json`, written last, carries the
+            params record (n_perms, n_bands, shingle_n,
+            jaccard_threshold, seed). Folds read the params from the
+            marker instead of trusting their caller: a mismatched
+            n_perms/shingle_n would silently produce wrong candidates.
  probe      the shard's new surfaces are signed map-side (the same pure
             minhash/band expressions as batch — shared code, bit-equal)
-            and equi-joined against {p}_bands; the state side is bucketed
-            on the join key, so the corpus NEVER reshuffles — only the
-            shard moves. Shard-internal pairs come from the same in-batch
+            and their band rows broadcast into the state's bands scan,
+            so the corpus never reshuffles — only the shard moves.
+            Shard-internal pairs come from the same in-batch
             lsh_bucket_pairs as batch canonicalize.
  merge      connected components run on the MINI graph only: new surface
             ids + one anchor node per touched old component (old
@@ -37,11 +38,16 @@ touches:
  canonical  recomputed only for touched components, from combined
             per-(surface, label) counts (state + shard) — so a shard that
             merely re-mentions a known surface can flip its component's
-            canonical pick, again matching batch. Untouched components
-            pass through as a bucketed scan + Exchange-free join, zero
-            recompute.
+            canonical pick, again matching batch. Untouched surfaces pass
+            through as an anti-join against the broadcast touched set,
+            zero recompute.
 
-Exactness: with max_bucket_size=None the output row set is IDENTICAL to
+`build_linking_state` is the first fold, into an empty state: the fold
+then runs lsh_bucket_pairs → verified_pairs → connected_components over
+every surface and surface_table's aggregation, so one code path writes
+every generation.
+
+Exactness: with max_bucket_size=None the canonical map is IDENTICAL to
 batch canonicalize over corpus ∪ shard (parity-pinned in
 test_linking_incremental.py, including an entity-merge shard). Bucket
 caps make candidates depend on bucket occupancy, so capped runs can
@@ -51,37 +57,72 @@ every capped LSH path in this repo.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import write_bucketed
+from ..plans import commit
 from .linking import (
     banded_signatures,
-    candidate_pairs,
     connected_components,
     lsh_bucket_pairs,
     minhash_signatures,
-    surface_table,
     verified_pairs,
 )
 
-_CANON_AGGS = (
-    lambda: [
-        F.max(F.struct(F.col("n_mentions"), F.col("surface")))
-        .getField("surface")
-        .alias("canonical"),
-        F.sum("n_mentions").alias("entity_mentions"),
-        F.max(F.struct(F.col("n_mentions"), F.col("ent_type")))
-        .getField("ent_type")
-        .alias("entity_type"),
-    ]
-)
+_MARKER = "_meta_g{}.json"
+_GEN = "g{}"
+_PARTS = {
+    "surfaces": "surface_id long, surface string, component long,"
+    " n_mentions long, canonical string, entity_id long,"
+    " entity_type string, entity_mentions long",
+    "labels": "component long, surface string, label string, n long",
+    "bands": "band int, band_hash long, surface_id long",
+}
+
+
+def committed_generations(spark: SparkSession, store: str) -> list[int]:
+    """Generation ids with a COMMITTED marker in the store, ascending."""
+    return sorted(commit.committed(commit.store_dir(spark, store), _MARKER))
+
+
+def _part(spark: SparkSession, gen_dir: str, part: str) -> DataFrame:
+    return spark.read.schema(_PARTS[part]).parquet(os.path.join(gen_dir, part))
+
+
+def _newest(spark: SparkSession, store: str) -> tuple[str, dict]:
+    """(directory, params) of the store's newest committed generation."""
+    d = commit.store_dir(spark, store)
+    gens = commit.committed(d, _MARKER)
+    if not gens:
+        raise ValueError(f"no committed linking state in {d}")
+    g = max(gens)
+    return os.path.join(d, _GEN.format(g)), gens[g]
+
+
+def _canonical_map(spark: SparkSession, gen_dir: str) -> DataFrame:
+    return _part(spark, gen_dir, "surfaces").select(
+        "surface",
+        "entity_id",
+        "canonical",
+        F.col("entity_type").alias("ent_type"),
+        "n_mentions",
+        "entity_mentions",
+    )
+
+
+def canonical_map_from_state(spark: SparkSession, store: str) -> DataFrame:
+    """The newest committed generation → the batch canonicalize output
+    shape (surface, entity_id, canonical, ent_type, n_mentions,
+    entity_mentions): one scan and a select."""
+    return _canonical_map(spark, _newest(spark, store)[0])
 
 
 def build_linking_state(
     mentions: DataFrame,
-    table_prefix: str,
-    path: str | None = None,
+    store: str,
     surface_col: str = "text",
     n_perms: int = 64,
     n_bands: int = 16,
@@ -90,142 +131,82 @@ def build_linking_state(
     seed: int = 42,
     max_iter: int = 20,
     max_bucket_size: int | None = 1000,
-    n_file_buckets: int = 8,
 ) -> None:
-    """Run the batch linking chain once and persist its state (see module
-    docstring for the table layout). Same primitives as canonicalize —
-    signatures, candidates, verify, CC — so state contents are bit-equal
-    to what a batch run computes internally."""
-    rows_per_band = max(n_perms // n_bands, 1)
-    surfaces = surface_table(mentions, surface_col).localCheckpoint()
-    sigs = minhash_signatures(surfaces, n_perms, shingle_n, seed)
-    pairs = candidate_pairs(sigs, n_bands, rows_per_band, max_bucket_size)
-    verified = verified_pairs(pairs, surfaces, jaccard_threshold, shingle_n)
-    comps = connected_components(
-        surfaces.select(F.col("surface_id").alias("id")),
-        verified.select("id_a", "id_b"),
-        max_iter,
+    """Start the store over: drop every generation it holds, then fold
+    `mentions` into an empty state and commit it as generation 0."""
+    spark = mentions.sparkSession
+    commit.drop_dead(
+        commit.store_dir(spark, store), _MARKER, _GEN, lambda g: True
     )
-    members = (
-        comps.withColumnRenamed("id", "surface_id")
-        .join(surfaces, "surface_id")
-        .localCheckpoint()
+    params = dict(
+        n_perms=n_perms,
+        n_bands=n_bands,
+        shingle_n=shingle_n,
+        jaccard_threshold=float(jaccard_threshold),
+        seed=seed,
     )
-    p = table_prefix
-    write_bucketed(
-        members.select(
-            "surface_id", "surface", "component", "n_mentions", "ent_type"
-        ),
-        f"{p}_surfaces",
-        ["component"],
-        n_file_buckets,
-        f"{path}/surfaces" if path else None,
-    )
-    labels = mentions.groupBy(
-        F.col(surface_col).alias("surface"), F.col("label")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    write_bucketed(
-        labels.join(
-            members.select("surface", "component"), "surface"
-        ).select("component", "surface", "label", "n"),
-        f"{p}_labels",
-        ["component"],
-        n_file_buckets,
-        f"{path}/labels" if path else None,
-    )
-    write_bucketed(
-        banded_signatures(sigs, n_bands, rows_per_band).select(
-            "band", "band_hash", "surface_id"
-        ),
-        f"{p}_bands",
-        ["band", "band_hash"],
-        n_file_buckets,
-        f"{path}/bands" if path else None,
-    )
-    canon = members.groupBy("component").agg(*_CANON_AGGS())
-    write_bucketed(
-        canon.withColumn("entity_id", F.xxhash64("canonical")),
-        f"{p}_canon",
-        ["component"],
-        n_file_buckets,
-        f"{path}/canon" if path else None,
-    )
-    meta = mentions.sparkSession.createDataFrame(
-        [(n_perms, n_bands, shingle_n, float(jaccard_threshold), seed)],
-        "n_perms int, n_bands int, shingle_n int,"
-        " jaccard_threshold double, seed int",
-    )
-    writer = meta.coalesce(1).write.mode("overwrite")
-    if path:
-        writer = writer.option("path", f"{path}/meta")
-    writer.saveAsTable(f"{p}_meta")
-
-
-def canonical_map_from_state(
-    spark: SparkSession, table_prefix: str
-) -> DataFrame:
-    """State → the batch canonicalize output shape
-    (surface, entity_id, canonical, ent_type, n_mentions,
-    entity_mentions). One Exchange-free bucketed join."""
-    p = table_prefix
-    return (
-        spark.table(f"{p}_surfaces")
-        .join(spark.table(f"{p}_canon"), "component")
-        .select(
-            "surface",
-            "entity_id",
-            "canonical",
-            F.col("entity_type").alias("ent_type"),
-            "n_mentions",
-            "entity_mentions",
-        )
+    # limit(0) plans each part as an empty LocalRelation, which the
+    # optimizer prunes from every join instead of probing it
+    empty = {
+        t: spark.createDataFrame([], s).limit(0) for t, s in _PARTS.items()
+    }
+    _fold(
+        mentions, empty, params, store, 0, surface_col, max_iter,
+        max_bucket_size,
     )
 
 
 def canonicalize_increment(
     new_mentions: DataFrame,
-    table_prefix: str,
+    source: str,
+    store: str,
+    gen: int,
     surface_col: str = "text",
     max_iter: int = 20,
     max_bucket_size: int | None = 1000,
-    out_prefix: str | None = None,
-    out_path: str | None = None,
-    n_file_buckets: int = 8,
 ) -> DataFrame:
-    """Fold a shard of new mentions into persisted linking state and
-    return the UPDATED full canonical map (batch-output schema).
+    """Fold a shard of new mentions into the newest committed generation
+    of store `source` and commit the result as generation `gen` of
+    `store` (source and store may be the same store). `gen` must not be
+    committed in `store`: a markerless leftover of a crashed fold is
+    overwritten. Returns the new generation's canonical map (batch
+    output schema).
 
     Work scales with the shard, not the corpus: the corpus side of every
-    join is either bucketed on the join key (bands probe, untouched
-    pass-through) or pre-filtered by a broadcast of shard-derived keys
-    (member fetch for touched components) — the only full-corpus reads
-    are bucketed scans, never shuffles. See module docstring for the
-    algorithm and its batch-parity argument.
-
-    With `out_prefix`, the UPDATED state is persisted too (generation
-    rotation — a NEW prefix, never in-place: Spark cannot safely
-    overwrite tables it is reading), so increments CHAIN: the next shard
-    probes `out_prefix` and sees this one folded in. Untouched rows copy
-    through as bucketed scans; bands append; only the touched scope is
-    recomputed — chained-parity is pinned in tests.
-    """
+    join is a scan filtered by a broadcast of shard-derived keys (band
+    probe, known surfaces, member fetch for touched components,
+    untouched pass-through), never a shuffle. Each generation rewrites
+    all three parts. See module docstring for the algorithm and its
+    batch-parity argument."""
     spark = new_mentions.sparkSession
-    p = table_prefix
-    if out_prefix == table_prefix:
-        raise ValueError(
-            "out_prefix must differ from table_prefix: overwriting state "
-            "tables while reading them is undefined in Spark — rotate "
-            "generations (e.g. suffix a version number) instead"
-        )
-    meta = spark.table(f"{p}_meta").collect()[0]
-    n_perms, n_bands = meta["n_perms"], meta["n_bands"]
-    shingle_n, seed = meta["shingle_n"], meta["seed"]
-    threshold = meta["jaccard_threshold"]
+    src_dir, params = _newest(spark, source)
+    state = {t: _part(spark, src_dir, t) for t in _PARTS}
+    gen_dir = _fold(
+        new_mentions, state, params, store, gen, surface_col, max_iter,
+        max_bucket_size,
+    )
+    return _canonical_map(spark, gen_dir)
+
+
+def _fold(
+    new_mentions: DataFrame,
+    state: dict[str, DataFrame],
+    params: dict,
+    store: str,
+    gen: int,
+    surface_col: str,
+    max_iter: int,
+    max_bucket_size: int | None,
+) -> str:
+    """Fold new_mentions into `state` (the parts of one generation, or
+    empty frames) and commit generation `gen` of `store`; returns the
+    generation's directory."""
+    spark = new_mentions.sparkSession
+    n_perms, n_bands = params["n_perms"], params["n_bands"]
+    shingle_n, seed = params["shingle_n"], params["seed"]
+    threshold = params["jaccard_threshold"]
     rows_per_band = max(n_perms // n_bands, 1)
-    state_surf = spark.table(f"{p}_surfaces")
-    state_canon = spark.table(f"{p}_canon")
-    state_labels = spark.table(f"{p}_labels")
-    state_bands = spark.table(f"{p}_bands")
+    state_surf = state["surfaces"]
 
     shard_labels = new_mentions.groupBy(
         F.col(surface_col).alias("surface"), F.col("label")
@@ -256,23 +237,24 @@ def canonicalize_increment(
         .localCheckpoint()
     )
 
-    # ---- candidate edges for the new surfaces
+    # ---- candidate edges for the new surfaces; the shard's band rows
+    # broadcast into the state's bands scan
     new_sigs = minhash_signatures(new_surf, n_perms, shingle_n, seed)
     new_bands = banded_signatures(new_sigs, n_bands, rows_per_band)
     nn_pairs = lsh_bucket_pairs(
         new_bands, "surface_id", ("band", "band_hash"), max_bucket_size
     )
     no_cand = (
-        new_bands.select(
-            F.col("surface_id").alias("new_id"), "band", "band_hash"
-        )
+        state["bands"]
         .join(
-            state_bands.select(
-                F.col("surface_id").alias("old_id"), "band", "band_hash"
+            F.broadcast(
+                new_bands.select(
+                    F.col("surface_id").alias("new_id"), "band", "band_hash"
+                )
             ),
             ["band", "band_hash"],
         )
-        .select("new_id", "old_id")
+        .select("new_id", F.col("surface_id").alias("old_id"))
         .distinct()
     )
     # candidate old surfaces are shard-bounded → broadcast-filter the
@@ -324,7 +306,7 @@ def canonicalize_increment(
     # ---- touched old components: structurally linked ones plus every
     # component whose mention counts the shard changed (known surfaces) —
     # a count bump alone can flip the canonical pick, as in batch
-    touched = (
+    touched = F.broadcast(
         anchors.select(F.col("id").alias("component"))
         .unionByName(known.select("component"))
         .distinct()
@@ -336,140 +318,69 @@ def canonicalize_increment(
         F.col("id").alias("component"), F.col("component").alias("final_comp")
     )
     old_final = (
-        state_surf.join(F.broadcast(touched), "component")
+        state_surf.join(touched, "component")
         .join(F.broadcast(remap), "component", "left")
         .withColumn("final_comp", F.coalesce("final_comp", F.col("component")))
         .select("surface_id", "final_comp")
     )
-    new_final = mini.join(
-        new_surf.select(F.col("surface_id").alias("id")), "id"
-    ).select(
+    new_final = mini.join(F.broadcast(anchors), "id", "left_anti").select(
         F.col("id").alias("surface_id"), F.col("component").alias("final_comp")
     )
     assign = old_final.unionByName(new_final)
 
     # ---- combined per-surface stats over the recompute scope only
     comb = (
-        state_labels.join(F.broadcast(touched), "component")
+        state["labels"]
+        .join(touched, "component")
         .select("surface", "label", "n")
         .unionByName(shard_labels)
         .groupBy("surface", "label")
         .agg(F.sum("n").alias("n"))
-    )
-    comb_surf = (
-        comb.groupBy("surface")
-        .agg(
-            F.sum("n").alias("n_mentions"),
-            F.max(F.struct(F.col("n"), F.col("label")))
-            .getField("label")
-            .alias("ent_type"),
-        )
         .withColumn("surface_id", F.xxhash64("surface"))
+        .join(assign, "surface_id")
+        .localCheckpoint()
     )
-    touched_stats = comb_surf.join(assign, "surface_id")
-    if out_prefix is not None:
-        # feeds the returned map AND three state writes — materialize once
-        touched_stats = touched_stats.localCheckpoint()
-    canon2 = touched_stats.groupBy("final_comp").agg(*_CANON_AGGS())
-    touched_rows = touched_stats.join(canon2, "final_comp").select(
-        "surface",
-        F.xxhash64("canonical").alias("entity_id"),
-        "canonical",
-        F.col("entity_type").alias("ent_type"),
-        "n_mentions",
-        "entity_mentions",
+    touched_stats = comb.groupBy("surface_id", "surface", "final_comp").agg(
+        F.sum("n").alias("n_mentions"),
+        F.max(F.struct(F.col("n"), F.col("label")))
+        .getField("label")
+        .alias("ent_type"),
+    )
+    canon = touched_stats.groupBy("final_comp").agg(
+        F.max(F.struct(F.col("n_mentions"), F.col("surface")))
+        .getField("surface")
+        .alias("canonical"),
+        F.sum("n_mentions").alias("entity_mentions"),
+        F.max(F.struct(F.col("n_mentions"), F.col("ent_type")))
+        .getField("ent_type")
+        .alias("entity_type"),
     )
 
-    # ---- untouched components pass through: bucketed scan + bucketed
-    # join on component, zero recompute, zero Exchange
-    untouched = (
-        state_surf.join(F.broadcast(touched), "component", "left_anti")
-        .join(state_canon, "component")
-        .select(
+    # ---- the new generation: untouched rows pass through, touched rows
+    # are recomputed, bands append; the marker goes last
+    d = commit.store_dir(spark, store)
+    gen_dir = os.path.join(d, _GEN.format(gen))
+    parts = {
+        "surfaces": touched_stats.join(canon, "final_comp").select(
+            "surface_id",
             "surface",
-            "entity_id",
-            "canonical",
-            F.col("entity_type").alias("ent_type"),
+            F.col("final_comp").alias("component"),
             "n_mentions",
+            "canonical",
+            F.xxhash64("canonical").alias("entity_id"),
+            "entity_type",
             "entity_mentions",
-        )
-    )
-
-    if out_prefix is not None:
-        q = out_prefix
-        write_bucketed(
-            state_surf.join(F.broadcast(touched), "component", "left_anti")
-            .select(
-                "surface_id", "surface", "component", "n_mentions", "ent_type"
-            )
-            .unionByName(
-                touched_stats.select(
-                    "surface_id",
-                    "surface",
-                    F.col("final_comp").alias("component"),
-                    "n_mentions",
-                    "ent_type",
-                )
-            ),
-            f"{q}_surfaces",
-            ["component"],
-            n_file_buckets,
-            f"{out_path}/surfaces" if out_path else None,
-        )
-        write_bucketed(
-            state_labels.join(F.broadcast(touched), "component", "left_anti")
-            .select("component", "surface", "label", "n")
-            .unionByName(
-                comb.withColumn("surface_id", F.xxhash64("surface"))
-                .join(assign, "surface_id")
-                .select(
-                    F.col("final_comp").alias("component"),
-                    "surface",
-                    "label",
-                    "n",
-                )
-            ),
-            f"{q}_labels",
-            ["component"],
-            n_file_buckets,
-            f"{out_path}/labels" if out_path else None,
-        )
-        write_bucketed(
-            state_bands.select("band", "band_hash", "surface_id").unionByName(
-                new_bands.select("band", "band_hash", "surface_id")
-            ),
-            f"{q}_bands",
-            ["band", "band_hash"],
-            n_file_buckets,
-            f"{out_path}/bands" if out_path else None,
-        )
-        write_bucketed(
-            state_canon.join(F.broadcast(touched), "component", "left_anti")
-            .select(
-                "component",
-                "canonical",
-                "entity_mentions",
-                "entity_type",
-                "entity_id",
-            )
-            .unionByName(
-                canon2.select(
-                    F.col("final_comp").alias("component"),
-                    "canonical",
-                    "entity_mentions",
-                    "entity_type",
-                ).withColumn("entity_id", F.xxhash64("canonical"))
-            ),
-            f"{q}_canon",
-            ["component"],
-            n_file_buckets,
-            f"{out_path}/canon" if out_path else None,
-        )
-        writer = (
-            spark.table(f"{p}_meta").coalesce(1).write.mode("overwrite")
-        )
-        if out_path:
-            writer = writer.option("path", f"{out_path}/meta")
-        writer.saveAsTable(f"{q}_meta")
-
-    return untouched.unionByName(touched_rows)
+        ),
+        "labels": comb.select(
+            F.col("final_comp").alias("component"), "surface", "label", "n"
+        ),
+    }
+    parts = {
+        t: state[t].join(touched, "component", "left_anti").unionByName(rows)
+        for t, rows in parts.items()
+    }
+    parts["bands"] = state["bands"].unionByName(new_bands)
+    for t, rows in parts.items():
+        rows.write.mode("overwrite").parquet(os.path.join(gen_dir, t))
+    commit.write_text(d, _MARKER.format(gen), json.dumps(params))
+    return gen_dir

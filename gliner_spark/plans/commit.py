@@ -1,8 +1,10 @@
 """Marker-last commit protocol shared by every file-backed store.
 
 A store keeps its state as parts: a directory of data files (a rank
-generation `bN`, a stage output) plus a small marker file (`_meta_bN.json`,
-`_FINGERPRINT`). The protocol:
+generation `bN`, a linking generation `gN`, a stage output) plus a small
+marker file (`_meta_bN.json`, `_meta_gN.json`, `_FINGERPRINT`). A named
+store lives at `store_dir(spark, name)`, under the warehouse. The
+protocol:
 
  * a part is visible iff its marker exists;
  * the marker is written LAST and atomically (`write_atomic`): a reader
@@ -25,6 +27,13 @@ import os
 import re
 import shutil
 import uuid
+
+
+def store_dir(spark, name: str) -> str:
+    """The directory `<warehouse>/<name>` of a named store: every driver
+    on the same warehouse finds it where the last one left it."""
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    return os.path.join(wh, name)
 
 
 def write_atomic(directory: str, name: str, write) -> None:

@@ -55,14 +55,10 @@ _EDGES = "src long, dst long"
 _RANK_SCHEMA = "entity_id long, rank double"
 
 
-def _store(spark: SparkSession, gen_base: str) -> str:
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    return os.path.join(wh, gen_base)
-
-
 def committed_generations(spark: SparkSession, gen_base: str) -> list[int]:
     """Batch ids with a COMMITTED rank generation, ascending."""
-    return sorted(commit.committed(_store(spark, gen_base), _MARKER))
+    store = commit.store_dir(spark, gen_base)
+    return sorted(commit.committed(store, _MARKER))
 
 
 def current_ranks(spark: SparkSession, gen_base: str) -> DataFrame | None:
@@ -71,7 +67,8 @@ def current_ranks(spark: SparkSession, gen_base: str) -> DataFrame | None:
     gens = committed_generations(spark, gen_base)
     if not gens:
         return None
-    path = os.path.join(_store(spark, gen_base), _RANKS.format(gens[-1]))
+    store = commit.store_dir(spark, gen_base)
+    path = os.path.join(store, _RANKS.format(gens[-1]))
     return spark.read.schema(_RANK_SCHEMA).parquet(path)
 
 
@@ -97,7 +94,7 @@ def fold_edge_batch(
     if not (0 < damping < 1 and tol > 0):
         raise ValueError("need 0 < damping < 1 and tol > 0")
     spark = batch_df.sparkSession
-    store = _store(spark, gen_base)
+    store = commit.store_dir(spark, gen_base)
     gens = commit.committed(store, _MARKER)
     if batch_id in gens or batch_df.isEmpty():
         return False

@@ -10,10 +10,10 @@ shape for this engine, so the streaming path is first-class:
    the same code serves batch and stream — only watermarks and sinks
    differ. `ts` rides through extraction via the passthrough gather.
  * `stream_to_kg` — foreachBatch bridge: each micro-batch runs the batch
-   triple extractor and APPENDS to the triples table; per-batch lineage
-   rows come from the checkpointed batch_id, making replays idempotent
-   (overwrite-by-batch-id), which is exactly Structured Streaming's
-   exactly-once file-sink contract extended to our lineage table.
+   triple extractor and writes the triples table's partition for the
+   checkpointed batch_id, so a replay overwrites its own partition
+   (overwrite-by-batch-id) instead of duplicating: Structured Streaming's
+   exactly-once file-sink contract. It writes no lineage rows.
 """
 
 from __future__ import annotations

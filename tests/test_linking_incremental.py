@@ -2,6 +2,10 @@
 including entity merges, canonical flips from count bumps, and the
 degenerate shard shapes (known-only, novel-only)."""
 
+import json
+import os
+import shutil
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -11,7 +15,9 @@ from gliner_spark.operators.linking_incremental import (
     build_linking_state,
     canonical_map_from_state,
     canonicalize_increment,
+    committed_generations,
 )
+from gliner_spark.plans import commit
 
 # small-perm params so every planted pair is LSH-caught with certainty
 # ~(1-(1-J)^16): rows_per_band=1 at J >= 0.5 misses with p < 2e-5, and
@@ -67,34 +73,46 @@ def _rowset(df):
     )
 
 
-def _drop_state(spark, prefix):
-    for t in ("surfaces", "labels", "bands", "canon", "meta"):
-        spark.sql(f"drop table if exists {prefix}_{t}")
+def _drop_state(spark, store):
+    shutil.rmtree(commit.store_dir(spark, store), ignore_errors=True)
 
 
 def _canon_kwargs():
     return {k: v for k, v in PARAMS.items()}
 
 
-def test_state_map_equals_batch(spark, tmp_path_factory):
+def test_state_map_equals_batch(spark):
     corpus = _mentions(spark, CORPUS)
-    base = str(tmp_path_factory.mktemp("lkst"))
+    _drop_state(spark, "lks")
     try:
-        build_linking_state(corpus, "lks", path=base, **PARAMS)
+        build_linking_state(corpus, "lks", **PARAMS)
         got = _rowset(canonical_map_from_state(spark, "lks"))
         want = _rowset(canonicalize(corpus, **_canon_kwargs()))
         assert got == want
+        # generation 0 is committed, its marker carries the params
+        store = commit.store_dir(spark, "lks")
+        assert committed_generations(spark, "lks") == [0]
+        with open(os.path.join(store, "_meta_g0.json")) as f:
+            meta = json.load(f)
+        assert meta == {
+            k: v for k, v in PARAMS.items() if k != "max_bucket_size"
+        }
+        assert sorted(os.listdir(os.path.join(store, "g0"))) == [
+            "bands", "labels", "surfaces"
+        ]
     finally:
         _drop_state(spark, "lks")
 
 
-def test_increment_matches_batch_rerun(spark, tmp_path_factory):
+def test_increment_matches_batch_rerun(spark):
     corpus = _mentions(spark, CORPUS)
     shard = _mentions(spark, SHARD)
-    base = str(tmp_path_factory.mktemp("lkinc"))
+    _drop_state(spark, "lki")
     try:
-        build_linking_state(corpus, "lki", path=base, **PARAMS)
-        inc = canonicalize_increment(shard, "lki", max_bucket_size=None)
+        build_linking_state(corpus, "lki", **PARAMS)
+        inc = canonicalize_increment(
+            shard, "lki", "lki", 1, max_bucket_size=None
+        )
         got = _rowset(inc)
         want = _rowset(
             canonicalize(corpus.unionByName(shard), **_canon_kwargs())
@@ -116,6 +134,9 @@ def test_increment_matches_batch_rerun(spark, tmp_path_factory):
         # untouched entity passes through unchanged
         assert by_surface["Redis"][2] == "Redis"
         assert by_surface["Zurich"][4] == 4  # 3 + 1 count bump
+        # the committed generation reads back as the same map
+        assert committed_generations(spark, "lki") == [0, 1]
+        assert _rowset(canonical_map_from_state(spark, "lki")) == got
     finally:
         _drop_state(spark, "lki")
 
@@ -128,13 +149,13 @@ def test_increment_matches_batch_rerun(spark, tmp_path_factory):
     ],
     ids=["known_only", "novel_only"],
 )
-def test_increment_degenerate_shards(spark, tmp_path_factory, shard_spec):
+def test_increment_degenerate_shards(spark, shard_spec):
     corpus = _mentions(spark, CORPUS)
     shard = _mentions(spark, shard_spec)
-    base = str(tmp_path_factory.mktemp("lkdg"))
+    _drop_state(spark, "lkd")
     try:
-        build_linking_state(corpus, "lkd", path=base, **PARAMS)
-        got = _rowset(canonicalize_increment(shard, "lkd",
+        build_linking_state(corpus, "lkd", **PARAMS)
+        got = _rowset(canonicalize_increment(shard, "lkd", "lkd", 1,
                                              max_bucket_size=None))
         want = _rowset(
             canonicalize(corpus.unionByName(shard), **_canon_kwargs())
@@ -144,10 +165,10 @@ def test_increment_degenerate_shards(spark, tmp_path_factory, shard_spec):
         _drop_state(spark, "lkd")
 
 
-def test_increments_chain_through_written_state(spark, tmp_path_factory):
-    """out_prefix persists the updated state (generation rotation), so a
-    second shard probing it sees the first folded in — two chained
-    increments equal one batch run over corpus ∪ shard1 ∪ shard2."""
+def test_increments_chain_through_written_state(spark):
+    """Each increment commits a new generation, so a second shard
+    probing the store sees the first folded in — two chained increments
+    equal one batch run over corpus ∪ shard1 ∪ shard2."""
     corpus = _mentions(spark, CORPUS)
     shard1 = _mentions(spark, SHARD)
     # shard2 touches shard1's output: re-mentions the merged entity's
@@ -160,17 +181,18 @@ def test_increments_chain_through_written_state(spark, tmp_path_factory):
             ("Grafana", "tool", 1),
         ],
     )
-    base = str(tmp_path_factory.mktemp("lkch"))
+    _drop_state(spark, "lkch")
     try:
-        build_linking_state(corpus, "lkg1", path=f"{base}/g1", **PARAMS)
-        with pytest.raises(ValueError, match="out_prefix"):
-            canonicalize_increment(shard1, "lkg1", out_prefix="lkg1")
-        canonicalize_increment(
-            shard1, "lkg1", max_bucket_size=None,
-            out_prefix="lkg2", out_path=f"{base}/g2",
-        ).count()
+        build_linking_state(corpus, "lkch", **PARAMS)
+        got1 = _rowset(
+            canonicalize_increment(
+                shard1, "lkch", "lkch", 1, max_bucket_size=None
+            )
+        )
         got = _rowset(
-            canonicalize_increment(shard2, "lkg2", max_bucket_size=None)
+            canonicalize_increment(
+                shard2, "lkch", "lkch", 2, max_bucket_size=None
+            )
         )
         want = _rowset(
             canonicalize(
@@ -179,27 +201,26 @@ def test_increments_chain_through_written_state(spark, tmp_path_factory):
             )
         )
         assert got == want
-        # written gen-2 map also equals batch over corpus ∪ shard1
-        got1 = _rowset(canonical_map_from_state(spark, "lkg2"))
+        assert _rowset(canonical_map_from_state(spark, "lkch")) == want
+        # the written generation 1 map equals batch over corpus ∪ shard1
         want1 = _rowset(
             canonicalize(corpus.unionByName(shard1), **_canon_kwargs())
         )
         assert got1 == want1
     finally:
-        _drop_state(spark, "lkg1")
-        _drop_state(spark, "lkg2")
+        _drop_state(spark, "lkch")
 
 
-def test_state_map_join_exchange_free(spark, tmp_path_factory):
-    """The untouched-component pass-through is a bucketed-on-component
-    join: neither state table reshuffles."""
+def test_state_map_join_exchange_free(spark):
+    """The map read is one scan of the surfaces part, which carries its
+    component's entity columns: it never reshuffles."""
     corpus = _mentions(spark, CORPUS)
-    base = str(tmp_path_factory.mktemp("lkpl"))
+    _drop_state(spark, "lkp")
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        build_linking_state(corpus, "lkp", path=base, **PARAMS)
+        build_linking_state(corpus, "lkp", **PARAMS)
         out = canonical_map_from_state(spark, "lkp")
         plan = out._sc._jvm.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "formatted"

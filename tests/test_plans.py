@@ -79,36 +79,6 @@ def test_knn_broadcasts_queries(spark):
     assert join_pos >= 0
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
-    """Two tables bucketed on conv_id join with NO shuffle on either side
-    — the co-located layout for the pipeline's repeated conv_id joins."""
-    from gliner_spark.sources.catalog import write_bucketed
-    from gliner_spark.sources.transcripts import synth_transcripts
-
-    base = str(tmp_path_factory.mktemp("bucketed"))
-    t = synth_transcripts(spark, 30)
-    left = t.select("conv_id", "turn_idx", "text")
-    right = t.groupBy("conv_id").count()
-    try:
-        write_bucketed(left, "b_turns", ["conv_id"], 8, f"{base}/turns")
-        write_bucketed(right, "b_stats", ["conv_id"], 8, f"{base}/stats")
-        joined = (
-            spark.table("b_turns")
-            .hint("merge")  # force SMJ so broadcast doesn't mask the test
-            .join(spark.table("b_stats"), "conv_id")
-        )
-        plan = _plan(joined)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        assert joined.count() == left.count()
-        # and the unbucketed version of the same join DOES shuffle
-        plain = left.hint("merge").join(right, "conv_id")
-        assert "Exchange" in _plan(plain)
-    finally:
-        spark.sql("drop table if exists b_turns")
-        spark.sql("drop table if exists b_stats")
-
-
 def test_exact_dedup_partial_aggregation(spark):
     """The content-hash groupBy must plan a partial (map-side) aggregate
     before the exchange."""

@@ -56,16 +56,20 @@ KEEP = {
     ("operators/generation.py", "sample_negative_types"): "SURVEY §2 U3",
     ("operators/generation.py", "attach_negative_types"): "SURVEY §2 U3",
     ("operators/linking_incremental.py", "canonical_map_from_state"): (
-        "incremental linking; ROADMAP direction 3 gives it a product caller"
+        "streaming linking; its product caller, tools/stream_kg_job.py, is"
+        " ROADMAP direction 3's open item"
     ),
-    ("streaming/linking.py", "current_state_prefix"): (
-        "incremental linking; ROADMAP direction 3 gives it a product caller"
+    ("streaming/linking.py", "current_store"): (
+        "streaming linking; its product caller, tools/stream_kg_job.py, is"
+        " ROADMAP direction 3's open item"
     ),
     ("streaming/linking.py", "fold_mention_batch"): (
-        "incremental linking; ROADMAP direction 3 gives it a product caller"
+        "streaming linking; its product caller, tools/stream_kg_job.py, is"
+        " ROADMAP direction 3's open item"
     ),
     ("streaming/linking.py", "stream_canonicalize"): (
-        "incremental linking; ROADMAP direction 3 gives it a product caller"
+        "streaming linking; its product caller, tools/stream_kg_job.py, is"
+        " ROADMAP direction 3's open item"
     ),
     ("operators/multimodal.py", "synth_wav_sample"): (
         "test data for the live multimodal operators"

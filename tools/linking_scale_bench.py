@@ -10,10 +10,11 @@ components. Mentions repeat each surface 1-3×. Shard: 1,000 new variants
 of existing bases (attach/merge work) + 1,000 novel surfaces (no-match
 work).
 
-Prints ONE JSON line: state-build wall, increment wall (full updated map
-materialized), batch-rerun wall, and the speedup. The increment's output
-row count is asserted equal to the batch rerun's. Writes tables under
-_out/ (gitignored).
+Prints ONE JSON line: state-build wall, increment wall (the new
+generation committed and its full map read back), batch-rerun wall, and
+the speedup. The increment's output row count is asserted equal to the
+batch rerun's. The linking store lives under the Spark warehouse and is
+removed at the end.
 """
 
 from __future__ import annotations
@@ -32,11 +33,6 @@ from gliner_spark.plans.session import build_session  # noqa: E402
 
 N = int(os.environ.get("LINK_N", 200_000))
 N_SHARD_VARIANT = int(os.environ.get("LINK_SHARD", 1000))
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "_out",
-    "linking_scale",
-)
 
 
 def _surface_expr(prefix: str):
@@ -87,10 +83,10 @@ def main():
         build_linking_state,
         canonicalize_increment,
     )
+    from gliner_spark.plans import commit
 
     spark = build_session(app_name="linking-scale", shuffle_partitions=64)
     spark.sparkContext.setLogLevel("ERROR")
-    shutil.rmtree(OUT, ignore_errors=True)
 
     mentions = synth_mentions(spark, N).localCheckpoint()
     n_mentions = mentions.count()
@@ -98,11 +94,13 @@ def main():
     n_shard = shard.count()
 
     t0 = time.time()
-    build_linking_state(mentions, "lsb", path=os.path.join(OUT, "state"))
+    build_linking_state(mentions, "linking_scale_bench")
     build_s = time.time() - t0
 
     t0 = time.time()
-    n_inc = canonicalize_increment(shard, "lsb").count()
+    n_inc = canonicalize_increment(
+        shard, "linking_scale_bench", "linking_scale_bench", 1
+    ).count()
     inc_s = time.time() - t0
 
     t0 = time.time()
@@ -125,8 +123,9 @@ def main():
             }
         )
     )
-    for t in ("surfaces", "labels", "bands", "canon", "meta"):
-        spark.sql(f"drop table if exists lsb_{t}")
+    shutil.rmtree(
+        commit.store_dir(spark, "linking_scale_bench"), ignore_errors=True
+    )
 
 
 if __name__ == "__main__":

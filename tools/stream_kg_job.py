@@ -42,6 +42,7 @@ def main():
     ap.add_argument("--waves", type=int, default=3)
     args = ap.parse_args()
 
+    from gliner_spark.plans import commit
     from gliner_spark.sources.transcripts import synth_transcripts
     from gliner_spark.streaming.graphrank import (
         current_ranks,
@@ -57,11 +58,9 @@ def main():
     out = args.out
     shutil.rmtree(out, ignore_errors=True)
     # fresh run: drop the rank store a previous run left behind
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    if os.path.isdir(wh):
-        for d in os.listdir(wh):
-            if d.startswith("stream_kg_job_ranks"):
-                shutil.rmtree(os.path.join(wh, d), ignore_errors=True)
+    shutil.rmtree(
+        commit.store_dir(spark, "stream_kg_job_ranks"), ignore_errors=True
+    )
     landing = os.path.join(out, "landing")
     res = {"waves": args.waves, "n_convs": args.n_convs, "wave_wall_s": []}
 
